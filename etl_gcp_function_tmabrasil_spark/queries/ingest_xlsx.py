@@ -6,8 +6,8 @@ The query fabricates a deterministic 100-row slice of ``events`` as two
 XLSX workbooks under a ``minha-pasta/`` landing prefix (plus a decoy
 ``.csv`` the path glob must ignore, mirroring the reference's filter
 R4), reads them back distributed through the engine's ingest edge
-(``sources/xlsx.py``: binaryFile scan → mapInPandas parse → Catalyst
-typed casts), and returns the typed rows. The DuckDB oracle reads the
+(``sources/xlsx.py``: driver-side listing → path frame → mapInPandas
+tasks that open and parse each workbook → Catalyst typed casts), and returns the typed rows. The DuckDB oracle reads the
 SAME slice straight from parquet — hash equality therefore proves the
 entire write→parse→cast edge is lossless, including float round trips
 (Python repr → string cell → double cast is exact).
@@ -16,8 +16,8 @@ Scale notes: the 100-row driver-side fabrication is test-fixture
 plumbing, not the operator; the *read* path is the operator and is
 per-file parallel (one task per workbook, matching the reference's
 per-object invocation model, ``main.py:5``). At 100 TB the landing zone
-holds many thousands of workbooks and the same plan fans out one parse
-task per file with the binary column projected away before any shuffle.
+holds many thousands of workbooks and the same plan fans their paths out
+over the parse tasks; workbook bytes never leave the task that reads them.
 """
 
 from __future__ import annotations

@@ -3,8 +3,10 @@
 whose processing body the reference leaves as a placeholder
 (``main.py:17``). Here it is made real and distributed:
 
-    binaryFile scan (one row per workbook: path, length, content)
-      → mapInPandas(parse_xlsx_bytes)  — one pandas batch per file
+    one-column frame of local paths (sliced by path count and
+    defaultParallelism)
+      → mapInPandas: each task stats, opens and parses its own objects
+        (parse_xlsx_bytes), one pandas batch per file or one marker row
       → cast to a declared schema (strings at the parse edge, typed
         columns in the engine)
 
@@ -17,14 +19,19 @@ beyond it. Swap in pandas.read_excel/openpyxl via the same
 Scale notes: parallelism is per-file (matching the reference's
 per-object invocation model, ``main.py:5``); each task holds one
 decompressed sheet in memory — the reference's own 512 MB/worker bound
-(``main.tf:51``) is respected by capping workbook size at the scan
-(`maxFileSize` guard) and streaming rows out per batch.
+(``main.tf:51``) is respected by capping workbook size
+(`max_file_bytes`: checked on `stat` and bounded on read, so no task
+loads more than the cap) and streaming rows out per batch.
 """
 
 from __future__ import annotations
 
+import fnmatch
+import glob
 import io
+import os
 import re
+import stat
 import zipfile
 from collections.abc import Iterator
 from xml.etree import ElementTree as ET
@@ -184,6 +191,91 @@ def write_minimal_xlsx(path: str, columns: list[str], rows: list[list]) -> None:
         zf.writestr("xl/worksheets/sheet1.xml", sheet)
 
 
+def _list_xlsx(path: str | list[str], path_glob: str) -> list[str]:
+    """Driver-side listing for the batch reader: a directory contributes
+    its files matching `path_glob`, a file is kept if it matches. A path
+    that does not exist raises, as a file-source load would."""
+    files: list[str] = []
+    for entry in [path] if isinstance(path, str) else path:
+        if not os.path.exists(entry):
+            raise FileNotFoundError(f"xlsx path does not exist: {entry}")
+        if os.path.isdir(entry):
+            files += glob.glob(os.path.join(glob.escape(entry), path_glob))
+        elif fnmatch.fnmatch(os.path.basename(entry), path_glob):
+            files.append(entry)
+    return sorted({os.path.abspath(f) for f in files if os.path.isfile(f)})
+
+
+def _open_and_parse(
+    path: str, max_file_bytes: int
+) -> tuple[str, str | None, pd.DataFrame | None]:
+    """One object's outcome, decided inside the task: ``(status, error,
+    parsed)``, `parsed` set only for 'ok'. `stat` runs before `open`, so
+    a directory or a FIFO is 'missing' and cannot block the read; at
+    most ``max_file_bytes + 1`` bytes are read, so a file that grew
+    after its stat is still 'oversize' without being loaded."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISREG(st.st_mode):
+            return "missing", "not a regular file", None
+        if st.st_size > max_file_bytes:
+            return "oversize", f"xlsx too large: {st.st_size} bytes", None
+        with open(path, "rb") as fh:
+            content = fh.read(max_file_bytes + 1)
+        if len(content) > max_file_bytes:
+            return "oversize", f"xlsx too large: over {max_file_bytes} bytes", None
+        parsed = parse_xlsx_bytes(content)
+    except (FileNotFoundError, NotADirectoryError):  # absent, or gone since stat
+        return "missing", "no such object", None
+    except Exception as exc:  # noqa: BLE001 — isolated per file
+        return "error", str(exc)[:500], None
+    return ("ok", None, parsed) if len(parsed) else ("empty", None, None)
+
+
+def _scan_xlsx(
+    spark: SparkSession,
+    paths: list[str],
+    columns: list[str],
+    max_file_bytes: int,
+) -> DataFrame:
+    """The one XLSX read path: a one-column frame of local paths, then
+    `mapInPandas` tasks that open and parse their objects themselves.
+    Every path yields its data rows (`_status` 'ok') or exactly one
+    marker row ('empty' | 'error' | 'oversize' | 'missing') with the
+    data columns NULL — never zero rows, and no object can fail the
+    task. `_source_file` is the object's ``file:`` URI."""
+    out_fields = ", ".join(f"`{c}` string" for c in columns)
+    out_schema = f"_source_file string, _status string, _error string, {out_fields}"
+    sc = spark.sparkContext
+    slices = max(1, min(len(paths), sc.defaultParallelism))
+    path_df = spark.createDataFrame(
+        sc.parallelize([(os.path.abspath(p),) for p in paths], slices), "path string"
+    )
+
+    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for path in pdf["path"]:
+                status, error, parsed = _open_and_parse(path, max_file_bytes)
+                n = 1 if parsed is None else len(parsed)
+                # explicit per-column Series: a dict of all-scalar Nones
+                # (a marker, or a header sharing no names with
+                # `columns`) would make the DataFrame constructor raise
+                out = pd.DataFrame(
+                    {
+                        c: parsed[c].astype(object)
+                        if parsed is not None and c in parsed
+                        else pd.Series([None] * n, dtype=object)
+                        for c in columns
+                    }
+                )
+                out.insert(0, "_error", error)
+                out.insert(0, "_status", status)
+                out.insert(0, "_source_file", "file:" + path)
+                yield out
+
+    return path_df.mapInPandas(parse, schema=out_schema)
+
+
 def read_xlsx(
     spark: SparkSession,
     path: str | list[str],
@@ -192,70 +284,33 @@ def read_xlsx(
     path_glob: str = "*.xlsx",
     max_file_bytes: int = DEFAULT_MAX_FILE_BYTES,
 ) -> DataFrame:
-    """Distributed XLSX read: one task per workbook.
+    """Distributed batch XLSX read over local files.
 
     Returns string columns named `columns` plus `_source_file`; pass
     `schema_ddl` (e.g. ``"event_id long, value double"``) to cast typed
-    columns engine-side (Catalyst casts, not pandas).
+    columns engine-side (Catalyst casts, not pandas). Fails the whole
+    job loudly on any unreadable workbook — right for batch; the
+    streaming ETL uses :func:`read_xlsx_tolerant` instead.
     """
-    # Size guard BEFORE any bytes move: a metadata-only pre-scan (paths
-    # and lengths — binaryFile prunes the unselected content column)
-    # raises loudly on any oversized workbook, so no oversize file's
-    # content is ever materialized or Arrow-shipped to Python in the
-    # common path (a worker-side-only check would fire AFTER the
-    # executor paid the full-content read — no OOM protection). The
-    # content scan then loads exactly the validated file list — ONE
-    # glob listing, and no silent `length <=` filter that would drop a
-    # file grown between listing and read; that race instead hits the
-    # worker-side backstop below, which fails loudly.
-    meta = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", path_glob)
-        .load(path)
-        .select("path", "length")
-        .collect()
-    )
-    over = [r for r in meta if r["length"] > max_file_bytes]
-    if over:
-        raise ValueError(
-            f"xlsx too large: {over[0]['path']} ({over[0]['length']} bytes)"
+    files = _list_xlsx(path, path_glob)
+    # size guard at call time, before any content is read: the listing
+    # already stat'ed every file on the driver
+    for f in files:
+        size = os.path.getsize(f)
+        if size > max_file_bytes:
+            raise ValueError(f"xlsx too large: {f} ({size} bytes)")
+    scanned = _scan_xlsx(spark, files, columns, max_file_bytes)
+    # a marker other than 'empty' (corrupt, deleted or grown since the
+    # listing) fails the job; header-only workbooks contribute no rows
+    keep = F.when(
+        F.col("_status").isin("ok", "empty"), F.col("_status") == "ok"
+    ).otherwise(
+        F.raise_error(
+            F.concat_ws(": ", F.col("_status"), F.col("_source_file"), F.col("_error"))
         )
-    out_fields = ", ".join(f"`{c}` string" for c in columns)
-    out_schema = f"_source_file string, {out_fields}"
-    if not meta:  # nothing matched the glob: empty frame, right schema
-        df = spark.createDataFrame([], out_schema)
-        return _apply_schema_ddl(df, schema_ddl)
-    binary = (
-        spark.read.format("binaryFile")
-        .load([r["path"] for r in meta])
-        .select("path", "length", "content")
     )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, r in pdf.iterrows():
-                if r["length"] > max_file_bytes:  # grown since the pre-scan
-                    raise ValueError(
-                        f"xlsx too large: {r['path']} ({r['length']} bytes)"
-                    )
-                parsed = parse_xlsx_bytes(r["content"])
-                # explicit per-column Series: a dict of all-scalar Nones
-                # (empty workbook, or a header sharing no names with
-                # `columns`) would make the DataFrame constructor raise
-                # instead of yielding the intended null columns
-                n = len(parsed)
-                out = pd.DataFrame(
-                    {
-                        c: parsed[c].astype(object)
-                        if c in parsed
-                        else pd.Series([None] * n, dtype=object)
-                        for c in columns
-                    }
-                )
-                out.insert(0, "_source_file", r["path"])
-                yield out
-
-    return _apply_schema_ddl(binary.mapInPandas(parse, schema=out_schema), schema_ddl)
+    df = scanned.filter(keep).drop("_status", "_error")
+    return _apply_schema_ddl(df, schema_ddl)
 
 
 def read_xlsx_tolerant(
@@ -268,121 +323,20 @@ def read_xlsx_tolerant(
     """Per-file fault-isolated XLSX read for streaming ETL.
 
     Unlike :func:`read_xlsx` (which fails the whole job loudly — right
-    for batch), every file here yields AT LEAST one row and no file can
-    fail the task: a checkpointed stream replays a failed micro-batch
-    with the identical file list, so one poisoned object would
-    otherwise wedge ingestion permanently. Schema adds `_status`
-    ('ok' | 'empty' | 'error' | 'oversize') and `_error`; data rows
-    carry _status='ok', non-data files produce exactly one marker row
-    with the data columns NULL. Oversized files are pruned from the
-    content scan by a pushed-down length filter (no bytes move) and
-    reported as driver-synthesized 'oversize' rows.
-
-    The ≥1-row invariant is enforced, not assumed: a file that GROWS
-    past `max_file_bytes` between the driver pre-scan and the executor
-    content scan is removed by the pushed-down length filter with no
-    marker — an anti-join of the expected paths against the distinct
-    `_source_file` values actually returned synthesizes an 'oversize'
-    marker for any such zero-row path, so the event dead-letters
-    instead of vanishing (the scan is persisted so this backstop does
-    not re-parse the batch).
+    for batch), every requested local path yields AT LEAST one row and
+    no file can fail the task: a checkpointed stream replays a failed
+    micro-batch with the identical file list, so one poisoned object
+    would otherwise wedge ingestion permanently. Schema adds `_status`
+    ('ok' | 'empty' | 'error' | 'oversize' | 'missing') and `_error`;
+    data rows carry _status='ok', every other path produces exactly one
+    marker row with the data columns NULL. The parse task stats and
+    opens each object itself, so the invariant holds by construction —
+    including for an object deleted, replaced by a non-file, or grown
+    past `max_file_bytes` after the event was admitted.
     """
-    out_fields = ", ".join(f"`{c}` string" for c in columns)
-    out_schema = f"_source_file string, _status string, _error string, {out_fields}"
-    meta = (
-        spark.read.format("binaryFile").load(paths).select("path", "length").collect()
-        if paths
-        else []
+    return _apply_schema_ddl(
+        _scan_xlsx(spark, paths, columns, max_file_bytes), schema_ddl
     )
-    ok_paths = [r["path"] for r in meta if r["length"] <= max_file_bytes]
-    over = [
-        (r["path"], "oversize", f"xlsx too large: {r['length']} bytes")
-        for r in meta
-        if r["length"] > max_file_bytes
-    ]
-    frames = []
-    if ok_paths:
-        binary = (
-            spark.read.format("binaryFile")
-            .load(ok_paths)
-            .filter(F.col("length") <= max_file_bytes)  # grown-since-listing race
-            .select("path", "content")
-        )
-
-        def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            def marker(path: str, status: str, error: str | None) -> pd.DataFrame:
-                m = pd.DataFrame(
-                    {c: pd.Series([None], dtype=object) for c in columns}
-                )
-                m.insert(0, "_error", error)
-                m.insert(0, "_status", status)
-                m.insert(0, "_source_file", path)
-                return m
-
-            for pdf in batches:
-                for _, r in pdf.iterrows():
-                    try:
-                        parsed = parse_xlsx_bytes(r["content"])
-                    except Exception as exc:  # noqa: BLE001 — isolated per file
-                        yield marker(r["path"], "error", str(exc)[:500])
-                        continue
-                    n = len(parsed)
-                    if n == 0:
-                        yield marker(r["path"], "empty", None)
-                        continue
-                    out = pd.DataFrame(
-                        {
-                            c: parsed[c].astype(object)
-                            if c in parsed
-                            else pd.Series([None] * n, dtype=object)
-                            for c in columns
-                        }
-                    )
-                    out.insert(0, "_error", None)
-                    out.insert(0, "_status", "ok")
-                    out.insert(0, "_source_file", r["path"])
-                    yield out
-
-        # deferred import: queries._util → queries/__init__ imports
-        # ingest_xlsx which imports this module (cycle at import time,
-        # none at call time)
-        from etl_gcp_function_tmabrasil_spark.queries._util import managed_persist
-
-        scanned = managed_persist(
-            binary.mapInPandas(parse, schema=out_schema),
-            "sources.xlsx.tolerant_scan",
-        )
-        # zero-row backstop (see docstring): the length filter above can
-        # drop a grown file with no marker; synthesize it here. One
-        # single-string-column shuffle per batch — noise next to the
-        # XLSX parse.
-        expected = spark.createDataFrame(
-            [(p,) for p in ok_paths], "_source_file string"
-        )
-        dropped = expected.join(
-            scanned.select("_source_file").distinct(), "_source_file", "left_anti"
-        ).select(
-            "_source_file",
-            F.lit("oversize").alias("_status"),
-            F.lit(
-                "produced no rows: grew past max_file_bytes between "
-                "listing and content scan"
-            ).alias("_error"),
-            *[F.lit(None).cast("string").alias(c) for c in columns],
-        )
-        frames.append(scanned.unionByName(dropped))
-    if over:
-        frames.append(
-            spark.createDataFrame(
-                [row + (None,) * len(columns) for row in over], out_schema
-            )
-        )
-    if not frames:
-        frames.append(spark.createDataFrame([], out_schema))
-    df = frames[0]
-    for extra in frames[1:]:
-        df = df.unionByName(extra)
-    return _apply_schema_ddl(df, schema_ddl)
 
 
 def _apply_schema_ddl(df: DataFrame, schema_ddl: str | None) -> DataFrame:

@@ -123,10 +123,11 @@ def run_console_logger(
 
 
 #: Hard cap on the per-micro-batch accepted-name list that foreachBatch
-#: materializes on the driver (paths for the binaryFile scan MUST live
-#: driver-side — that is how Spark plans file scans). ~100 bytes/name
-#: puts 100k names at ~10 MB of driver heap; failing loudly beyond it
-#: beats an unbounded collect() OOMing the driver.
+#: materializes on the driver (the names are resolved and
+#: containment-checked there, then handed to the path-driven XLSX read
+#: as a parallelized path frame). ~100 bytes/name puts 100k names at
+#: ~10 MB of driver heap; failing loudly beyond it beats an unbounded
+#: collect() OOMing the driver.
 MAX_BATCH_FILES = 100_000
 
 #: AnalysisException conditions that mean "the ledger table simply does
@@ -166,19 +167,15 @@ def _probe_event_keys(spark, sink, table: str, ev_df: DataFrame) -> set:
 
     try:
         return _keys()
-    except AnalysisException as exc:
-        cond = (
-            exc.getCondition()
-            if hasattr(exc, "getCondition")
-            else getattr(exc, "getErrorClass", lambda: None)()
-        ) or ""
-        if any(c in cond for c in _MISSING_TABLE_CONDITIONS):
-            return set()
-        probe = getattr(sink, "exists", None)
-        if probe is not None and not probe(spark, table):
-            return set()
-        raise
-    except Exception:
+    except Exception as exc:
+        if isinstance(exc, AnalysisException):
+            cond = (
+                exc.getCondition()
+                if hasattr(exc, "getCondition")
+                else getattr(exc, "getErrorClass", lambda: None)()
+            ) or ""
+            if any(c in cond for c in _MISSING_TABLE_CONDITIONS):
+                return set()
         probe = getattr(sink, "exists", None)
         if probe is not None and not probe(spark, table):
             return set()
@@ -199,9 +196,9 @@ def run_xlsx_etl_pipeline(
     """The reference's complete intended lifecycle, end-to-end
     (``main.py:5-17`` with the placeholder body filled in):
 
-    file-event stream → accept filter (``main.py:12``) → distributed
-    XLSX parse of the referenced objects → typed cast → load to the
-    BigQuery-shaped sink.
+    file-event stream → accept filter (``main.py:12``) → path-driven
+    XLSX read of the referenced objects (each parse task opens its own
+    objects) → typed cast → load to the BigQuery-shaped sink.
 
     `data_root` plays the role of the GCS bucket: accepted event `name`s
     are resolved under it. Each micro-batch reads only the files named
@@ -221,9 +218,11 @@ def run_xlsx_etl_pipeline(
 
     Fault isolation: one poisoned object must never wedge the
     checkpointed stream (a failed batch replays with the identical
-    committed file list forever). Missing files, oversized workbooks,
-    empty sheets, and parse failures are routed per-object to
-    ``<table>_rejected`` (event key + status + error) while healthy
+    committed file list forever). The parse task decides each object's
+    outcome itself, so missing objects (absent, or not a regular file),
+    oversized workbooks, empty sheets, and parse failures are routed
+    per-object to ``<table>_rejected`` (event key + status + error +
+    the object's ``file:`` URI) while healthy
     objects in the same batch ingest normally — the per-invocation
     blast radius the reference gets for free from one-event-per-call.
     The idempotency probe covers BOTH tables, so a dead-lettered event
@@ -298,24 +297,16 @@ def run_xlsx_etl_pipeline(
         todo = {k: p for k, p in events.items() if k not in already}
         if not todo:
             return
-        # driver-side existence gate: an object deleted between event
-        # and batch (or a name resolving to a directory) would fail the
-        # scan and poison-pill the replayed batch — dead-letter it
-        present = {k: p for k, p in todo.items() if os.path.isfile(p)}
-        missing = [
-            (n, t, "missing", f"not a readable file: {p}")
-            for (n, t), p in todo.items()
-            if (n, t) not in present
-        ]
-        # ONE binaryFile scan over the distinct resolved files; rows are
-        # tagged with their event key via a broadcast join on the scan's
-        # URI ('file:' + realpath). An object re-uploaded under two
-        # event times in one batch fans out once per event — each
+        # ONE path-driven read over the distinct resolved files; rows are
+        # tagged with their event key via a broadcast join on the
+        # object's URI ('file:' + realpath). An object re-uploaded under
+        # two event times in one batch fans out once per event — each
         # finalize event is processed exactly once, like the reference.
-        # read_xlsx_tolerant guarantees ≥1 row per scanned file, so
-        # every present event lands in the sink or the dead-letter.
+        # read_xlsx_tolerant yields >= 1 row per requested path (data
+        # rows or one marker, 'missing' included), so every event lands
+        # in the sink or the dead-letter table.
         tag_df = spark.createDataFrame(
-            [("file:" + p, n, t) for (n, t), p in present.items()],
+            [("file:" + p, n, t) for (n, t), p in todo.items()],
             "_source_file string, _event_name string, _event_ts string",
         )
         xlsx_kwargs = (
@@ -323,7 +314,7 @@ def run_xlsx_etl_pipeline(
         )
         parsed = read_xlsx_tolerant(
             spark,
-            sorted(set(present.values())),
+            sorted(set(todo.values())),
             columns,
             schema_ddl=schema_ddl,
             **xlsx_kwargs,
@@ -336,14 +327,6 @@ def run_xlsx_etl_pipeline(
             dead = tagged.filter(F.col("_status") != "ok").select(
                 "_event_name", "_event_ts", "_status", "_error", "_source_file"
             )
-            if missing:
-                dead = dead.unionByName(
-                    spark.createDataFrame(
-                        [(n, t, s, e, None) for n, t, s, e in missing],
-                        "_event_name string, _event_ts string, _status string,"
-                        " _error string, _source_file string",
-                    )
-                )
             sink.write(dead, f"{table}_rejected", mode="append")
         finally:
             tagged.unpersist()

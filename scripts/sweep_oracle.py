@@ -25,7 +25,7 @@ QUADRATIC_ORACLES = ["ann_lsh_cosine", "dedup_ngram_jaccard", "fuzzy_name_match"
 
 def main() -> int:
     import __spark_entry__ as entrymod
-    from pyspark.sql import SparkSession
+    from etl_gcp_function_tmabrasil_spark.session import get_spark
 
     from oracle_check import compare, duckdb_connection
 
@@ -38,12 +38,10 @@ def main() -> int:
             sf_dir = a
         else:
             names_filter.append(a)
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the engine's own session (AQE, UTC, broadcast threshold) at
+    # $SPARK_GRAFT_CPUS cores, so the sweep checks the engine as it
+    # runs in production and in the benchmark
+    spark = get_spark(app_name="sweep_oracle")
     qs, osql = entrymod.queries(), entrymod.oracle_sql()
     con = duckdb_connection(sf_dir)
     if names_filter:

@@ -4,6 +4,8 @@ the same slice from parquet."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -150,11 +152,10 @@ def test_oversized_workbook_fails_before_content_read(spark, tmp_path):
 
 
 def test_tolerant_read_dead_letters_file_grown_after_prescan(spark, tmp_path):
-    """The oversize race: a file that grows past max_file_bytes AFTER
-    the driver pre-scan is removed by the content scan's pushed-down
-    length filter — the anti-join backstop must synthesize its
-    'oversize' marker so the event dead-letters instead of vanishing.
-    The scan lists lazily at action time, so appending to the file
+    """The oversize race: a file that grows past max_file_bytes after
+    the read is built must still yield its 'oversize' marker, so the
+    event dead-letters instead of vanishing. The parse task stats and
+    opens the object only at action time, so appending to the file
     between construction and collect() reproduces the race exactly."""
     from etl_gcp_function_tmabrasil_spark.sources.xlsx import read_xlsx_tolerant
 
@@ -174,3 +175,68 @@ def test_tolerant_read_dead_letters_file_grown_after_prescan(spark, tmp_path):
         "grown file silently dropped — every requested path must yield a row"
     )
     assert rows["grower.xlsx"].event_id is None
+
+
+def _plant(kind: str, path) -> None:
+    """One object per tolerant-read outcome (see the parametrization)."""
+    if kind == "ok":
+        write_minimal_xlsx(str(path), COLS, [[1, 10, "click", 1.5], [2, 20, "view", 2.5]])
+    elif kind == "empty":
+        write_minimal_xlsx(str(path), COLS, [])
+    elif kind == "error":
+        path.write_bytes(b"this is not a zip")
+    elif kind == "oversize":
+        write_minimal_xlsx(str(path), COLS, [[i, i, "x" * 40, 0.5] for i in range(200)])
+    elif kind == "directory":
+        path.mkdir()
+    elif kind == "fifo":
+        os.mkfifo(path)
+    # "absent": nothing is created
+
+
+@pytest.mark.parametrize(
+    "kind, status",
+    [
+        ("ok", "ok"),
+        ("empty", "empty"),
+        ("error", "error"),
+        ("oversize", "oversize"),
+        ("absent", "missing"),
+        ("directory", "missing"),
+        ("fifo", "missing"),
+    ],
+)
+def test_tolerant_read_yields_a_row_per_path_for_every_outcome(
+    spark, tmp_path, kind, status
+):
+    """Every requested path yields at least one row, and a non-data
+    path exactly one marker row with NULL data columns. A directory or
+    a FIFO named ``*.xlsx`` dead-letters as 'missing' without blocking
+    the read (a FIFO with no writer would block a plain open)."""
+    from etl_gcp_function_tmabrasil_spark.sources.xlsx import read_xlsx_tolerant
+
+    good = tmp_path / "good.xlsx"
+    _plant("ok", good)
+    target = tmp_path / f"{kind}.xlsx"
+    _plant(kind, target)
+    cap = 4096
+    assert good.stat().st_size <= cap
+    if kind == "oversize":
+        assert target.stat().st_size > cap
+    rows = read_xlsx_tolerant(
+        spark, [str(good), str(target)], COLS, max_file_bytes=cap
+    ).collect()
+    by_file: dict[str, list] = {}
+    for r in rows:
+        by_file.setdefault(r._source_file, []).append(r)
+    assert set(by_file) == {f"file:{good}", f"file:{target}"}
+    assert [r._status for r in by_file[f"file:{good}"]] == ["ok", "ok"]
+    got = by_file[f"file:{target}"]
+    assert {r._status for r in got} == {status}
+    if status == "ok":
+        assert sorted(r.event_id for r in got) == ["1", "2"]
+        assert all(r._error is None for r in got)
+    else:
+        assert len(got) == 1, "a non-data path must yield exactly one marker row"
+        assert all(getattr(got[0], c) is None for c in COLS)
+        assert (got[0]._error is None) == (status == "empty")
