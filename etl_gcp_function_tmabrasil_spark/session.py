@@ -26,6 +26,7 @@ def get_spark(
     - Session timezone pinned to UTC so timestamp semantics match
       timezone-naive engines (DuckDB oracle) and are cluster-invariant.
     - Arrow enabled for every pandas exchange (pandas UDFs, toPandas).
+    - Parallel file listing capped at one task per core.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
@@ -97,5 +98,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # A read of more than 32 explicit paths (a streaming file source
+    # re-resolving its batch's landing files, a multi-path load) lists
+    # them in a Spark job of min(paths, this conf) tasks; the default
+    # 10000 gives one ~17 ms task per file (a 255-file batch: 255 tasks,
+    # 1.1-1.4 s). One task per core lists the same paths with the same
+    # result. defaultParallelism is the total executor cores on a
+    # cluster too, where listing tasks beyond it would only queue, so
+    # the cap loses no concurrency at any scale. Runtime SQL conf: a
+    # stream's cloned session copies it at start().
+    listing_parallelism = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+    if listing_parallelism not in (extra_conf or {}):
+        spark.conf.set(
+            listing_parallelism, str(spark.sparkContext.defaultParallelism)
+        )
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -3,10 +3,11 @@
 whose processing body the reference leaves as a placeholder
 (``main.py:17``). Here it is made real and distributed:
 
-    one-column frame of local paths (sliced by path count and
-    defaultParallelism)
+    frame of local paths, optionally with each path's file-event key
+    (sliced by path count and defaultParallelism)
       → mapInPandas: each task stats, opens and parses its own objects
-        (parse_xlsx_bytes), one pandas batch per file or one marker row
+        (parse_xlsx_bytes), one pandas batch per file or one marker row,
+        every row stamped with its path's event key when one was given
       → cast to a declared schema (strings at the parse edge, typed
         columns in the engine)
 
@@ -237,24 +238,36 @@ def _scan_xlsx(
     paths: list[str],
     columns: list[str],
     max_file_bytes: int,
+    event_keys: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
-    """The one XLSX read path: a one-column frame of local paths, then
+    """The one XLSX read path: a frame of local paths, then
     `mapInPandas` tasks that open and parse their objects themselves.
     Every path yields its data rows (`_status` 'ok') or exactly one
     marker row ('empty' | 'error' | 'oversize' | 'missing') with the
     data columns NULL — never zero rows, and no object can fail the
-    task. `_source_file` is the object's ``file:`` URI."""
+    task. `_source_file` is the object's ``file:`` URI. With
+    `event_keys` (one ``(name, ts)`` per path) the path frame carries
+    them too and every row of a path ends with its `_event_name` and
+    `_event_ts`."""
     out_fields = ", ".join(f"`{c}` string" for c in columns)
     out_schema = f"_source_file string, _status string, _error string, {out_fields}"
+    rows = [(os.path.abspath(p),) for p in paths]
+    path_schema = "path string"
+    if event_keys is not None:
+        if len(event_keys) != len(paths):
+            raise ValueError(
+                f"{len(event_keys)} event keys for {len(paths)} paths"
+            )
+        rows = [r + tuple(k) for r, k in zip(rows, event_keys)]
+        path_schema += ", _event_name string, _event_ts string"
+        out_schema += ", _event_name string, _event_ts string"
     sc = spark.sparkContext
     slices = max(1, min(len(paths), sc.defaultParallelism))
-    path_df = spark.createDataFrame(
-        sc.parallelize([(os.path.abspath(p),) for p in paths], slices), "path string"
-    )
+    path_df = spark.createDataFrame(sc.parallelize(rows, slices), path_schema)
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for path in pdf["path"]:
+            for path, *key in pdf.itertuples(index=False):
                 status, error, parsed = _open_and_parse(path, max_file_bytes)
                 n = 1 if parsed is None else len(parsed)
                 # explicit per-column Series: a dict of all-scalar Nones
@@ -271,6 +284,8 @@ def _scan_xlsx(
                 out.insert(0, "_error", error)
                 out.insert(0, "_status", status)
                 out.insert(0, "_source_file", "file:" + path)
+                if key:
+                    out["_event_name"], out["_event_ts"] = key
                 yield out
 
     return path_df.mapInPandas(parse, schema=out_schema)
@@ -319,6 +334,7 @@ def read_xlsx_tolerant(
     columns: list[str],
     schema_ddl: str | None = None,
     max_file_bytes: int = DEFAULT_MAX_FILE_BYTES,
+    event_keys: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
     """Per-file fault-isolated XLSX read for streaming ETL.
 
@@ -333,9 +349,16 @@ def read_xlsx_tolerant(
     opens each object itself, so the invariant holds by construction —
     including for an object deleted, replaced by a non-file, or grown
     past `max_file_bytes` after the event was admitted.
+
+    `event_keys`, when given, is input data parallel to `paths`: one
+    ``(_event_name, _event_ts)`` pair per path, written by the parse
+    task as two trailing string columns on every row the path yields,
+    marker rows included. A path listed twice (one object, two events)
+    is read once per entry and yields one set of rows per key. Without
+    keys the schema has no event columns.
     """
     return _apply_schema_ddl(
-        _scan_xlsx(spark, paths, columns, max_file_bytes), schema_ddl
+        _scan_xlsx(spark, paths, columns, max_file_bytes, event_keys), schema_ddl
     )
 
 

@@ -198,12 +198,14 @@ def run_xlsx_etl_pipeline(
 
     file-event stream → accept filter (``main.py:12``) → path-driven
     XLSX read of the referenced objects (each parse task opens its own
-    objects) → typed cast → load to the BigQuery-shaped sink.
+    objects and stamps every row with the event key it was handed) →
+    typed cast → load to the BigQuery-shaped sink.
 
     `data_root` plays the role of the GCS bucket: accepted event `name`s
     are resolved under it. Each micro-batch reads only the files named
-    by its accepted events (per-object ingest, like the reference), and
-    the sink append is driven from a checkpointed query.
+    by its accepted events (per-object ingest, like the reference): one
+    read per event, so an object named by two events of one batch lands
+    once per event. The sink append is driven from a checkpointed query.
 
     Admission control is ON by default: `max_files_per_trigger` bounds
     how many landing files each micro-batch admits (pass ``None`` to
@@ -245,6 +247,11 @@ def run_xlsx_etl_pipeline(
             # fall-back collapses two instants) — unusable as a ledger
             # key. unix_micros is the instant itself.
             .select("name", F.unix_micros("ts").alias("ts_us"))
+            # ordered before the limit: one TakeOrderedAndProject job
+            # (a bare limit's incremental take scans 1, then 4, then the
+            # remaining partitions, one job each) and a deterministic
+            # event order
+            .orderBy("name", "ts_us")
             .limit(MAX_BATCH_FILES + 1)
             .collect()
         )
@@ -297,29 +304,26 @@ def run_xlsx_etl_pipeline(
         todo = {k: p for k, p in events.items() if k not in already}
         if not todo:
             return
-        # ONE path-driven read over the distinct resolved files; rows are
-        # tagged with their event key via a broadcast join on the
-        # object's URI ('file:' + realpath). An object re-uploaded under
-        # two event times in one batch fans out once per event — each
-        # finalize event is processed exactly once, like the reference.
+        # ONE path-driven read with one path-frame row per event: the
+        # parse task stamps every row it yields, marker rows included,
+        # with that event's key (_event_name, _event_ts). An object re-uploaded under two event times in one batch is
+        # read once per event and lands once per event — each finalize
+        # event is processed exactly once, like the reference.
         # read_xlsx_tolerant yields >= 1 row per requested path (data
         # rows or one marker, 'missing' included), so every event lands
         # in the sink or the dead-letter table.
-        tag_df = spark.createDataFrame(
-            [("file:" + p, n, t) for (n, t), p in todo.items()],
-            "_source_file string, _event_name string, _event_ts string",
-        )
+        keys = sorted(todo)
         xlsx_kwargs = (
             {} if max_file_bytes is None else {"max_file_bytes": max_file_bytes}
         )
-        parsed = read_xlsx_tolerant(
+        tagged = read_xlsx_tolerant(
             spark,
-            sorted(set(todo.values())),
+            [todo[k] for k in keys],
             columns,
             schema_ddl=schema_ddl,
+            event_keys=keys,
             **xlsx_kwargs,
         )
-        tagged = parsed.join(F.broadcast(tag_df), "_source_file")
         tagged.persist()
         try:
             data = tagged.filter(F.col("_status") == "ok").drop("_status", "_error")

@@ -335,3 +335,102 @@ def test_structured_bq_error_skips_non_http_wrapper_frames():
         404,
         "notfound",
     )
+
+
+def _land_events(landing, name: str, evs: list[dict]) -> None:
+    with open(landing / name, "w") as f:
+        for e in evs:
+            f.write(json.dumps(e) + "\n")
+
+
+def test_xlsx_etl_drain_jobs_are_at_most_one_task_per_core(spark, tmp_path):
+    """64 single-event landing files (above Spark's 32-path parallel
+    listing threshold) drain with no job wider than the cores: the
+    file source's listing of the batch runs one task per core, not one
+    per landing file. The query's jobs run under its run id as job
+    group; a job's width is the task count summed over its stages."""
+    n_files = 64
+    bucket = tmp_path / "bucket"
+    (bucket / "minha-pasta").mkdir(parents=True)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for i in range(n_files):
+        write_minimal_xlsx(
+            str(bucket / "minha-pasta" / f"f{i:03d}.xlsx"),
+            COLS,
+            [[i, i % 7, "click", float(i)]],
+        )
+        _land_events(landing, f"ev{i:03d}.json", [
+            {"bucket": "bucket", "name": f"minha-pasta/f{i:03d}.xlsx",
+             "size": 1, "ts": "2024-01-01T00:00:00Z"}
+        ])
+
+    sink = BigQuerySink(warehouse_dir=str(tmp_path / "warehouse"))
+    q = run_xlsx_etl_pipeline(
+        spark, str(landing), str(bucket), sink, "analytics.width", COLS, DDL
+    )
+    q.awaitTermination(300)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    widths = []
+    for jid in tracker.getJobIdsForGroup(str(q.runId)):
+        stages = (tracker.getStageInfo(s) for s in tracker.getJobInfo(jid).stageIds)
+        widths.append(sum(s.numTasks for s in stages if s is not None))
+    assert widths, "no jobs recorded under the query's run id"
+    assert max(widths) <= sc.defaultParallelism, (
+        f"a drain job is wider than the {sc.defaultParallelism} cores: {widths}"
+    )
+    got = sorted(r.event_id for r in sink.read(spark, "analytics.width").collect())
+    assert got == list(range(n_files)), "not exactly-once"
+
+
+def test_xlsx_etl_two_events_for_one_object_in_one_batch(spark, tmp_path):
+    """Two finalize events (same name, distinct ts) for a healthy object
+    and two for a missing object, all in ONE micro-batch: each event is
+    processed once — the healthy object's rows land once per event
+    under that event's `_event_ts`, the missing object dead-letters
+    twice — and both tables keep their column layout."""
+    bucket = tmp_path / "bucket"
+    (bucket / "minha-pasta").mkdir(parents=True)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    write_minimal_xlsx(
+        str(bucket / "minha-pasta" / "a.xlsx"),
+        COLS,
+        [[1, 10, "click", 1.5], [2, 20, "view", 2.5]],
+    )
+    evs = [
+        {"bucket": "b", "name": n, "size": 1, "ts": ts}
+        for n in ("minha-pasta/a.xlsx", "minha-pasta/gone.xlsx")
+        for ts in ("2024-01-01T00:00:00Z", "2024-01-01T01:00:00Z")
+    ]
+    _land_events(landing, "ev.json", evs)
+
+    sink = BigQuerySink(warehouse_dir=str(tmp_path / "warehouse"))
+    q = run_xlsx_etl_pipeline(
+        spark, str(landing), str(bucket), sink, "analytics.twice", COLS, DDL
+    )
+    q.awaitTermination(120)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 4
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"]] == [0]
+
+    ts0, ts1 = "1704067200000000", "1704070800000000"  # epoch micros
+    data = sink.read(spark, "analytics.twice")
+    assert data.columns == ["_source_file", *COLS, "_event_name", "_event_ts"]
+    got = sorted((r._event_ts, r.event_id, r._event_name) for r in data.collect())
+    assert got == [
+        (ts, i, "minha-pasta/a.xlsx") for ts in (ts0, ts1) for i in (1, 2)
+    ]
+
+    dead = sink.read(spark, "analytics.twice_rejected")
+    assert dead.columns == [
+        "_event_name", "_event_ts", "_status", "_error", "_source_file"
+    ]
+    got_dead = sorted(
+        (r._event_name, r._event_ts, r._status) for r in dead.collect()
+    )
+    assert got_dead == [
+        ("minha-pasta/gone.xlsx", ts0, "missing"),
+        ("minha-pasta/gone.xlsx", ts1, "missing"),
+    ]

@@ -240,3 +240,41 @@ def test_tolerant_read_yields_a_row_per_path_for_every_outcome(
         assert len(got) == 1, "a non-data path must yield exactly one marker row"
         assert all(getattr(got[0], c) is None for c in COLS)
         assert (got[0]._error is None) == (status == "empty")
+
+
+def test_tolerant_read_stamps_event_keys_on_every_row(spark, tmp_path):
+    """With event keys, every row of a path — data and marker rows —
+    ends with that path's `_event_name` and `_event_ts`, and a path
+    listed twice yields one set of rows per key. Without keys the
+    schema carries no event columns."""
+    from etl_gcp_function_tmabrasil_spark.sources.xlsx import read_xlsx_tolerant
+
+    good = tmp_path / "good.xlsx"
+    _plant("ok", good)
+    bad = tmp_path / "bad.xlsx"
+    _plant("error", bad)
+    absent = tmp_path / "absent.xlsx"
+    paths = [str(good), str(good), str(bad), str(absent)]
+    keys = [("good", "1"), ("good", "2"), ("bad", "3"), ("absent", "4")]
+
+    df = read_xlsx_tolerant(spark, paths, COLS, event_keys=keys)
+    assert df.columns == [
+        "_source_file", "_status", "_error", *COLS, "_event_name", "_event_ts"
+    ]
+    got = sorted(
+        (r._event_name, r._event_ts, r._status, r.event_id, r._source_file)
+        for r in df.collect()
+    )
+    assert got == [
+        ("absent", "4", "missing", None, f"file:{absent}"),
+        ("bad", "3", "error", None, f"file:{bad}"),
+        ("good", "1", "ok", "1", f"file:{good}"),
+        ("good", "1", "ok", "2", f"file:{good}"),
+        ("good", "2", "ok", "1", f"file:{good}"),
+        ("good", "2", "ok", "2", f"file:{good}"),
+    ]
+
+    plain = read_xlsx_tolerant(spark, paths, COLS)
+    assert plain.columns == ["_source_file", "_status", "_error", *COLS]
+    with pytest.raises(ValueError, match="3 event keys for 4 paths"):
+        read_xlsx_tolerant(spark, paths, COLS, event_keys=keys[:3])
