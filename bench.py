@@ -410,14 +410,7 @@ def main() -> None:
     timings: dict[str, float | None] = {}
     medians: dict[str, float | None] = {}
     errors: dict[str, str] = {}
-    # Probe knob (scripts/bench_order_probe.py): run the list reversed
-    # to classify tail-half inflation as positional (JVM/GC/state
-    # accumulating over the run) vs query-identity (load coincidence).
-    # Order affects ONLY iteration; the stdout contract is unchanged.
-    order = list(HEADLINE)
-    if os.environ.get("SPARK_GRAFT_BENCH_ORDER") == "reverse":
-        order.reverse()
-    for name in order:
+    for name in HEADLINE:
         timings[name], medians[name] = _time_query_isolated(
             spark, queries[name], name, sf_dir, errors
         )

@@ -9,14 +9,19 @@ Explicit ``StructType`` schemas are declared for the stream-shaped tables
 model (normalized CloudEvent payload, ``/root/reference/main.py:6-9``).
 Batch parquet loads rely on parquet footers — self-describing, and the
 vectorized reader + column pruning work without declared schemas.
+
+Loaded frames and footer layouts are reused per SparkSession through
+``operators/reuse.py``, stamped by each file's mtime and size, so a
+table rewritten in place is re-read and its old slot released.
 """
 
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import DataFrame, SparkSession, types as T
+
+from etl_gcp_function_tmabrasil_spark.operators.reuse import reuse
 
 TABLES = [
     "region",
@@ -89,26 +94,6 @@ def table_path(sf_dir: str, name: str) -> str:
 #: i.e. multi-GB tables written with too-few row groups.
 _REBALANCE_MIN_ROWS = 5_000_000
 
-#: (path, mtime_ns, size) -> (num_rows, split_units) parquet-footer cache
-#: (footers are a few KB; reading them driver-side is how Spark itself
-#: plans the scan). Keying by mtime+size means a table rewritten in
-#: place gets re-read instead of serving a stale layout.
-_layout_cache: dict[str, tuple[tuple, tuple[int, int]]] = {}
-
-#: session → {(path, rebalance-arg, file-stamp) → loaded DataFrame};
-#: see load_table. NOTE the weak keying does NOT make entries
-#: collectable: each cached DataFrame strongly references its
-#: SparkSession, and this module-global dict strongly holds the
-#: DataFrames, so every session with a live entry is pinned for
-#: process lifetime — the cache is process-lifetime by design
-#: (sessions per process are few). What IS bounded is growth per
-#: session: inserting a frame evicts prior file-stamp generations of
-#: the same (path, rebalance), so rewritten fixture files replace
-#: their entry instead of accumulating one per rewrite.
-_df_cache: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
 
 def _layout_files(path: str) -> list[str]:
     if os.path.isfile(path):
@@ -120,30 +105,38 @@ def _layout_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
 
 
-def _parquet_layout(path: str) -> tuple[int, int]:
+def _file_stamp(path: str) -> tuple:
+    """(file, mtime_ns, size) per parquet file under `path`: the reuse
+    stamp of everything derived from the files, so a table rewritten in
+    place is re-read instead of served stale."""
+    return tuple(
+        (f, st.st_mtime_ns, st.st_size) for f in _layout_files(path) for st in (os.stat(f),)
+    )
+
+
+def _parquet_layout(spark: SparkSession, path: str) -> tuple[int, int]:
     """(total rows, parallel split units) for a parquet file or directory.
 
     A row group is the minimum decode unit: Spark assigns each row group
     to the input partition containing its midpoint, so a file with one
     giant row group is read by ONE task no matter how it is byte-split.
     The split-unit count is therefore the true scan parallelism bound.
+    Footers are a few KB; reading them driver-side is how Spark itself
+    plans the scan, and the result is reused per session until the
+    files change.
     """
-    files = _layout_files(path)
-    stamp = tuple(
-        (f, st.st_mtime_ns, st.st_size) for f in files for st in (os.stat(f),)
-    )
-    cached = _layout_cache.get(path)
-    if cached is not None and cached[0] == stamp:
-        return cached[1]
-    import pyarrow.parquet as pq
 
-    rows = units = 0
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        rows += md.num_rows
-        units += md.num_row_groups
-    _layout_cache[path] = (stamp, (rows, units))
-    return rows, units
+    def read_footers() -> tuple[int, int]:
+        import pyarrow.parquet as pq
+
+        rows = units = 0
+        for f in _layout_files(path):
+            md = pq.ParquetFile(f).metadata
+            rows += md.num_rows
+            units += md.num_row_groups
+        return rows, units
+
+    return reuse(spark, ("parquet_layout", path), _file_stamp(path), read_footers)
 
 
 def load_table(
@@ -186,61 +179,42 @@ def load_table(
     truncation DuckDB applies, so oracle comparisons agree.
     """
     path = table_path(sf_dir, name)
-    # Memoize the loaded frame per (session, path, file stamp, layout):
-    # every spark.read.parquet() schedules a 1-task schema-read job, so
-    # an uncached load_table costs one job per call — hundreds of
-    # driver round-trips across a full registry run for zero work.
-    # DataFrames are immutable, so handing back the same object is
-    # safe; the mtime/size stamp invalidates when fixture files change
-    # and the session key drops entries when the session is replaced.
-    try:
-        stamp = tuple(
-            (f, st.st_mtime_ns, st.st_size)
-            for f in _layout_files(path)
-            for st in (os.stat(f),)
-        )
-    except OSError:
-        stamp = None
-    key = (path, rebalance, stamp)
-    per_session = _df_cache.setdefault(spark, {})
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
 
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = spark.read.parquet(path)
-    par = spark.sparkContext.defaultParallelism
-    effective = rebalance
-    if effective is None:
-        try:
-            rows, units = _parquet_layout(path)
-        except Exception:
-            rows, units = 0, par
-        effective = rows >= _REBALANCE_MIN_ROWS and units < max(2, par // 2)
-    elif effective == "compute":
-        try:
-            _rows, units = _parquet_layout(path)
-        except Exception:
-            units = par
-        effective = units < par
-    if effective:
-        df = df.repartition(par)
-    if stamp is not None:
-        # evict stale stamp generations of this (path, rebalance) so a
-        # repeatedly rewritten fixture file holds ONE cache entry, not
-        # one per rewrite
-        for k in [
-            k for k in per_session if k[0] == path and k[1] == rebalance and k != key
-        ]:
-            del per_session[k]
-        per_session[key] = df
-    return df
+    def read() -> DataFrame:
+        if name == "events":
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+            df = spark.read.parquet(path)
+            from pyspark.sql import functions as F
+
+            if dict(df.dtypes).get("ts") == "bigint":
+                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        else:
+            df = spark.read.parquet(path)
+        par = spark.sparkContext.defaultParallelism
+        effective = rebalance
+        if effective is None:
+            try:
+                rows, units = _parquet_layout(spark, path)
+            except Exception:
+                rows, units = 0, par
+            effective = rows >= _REBALANCE_MIN_ROWS and units < max(2, par // 2)
+        elif effective == "compute":
+            try:
+                _rows, units = _parquet_layout(spark, path)
+            except Exception:
+                units = par
+            effective = units < par
+        if effective:
+            df = df.repartition(par)
+        return df
+
+    # Reuse the loaded frame per (session, path, rebalance) until the
+    # files change: every spark.read.parquet() schedules a 1-task
+    # schema-read job, so an uncached load_table costs one job per call
+    # — hundreds of driver round-trips across a full registry run for
+    # zero work. DataFrames are immutable, so handing back the same
+    # object is safe.
+    return reuse(spark, ("load_table", path, rebalance), _file_stamp(path), read)
 
 
 def scan_spread_n(spark: SparkSession, sf_dir: str, name: str) -> int | None:
@@ -258,7 +232,7 @@ def scan_spread_n(spark: SparkSession, sf_dir: str, name: str) -> int | None:
     """
     par = spark.sparkContext.defaultParallelism
     try:
-        _rows, units = _parquet_layout(table_path(sf_dir, name))
+        _rows, units = _parquet_layout(spark, table_path(sf_dir, name))
     except Exception:
         return None
     return par if units < par else None

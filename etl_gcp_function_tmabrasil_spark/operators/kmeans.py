@@ -26,30 +26,21 @@ on the lower cell_id. A cell that captures no members in some
 iteration produces no mean rows, so the codebook can SHRINK below k
 (at most k cells, exactly k in practice on non-degenerate data —
 pinned in tests/test_kmeans.py).
+
+Sharing: callers that train on the same declared input pass one
+``share_key`` and reuse one training per SparkSession (a slot in
+operators/reuse.py; see kmeans_fit).
 """
 
 from __future__ import annotations
 
-import weakref
-
 from pyspark.sql import DataFrame, Window as W, functions as F
+
+from etl_gcp_function_tmabrasil_spark.operators.reuse import reuse
 
 #: decimal places for the argmin distance key / the centroid components
 SQDIST_DP = 6
 MEAN_DP = 9
-
-#: session → {(share_key, k, iters) → (cent, assigned)} trainer memo
-#: (r16, VERDICT item 6): six gate queries train byte-identical
-#: codebooks (the trainer is deterministic by construction — rounded
-#: argmin keys, decimal-exact means), so re-running the Lloyd loop per
-#: query only re-materializes the same frames. Opt-in via
-#: ``share_key``: callers that train on the same declared
-#: (input, k, iters) pass the same key and share ONE set of
-#: driver-coordinated iterations per session. Weak session keying and
-#: per-session dicts follow catalog._df_cache; tests and probes that
-#: pass no key keep fully independent trainings.
-_FIT_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
 
 def _assign(emb: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, e) × (cell_id, ce) → (vec_id, e, cell_id, sqdist).
@@ -125,21 +116,26 @@ def kmeans_fit(
     aggregations; `localCheckpoint` keeps plans flat so the loop scales
     in iteration count.
 
-    ``share_key``: opt into the per-session trainer memo (_FIT_MEMO) —
-    callers whose DECLARED semantics train on the same input with the
-    same k/iters (the codebook/SemDeDup pair, the PQ sub-codebooks of
-    the adc/rerank pairs) pass the same key and reuse one training.
-    The trainer is deterministic, so sharing is result-invisible; the
-    shared centroid frame is persisted (it is consumed by several
-    downstream subtrees per query).
+    ``share_key``: opt into the per-session trainer memo (r16, VERDICT
+    item 6) — callers whose DECLARED semantics train on the same input
+    with the same k/iters (the codebook/SemDeDup pair, the PQ
+    sub-codebooks of the adc/rerank pairs) pass the same key and reuse
+    one training: a reuse slot keyed ``("kmeans_fit", share_key, k,
+    iters)`` with a constant stamp (operators/reuse.py). The trainer is
+    deterministic (rounded argmin keys, decimal-exact means), so
+    sharing is result-invisible; the shared centroid frame is persisted
+    (it is consumed by several downstream subtrees per query). No key
+    means a fully independent training.
     """
     if iters < 1:
         raise ValueError(f"kmeans_fit requires iters >= 1, got {iters}")
     if share_key is not None:
-        per = _FIT_MEMO.setdefault(emb.sparkSession, {})
-        hit = per.get((share_key, k, iters))
-        if hit is not None:
-            return hit
+
+        def train() -> tuple[DataFrame, DataFrame]:
+            cent, assigned = kmeans_fit(emb, k, iters)
+            return cent.persist(), assigned
+
+        return reuse(emb.sparkSession, ("kmeans_fit", share_key, k, iters), None, train)
     # the init window is global but runs over exactly k rows (the
     # TakeOrdered limit executes first) — not a corpus-sized sort
     cent = (
@@ -154,18 +150,7 @@ def kmeans_fit(
     for _ in range(iters):
         assigned = _assign(emb, cent).localCheckpoint(eager=False)
         cent = _update(assigned)
-    result = (cent, assigned.select("vec_id", "cell_id", "sqdist"))
-    if share_key is not None:
-        from etl_gcp_function_tmabrasil_spark.queries._util import (
-            managed_persist,
-        )
-
-        result = (
-            managed_persist(cent, f"kmeans.cent:{share_key}:{k}:{iters}"),
-            result[1],
-        )
-        per[(share_key, k, iters)] = result
-    return result
+    return cent, assigned.select("vec_id", "cell_id", "sqdist")
 
 
 def kmeans_assign(emb: DataFrame, cent: DataFrame) -> DataFrame:

@@ -26,9 +26,12 @@ Cross-engine determinism rules (SURVEY.md §7.3 "oracle parity details"):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 from etl_gcp_function_tmabrasil_spark.catalog import load_table  # noqa: F401  (re-export)
+from etl_gcp_function_tmabrasil_spark.operators.reuse import (  # noqa: F401  (re-export)
+    managed_persist,
+)
 
 #: Whitespace-run regex pinned EXPLICITLY for cross-engine parity:
 #: Java's \s matches U+000B (vertical tab) but DuckDB's RE2 \s does
@@ -36,35 +39,6 @@ from etl_gcp_function_tmabrasil_spark.catalog import load_table  # noqa: F401  (
 #: document differently in the two engines. Use this literal in BOTH
 #: the Spark expression and the oracle SQL.
 WS_CLASS = r"[ \t\n\r\f\x0B]+"
-
-#: One cached-generation handle per persist call site (see managed_persist).
-_MANAGED_CACHE: dict[str, DataFrame] = {}
-
-
-def managed_persist(df: DataFrame, key: str) -> DataFrame:
-    """persist() with per-call-site generational cleanup.
-
-    Query functions return lazy frames, so they can never unpersist
-    their own intermediates — a bare .persist() therefore leaks one
-    cache entry per invocation for the SparkSession's lifetime. In a
-    long-lived session (the 140-query parity run, repeated bench
-    iterations) that accumulates corpus-sized entries, evicts other
-    caches, and lets a *stale* same-lineage entry shadow the fresh one
-    (CacheManager matches by logical plan — "already cached" warnings,
-    plan-shape drift). Keying the persist by call site and releasing
-    the previous generation bounds the session to ONE cache entry per
-    site: re-invoking a query first frees what its last invocation
-    cached. The unpersist is lazy-safe — blocking=False, and the old
-    entry's data stays valid for any still-running job that pinned it.
-    """
-    prev = _MANAGED_CACHE.pop(key, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass  # e.g. its SparkSession is already stopped
-    _MANAGED_CACHE[key] = df.persist()
-    return df
 
 
 def dsum(col: Column | str, scale: int = 4, precision: int = 18) -> Column:

@@ -1185,7 +1185,7 @@ def agg_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join-backs now broadcast-attached, every pass's per-row work is
     # trivial and the round-robin exchange itself became the dominant
     # cost (measured sf0.1: raw scan 0.10 s vs spread 0.57 s; x
-    # value-count 0.17 raw vs 0.84 spread — scripts/r16_subplan_probe).
+    # value-count 0.17 raw vs 0.84 spread — OPTIMIZATION_r16.md).
     # Parallelism for the one per-row-heavy stage (the broadcast-map
     # probes) comes from the window's own (flag, band) exchange instead:
     # the broadcast joins moved BELOW the window (see ranked), so the

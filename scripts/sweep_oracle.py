@@ -1,9 +1,8 @@
 #!/usr/bin/env python3
 """Full-registry oracle-parity sweep at an arbitrary scale factor.
 
-Generalizes scripts/full_sweep_sf01.py (which is pinned to sf0.1) so
-the r15 optimization loop can drive the whole registry at sf0.01
-between waves without editing the sf0.1 close-out script.
+Drives the whole registry (or named queries) at any scale factor:
+sf0.01 between optimization waves, sf0.1 as the close-out sweep.
 
 Usage: python scripts/sweep_oracle.py [SF_DIR] [--fast] [name ...]
   SF_DIR defaults to /root/testdata/sf0.01; positional names restrict

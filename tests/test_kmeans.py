@@ -121,14 +121,16 @@ def test_kmeans_fit_share_key_memoizes_and_is_result_identical(spark):
     SAME frames (one training per session); no key trains
     independently; and the shared result is bit-identical to an
     unshared training — sharing must be result-invisible."""
-    from etl_gcp_function_tmabrasil_spark.operators import kmeans as km
+    from etl_gcp_function_tmabrasil_spark.operators import kmeans as km, reuse
 
     emb = spark.createDataFrame(
         [(i, [float(i % 7), float((3 * i) % 5), float(i % 11)])
          for i in range(1, 61)],
         "vec_id long, e array<double>",
     )
-    km._FIT_MEMO.clear()
+    slots = [("kmeans_fit", key, 4, 2) for key in ("t", "u")]
+    for slot in slots:
+        reuse.release(spark, slot)
     c1, a1 = km.kmeans_fit(emb, k=4, iters=2, share_key="t")
     c2, a2 = km.kmeans_fit(emb, k=4, iters=2, share_key="t")
     assert c1 is c2 and a1 is a2  # memo hit: the identical objects
@@ -139,4 +141,5 @@ def test_kmeans_fit_share_key_memoizes_and_is_result_identical(spark):
     # a different key never aliases
     c4, _ = km.kmeans_fit(emb, k=4, iters=2, share_key="u")
     assert c4 is not c1
-    km._FIT_MEMO.clear()
+    for slot in slots:
+        reuse.release(spark, slot)

@@ -342,7 +342,7 @@ def test_kmeans_codebook_loop_is_window_free_and_bounded(spark, sf_dir):
     # window is cut by localCheckpoint. Exchanges stay bounded per
     # iteration (assign argmin + the two update aggs), independent of
     # corpus size.
-    from etl_gcp_function_tmabrasil_spark.operators import kmeans as km
+    from etl_gcp_function_tmabrasil_spark.operators import reuse
     from etl_gcp_function_tmabrasil_spark.queries.similarity import (
         kmeans_ivf_codebook,
     )
@@ -355,7 +355,8 @@ def test_kmeans_codebook_loop_is_window_free_and_bounded(spark, sf_dir):
     # count this test pins (the pagerank test documents the same
     # cache-printout hazard)
     spark.catalog.clearCache()
-    km._FIT_MEMO.clear()
+    for key in [k for k in reuse._SLOTS.get(spark, {}) if k[0] == "kmeans_fit"]:
+        reuse.release(spark, key)
     df = kmeans_ivf_codebook(spark, sf_dir)
     assert count_windows(df) == 0, "Lloyd loop grew a window sort"
     assert count_exchanges(df) <= 5, "k-means final iteration shuffles too much"

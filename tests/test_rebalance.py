@@ -15,6 +15,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from etl_gcp_function_tmabrasil_spark import catalog
+from etl_gcp_function_tmabrasil_spark.operators import reuse
 from etl_gcp_function_tmabrasil_spark.plans.inspect import explain_str
 
 
@@ -47,14 +48,13 @@ def test_auto_rebalance_fires_on_big_single_rowgroup_input(spark, sf_dir, tmp_pa
         os.path.join(fake_dir, "lineitem.parquet"),
     )
     path = catalog.table_path(fake_dir, "lineitem")
-    st = os.stat(path)
-    stamp = ((path, st.st_mtime_ns, st.st_size),)
-    catalog._layout_cache[path] = (stamp, (5_000_000, 1))
+    slot = ("parquet_layout", path)
+    reuse.reuse(spark, slot, catalog._file_stamp(path), lambda: (5_000_000, 1))
     try:
         df = catalog.load_table(spark, fake_dir, "lineitem")
         assert _has_roundrobin(df), "guard did not fire on 5M rows / 1 row group"
     finally:
-        catalog._layout_cache.pop(path, None)
+        reuse.release(spark, slot)
 
 
 def test_filter_pushes_through_rebalance(spark, sf_dir):
