@@ -96,7 +96,8 @@ HEADLINE = [
 #: stdout line is at its pinned capacity (worst case 1768 of 1792 B —
 #: tests/test_bench_contract.py), and HEADLINE stays append-only so
 #: same-position round-over-round comparisons keep cancelling the
-#: measured JVM session-aging drift (BENCH_ORDER_PROBE.json). The
+#: measured JVM session-aging drift (a forward/reversed-order probe
+#: showed inflation following list position; SCALING.md). The
 #: extended totals are intentionally NOT folded into "value".
 EXTENDED = [
     "dedup_winnowing_pairs",        # winnowing fingerprints + pair join

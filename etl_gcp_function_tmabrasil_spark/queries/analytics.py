@@ -2908,10 +2908,10 @@ def quantile_normalize_profile(
     IDENTICAL bin: within-(source, price-band) row_number (parallelism
     = sources × bands), exclusive prefix over the tiny band table,
     global rank = offset + within-band rn, and exact NTILE arithmetic
-    from (rank, n_total). Measured at sf0.1: 1.253/1.364 min/med →
-    see plans/r15/quantile_normalize_profile_{before,after}.txt
-    (Window over hashpartitioning(grp) → banded two-pass). Means are
-    unchanged decimal sums.
+    from (rank, n_total). Measured at sf0.1: 1.253/1.364 → 1.000/1.143 s
+    min/med (OPTIMIZATION_r15.md); the physical plan went from a Window over
+    hashpartitioning(grp) to the banded two-pass. Means are unchanged
+    decimal sums.
     """
     from etl_gcp_function_tmabrasil_spark.operators.banded_rank import (
         banded_global_rank,

@@ -15,7 +15,7 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "etl_gcp_function_tmabrasil_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-aware defaults.
@@ -30,9 +30,6 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)

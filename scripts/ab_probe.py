@@ -1,11 +1,10 @@
 #!/usr/bin/env python3
-"""Round-16 interleaved same-session A/B: load the OLD (HEAD-committed)
-variant of a query module from git into a scratch module and alternate
-old/new timed noop runs in ONE session, so host drift cancels
-(the r15 "interleaved min-of-N" methodology).
+"""Interleaved same-session A/B: load the OLD (git-committed) variant of
+a query module into a scratch module and alternate old/new timed noop
+runs in ONE session, so host drift cancels (interleaved min-of-N).
 
-Usage: python scripts/r16_ab_probe.py <module> <query> [pairs]
-  e.g. python scripts/r16_ab_probe.py queries/text_analysis.py \
+Usage: python scripts/ab_probe.py <module> <query> [pairs] [rev]
+  e.g. python scripts/ab_probe.py queries/text_analysis.py \
        text_langid_hashed_ngram 5
 """
 
@@ -15,6 +14,7 @@ import importlib.util
 import os
 import subprocess
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -31,19 +31,21 @@ def main() -> int:
     rev = sys.argv[4] if len(sys.argv) > 4 else "HEAD"
     pkgpath = f"etl_gcp_function_tmabrasil_spark/{relpath}"
     src = subprocess.check_output(["git", "-C", REPO, "show", f"{rev}:{pkgpath}"])
-    tmp = f"/tmp/r16_old_{os.path.basename(relpath)}"
-    with open(tmp, "wb") as f:
+    # a private file per run: two probes of one module at different
+    # revisions must not load each other's old variant
+    with tempfile.NamedTemporaryFile(suffix=".py") as f:
         f.write(src)
-    spec = importlib.util.spec_from_file_location("r16_old_variant", tmp)
-    old_mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(old_mod)
+        f.flush()
+        spec = importlib.util.spec_from_file_location("ab_old_variant", f.name)
+        old_mod = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(old_mod)
     new_mod_name = "etl_gcp_function_tmabrasil_spark." + relpath.replace(
         "/", "."
     ).removesuffix(".py")
     new_mod = __import__(new_mod_name, fromlist=["_"])
     old_fn, new_fn = getattr(old_mod, qname), getattr(new_mod, qname)
 
-    spark = get_spark(app_name="r16_ab_probe")
+    spark = get_spark(app_name="ab_probe")
     spark.range(1_000_000).selectExpr("sum(id) s").write.format("noop").mode(
         "overwrite"
     ).save()

@@ -16,8 +16,9 @@ Usage:
 Writes BENCH_FLOORS.json at the repo root (commit it with the
 close-out) and prints the flagged list. Flags are TRIAGE INPUT, not
 verdicts: a flagged query either carries an intentional-change note in
-the optimization log for the round, or needs a drift probe
-(scripts/bench_drift_probe.py) before the round closes.
+the optimization log for the round, or needs a drift check (seeded
+perfbench spreads, or an interleaved scripts/ab_probe.py run against
+the previous revision) before the round closes.
 """
 
 from __future__ import annotations

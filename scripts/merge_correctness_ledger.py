@@ -8,8 +8,10 @@ round and keeps only recent CORRECTNESS_r{N}.json artifacts on disk, so
 only from verdict prose. The ledger makes it checkable from the repo
 (asserted by tests/test_correctness_ledger.py).
 
-Run at each round boundary — i.e. at round start, after the driver has
-written the previous round's CORRECTNESS_r{N}.json:
+The ledger also drives that window: ``queries.check_window`` puts the 50
+queries with the oldest green round at the front of the registry, so
+merging is what rotates it. Run at each round boundary — i.e. at round
+start, once the previous round's CORRECTNESS_r{N}.json is on disk:
 
     python scripts/merge_correctness_ledger.py
 
@@ -24,6 +26,8 @@ Merge rules:
 - Entries whose artifact has rotated off disk are preserved verbatim
   (including prose-sourced `note` entries seeded from VERDICT.md for
   rounds whose artifacts predate the ledger).
+- `merged_artifacts` keeps every artifact ever absorbed, including the
+  ones that have since rotated off disk.
 """
 
 from __future__ import annotations
@@ -74,9 +78,12 @@ def main() -> int:
                 entry.pop("note", None)
     ledger["queries"] = dict(sorted(queries.items()))
     ledger["n_queries"] = len(queries)
-    ledger["merged_artifacts"] = [os.path.basename(p) for p in artifacts]
+    ledger["merged_artifacts"] = sorted(
+        set(ledger.get("merged_artifacts", []))
+        | {os.path.basename(p) for p in artifacts}
+    )
     with open(LEDGER, "w") as fh:
-        json.dump(ledger, fh, indent=2, sort_keys=False)
+        json.dump(ledger, fh, indent=1, sort_keys=False)
         fh.write("\n")
     n_green = sum(1 for e in queries.values() if e.get("round") is not None)
     n_prose = sum(
