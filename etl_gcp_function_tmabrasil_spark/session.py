@@ -110,4 +110,13 @@ def get_spark(
             listing_parallelism, str(spark.sparkContext.defaultParallelism)
         )
     spark.sparkContext.setLogLevel("WARN")
+    # Reading a path that does not exist yet (the first probe of an
+    # output table) makes FileStreamSink log a WARN with an ~80-line
+    # Java stack trace before the read fails or falls back; the failure
+    # itself still surfaces as the read's exception.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+        jvm.org.apache.logging.log4j.Level.ERROR,
+    )
     return spark

@@ -102,6 +102,25 @@ def _load_manifest(table_dir: str, version: int) -> dict:
         return json.load(fh)
 
 
+def _head(table_dir: str, required: bool = False) -> dict | None:
+    """The newest manifest, or None for a table with no commit yet
+    (FileNotFoundError instead when ``required``)."""
+    versions = _manifests(table_dir)
+    if versions:
+        return _load_manifest(table_dir, versions[-1])
+    if required:
+        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
+    return None
+
+
+def _applied(head: dict | None, txn_id: str | int | None) -> int | None:
+    """The version that already applied ``txn_id`` (the manifest's
+    cumulative ``txn -> version`` map), or None if it is new."""
+    if head is None or txn_id is None:
+        return None
+    return head.get("txn", {}).get(str(txn_id))
+
+
 def _schema_signature(schema: StructType) -> list[tuple[str, str]]:
     """Name + type per field, nullability ignored — parquet round-trips
     do not preserve nullability faithfully enough to gate on it."""
@@ -513,6 +532,51 @@ def _merge_schemas(prev: StructType, new: StructType) -> StructType:
     return StructType(merged)
 
 
+def _land(
+    df: DataFrame,
+    table_dir: str,
+    prefix: str,
+    base: dict | None,
+    stats_cols: list[str] | None,
+    point_cols: list[str] | None,
+    bloom_bits: int,
+    ndv_cols: list[str] | None,
+    integrity: bool = False,
+) -> dict:
+    """The one staging protocol of every verb that writes data: write
+    ``df`` under ``data/<prefix>-<uuid>``, list its part files, and
+    collect their per-file metadata — stats/skipping/NDV for the
+    requested columns, plus integrity whenever ``integrity`` is set or
+    ``base`` (the manifest the commit builds on) is tracked. Returns
+    the landed files in the per-file shape ``_write_manifest`` takes;
+    nothing is visible until it publishes a manifest naming them."""
+    rel_dir = os.path.join("data", f"{prefix}-{uuid.uuid4().hex}")
+    staging = os.path.join(table_dir, rel_dir)
+    df.write.parquet(staging)
+    landed: dict = {
+        "files": sorted(
+            os.path.join(rel_dir, f)
+            for f in os.listdir(staging)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))
+        )
+    }
+    if landed["files"] and (stats_cols or point_cols or ndv_cols):
+        landed["stats"], landed["skipping"], landed["ndv"] = (
+            _collect_file_stats(
+                df.sparkSession, staging, rel_dir,
+                list(stats_cols or []), list(point_cols or []),
+                bloom_bits, list(ndv_cols or []),
+            )
+        )
+    if integrity or "integrity" in (base or {}):
+        landed["integrity"] = (
+            _collect_integrity(df.sparkSession, staging, table_dir)
+            if landed["files"]
+            else {}
+        )
+    return landed
+
+
 def commit_snapshot(
     df: DataFrame,
     table_dir: str,
@@ -531,8 +595,11 @@ def commit_snapshot(
     files forward (and REJECTS a schema that drifted from the previous
     snapshot's); ``mode='overwrite'`` starts the file list fresh
     (logical truncate — old versions remain readable) and may change
-    the schema. An empty ``df`` commits fine: the manifest records the
-    schema, so the version reads back as an empty typed DataFrame.
+    the schema. The schema check (``merge_schema`` resolution
+    included) and the table's CHECK constraints run before any file is
+    written, so a rejected commit leaves nothing behind. An empty
+    ``df`` commits fine: the manifest records the schema, so the
+    version reads back as an empty typed DataFrame.
     ``stats_cols`` records per-file MIN/MAX for those columns in the
     manifest, enabling ``read_snapshot(..., prune=...)`` file
     skipping. ``point_cols`` additionally records a bounded per-file
@@ -548,19 +615,19 @@ def commit_snapshot(
     Iceberg's snapshot-log lookup). Pass it explicitly for
     deterministic fixtures.
 
-    ``integrity=True`` additionally records, per fresh file, its exact
-    row count and an ORDER-INDEPENDENT content hash (the decimal sum of
-    per-row ``xxhash64`` over every declared column — the same
-    row-hash-rollup machinery as ``table_diff_checksum``), computed in
-    one distributed pass over the staging read. ``fsck_snapshot``
-    later re-derives both and proves each still-referenced file is
-    bit-equivalent to what the commit recorded. Append commits carry
-    prior integrity entries forward; on an integrity-TRACKED table
-    (any prior entry in the manifest) the rewriting verbs
-    (delete/replace/merge/optimize) record fresh entries for the files
-    they write, so fsck keeps full ``ok`` coverage across churn. Only
-    files committed before tracking was enabled degrade to
-    existence-only ("exists").
+    ``integrity=True`` starts integrity TRACKING: per fresh file, the
+    manifest records its exact row count and an ORDER-INDEPENDENT
+    content hash (the decimal sum of per-row ``xxhash64`` over every
+    declared column — the same row-hash-rollup machinery as
+    ``table_diff_checksum``), computed in one distributed pass over the
+    staging read. ``fsck_snapshot`` later re-derives both and proves
+    each still-referenced file is bit-equivalent to what the commit
+    recorded. Once a table is tracked (its manifest carries an
+    ``integrity`` map), every verb that lands files records fresh
+    entries for them whether or not it is passed the flag, and every
+    verb carries the entries of the files it keeps, so fsck keeps full
+    ``ok`` coverage across churn. Only files committed before tracking
+    started degrade to existence-only ("exists").
 
     ``txn_id`` makes the commit IDEMPOTENT (Delta's txn/appId pattern):
     the manifest carries a cumulative ``txn -> version`` map, and a
@@ -570,50 +637,15 @@ def commit_snapshot(
     sink write and checkpoint commit replays the batch at-least-once."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown snapshot mode: {mode}")
-    versions = _manifests(table_dir)
-    prev = _load_manifest(table_dir, versions[-1]) if versions else None
-    txn: dict[str, int] = dict(prev.get("txn", {})) if prev else {}
-    if txn_id is not None and str(txn_id) in txn:
-        return txn[str(txn_id)]  # already applied — idempotent no-op
-    quality: dict[str, int] = {}
-    quar_df: DataFrame | None = None
-    if prev and prev.get("constraints"):
-        df, quar_df, quality = _enforce_constraints(
-            df, prev["constraints"]
-        )
-    data_dir = os.path.join(table_dir, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    staging_name = f"commit-{uuid.uuid4().hex}"
-    staging = os.path.join(data_dir, staging_name)
-    df.write.parquet(staging)
-    rel_dir = os.path.join("data", staging_name)
-    new_files = sorted(
-        os.path.join(rel_dir, f)
-        for f in os.listdir(staging)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
-    stats: dict[str, dict[str, list]] = {}
-    skipping: dict[str, dict[str, dict]] = {}
-    ndv: dict[str, dict[str, list]] = {}
-    if (stats_cols or point_cols or ndv_cols) and new_files:
-        stats, skipping, ndv = _collect_file_stats(
-            df.sparkSession,
-            staging,
-            rel_dir,
-            list(stats_cols or []),
-            list(point_cols or []),
-            bloom_bits,
-            list(ndv_cols or []),
-        )
-    integ: dict[str, dict] = {}
-    if integrity and new_files:
-        integ = _collect_integrity(df.sparkSession, staging, table_dir)
-    files: list[str] = []
-    table_schema = df.schema
+    prev = _head(table_dir)
+    done = _applied(prev, txn_id)
+    if done is not None:
+        return done  # already applied — idempotent no-op
+    schema = df.schema
     if mode == "append" and prev is not None:
         prev_schema = StructType.fromJson(json.loads(prev["schema"]))
         if merge_schema:
-            table_schema = _merge_schemas(prev_schema, df.schema)
+            schema = _merge_schemas(prev_schema, df.schema)
         elif _schema_signature(prev_schema) != _schema_signature(df.schema):
             raise ValueError(
                 "append-time schema drift: snapshot "
@@ -622,31 +654,21 @@ def commit_snapshot(
                 "mode='overwrite' to change the table's schema, or "
                 "merge_schema=True to ADD nullable columns"
             )
-        files = prev["files"]
-        stats = {**prev.get("stats", {}), **stats}
-        skipping = {**prev.get("skipping", {}), **skipping}
-        ndv = {**prev.get("ndv", {}), **ndv}
-        integ = {**prev.get("integrity", {}), **integ}
-    files = files + new_files
-    version = (versions[-1] + 1) if versions else 1
-    if txn_id is not None:
-        txn[str(txn_id)] = version
+    df, quar_df, quality = _enforce_constraints(
+        df, (prev or {}).get("constraints")
+    )
+    landed = _land(
+        df, table_dir, "commit", prev,
+        stats_cols, point_cols, bloom_bits, ndv_cols, integrity,
+    )
     if quar_df is not None:
         _land_quarantine(quar_df, table_dir)
-    _write_manifest(
-        table_dir,
-        version,
-        files,
-        table_schema.json(),
-        stats,
-        skipping,
-        ndv,
-        txn,
-        commit_ts,
-        integrity=integ,
-        quality=quality,
+    return _write_manifest(
+        table_dir, prev, [landed],
+        drop=set(prev["files"]) if prev and mode == "overwrite" else (),
+        txn_id=txn_id, commit_ts=commit_ts,
+        schema=schema.json(), quality=quality,
     )
-    return version
 
 
 def _collect_integrity(
@@ -707,10 +729,12 @@ def fsck_snapshot(
       writer recorded (``commit_snapshot(..., integrity=True)``), or
       it no longer parses;
     - ``ok`` — exists and both integrity checks pass;
-    - ``exists`` — exists but the manifest carries no integrity record
-      for it (committed before tracking was enabled — on a tracked
-      table the rewriting verbs record fresh entries, so churned files
-      stay ``ok``), so only presence is provable.
+    - ``exists`` — exists but no retained manifest carries an integrity
+      record for it: it was committed before the table's tracking
+      started (once tracked, every verb records entries for the files
+      it lands and carries those of the files it keeps), or promoted
+      from a staging table that never tracked it, so only presence is
+      provable.
 
     Plus every ``*.parquet`` under ``data/`` that NO retained manifest
     references is reported as ``orphan`` — structurally invisible to
@@ -856,57 +880,78 @@ def fsck_snapshot(
     return sorted(out, key=lambda r: (r["status"], r["file"]))
 
 
+#: manifest keys holding per-file metadata, each a map file path -> entry
+_PER_FILE = ("stats", "skipping", "ndv", "integrity")
+
+
+def _part(man: dict, files: list[str], rekey: dict | None = None) -> dict:
+    """``files`` of manifest ``man`` with their per-file metadata, each
+    path re-keyed through ``rekey`` (old path -> new path) if given."""
+    new = {f: (rekey or {}).get(f, f) for f in files}
+    part = {"files": list(new.values())}
+    for k in _PER_FILE:
+        if k in man:
+            part[k] = {new[f]: man[k][f] for f in files if f in man[k]}
+    return part
+
+
 def _write_manifest(
     table_dir: str,
-    version: int,
-    files: list[str],
-    schema_json: str,
-    stats: dict,
-    skipping: dict,
-    ndv: dict,
-    txn: dict,
-    commit_ts: float | None,
-    integrity: dict | None = None,
-    constraints: dict | None = None,
-    quality: dict | None = None,
-) -> None:
-    """Compose and atomically publish ``manifest_v{version}.json`` —
-    the single commit point shared by every snapshot-mutating verb.
+    base: dict | None,
+    landed: list[dict] | tuple = (),
+    drop: set[str] | tuple = (),
+    rekey: dict | None = None,
+    version: int | None = None,
+    txn_id: str | int | None = None,
+    commit_ts: float | None = None,
+    **table,
+) -> int:
+    """Compose and atomically publish the next manifest — the single
+    commit point shared by every snapshot-mutating verb; returns its
+    version (default: ``base``'s plus one).
 
-    ``constraints`` (table-level CHECK declarations) default to
-    CARRY-FORWARD: when the caller passes ``None``, the previous
-    version's constraints are inherited unchanged, so every mutating
-    verb keeps the table's invariants alive without threading them
-    explicitly. ``set_constraints``/``drop_constraint`` pass an
-    explicit dict to change the set (an explicit ``{}`` clears it).
-    ``quality`` records THIS commit's per-constraint violation counts
-    (DLT-style expectation metrics) — per-manifest, never inherited."""
-    tmp = os.path.join(table_dir, f".manifest_v{version}.json.tmp")
-    if constraints is None and version > 1:
-        prev_path = _manifest_path(table_dir, version - 1)
-        if os.path.exists(prev_path):
-            constraints = _load_manifest(table_dir, version - 1).get(
-                "constraints"
-            )
+    The new manifest is ``base`` (the manifest the verb builds on, or
+    None for a new table) minus the files in ``drop``, plus the
+    ``landed`` file sets (``_land``, or ``_part`` of another manifest).
+    One rule decides what it carries:
+
+    - per-file metadata (stats, skipping, ndv, integrity) travels with
+      its file — a kept or landed file keeps its entries, re-keyed
+      through ``rekey`` where its path changes, and a dropped file's
+      entries go with it. A table stays integrity-tracked once any of
+      its parts is;
+    - table-level state (schema, constraints, txn map) comes from
+      ``base`` unless the verb changing it passes it in ``table``
+      (``set_constraints`` passes the new set; an explicit ``{}``
+      clears it). ``txn_id`` records this version in the txn map.
+
+    Per-commit keys (``quality``: this commit's per-constraint
+    violation counts; ``cloned_from``/``restored_from`` provenance)
+    come only from ``table`` and are never inherited."""
+    base = base or {"files": []}
+    if version is None:
+        version = base.get("version", 0) + 1
+    parts = [_part(base, [f for f in base["files"] if f not in drop], rekey)]
+    parts += landed
     payload = {
         "version": version,
-        "files": files,
-        "schema": schema_json,
-        "stats": stats,
-        "skipping": skipping,
-        "ndv": ndv,
-        "txn": txn,
-        "commit_ts": time.time() if commit_ts is None else commit_ts,
+        "files": [f for p in parts for f in p["files"]],
     }
-    if integrity:
-        payload["integrity"] = integrity
-    if constraints:
-        payload["constraints"] = constraints
-    if quality:
-        payload["quality"] = quality
+    for k in _PER_FILE:
+        if k != "integrity" or any(k in p for p in parts):
+            payload[k] = {f: e for p in parts for f, e in p.get(k, {}).items()}
+    payload["schema"] = table.pop("schema", base.get("schema"))
+    payload["txn"] = dict(table.pop("txn", base.get("txn", {})))
+    if txn_id is not None:
+        payload["txn"][str(txn_id)] = version
+    table.setdefault("constraints", base.get("constraints"))
+    payload.update({k: v for k, v in table.items() if v})
+    payload["commit_ts"] = time.time() if commit_ts is None else commit_ts
+    tmp = os.path.join(table_dir, f".manifest_v{version}.json.tmp")
     with open(tmp, "w") as fh:
         json.dump(payload, fh)
     _publish_manifest(tmp, _manifest_path(table_dir, version))
+    return version
 
 
 class ConstraintViolation(ValueError):
@@ -923,7 +968,7 @@ class ConstraintViolation(ValueError):
 
 
 def _enforce_constraints(
-    df: DataFrame, constraints: dict[str, dict]
+    df: DataFrame, constraints: dict[str, dict] | None
 ) -> tuple[DataFrame, DataFrame | None, dict[str, int]]:
     """Validate an incoming batch against the table's CHECK
     constraints — the write-time half of the governance trio (WAP
@@ -1040,10 +1085,7 @@ def set_constraints(
     (Delta's behavior) scans the current snapshot once and refuses to
     add a ``fail`` constraint the existing data already violates.
     Returns the new version."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    prev = _load_manifest(table_dir, versions[-1])
+    prev = _head(table_dir, required=True)
     norm: dict[str, dict] = {}
     for name, c in constraints.items():
         if isinstance(c, str):
@@ -1064,22 +1106,10 @@ def set_constraints(
         existing = spark.read.schema(schema).parquet(
             *(os.path.join(table_dir, f) for f in prev["files"])
         )
-        _clean, _quar, _counts = _enforce_constraints(existing, new_fail)
-    version = versions[-1] + 1
-    _write_manifest(
-        table_dir,
-        version,
-        prev["files"],
-        prev["schema"],
-        prev.get("stats", {}),
-        prev.get("skipping", {}),
-        prev.get("ndv", {}),
-        dict(prev.get("txn", {})),
-        commit_ts,
-        integrity=prev.get("integrity"),
-        constraints=merged,
+        _enforce_constraints(existing, new_fail)
+    return _write_manifest(
+        table_dir, prev, commit_ts=commit_ts, constraints=merged
     )
-    return version
 
 
 def drop_constraint(
@@ -1088,29 +1118,14 @@ def drop_constraint(
     """Remove a declared CHECK constraint (``ALTER TABLE DROP
     CONSTRAINT``) as a metadata-only version. Raises ``KeyError`` if
     the name is not declared."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    prev = _load_manifest(table_dir, versions[-1])
+    prev = _head(table_dir, required=True)
     current = dict(prev.get("constraints", {}))
     if name not in current:
         raise KeyError(f"constraint {name!r} is not declared")
     del current[name]
-    version = versions[-1] + 1
-    _write_manifest(
-        table_dir,
-        version,
-        prev["files"],
-        prev["schema"],
-        prev.get("stats", {}),
-        prev.get("skipping", {}),
-        prev.get("ndv", {}),
-        dict(prev.get("txn", {})),
-        commit_ts,
-        integrity=prev.get("integrity"),
-        constraints=current,
+    return _write_manifest(
+        table_dir, prev, commit_ts=commit_ts, constraints=current
     )
-    return version
 
 
 def _rel_of_input_file(path: str, table_dir: str) -> str:
@@ -1127,6 +1142,7 @@ def _rel_of_input_file(path: str, table_dir: str) -> str:
 def _rewrite_where(
     spark: SparkSession,
     table_dir: str,
+    prev: dict,
     condition: str,
     prune: dict | None,
     points: dict | None,
@@ -1135,25 +1151,20 @@ def _rewrite_where(
     bloom_bits: int,
     ndv_cols: list[str] | None,
     verify_prune: bool = False,
-) -> dict:
+) -> tuple[set[str], list[dict], dict]:
     """Shared copy-on-write core of DELETE WHERE / REPLACE WHERE:
-    find the files that actually CONTAIN rows matching ``condition``
-    (file-level stats/point pruning first, then one bounded per-file
-    match count — one output row per candidate file), rewrite ONLY
-    those files without the matching rows, and return everything the
-    caller needs to compose the next manifest. Untouched files are
-    carried forward byte-identical along with their stats metadata.
+    find the files of ``prev`` that actually CONTAIN rows matching
+    ``condition`` (file-level stats/point pruning first, then one
+    bounded per-file match count — one output row per candidate file),
+    and rewrite ONLY those files without the matching rows. Untouched
+    files carry forward byte-identical along with their metadata.
 
-    Returns a dict with the previous manifest, declared schema, the
-    surviving file list (untouched rel paths + freshly written
-    survivor rel paths), kept/rewritten/deleted counts, and the
-    stats/skipping/ndv metadata covering exactly those files."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    prev = _load_manifest(table_dir, versions[-1])
+    Returns ``(touched, landed, counts)``: the rewritten files the
+    next manifest drops, the survivor file set ``_land`` wrote (empty
+    when nothing matched), and the kept/rewritten/pruned/deleted
+    counts."""
     schema = StructType.fromJson(json.loads(prev["schema"]))
-    candidates = snapshot_files(table_dir, versions[-1], prune, points)
+    candidates = snapshot_files(table_dir, prev["version"], prune, points)
     # r11 ADVICE: prune/points are CALLER-ASSERTED bounds — a bound not
     # actually implied by `condition` would silently skip files holding
     # matching rows and commit an incomplete DELETE as success (the
@@ -1163,11 +1174,9 @@ def _rewrite_where(
     # pruned-out files for any match and refuse to commit if one exists.
     pruned_out: list[str] = []
     if prune or points:
-        all_files = snapshot_files(table_dir, versions[-1], None, None)
+        all_files = snapshot_files(table_dir, prev["version"], None, None)
         pruned_out = sorted(set(all_files) - set(candidates))
     if verify_prune and pruned_out:
-        from pyspark.sql import functions as F
-
         stray = (
             spark.read.schema(schema)
             .parquet(*pruned_out)
@@ -1182,7 +1191,7 @@ def _rewrite_where(
                 "refusing to commit an incomplete rewrite (fix the bound "
                 "or drop prune/points)"
             )
-    touched_rel: set[str] = set()
+    touched: set[str] = set()
     rows_deleted = 0
     if candidates:
         from pyspark.sql import functions as F
@@ -1197,80 +1206,30 @@ def _rewrite_where(
             .collect()  # bounded: one row per candidate file
         )
         for r in per_file:
-            touched_rel.add(_rel_of_input_file(r["_f"], table_dir))
+            touched.add(_rel_of_input_file(r["_f"], table_dir))
             rows_deleted += r["count"]
-    stats = {
-        k: v for k, v in prev.get("stats", {}).items()
-        if k not in touched_rel
-    }
-    skipping = {
-        k: v for k, v in prev.get("skipping", {}).items()
-        if k not in touched_rel
-    }
-    ndv = {
-        k: v for k, v in prev.get("ndv", {}).items()
-        if k not in touched_rel
-    }
-    # integrity-tracked table: kept files keep their entries; freshly
-    # rewritten files get NEW entries below so fsck stays full-coverage
-    # (`ok`, not `exists`) across churn
-    integ = {
-        k: v for k, v in prev.get("integrity", {}).items()
-        if k not in touched_rel
-    }
-    tracked = bool(prev.get("integrity"))
-    kept = [f for f in prev["files"] if f not in touched_rel]
-    new_files: list[str] = []
-    if touched_rel:
-        data_dir = os.path.join(table_dir, "data")
-        staging_name = f"rewrite-{uuid.uuid4().hex}"
-        staging = os.path.join(data_dir, staging_name)
-        touched_abs = [
-            os.path.join(table_dir, rel) for rel in sorted(touched_rel)
-        ]
-        (
+    landed = []
+    if touched:
+        survivors = (
             spark.read.schema(schema)
-            .parquet(*touched_abs)
+            .parquet(*(os.path.join(table_dir, f) for f in sorted(touched)))
             # keep every row where the predicate is not TRUE — SQL
             # DELETE does not remove NULL-predicate rows
             .filter(f"NOT coalesce(({condition}), false)")
-            .write.parquet(staging)
         )
-        rel_dir = os.path.join("data", staging_name)
-        new_files = sorted(
-            os.path.join(rel_dir, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        if (stats_cols or point_cols or ndv_cols) and new_files:
-            s2, k2, n2 = _collect_file_stats(
-                spark,
-                staging,
-                rel_dir,
-                list(stats_cols or []),
-                list(point_cols or []),
-                bloom_bits,
-                list(ndv_cols or []),
+        landed.append(
+            _land(
+                survivors, table_dir, "rewrite", prev,
+                stats_cols, point_cols, bloom_bits, ndv_cols,
             )
-            stats.update(s2)
-            skipping.update(k2)
-            ndv.update(n2)
-        if tracked and new_files:
-            integ.update(_collect_integrity(spark, staging, table_dir))
-    return {
-        "prev": prev,
-        "schema": schema,
-        "files": kept + new_files,
-        "files_kept": len(kept),
-        "files_rewritten": len(touched_rel),
+        )
+    counts = {
+        "files_rewritten": len(touched),
+        "files_kept": sum(f not in touched for f in prev["files"]),
         "files_pruned": len(pruned_out),
         "rows_deleted": rows_deleted,
-        "stats": stats,
-        "skipping": skipping,
-        "ndv": ndv,
-        "integrity": integ,
-        "tracked": tracked,
     }
+    return touched, landed, counts
 
 
 def delete_where(
@@ -1312,39 +1271,26 @@ def delete_where(
     "files_kept", "files_pruned", "rows_deleted"}``; a no-match delete
     still commits a (metadata-only) version, keeping ``txn_id``
     idempotency uniform."""
-    versions = _manifests(table_dir)
-    if versions:
-        head = _load_manifest(table_dir, versions[-1])
-        txn = dict(head.get("txn", {}))
-        if txn_id is not None and str(txn_id) in txn:
-            return {
-                "version": txn[str(txn_id)],
-                "files_rewritten": 0,
-                "files_kept": len(head["files"]),
-                "files_pruned": 0,
-                "rows_deleted": 0,
-            }
-    rw = _rewrite_where(
-        spark, table_dir, condition, prune, points,
+    prev = _head(table_dir, required=True)
+    done = _applied(prev, txn_id)
+    if done is not None:
+        return {
+            "version": done,
+            "files_rewritten": 0,
+            "files_kept": len(prev["files"]),
+            "files_pruned": 0,
+            "rows_deleted": 0,
+        }
+    touched, landed, counts = _rewrite_where(
+        spark, table_dir, prev, condition, prune, points,
         stats_cols, point_cols, bloom_bits, ndv_cols,
         verify_prune=verify_prune,
     )
-    txn = dict(rw["prev"].get("txn", {}))
-    version = rw["prev"]["version"] + 1
-    if txn_id is not None:
-        txn[str(txn_id)] = version
-    _write_manifest(
-        table_dir, version, rw["files"], rw["prev"]["schema"],
-        rw["stats"], rw["skipping"], rw["ndv"], txn, commit_ts,
-        integrity=rw["integrity"],
+    version = _write_manifest(
+        table_dir, prev, landed, drop=touched,
+        txn_id=txn_id, commit_ts=commit_ts,
     )
-    return {
-        "version": version,
-        "files_rewritten": rw["files_rewritten"],
-        "files_kept": rw["files_kept"],
-        "files_pruned": rw["files_pruned"],
-        "rows_deleted": rw["rows_deleted"],
-    }
+    return {"version": version, **counts}
 
 
 def replace_where(
@@ -1371,21 +1317,28 @@ def replace_where(
     ``delete_where``; ``df``'s schema must match the table's.
     ``validate=True`` (Delta's default) rejects a ``df`` containing
     rows OUTSIDE the predicate — the guard that keeps a backfill from
-    silently bleeding into ranges it did not replace. Readers see the
-    table before the swap or after it, never between."""
-    versions = _manifests(table_dir)
-    if versions:
-        head = _load_manifest(table_dir, versions[-1])
-        txn = dict(head.get("txn", {}))
-        if txn_id is not None and str(txn_id) in txn:
-            return {
-                "version": txn[str(txn_id)],
-                "files_rewritten": 0,
-                "files_kept": len(head["files"]),
-                "files_pruned": 0,
-                "rows_deleted": 0,
-                "files_inserted": 0,
-            }
+    silently bleeding into ranges it did not replace. The schema,
+    predicate and constraint checks all run before any file is
+    written, so a rejected backfill leaves nothing behind. Readers see
+    the table before the swap or after it, never between."""
+    prev = _head(table_dir, required=True)
+    done = _applied(prev, txn_id)
+    if done is not None:
+        return {
+            "version": done,
+            "files_rewritten": 0,
+            "files_kept": len(prev["files"]),
+            "files_pruned": 0,
+            "rows_deleted": 0,
+            "files_inserted": 0,
+        }
+    schema = StructType.fromJson(json.loads(prev["schema"]))
+    if _schema_signature(schema) != _schema_signature(df.schema):
+        raise ValueError(
+            f"replace_where schema drift: table has "
+            f"{schema.simpleString()}, insert has "
+            f"{df.schema.simpleString()}"
+        )
     if validate:
         stray = df.filter(f"NOT coalesce(({condition}), false)").count()
         if stray:
@@ -1395,65 +1348,26 @@ def replace_where(
                 "stay inside its predicate (pass validate=False to "
                 "override)"
             )
-    rw = _rewrite_where(
-        spark, table_dir, condition, prune, points,
+    df, quar_df, quality = _enforce_constraints(df, prev.get("constraints"))
+    touched, landed, counts = _rewrite_where(
+        spark, table_dir, prev, condition, prune, points,
         stats_cols, point_cols, bloom_bits, ndv_cols,
         verify_prune=verify_prune,
     )
-    if _schema_signature(rw["schema"]) != _schema_signature(df.schema):
-        raise ValueError(
-            f"replace_where schema drift: table has "
-            f"{rw['schema'].simpleString()}, insert has "
-            f"{df.schema.simpleString()}"
-        )
-    quality: dict[str, int] = {}
-    quar_df: DataFrame | None = None
-    if rw["prev"].get("constraints"):
-        df, quar_df, quality = _enforce_constraints(
-            df, rw["prev"]["constraints"]
-        )
-    data_dir = os.path.join(table_dir, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    staging_name = f"commit-{uuid.uuid4().hex}"
-    staging = os.path.join(data_dir, staging_name)
-    df.write.parquet(staging)
-    rel_dir = os.path.join("data", staging_name)
-    inserted = sorted(
-        os.path.join(rel_dir, f)
-        for f in os.listdir(staging)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    inserted = _land(
+        df, table_dir, "commit", prev,
+        stats_cols, point_cols, bloom_bits, ndv_cols,
     )
-    if (stats_cols or point_cols or ndv_cols) and inserted:
-        s2, k2, n2 = _collect_file_stats(
-            spark, staging, rel_dir,
-            list(stats_cols or []), list(point_cols or []),
-            bloom_bits, list(ndv_cols or []),
-        )
-        rw["stats"].update(s2)
-        rw["skipping"].update(k2)
-        rw["ndv"].update(n2)
-    if rw["tracked"] and inserted:
-        rw["integrity"].update(
-            _collect_integrity(spark, staging, table_dir)
-        )
-    txn = dict(rw["prev"].get("txn", {}))
-    version = rw["prev"]["version"] + 1
-    if txn_id is not None:
-        txn[str(txn_id)] = version
     if quar_df is not None:
         _land_quarantine(quar_df, table_dir)
-    _write_manifest(
-        table_dir, version, rw["files"] + inserted,
-        rw["prev"]["schema"], rw["stats"], rw["skipping"], rw["ndv"],
-        txn, commit_ts, integrity=rw["integrity"], quality=quality,
+    version = _write_manifest(
+        table_dir, prev, landed + [inserted], drop=touched,
+        txn_id=txn_id, commit_ts=commit_ts, quality=quality,
     )
     return {
         "version": version,
-        "files_rewritten": rw["files_rewritten"],
-        "files_kept": rw["files_kept"],
-        "files_pruned": rw["files_pruned"],
-        "rows_deleted": rw["rows_deleted"],
-        "files_inserted": len(inserted),
+        **counts,
+        "files_inserted": len(inserted["files"]),
     }
 
 
@@ -1708,16 +1622,13 @@ def optimize_layout(
     rewrite_data_files(sort_order), expressed through the manifest.
 
     Content is untouched (same rows, new layout); old versions stay
-    readable until VACUUM, exactly like the r9 compaction verb. One
+    readable until VACUUM, exactly like the r9 compaction verb. On an
+    integrity-tracked table the rewritten files are tracked too. One
     shuffle (the range partitioning) — the same price as any
     partitioned write of the table."""
     from pyspark.sql import functions as F
 
     df = read_snapshot(spark, table_dir)
-    versions = _manifests(table_dir)
-    tracked = bool(
-        versions and _load_manifest(table_dir, versions[-1]).get("integrity")
-    )
     clustered = (
         df.withColumn("__cluster", F.expr(order_expr))
         .repartitionByRange(n_files, "__cluster")
@@ -1733,9 +1644,6 @@ def optimize_layout(
         bloom_bits=bloom_bits,
         ndv_cols=ndv_cols,
         commit_ts=commit_ts,
-        # an integrity-tracked table keeps full fsck coverage across a
-        # layout rewrite (the whole content lands as fresh files)
-        integrity=tracked,
     )
 
 
@@ -1760,9 +1668,11 @@ def clone_snapshot(
     manifest contract), so source files appear as ``../``-escaping
     relpaths; they stay valid as long as source and clone move
     together (Delta stores absolute URIs for the same reason shallow
-    clones there break if the source moves). Per-file stats/skipping/
-    NDV metadata is carried over re-keyed, so file pruning works on
-    the clone immediately. ``vacuum_snapshots`` never deletes files
+    clones there break if the source moves). The clone inherits the
+    source version's schema and CHECK constraints, and its per-file
+    stats/skipping/NDV/integrity entries re-keyed to the clone's paths,
+    so pruning, constraint enforcement and fsck coverage hold on the
+    clone immediately; its txn map starts empty. ``vacuum_snapshots`` never deletes files
     OUTSIDE the table root, so vacuuming a clone cannot reach through
     a ``..`` reference and destroy source data (the documented Delta
     shallow-clone vacuum hazard, guarded here structurally).
@@ -1782,39 +1692,17 @@ def clone_snapshot(
     os.makedirs(os.path.join(dst_dir, "data"), exist_ok=True)
     src_abs = os.path.abspath(src_dir)
     dst_abs = os.path.abspath(dst_dir)
-    remap = {
-        rel: os.path.relpath(os.path.join(src_abs, rel), dst_abs)
-        for rel in src["files"]
-    }
-    files = [remap[rel] for rel in src["files"]]
-    stats = {remap[k]: s for k, s in src.get("stats", {}).items() if k in remap}
-    skipping = {
-        remap[k]: s for k, s in src.get("skipping", {}).items() if k in remap
-    }
-    ndv = {remap[k]: s for k, s in src.get("ndv", {}).items() if k in remap}
-    tmp = os.path.join(dst_dir, ".manifest_v1.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "version": 1,
-                "files": files,
-                "schema": src["schema"],
-                "stats": stats,
-                "skipping": skipping,
-                "ndv": ndv,
-                "txn": {},
-                "commit_ts": time.time() if commit_ts is None else commit_ts,
-                "cloned_from": {
-                    "path": os.path.relpath(src_abs, dst_abs),
-                    "version": v,
-                },
-            },
-            fh,
-        )
-    _publish_manifest(tmp, _manifest_path(dst_dir, 1))
+    _write_manifest(
+        dst_dir, src, version=1, commit_ts=commit_ts, txn={},
+        rekey={
+            rel: os.path.relpath(os.path.join(src_abs, rel), dst_abs)
+            for rel in src["files"]
+        },
+        cloned_from={"path": os.path.relpath(src_abs, dst_abs), "version": v},
+    )
     return {
         "version": 1,
-        "files_referenced": len(files),
+        "files_referenced": len(src["files"]),
         "cloned_from": {"path": src_dir, "version": v},
     }
 
@@ -1837,10 +1725,15 @@ def promote_staged(
     about the staging write ever mutated it.
 
     Like :func:`clone_snapshot`, the promote copies zero data bytes
-    (the 100 TB point: publish is O(metadata)); per-file
-    stats/skipping/NDV metadata carries over re-keyed so pruning works
-    on the promoted rows immediately. Schema must match the target's
-    current schema exactly (append contract). ``txn_id`` gives the
+    (the 100 TB point: publish is O(metadata)); the promoted files
+    carry their per-file stats/skipping/NDV/integrity entries from the
+    staged version re-keyed, so pruning works on the promoted rows
+    immediately and files a tracked staging table recorded stay
+    fsck-``ok`` (files it never tracked stay existence-only). The
+    target keeps its own schema, constraints, txn map and integrity
+    entries; constraints are NOT re-checked against the staged rows
+    (the audit is the staging read's job). Schema must match the
+    target's current schema exactly (append contract). ``txn_id`` gives the
     promote the same idempotent-replay semantics as
     :func:`commit_snapshot`. Returns ``{"version",
     "files_referenced"}``.
@@ -1865,11 +1758,10 @@ def promote_staged(
     if sv not in svs:
         raise ValueError(f"version {sv} not in {svs} at {staging_dir}")
     staged = _load_manifest(staging_dir, sv)
-    versions = _manifests(table_dir)
-    prev = _load_manifest(table_dir, versions[-1]) if versions else None
-    txn: dict[str, int] = dict(prev.get("txn", {})) if prev else {}
-    if txn_id is not None and str(txn_id) in txn:
-        return {"version": txn[str(txn_id)], "files_referenced": 0}
+    prev = _head(table_dir)
+    done = _applied(prev, txn_id)
+    if done is not None:
+        return {"version": done, "files_referenced": 0}
     if prev is not None:
         prev_schema = StructType.fromJson(json.loads(prev["schema"]))
         staged_schema = StructType.fromJson(json.loads(staged["schema"]))
@@ -1904,41 +1796,13 @@ def promote_staged(
             rel: os.path.relpath(os.path.join(staging_abs, rel), table_abs)
             for rel in staged["files"]
         }
-    files = (prev["files"] if prev else []) + [
-        remap[rel] for rel in staged["files"]
-    ]
-    stats = dict(prev.get("stats", {})) if prev else {}
-    skipping = dict(prev.get("skipping", {})) if prev else {}
-    ndv = dict(prev.get("ndv", {})) if prev else {}
-    stats.update(
-        {remap[k]: s for k, s in staged.get("stats", {}).items() if k in remap}
-    )
-    skipping.update(
-        {
-            remap[k]: s
-            for k, s in staged.get("skipping", {}).items()
-            if k in remap
-        }
-    )
-    ndv.update(
-        {remap[k]: s for k, s in staged.get("ndv", {}).items() if k in remap}
-    )
-    new_version = (versions[-1] + 1) if versions else 1
-    if txn_id is not None:
-        txn[str(txn_id)] = new_version
-    _write_manifest(
-        table_dir,
-        new_version,
-        files,
-        prev["schema"] if prev else staged["schema"],
-        stats,
-        skipping,
-        ndv,
-        txn,
-        commit_ts,
+    version = _write_manifest(
+        table_dir, prev, [_part(staged, staged["files"], remap)],
+        txn_id=txn_id, commit_ts=commit_ts,
+        schema=(prev or staged)["schema"],
     )
     return {
-        "version": new_version,
+        "version": version,
         "files_referenced": len(staged["files"]),
     }
 
@@ -1994,14 +1858,11 @@ def merge_snapshot(
     "files_inserted", "rows_updated", "rows_inserted"}``.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    prev = _load_manifest(table_dir, versions[-1])
-    txn = dict(prev.get("txn", {}))
-    if txn_id is not None and str(txn_id) in txn:
+    prev = _head(table_dir, required=True)
+    done = _applied(prev, txn_id)
+    if done is not None:
         return {
-            "version": txn[str(txn_id)],
+            "version": done,
             "files_rewritten": 0,
             "files_kept": len(prev["files"]),
             "files_inserted": 0,
@@ -2017,12 +1878,9 @@ def merge_snapshot(
         )
     from pyspark.sql import functions as F
 
-    quality: dict[str, int] = {}
-    quar_df: DataFrame | None = None
-    if prev.get("constraints"):
-        source, quar_df, quality = _enforce_constraints(
-            source, prev["constraints"]
-        )
+    source, quar_df, quality = _enforce_constraints(
+        source, prev.get("constraints")
+    )
     n_source = source.count()
     n_keys = source.select(*keys).distinct().count()
     if n_keys != n_source:
@@ -2055,50 +1913,13 @@ def merge_snapshot(
     # rows_inserted must count unmatched source KEYS
     matched_keys = int(hit_rows.select(*keys).distinct().count())
     rewrite_set = set(rewrite_rel)
-    kept = [f for f in files if f not in rewrite_set]
-    data_dir = os.path.join(table_dir, "data")
-    os.makedirs(data_dir, exist_ok=True)
-    new_files: list[str] = []
-    stats = {k: v for k, v in prev.get("stats", {}).items() if k in kept}
-    skipping = {
-        k: v for k, v in prev.get("skipping", {}).items() if k in kept
-    }
-    ndv = {k: v for k, v in prev.get("ndv", {}).items() if k in kept}
-    integ = {
-        k: v for k, v in prev.get("integrity", {}).items() if k in kept
-    }
-    tracked = bool(prev.get("integrity"))
-
-    def _land(df: DataFrame) -> None:
-        staging_name = f"commit-{uuid.uuid4().hex}"
-        staging = os.path.join(data_dir, staging_name)
-        df.write.parquet(staging)
-        rel_dir = os.path.join("data", staging_name)
-        landed = sorted(
-            os.path.join(rel_dir, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-        new_files.extend(landed)
-        if (stats_cols or point_cols or ndv_cols) and landed:
-            s2, k2, n2 = _collect_file_stats(
-                spark, staging, rel_dir,
-                list(stats_cols or []), list(point_cols or []),
-                bloom_bits, list(ndv_cols or []),
-            )
-            stats.update(s2)
-            skipping.update(k2)
-            ndv.update(n2)
-        if tracked and landed:
-            integ.update(_collect_integrity(spark, staging, table_dir))
-
+    frames = []
     if rewrite_rel:
-        survivors = (
+        frames.append(
             spark.read.schema(schema)
             .parquet(*(os.path.join(table_dir, f) for f in rewrite_rel))
             .join(bkeys, keys, "anti")
         )
-        _land(survivors)
     if rows_updated != matched_keys:
         # duplicate-key target: Delta UPDATE SET * touches EVERY
         # matched stored row — replicate each matched source row once
@@ -2111,7 +1932,7 @@ def merge_snapshot(
             if n_keys <= 1_000_000
             else match_counts
         )
-        to_land = (
+        frames.append(
             source.join(bmc, keys, "left")
             .withColumn(
                 "_rep",
@@ -2122,31 +1943,25 @@ def merge_snapshot(
             .select(*source.columns)
         )
     else:
-        to_land = source
-    _land(to_land)
-    version = versions[-1] + 1
-    if txn_id is not None:
-        txn[str(txn_id)] = version
+        frames.append(source)
+    landed = [
+        _land(
+            d, table_dir, "commit", prev,
+            stats_cols, point_cols, bloom_bits, ndv_cols,
+        )
+        for d in frames
+    ]
     if quar_df is not None:
         _land_quarantine(quar_df, table_dir)
-    _write_manifest(
-        table_dir,
-        version,
-        kept + new_files,
-        prev["schema"],
-        stats,
-        skipping,
-        ndv,
-        txn,
-        commit_ts,
-        integrity=integ,
-        quality=quality,
+    version = _write_manifest(
+        table_dir, prev, landed, drop=rewrite_set,
+        txn_id=txn_id, commit_ts=commit_ts, quality=quality,
     )
     return {
         "version": version,
         "files_rewritten": len(rewrite_rel),
-        "files_kept": len(kept),
-        "files_inserted": len(new_files),
+        "files_kept": sum(f not in rewrite_set for f in files),
+        "files_inserted": sum(len(p["files"]) for p in landed),
         "rows_updated": rows_updated,
         "rows_inserted": int(n_source - matched_keys),
     }
@@ -2215,8 +2030,10 @@ def restore_snapshot(
     (the bad versions stay time-travelable until a vacuum expires
     them). Returns the new version number.
 
-    The restored manifest carries the source's schema and stats
-    verbatim and the NEWEST manifest's txn map (idempotence keys
+    The restored manifest carries the restored version's schema, CHECK
+    constraints and per-file stats/skipping/NDV/integrity entries
+    verbatim — the table's invariants and fsck coverage come back with
+    its content — and the NEWEST manifest's txn map (idempotence keys
     accumulate monotonically; a restore must not resurrect retired
     batch ids as 'unseen'). Same exclusive-create publish as
     commit_snapshot — a concurrent-writer race raises rather than
@@ -2230,24 +2047,9 @@ def restore_snapshot(
             f"snapshot v{to_version} does not exist at {table_dir}"
             f" (have {versions})"
         )
-    src = _load_manifest(table_dir, to_version)
     newest = _load_manifest(table_dir, versions[-1])
-    version = versions[-1] + 1
-    tmp = os.path.join(table_dir, f".manifest_v{version}.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "version": version,
-                "files": src["files"],
-                "schema": src["schema"],
-                "stats": src.get("stats", {}),
-                "skipping": src.get("skipping", {}),
-                "ndv": src.get("ndv", {}),
-                "txn": dict(newest.get("txn", {})),
-                "restored_from": to_version,
-                "commit_ts": time.time() if commit_ts is None else commit_ts,
-            },
-            fh,
-        )
-    _publish_manifest(tmp, _manifest_path(table_dir, version))
-    return version
+    return _write_manifest(
+        table_dir, _load_manifest(table_dir, to_version),
+        version=versions[-1] + 1, commit_ts=commit_ts,
+        txn=newest.get("txn", {}), restored_from=to_version,
+    )

@@ -296,19 +296,27 @@ def test_fsck_attributes_each_fault(spark, tmp_path):
 
 
 def test_fsck_full_coverage_across_rewrites(spark, tmp_path):
-    """On an integrity-tracked table, every rewriting verb (merge,
-    delete, replace, optimize) records fresh integrity entries for the
-    files it writes — fsck reports `ok`, never `exists`, across
-    churn."""
+    """On an integrity-tracked table, every verb keeps an integrity
+    entry for every file it references — the rewriting verbs (merge,
+    delete, replace, optimize) and an append without the flag record
+    fresh entries for the files they write; promote, restore and clone
+    carry the entries of the files they re-reference. fsck reports
+    `ok`, never `exists`, across churn, even after a vacuum leaves only
+    the newest manifest to vouch for the files."""
     from pyspark.sql import functions as F
 
     from etl_gcp_function_tmabrasil_spark.sinks.snapshot import (
+        clone_snapshot,
         commit_snapshot,
         delete_where,
         fsck_snapshot,
         merge_snapshot,
         optimize_layout,
+        promote_staged,
+        read_snapshot,
         replace_where,
+        restore_snapshot,
+        vacuum_snapshots,
     )
 
     t = str(tmp_path / "tracked")
@@ -319,33 +327,40 @@ def test_fsck_full_coverage_across_rewrites(spark, tmp_path):
             integrity=True,
         )
 
-    def statuses():
-        return {r["status"] for r in fsck_snapshot(spark, t)}
+    def statuses(table=t):
+        vacuum_snapshots(table, retain_last=1)
+        return {r["status"] for r in fsck_snapshot(spark, table)}
 
-    merge_snapshot(
-        spark, t,
-        spark.createDataFrame([(1, 99), (100, 1)], "id long, v long"),
-        "id",
-    )
+    def rows(*pairs):
+        return spark.createDataFrame(list(pairs), "id long, v long")
+
+    merge_snapshot(spark, t, rows((1, 99), (100, 1)), "id")
     assert statuses() == {"ok"}, "post-merge files must keep integrity"
     delete_where(spark, t, "id >= 30 AND id < 35")
     assert statuses() == {"ok"}
-    replace_where(
-        spark,
-        spark.createDataFrame([(20, -1)], "id long, v long"),
-        t,
-        "id = 20",
-    )
+    replace_where(spark, rows((20, -1)), t, "id = 20")
     assert statuses() == {"ok"}
     optimize_layout(spark, t, "id", 2)
     assert statuses() == {"ok"}
+    # a tracked table stays tracked: the flag only STARTS tracking
+    commit_snapshot(rows((200, 400)), t)
+    assert statuses() == {"ok"}
+    stage = str(tmp_path / "stage")
+    commit_snapshot(rows((300, 600)), stage, integrity=True)
+    promoted = promote_staged(stage, t)["version"]
+    assert statuses() == {"ok"}
+    delete_where(spark, t, "id >= 200")
+    restore_snapshot(t, promoted)
+    assert statuses() == {"ok"}
+    clone = str(tmp_path / "clone")
+    clone_snapshot(t, clone)
+    assert statuses(clone) == {"ok"}
     # content still correct after the churn
-    from etl_gcp_function_tmabrasil_spark.sinks.snapshot import read_snapshot
-
-    got = {r.id: r.v for r in read_snapshot(spark, t).collect()}
     want = {i: i * 2 for i in range(40) if not (30 <= i < 35)}
-    want.update({1: 99, 100: 1, 20: -1})
-    assert got == want
+    want.update({1: 99, 100: 1, 20: -1, 200: 400, 300: 600})
+    for table in (t, clone):
+        got = {r.id: r.v for r in read_snapshot(spark, table).collect()}
+        assert got == want
 
 
 # --- stats_group_sequential_peto: z trajectory + boundary recompute ----------

@@ -105,9 +105,11 @@ def test_constraints_fail_aborts_commit(spark, tmp_path):
         ConstraintViolation,
         _load_manifest,
         _manifests,
+        clone_snapshot,
         commit_snapshot,
         drop_constraint,
         read_snapshot,
+        restore_snapshot,
         set_constraints,
     )
 
@@ -130,13 +132,22 @@ def test_constraints_fail_aborts_commit(spark, tmp_path):
     assert read_snapshot(spark, t).count() == 21
     # constraints carry forward through commits
     assert _load_manifest(t, v2)["constraints"]["v_nonneg"]
+    # ... come back with a restore, and into a clone
+    restore_snapshot(t, v)
+    with pytest.raises(ConstraintViolation, match="v_nonneg=1"):
+        commit_snapshot(bad, t)
+    clone = str(tmp_path / "clone")
+    clone_snapshot(t, clone, version=v)
+    with pytest.raises(ConstraintViolation, match="v_nonneg=1"):
+        commit_snapshot(bad, clone)
+    assert read_snapshot(spark, t).count() == 20
     # adding a fail constraint the EXISTING data violates is refused
     with pytest.raises(ConstraintViolation):
         set_constraints(spark, t, {"id_small": "id < 10"})
     # drop, then the violating append goes through
     drop_constraint(t, "v_nonneg")
     commit_snapshot(bad, t)
-    assert read_snapshot(spark, t).count() == 23
+    assert read_snapshot(spark, t).count() == 22
 
 
 def test_constraints_quarantine_routes_rows(spark, tmp_path):

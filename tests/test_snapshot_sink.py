@@ -115,7 +115,14 @@ def test_empty_commit_reads_back_typed(spark, tmp_path):
 def test_append_schema_drift_rejected(spark, tmp_path):
     """Append with a drifted schema raises explicitly (name or type
     change) instead of delegating to parquet merge; overwrite may
-    change the schema."""
+    change the schema. The schema is checked before any file lands,
+    so a rejected commit leaves no orphan behind — the replace_where
+    check included, which must reject before rewriting survivors."""
+    from etl_gcp_function_tmabrasil_spark.sinks.snapshot import (
+        fsck_snapshot,
+        replace_where,
+    )
+
     table = tmp_path / "t"
     commit_snapshot(
         spark.createDataFrame([(1, "a")], "id long, name string"),
@@ -124,11 +131,25 @@ def test_append_schema_drift_rejected(spark, tmp_path):
     drifted = spark.createDataFrame([(2, 3.5)], "id long, name double")
     with pytest.raises(ValueError, match="schema drift"):
         commit_snapshot(drifted, str(table), mode="append")
+    with pytest.raises(ValueError, match="merge_schema cannot change"):
+        commit_snapshot(drifted, str(table), merge_schema=True)
     renamed = spark.createDataFrame([(2, "b")], "id long, label string")
     with pytest.raises(ValueError, match="schema drift"):
         commit_snapshot(renamed, str(table), mode="append")
-    # the failed appends wrote only orphans — table unchanged
+    # the predicate matches the stored row, so a late check would
+    # already have rewritten its file
+    with pytest.raises(ValueError, match="schema drift"):
+        replace_where(
+            spark,
+            spark.createDataFrame([(1, 3.5)], "id long, name double"),
+            str(table),
+            "id = 1",
+        )
+    # the failed commits wrote nothing — table unchanged
     assert read_snapshot(spark, str(table)).count() == 1
+    assert "orphan" not in {
+        r["status"] for r in fsck_snapshot(spark, str(table))
+    }
     v = commit_snapshot(drifted, str(table), mode="overwrite")
     assert read_snapshot(spark, str(table), v).schema == drifted.schema
 
@@ -245,6 +266,27 @@ def test_vacuum_expires_versions_and_continues_numbering(spark, tmp_path):
     stats3 = vacuum_snapshots(table, retain_last=0)
     assert stats3["retained_versions"] == [4]
     assert read_snapshot(spark, table).count() == 30
+
+
+def test_manifests_publish_only_through_write_manifest():
+    """`_write_manifest` is the single commit point: no other code in
+    the sink module dumps a manifest or calls `_publish_manifest`, so
+    every verb's next manifest follows the one carry-forward rule
+    instead of a hand-written copy that can drop table state."""
+    import ast
+    import inspect
+
+    from etl_gcp_function_tmabrasil_spark.sinks import snapshot as snap
+
+    writers = ("json.dump", "_publish_manifest")
+    callers: dict[str, set[str]] = {w: set() for w in writers}
+    for top in ast.parse(inspect.getsource(snap)).body:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                name = ast.unparse(node.func)
+                if name in callers:
+                    callers[name].add(getattr(top, "name", "<module>"))
+    assert callers == {w: {"_write_manifest"} for w in writers}
 
 
 def test_point_skipping_dict_path_exact(spark, tmp_path):

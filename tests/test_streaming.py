@@ -1277,3 +1277,19 @@ def test_update_mode_crash_retry_does_not_double_count(
     assert (
         len([f for f in os.listdir(root) if f.startswith("emissions-")]) == 2
     )
+
+
+def test_missing_table_probe_logs_no_stack_trace(spark, tmp_path):
+    """A read of a path that does not exist yet (the ETL ledger probe's
+    first batch) makes FileStreamSink log a WARN with an ~80-line Java
+    stack trace. `get_spark` raises only that logger to ERROR; the
+    root level stays WARN and the read still raises."""
+    from pyspark.errors import AnalysisException
+
+    jvm = spark.sparkContext._jvm
+    log4j = jvm.org.apache.logging.log4j.LogManager
+    sink = "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink"
+    assert log4j.getLogger(sink).getLevel().toString() == "ERROR"
+    assert log4j.getRootLogger().getLevel().toString() == "WARN"
+    with pytest.raises(AnalysisException):
+        spark.read.parquet(str(tmp_path / "missing")).count()
