@@ -120,10 +120,10 @@ def ensure_fixture(root: str, build) -> None:
     so the ``isdir`` regeneration guard can only ever observe a
     COMPLETE fixture. A guard satisfied by the first of several writes
     would let a crash mid-build leave a partial fixture that every
-    later invocation in the process silently reuses (ADVICE r5; the
-    same tmp+rename pattern streaming_gate._write_chunks uses). Shared
-    by the sources/sinks gate fixtures and the dead-letter ETL bucket
-    (code-review r6: one protocol, not two hand-rolled copies)."""
+    later invocation in the process silently reuses (ADVICE r5). Shared
+    by the sources/sinks gate fixtures, the dead-letter ETL bucket, and
+    the streaming gates' chunk fixtures and result snapshots — one
+    protocol, not hand-rolled copies."""
     import os
     import shutil
 

@@ -1,6 +1,7 @@
 """Semi-structured + time-series surface over `events` (SURVEY.md §2.2
-"Array fns", "Map fns", "JSON fns", plus batch-mode twins of the
-streaming windows — tumbling/sliding/session aggregation).
+"Array fns", "Map fns", "JSON fns", plus the streaming window
+aggregates of streaming/windows.py run on the batch table —
+tumbling/sliding/session aggregation).
 
 The `events` table mirrors the reference's CloudEvent payload model: a
 semi-structured `props` JSON column accessed defensively
@@ -12,7 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from etl_gcp_function_tmabrasil_spark.catalog import load_table
-from etl_gcp_function_tmabrasil_spark.queries._util import csum, day, dsum
+from etl_gcp_function_tmabrasil_spark.queries._util import csum, day, dsum, second
+from etl_gcp_function_tmabrasil_spark.streaming.windows import (
+    session_counts,
+    sliding_counts,
+    tumbling_counts,
+)
 
 
 def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,19 +269,14 @@ ORDER BY o_custkey, status
 
 
 def window_tumbling_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 6-hour event-time windows (batch twin of the streaming
-    windowed agg — same `F.window` expression works under readStream with
-    a watermark; see streaming/windows.py)."""
+    """Tumbling 6-hour event-time windows: streaming/windows.tumbling_counts
+    on the batch `events` table, the aggregate stream_tumbling_watermark
+    runs through the streaming runtime."""
     ev = load_table(spark, sf_dir, "events")
+    start = second("window_start").alias("window_start")
     return (
-        ev.groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), csum("value").alias("sum_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+        tumbling_counts(ev, "6 hours")
+        .select(start, "event_type", "n", "sum_value")
         .orderBy("window_start", "event_type")
     )
 
@@ -291,8 +292,8 @@ ORDER BY window_start, event_type
 
 
 def window_sliding_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 6-hour windows every 3 hours (batch twin of
-    streaming/windows.sliding_counts): each event lands in exactly
+    """Sliding 6-hour windows every 3 hours: streaming/windows.sliding_counts
+    on the batch `events` table. Each event lands in exactly
     window/slide = 2 overlapping windows.
 
     Scale notes: `F.window` with a slide expands each row to k=2 window
@@ -301,15 +302,10 @@ def window_sliding_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse map-side.
     """
     ev = load_table(spark, sf_dir, "events")
+    start = second("window_start").alias("window_start")
     return (
-        ev.groupBy(F.window("ts", "6 hours", "3 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), csum("value").alias("sum_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+        sliding_counts(ev, "6 hours", "3 hours")
+        .select(start, "event_type", "n", "sum_value")
         .orderBy("window_start", "event_type")
     )
 
@@ -333,19 +329,12 @@ ORDER BY window_start, event_type
 
 
 def window_session_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session windows (30-minute inactivity gap) in batch mode
-    via `session_window` — oracled by the classic gaps-and-islands SQL."""
+    """Per-user session windows (30-minute inactivity gap):
+    streaming/windows.session_counts on the batch `events` table —
+    oracled by the classic gaps-and-islands SQL."""
     ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), csum("value").alias("sum_value"))
-        .select(
-            "user_id",
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    start = second("session_start").alias("session_start")
+    return session_counts(ev).select("user_id", start, "n_events", "sum_value")
 
 
 # Boundary semantics (measured, Spark 4.1.2; pinned by

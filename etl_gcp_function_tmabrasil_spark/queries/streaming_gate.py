@@ -1,5 +1,5 @@
 """Driver-checkable STREAMING-RUNTIME queries — the Structured
-Streaming surfaces the batch twins cannot pin (watermark advancement
+Streaming surfaces batch queries cannot pin (watermark advancement
 and append-mode window finalization across micro-batches, stateful
 dedup under redelivery, the checkpointed parquet streaming sink)
 exercised inside an oracle-checked query, the same pattern as the
@@ -23,6 +23,9 @@ SQL over `events`:
   pass each event exactly once, so the sink rollup equals the batch
   rollup of `events` itself.
 
+The windowed gates and the dedup gate call the operators of
+streaming/windows.py (the batch queries in events_json.py call the same
+ones), and every gate stream runs through one drain, `_drain`.
 Re-invocation reuses the per-process checkpoint: no new files, no new
 micro-batches, identical sink — the repeat run exercises restart
 semantics rather than rebuilding state.
@@ -36,14 +39,22 @@ the same plan shape at any corpus size.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from etl_gcp_function_tmabrasil_spark.catalog import EVENTS_SCHEMA, load_table
-from etl_gcp_function_tmabrasil_spark.queries._util import csum
+from etl_gcp_function_tmabrasil_spark.queries._util import csum, ensure_fixture, second
+from etl_gcp_function_tmabrasil_spark.sinks.partitioned import heal_and_swap
+from etl_gcp_function_tmabrasil_spark.streaming.windows import (
+    click_purchase_attribution,
+    enrich_stream_with_customer,
+    session_counts,
+    sliding_counts,
+    stateful_dedup,
+    tumbling_counts,
+)
 
 _ROOT: str | None = None
 _N_CHUNKS = 3
@@ -58,26 +69,20 @@ def _root(sf_dir: str, name: str) -> str:
 
 
 def _write_chunks(sf_dir: str, out: str, copies: int, hold_back=None) -> None:
-    """events split into time-ordered parquet chunks with distinct
-    mtimes (the file source admits oldest-first, so chunk order — and
-    therefore watermark advancement — is deterministic); `copies` > 1
-    re-delivers each chunk as a separate later file; `hold_back`
-    (row-mask callable on the pandas frame) carves out a subset that is
-    delivered as one extra LAST file — after the watermark has passed
-    the held-back rows' event times (the late-data fixture).
-
-    Built under a temp name and renamed into place atomically, so a
-    mid-write crash can never leave a partial fixture that the
-    `isdir` regeneration guards would silently reuse forever."""
+    """Write `events` into the new dir `out` as time-ordered parquet
+    chunks with distinct mtimes (the file source admits oldest-first,
+    so chunk order — and therefore watermark advancement — is
+    deterministic); `copies` > 1 re-delivers each chunk as a separate
+    later file; `hold_back` (row-mask callable on the pandas frame)
+    carves out a subset that is delivered as one extra LAST file —
+    after the watermark has passed the held-back rows' event times (the
+    late-data fixture). Callers publish the dir through
+    `ensure_fixture`, so a mid-write crash never leaves a partial
+    fixture behind."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tmp = out + ".tmp"
-    if os.path.isdir(tmp):
-        import shutil
-
-        shutil.rmtree(tmp)
-    os.makedirs(tmp)
+    os.makedirs(out)
     tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
     pdf = tbl.to_pandas().sort_values(["ts", "event_id"]).reset_index(drop=True)
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
@@ -93,14 +98,13 @@ def _write_chunks(sf_dir: str, out: str, copies: int, hold_back=None) -> None:
             preserve_index=False,
         )
         for c in range(copies):
-            pq.write_table(chunk, os.path.join(tmp, f"chunk_{i}_copy{c}.parquet"))
+            pq.write_table(chunk, os.path.join(out, f"chunk_{i}_copy{c}.parquet"))
             time.sleep(0.05)
     if held is not None:
         pq.write_table(
             pa.Table.from_pandas(held, preserve_index=False),
-            os.path.join(tmp, "chunk_late.parquet"),
+            os.path.join(out, "chunk_late.parquet"),
         )
-    os.rename(tmp, out)
 
 
 def _shared_chunks(sf_dir: str) -> str:
@@ -108,8 +112,7 @@ def _shared_chunks(sf_dir: str) -> str:
     (the checkpoint/sink stay per-query) — five identical pyarrow
     fixture builds saved per process."""
     out = _root(sf_dir, "chunks1")
-    if not os.path.isdir(out):
-        _write_chunks(sf_dir, out, copies=1)
+    ensure_fixture(out, lambda tmp: _write_chunks(sf_dir, tmp, copies=1))
     return out
 
 
@@ -135,38 +138,32 @@ def _sentinel_chunks(sf_dir: str) -> str:
     advances the purchase side and eviction stalls (measured before
     this fixture carried pairs). The sentinel pair matches only
     itself (user_id -1) and the gate projection filters user_id >= 0,
-    so no sentinel row reaches the output.
-    Atomic like every fixture: built under a temp name, renamed in."""
-    import shutil
-
+    so no sentinel row reaches the output."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    def build(tmp: str) -> None:
+        _write_chunks(sf_dir, tmp, copies=1)
+        tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+        last = tbl.to_pandas().sort_values("ts").tail(1).reset_index(drop=True)
+        eid = -1
+        for i, days in enumerate((7, 8)):
+            pdf = pd.concat([last, last], ignore_index=True)
+            pdf["ts"] = (pdf["ts"] + pd.Timedelta(days=days)).astype("datetime64[us]")
+            pdf["event_id"] = [eid, eid - 1]
+            eid -= 2
+            pdf["user_id"] = -1
+            pdf["event_type"] = ["click", "purchase"]
+            pdf["value"] = 0.0
+            time.sleep(0.05)  # strictly later mtime -> admitted in order
+            pq.write_table(
+                pa.Table.from_pandas(pdf, preserve_index=False),
+                os.path.join(tmp, f"chunk_zz_sentinel{i}.parquet"),
+            )
+
     out = _root(sf_dir, "chunks_sentinel")
-    if os.path.isdir(out):
-        return out
-    tmp = out + ".build_tmp"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    _write_chunks(sf_dir, tmp, copies=1)
-    tbl = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    last = tbl.to_pandas().sort_values("ts").tail(1).reset_index(drop=True)
-    eid = -1
-    for i, days in enumerate((7, 8)):
-        pdf = pd.concat([last, last], ignore_index=True)
-        pdf["ts"] = (pdf["ts"] + pd.Timedelta(days=days)).astype("datetime64[us]")
-        pdf["event_id"] = [eid, eid - 1]
-        eid -= 2
-        pdf["user_id"] = -1
-        pdf["event_type"] = ["click", "purchase"]
-        pdf["value"] = 0.0
-        time.sleep(0.05)  # strictly later mtime -> admitted in order
-        pq.write_table(
-            pa.Table.from_pandas(pdf, preserve_index=False),
-            os.path.join(tmp, f"chunk_zz_sentinel{i}.parquet"),
-        )
-    os.rename(tmp, out)
+    ensure_fixture(out, build)
     return out
 
 
@@ -188,11 +185,22 @@ def _stream(
     return r.parquet(chunks)
 
 
-def _await(query, timeout: int = 300) -> None:
-    """awaitTermination that FAILS on timeout instead of returning: a
-    timed-out availableNow run would otherwise keep committing in the
-    background while the caller reads a half-written sink (and a
+def _drain(
+    df: DataFrame, root: str, sink=None, mode: str = "append", timeout: float = 300
+) -> str:
+    """Run `df` to completion as one availableNow query checkpointed at
+    ``<root>/ck``: into the parquet sink ``<root>/data`` (returned), or
+    through the foreachBatch function `sink`. Every gate stream drains
+    here. On timeout it stops the query and raises TimeoutError instead
+    of returning: a timed-out run would otherwise keep committing in
+    the background while the caller reads a half-written sink (and a
     re-invocation would then collide on the live checkpoint)."""
+    data = os.path.join(root, "data")
+    w = df.writeStream.outputMode(mode).option(
+        "checkpointLocation", os.path.join(root, "ck")
+    )
+    w = w.foreachBatch(sink) if sink else w.format("parquet").option("path", data)
+    query = w.trigger(availableNow=True).start()
     if not query.awaitTermination(timeout):
         try:
             query.stop()
@@ -200,38 +208,33 @@ def _await(query, timeout: int = 300) -> None:
             raise TimeoutError(
                 f"streaming gate query did not drain within {timeout}s"
             )
-
-
-def _run_to_parquet(df: DataFrame, root: str) -> str:
-    data = os.path.join(root, "data")
-    _await(
-        df.writeStream.format("parquet")
-        .option("path", data)
-        .option("checkpointLocation", os.path.join(root, "ck"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
     return data
 
 
-def _finalized_windows(
-    spark: SparkSession, data: str, max_ts
+def _max_ts(spark: SparkSession, sf_dir: str):
+    """The final watermark of a 0-second-delay replay: max(events.ts)."""
+    return load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
+
+
+def _finalized(
+    spark: SparkSession, data: str, max_ts, end: str, *cols: str
 ) -> DataFrame:
     """Shared postlude of the windowed gates: read the sink back, keep
-    the finalized windows (end <= the final watermark — the probed
-    closed form), render the start, and present deterministically."""
+    the finalized windows (`end` <= the final watermark — the probed
+    closed form), render the timestamp columns to seconds, and order
+    by the first two columns."""
+    sink = spark.read.parquet(data)
+    ts = {c for c, t in sink.dtypes if t == "timestamp"}
     return (
-        spark.read.parquet(data)
-        .filter(F.col("we") <= F.lit(max_ts))
-        .select(
-            F.date_format("ws", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-        .orderBy("window_start", "event_type")
+        sink.filter(F.col(end) <= F.lit(max_ts))
+        .select(*[second(c).alias(c) if c in ts else c for c in cols])
+        .orderBy(*cols[:2])
     )
+
+
+def _finalized_windows(spark: SparkSession, data: str, max_ts) -> DataFrame:
+    cols = ("window_start", "event_type", "n", "sum_value")
+    return _finalized(spark, data, max_ts, "window_end", *cols)
 
 
 def run_tumbling_stream(spark: SparkSession, chunks: str, root: str) -> str:
@@ -251,32 +254,18 @@ def run_tumbling_stream(spark: SparkSession, chunks: str, root: str) -> str:
     # that dominated the measured runtime (sf0.1 min-of-3: 3.63 s ->
     # 2.2 s). Gates whose SEMANTICS need per-file replay (late data,
     # redelivery, sentinel waves) keep the default — _stream docstring.
-    agg = (
-        _stream(spark, chunks, files_per_trigger=None)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), csum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("ws"),
-            F.col("w.end").alias("we"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-    return _run_to_parquet(agg, root)
+    events = _stream(spark, chunks, files_per_trigger=None)
+    return _drain(tumbling_counts(events, "6 hours", "0 seconds"), root)
 
 
 def stream_tumbling_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked tumbling-window agg through the real streaming
-    runtime (twin of streaming/windows.tumbling_counts, with the
-    engine's deterministic csum so cross-batch accumulation is exact).
-    Emitted = finalized: windows with end <= max(ts)."""
-    root = _root(sf_dir, "tumbling")
-    chunks = _shared_chunks(sf_dir)
-    data = run_tumbling_stream(spark, chunks, root)
-    max_ts = load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    return _finalized_windows(spark, data, max_ts)
+    """Watermarked tumbling-window agg (streaming/windows.tumbling_counts)
+    through the real streaming runtime; its csum keeps the cross-batch
+    accumulation exact. Emitted = finalized: windows with end <= max(ts)."""
+    data = run_tumbling_stream(
+        spark, _shared_chunks(sf_dir), _root(sf_dir, "tumbling")
+    )
+    return _finalized_windows(spark, data, _max_ts(spark, sf_dir))
 
 
 _TUMBLING_STREAM_SQL = """
@@ -292,21 +281,16 @@ ORDER BY window_start, event_type
 
 
 def stream_dedup_redelivery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dropDuplicatesWithinWatermark under at-least-once redelivery:
-    every chunk is delivered twice in separate micro-batches; the
-    watermark horizon (90 days > the table's span) keeps all dedup
-    state live, so each event passes exactly once and the sink rollup
-    equals the batch rollup of `events`."""
+    """dropDuplicatesWithinWatermark (streaming/windows.stateful_dedup)
+    under at-least-once redelivery: every chunk is delivered twice in
+    separate micro-batches; the watermark horizon (90 days > the
+    table's span) keeps all dedup state live, so each event passes
+    exactly once and the sink rollup equals the batch rollup of
+    `events`."""
     root = _root(sf_dir, "dedup")
     chunks = os.path.join(root, "chunks")
-    if not os.path.isdir(chunks):
-        _write_chunks(sf_dir, chunks, copies=2)
-    deduped = (
-        _stream(spark, chunks)
-        .withWatermark("ts", "90 days")
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    data = _run_to_parquet(deduped, root)
+    ensure_fixture(chunks, lambda tmp: _write_chunks(sf_dir, tmp, copies=2))
+    data = _drain(stateful_dedup(_stream(spark, chunks), "90 days"), root)
     return (
         spark.read.parquet(data)
         .groupBy("event_type")
@@ -356,28 +340,18 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _root(sf_dir, "late_drop")
     chunks = os.path.join(root, "chunks")
-    if not os.path.isdir(chunks):
-        _write_chunks(
+    ensure_fixture(
+        chunks,
+        lambda tmp: _write_chunks(
             sf_dir,
-            chunks,
+            tmp,
             copies=1,
             hold_back=lambda pdf: (pdf["event_id"] % _LATE_MOD == 0)
             & (pdf["ts"] < pd.Timestamp(_LATE_CUTOFF)),
-        )
-    agg = (
-        _stream(spark, chunks)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(F.window("ts", "6 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), csum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("ws"),
-            F.col("w.end").alias("we"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+        ),
     )
-    data = _run_to_parquet(agg, root)
+    agg = tumbling_counts(_stream(spark, chunks), "6 hours", "0 seconds")
+    data = _drain(agg, root)
     max_ts = (
         load_table(spark, sf_dir, "events")
         .filter(
@@ -413,39 +387,16 @@ def stream_session_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session windows (30-minute gap) through the streaming
     runtime — the one window type whose streaming behavior (sessions
     MERGING across micro-batches until the watermark passes their end)
-    a batch twin cannot exhibit. Emitted = finalized: sessions with
+    a batch run cannot exhibit. Emitted = finalized: sessions with
     end (= last event + gap) <= max(ts) at the 0-second watermark."""
-    root = _root(sf_dir, "session")
-    chunks = _shared_chunks(sf_dir)
-    agg = (
-        _stream(spark, chunks)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), csum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("ws"),
-            F.col("w.end").alias("we"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
-    )
-    data = _run_to_parquet(agg, root)
-    max_ts = load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    return (
-        spark.read.parquet(data)
-        .filter(F.col("we") <= F.lit(max_ts))
-        .select(
-            "user_id",
-            F.date_format("ws", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            "n_events",
-            "sum_value",
-        )
-        .orderBy("user_id", "session_start")
-    )
+    events = _stream(spark, _shared_chunks(sf_dir))
+    agg = session_counts(events, "30 minutes", "0 seconds")
+    data = _drain(agg, _root(sf_dir, "session"))
+    cols = ("user_id", "session_start", "n_events", "sum_value")
+    return _finalized(spark, data, _max_ts(spark, sf_dir), "session_end", *cols)
 
 
-# gaps-and-islands twin of Spark's session_window, restricted to
+# gaps-and-islands oracle for Spark's session_window, restricted to
 # finalized sessions: last event + gap <= global max ts.
 # TIE HAZARD (hit at sf1, r8): BOTH window clauses must share a TOTAL
 # order (ts, event_id). Ordered on ts alone, duplicate-ts rows are
@@ -502,47 +453,23 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary rule, same engine code path; re-pinned for the dynamic
     form by tests/test_streaming.py). Emitted = finalized sessions
     (end <= final watermark = max ts at the 0-second delay). The batch
-    twin is gaps-and-islands over the running MAX(ts + gap) — the
+    oracle is gaps-and-islands over the running MAX(ts + gap) — the
     running max matters: a long-gap event deep inside a session can
     outlive several short-gap successors.
     """
-    root = _root(sf_dir, "session_dynamic")
-    chunks = _shared_chunks(sf_dir)
     gap = (
         F.when(F.col("event_type") == "purchase", "60 minutes")
         .when(F.col("event_type") == "click", "30 minutes")
         .otherwise("15 minutes")
     )
-    agg = (
-        _stream(spark, chunks)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), csum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("ws"),
-            F.col("w.end").alias("we"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
-    )
-    data = _run_to_parquet(agg, root)
-    max_ts = load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    return (
-        spark.read.parquet(data)
-        .filter(F.col("we") <= F.lit(max_ts))
-        .select(
-            "user_id",
-            F.date_format("ws", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format("we", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-        .orderBy("user_id", "session_start")
-    )
+    events = _stream(spark, _shared_chunks(sf_dir))
+    agg = session_counts(events, gap, "0 seconds")
+    data = _drain(agg, _root(sf_dir, "session_dynamic"))
+    cols = ("user_id", "session_start", "session_end", "n_events", "sum_value")
+    return _finalized(spark, data, _max_ts(spark, sf_dir), "session_end", *cols)
 
 
-# gaps-and-islands twin of the DYNAMIC-gap session window: each event
+# gaps-and-islands oracle for the DYNAMIC-gap session window: each event
 # extends the session to ts + gap(event_type); a new session starts
 # only when ts exceeds the running MAX of all previous ends (strictly —
 # the measured merge-on-equal boundary, as in _SESSION_STREAM_SQL).
@@ -594,10 +521,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the runtime: with the backlog replayed in time order, state expiry
     never drops an eligible click before its purchase arrives, so the
     emitted inner join equals the batch interval join exactly."""
-    from etl_gcp_function_tmabrasil_spark.streaming.windows import (
-        click_purchase_attribution,
-    )
-
     root = _root(sf_dir, "interval_join")
     chunks = _shared_chunks(sf_dir)
     s = _stream(spark, chunks)
@@ -605,7 +528,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.filter(F.col("event_type") == "click"),
         s.filter(F.col("event_type") == "purchase"),
     )
-    data = _run_to_parquet(joined, root)
+    data = _drain(joined, root)
     return (
         spark.read.parquet(data)
         .select(
@@ -665,10 +588,6 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output schema is null-free for the dtype-sensitive hash
     compare — the join_full_outer convention.
     """
-    from etl_gcp_function_tmabrasil_spark.streaming.windows import (
-        click_purchase_attribution,
-    )
-
     root = _root(sf_dir, "interval_join_outer")
     chunks = _sentinel_chunks(sf_dir)
     s = _stream(spark, chunks)
@@ -677,7 +596,7 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.filter(F.col("event_type") == "purchase"),
         how="leftOuter",
     )
-    data = _run_to_parquet(joined, root)
+    data = _drain(joined, root)
     return (
         spark.read.parquet(data)
         .filter(F.col("user_id") >= 0)  # drop the sentinel pair's self-match
@@ -710,10 +629,6 @@ def stream_interval_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure mode — one row per matching click instead of one per
     purchase) breaks the row-count compare immediately.
     """
-    from etl_gcp_function_tmabrasil_spark.streaming.windows import (
-        click_purchase_attribution,
-    )
-
     root = _root(sf_dir, "interval_join_semi")
     chunks = _shared_chunks(sf_dir)
     s = _stream(spark, chunks)
@@ -722,7 +637,7 @@ def stream_interval_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.filter(F.col("event_type") == "purchase"),
         how="leftSemi",
     )
-    data = _run_to_parquet(joined, root)
+    data = _drain(joined, root)
     return (
         spark.read.parquet(data)
         .select(
@@ -778,11 +693,10 @@ def stream_chained_window_distinct(spark: SparkSession, sf_dir: str) -> DataFram
             "n_events",
         )
     )
-    data = _run_to_parquet(daily, root)
-    max_ts = load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
+    data = _drain(daily, root)
     return (
         spark.read.parquet(data)
-        .filter(F.col("de") <= F.lit(max_ts))
+        .filter(F.col("de") <= F.lit(_max_ts(spark, sf_dir)))
         .select(
             F.date_format("ds", "yyyy-MM-dd").alias("day"),
             "n_users",
@@ -821,10 +735,6 @@ def stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinels (-1 / 'none' / -1.0) for the dtype-sensitive hash
     compare — the join_full_outer convention.
     """
-    from etl_gcp_function_tmabrasil_spark.streaming.windows import (
-        click_purchase_attribution,
-    )
-
     root = _root(sf_dir, "interval_join_full")
     chunks = _sentinel_chunks(sf_dir)
     s = _stream(spark, chunks)
@@ -833,7 +743,7 @@ def stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.filter(F.col("event_type") == "purchase"),
         how="fullOuter",
     )
-    data = _run_to_parquet(joined, root)
+    data = _drain(joined, root)
     return (
         spark.read.parquet(data)
         .filter(F.col("user_id") >= 0)  # drop the sentinel pairs' self-matches
@@ -975,17 +885,7 @@ def stream_running_totals_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     data = os.path.join(root, "data")
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(data)
-
-    _await(
-        totals.writeStream.foreachBatch(append)
-        .option("checkpointLocation", os.path.join(root, "ck"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    _drain(totals, root, lambda b, _: b.write.mode("append").parquet(data), "update")
     sink = spark.read.parquet(data)
     return (
         sink.groupBy("user_id")
@@ -1015,17 +915,13 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; unknown users pass through with null enrichment (the
     reference's null-tolerant R2 semantics). The sink rollup must equal
     the batch left join of `events` against `customer`."""
-    from etl_gcp_function_tmabrasil_spark.streaming.windows import (
-        enrich_stream_with_customer,
-    )
-
     root = _root(sf_dir, "enrich")
     chunks = _shared_chunks(sf_dir)
     customer = load_table(spark, sf_dir, "customer")
     enriched = enrich_stream_with_customer(
         _stream(spark, chunks), customer
     ).select("user_id", "segment", "bal_band", "value")
-    data = _run_to_parquet(enriched, root)
+    data = _drain(enriched, root)
     return (
         spark.read.parquet(data)
         .groupBy("segment", "bal_band")
@@ -1057,24 +953,10 @@ def stream_sliding_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows with end <= max(ts) at a 0-second watermark), with each
     event expanded into its window/slide = 2 overlapping memberships
     across micro-batch boundaries."""
-    root = _root(sf_dir, "sliding")
-    chunks = _shared_chunks(sf_dir)
-    agg = (
-        _stream(spark, chunks)
-        .withWatermark("ts", "0 seconds")
-        .groupBy(F.window("ts", "6 hours", "3 hours").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), csum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("ws"),
-            F.col("w.end").alias("we"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-    data = _run_to_parquet(agg, root)
-    max_ts = load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    return _finalized_windows(spark, data, max_ts)
+    events = _stream(spark, _shared_chunks(sf_dir))
+    agg = sliding_counts(events, "6 hours", "3 hours", "0 seconds")
+    data = _drain(agg, _root(sf_dir, "sliding"))
+    return _finalized_windows(spark, data, _max_ts(spark, sf_dir))
 
 
 # Sliding = each event expanded to its k=2 bucket starts
@@ -1095,64 +977,70 @@ ORDER BY window_start, event_type
 """
 
 
-def _cdc_merge_batch(batch_df: DataFrame, batch_id: int, root: str) -> None:
-    """One CDC merge step: fold a micro-batch's per-user latest events
-    into the ``<root>/dim`` parquet dimension (last-writer-wins on
-    (ts, event_id)), committed by the compact_partitions-style swap.
-    Module-level so the crash-window self-heal is unit-testable
-    (tests/test_streaming.py::test_cdc_merge_self_heals_crash_window).
-    """
-    import shutil
-
+def _pick_latest(df: DataFrame) -> DataFrame:
+    """Last-writer-wins per user on the total (ts, event_id) order."""
     from pyspark.sql import Window as W
 
-    sp = batch_df.sparkSession
+    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
+    rn = F.row_number().over(w)
+    return df.withColumn("rn", rn).filter(F.col("rn") == 1).drop("rn")
+
+
+_CDC_COLS = ("user_id", "ts", "event_id", "event_type")
+
+
+def _cdc_merge_batch(batch_df: DataFrame, root: str) -> None:
+    """One CDC merge step: fold a micro-batch's per-user latest events
+    into the ``<root>/dim`` parquet dimension (last-writer-wins on
+    (ts, event_id)), committed by sinks/partitioned.heal_and_swap. Its
+    heal restores a crashed swap's displaced dim BEFORE the merge reads
+    it — otherwise the replayed batch would merge against nothing and
+    silently drop the dimension's history. Module-level so the heal is
+    unit-testable
+    (tests/test_streaming.py::test_cdc_merge_self_heals_crash_window).
+    """
     dim = os.path.join(root, "dim")
-    # The swap below is rename-granular, not atomic: a crash between
-    # rename(dim→.dim_old) and rename(tmp→dim) leaves dim absent
-    # while the accumulated history survives only in .dim_old. Heal
-    # that window first — otherwise the replayed batch would merge
-    # against nothing and silently drop the dimension's history.
-    old = os.path.join(root, ".dim_old")
-    if not os.path.isdir(dim) and os.path.isdir(old):
-        os.rename(old, dim)
-    w = W.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
+
+    def merge(staging: str) -> None:
+        latest = _pick_latest(batch_df.select(*_CDC_COLS))
+        if os.path.isdir(dim):
+            current = batch_df.sparkSession.read.parquet(dim)
+            latest = _pick_latest(current.unionByName(latest))
+        latest.write.mode("overwrite").parquet(os.path.join(staging, "dim"))
+
+    heal_and_swap(root, merge)
+
+
+def _cdc_gate(spark: SparkSession, sf_dir: str, name: str, merge_batch) -> DataFrame:
+    """Drain the chunk stream through `merge_batch` into ``<root>/dim``
+    and present the final dimension (shared by both CDC gates)."""
+    root = _root(sf_dir, name)
+    _drain(
+        _stream(spark, _shared_chunks(sf_dir)),
+        root,
+        lambda batch_df, _: merge_batch(batch_df, root),
     )
-    latest = (
-        batch_df.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    if os.path.isdir(dim):
-        latest = sp.read.parquet(dim).unionByName(latest)
-        latest = (
-            latest.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
+    return (
+        spark.read.parquet(os.path.join(root, "dim"))
+        .select(
+            "user_id",
+            second("ts").alias("last_ts"),
+            F.col("event_id").alias("last_event_id"),
+            F.col("event_type").alias("last_event_type"),
         )
-    tmp = os.path.join(root, f"dim_gen_{batch_id}")
-    latest.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(dim):
-        os.rename(dim, old)
-    os.rename(tmp, dim)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+        .orderBy("user_id")
+    )
 
 
 def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC merge-upsert through the gate — the foreachBatch
     pattern every streaming warehouse load uses: each micro-batch's
     per-user LATEST event is merged into a parquet dimension table
-    with last-writer-wins on (ts, event_id), committed by a
-    rename-granular directory swap (write new generation →
-    hidden-rename old → rename new into place, the compact_partitions
-    protocol; the between-renames crash window is self-healed at the
-    next merge by restoring ``.dim_old``). The merge
-    re-picks latest over (current dim ∪ batch), so a replayed
+    with last-writer-wins on (ts, event_id), committed by the
+    rename-granular directory swap of sinks/partitioned.heal_and_swap
+    (write new generation → hidden-rename old → rename new into place;
+    the between-renames crash window is healed at the next merge). The
+    merge re-picks latest over (current dim ∪ batch), so a replayed
     micro-batch — foreachBatch's at-least-once contract after a crash
     between sink write and checkpoint commit — is idempotent by
     construction, not by luck.
@@ -1161,37 +1049,14 @@ def stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     events, which is exactly the oracle; re-invocation resumes the
     checkpoint with zero new files and must leave the dim identical
     (exactly-once effective)."""
-    root = _root(sf_dir, "cdc_merge")
-    chunks = _shared_chunks(sf_dir)
-    dim = os.path.join(root, "dim")
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _cdc_merge_batch(batch_df, batch_id, root)
-
-    _await(
-        _stream(spark, chunks)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(root, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return (
-        spark.read.parquet(dim)
-        .select(
-            "user_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-        )
-        .orderBy("user_id")
-    )
+    return _cdc_gate(spark, sf_dir, "cdc_merge", _cdc_merge_batch)
 
 
 _CDC_N_BUCKETS = 8
 
 
 def _cdc_merge_batch_partitioned(
-    batch_df: DataFrame, batch_id: int, root: str, n_buckets: int = _CDC_N_BUCKETS
+    batch_df: DataFrame, root: str, n_buckets: int = _CDC_N_BUCKETS
 ) -> None:
     """Partition-pruned CDC merge step — the 100 TB shape of
     `_cdc_merge_batch`: the dimension lives hive-partitioned on
@@ -1200,99 +1065,48 @@ def _cdc_merge_batch_partitioned(
     keys touch. Untouched partitions are never read, never written,
     never swapped — per-trigger cost is O(touched partitions + batch),
     not O(dim), which is what makes streaming merge viable against a
-    fact-sized target (SCALING.md "Warehouse load"). The swap reuses
-    compact_partitions' protocol: staging write → dot-prefixed
-    hidden-rename of the displaced partition → rename into place, with
-    the crash window self-healed at the next merge. A user's rows all
+    fact-sized target (SCALING.md "Warehouse load"). The commit is
+    sinks/partitioned.heal_and_swap, compact_partitions' swap: staging
+    write → dot-prefixed hidden-rename of each displaced partition →
+    rename into place, with the crash window healed at the next merge.
+    A user's rows all
     hash to one partition, so per-partition last-writer-wins equals
     global last-writer-wins, and the re-pick over (partition ∪ batch)
     keeps replays idempotent exactly like the bounded-dim variant.
     Module-level for unit tests
     (tests/test_streaming.py::test_partitioned_cdc_merge_*)."""
-    import shutil
-
-    from pyspark.sql import Window as W
-
-    sp = batch_df.sparkSession
     dim = os.path.join(root, "dim")
-    # Self-heal the rename-granular crash window per partition: a
-    # hidden displaced dir whose visible partition is missing means the
-    # crash hit between the two renames — restore before merging.
-    if os.path.isdir(dim):
-        for entry in os.listdir(dim):
-            if entry.startswith(".cdc_old__part="):
-                visible = os.path.join(dim, entry[len(".cdc_old__") :])
-                hidden = os.path.join(dim, entry)
-                if not os.path.isdir(visible):
-                    os.rename(hidden, visible)
-                else:
-                    shutil.rmtree(hidden)
-    w = W.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    latest = (
-        batch_df.select("user_id", "ts", "event_id", "event_type")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-        .withColumn("part", F.pmod("user_id", F.lit(n_buckets)).cast("int"))
-    )
-    # Touched-partition set: bounded by n_buckets (metadata scale, like
-    # compact_partitions' directory listing) — NOT a data collect.
-    touched = sorted(
-        r["part"] for r in latest.select("part").distinct().collect()
-    )
-    if not touched:
-        return
-    have = (
-        {
-            e
-            for e in os.listdir(dim)
-            if e.startswith("part=") and os.path.isdir(os.path.join(dim, e))
-        }
-        if os.path.isdir(dim)
-        else set()
-    )
-    read_dirs = sorted(have & {f"part={t}" for t in touched})
-    if read_dirs:
-        # Partition-pruned read at the DIRECTORY level: only touched
-        # partitions that already exist are even listed — a brand-new
-        # bucket simply has no current side to merge against.
-        current = (
-            sp.read.option("basePath", dim)
-            .parquet(*[os.path.join(dim, e) for e in read_dirs])
-            .select("user_id", "ts", "event_id", "event_type", "part")
+
+    def merge(staging: str) -> None:
+        latest = _pick_latest(batch_df.select(*_CDC_COLS)).withColumn(
+            "part", F.pmod("user_id", F.lit(n_buckets)).cast("int")
         )
-        latest = (
-            current.unionByName(latest)
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
+        # Touched-partition set: bounded by n_buckets (metadata scale,
+        # like a directory listing) — NOT a data collect.
+        parts = latest.select("part").distinct().collect()
+        touched = {f"part={r['part']}" for r in parts}
+        if not touched:
+            return
+        have = set(os.listdir(dim)) if os.path.isdir(dim) else set()
+        read_dirs = sorted(have & touched)
+        if read_dirs:
+            # Partition-pruned read at the DIRECTORY level: only touched
+            # partitions that already exist are even listed — a brand-new
+            # bucket simply has no current side to merge against.
+            current = (
+                batch_df.sparkSession.read.option("basePath", dim)
+                .parquet(*[os.path.join(dim, e) for e in read_dirs])
+                .select(*_CDC_COLS, "part")
+            )
+            latest = _pick_latest(current.unionByName(latest))
+        (
+            latest.repartition(F.col("part"))
+            .write.mode("overwrite")
+            .partitionBy("part")
+            .parquet(staging)
         )
-    staging = os.path.join(root, f"dim_stage_{batch_id}")
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    (
-        latest.repartition(F.col("part"))
-        .write.mode("overwrite")
-        .partitionBy("part")
-        .parquet(staging)
-    )
-    os.makedirs(dim, exist_ok=True)
-    for entry in os.listdir(staging):
-        if not entry.startswith("part="):
-            continue
-        src = os.path.join(staging, entry)
-        dst = os.path.join(dim, entry)
-        old = os.path.join(dim, f".cdc_old__{entry}")
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        if os.path.isdir(dst):
-            os.rename(dst, old)
-        os.rename(src, dst)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-    shutil.rmtree(staging)
+
+    heal_and_swap(dim, merge)
 
 
 def stream_cdc_merge_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1305,29 +1119,8 @@ def stream_cdc_merge_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`_cdc_merge_batch_partitioned`). The oracle is the same global
     pick-latest over all events: partition pruning must change
     nothing about merge semantics, only its per-trigger cost."""
-    root = _root(sf_dir, "cdc_merge_partitioned")
-    chunks = _shared_chunks(sf_dir)
-    dim = os.path.join(root, "dim")
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _cdc_merge_batch_partitioned(batch_df, batch_id, root)
-
-    _await(
-        _stream(spark, chunks)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", os.path.join(root, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return (
-        spark.read.parquet(dim)
-        .select(
-            "user_id",
-            F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("last_ts"),
-            F.col("event_id").alias("last_event_id"),
-            F.col("event_type").alias("last_event_type"),
-        )
-        .orderBy("user_id")
+    return _cdc_gate(
+        spark, sf_dir, "cdc_merge_partitioned", _cdc_merge_batch_partitioned
     )
 
 
@@ -1384,13 +1177,7 @@ def stream_snapshot_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             txn_id=f"gate-{batch_id}",
         )
 
-    _await(
-        _stream(spark, chunks)
-        .writeStream.foreachBatch(commit)
-        .option("checkpointLocation", os.path.join(root, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    _drain(_stream(spark, chunks), root, commit)
     versions = _manifests(table)
     manifest = _load_manifest(table, versions[-1])
     txn = manifest["txn"]
@@ -1502,9 +1289,8 @@ def stream_state_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFrame
     root = _root(sf_dir, "state_timeout_sessions")
     chunks = _shared_chunks(sf_dir)
     sessions = timeout_session_stream(spark, chunks)
-    data = _run_to_parquet(sessions, root)
-    max_ts = load_table(spark, sf_dir, "events").agg(F.max("ts")).collect()[0][0]
-    return finalized_timeout_sessions(spark, data, max_ts)
+    data = _drain(sessions, root)
+    return finalized_timeout_sessions(spark, data, _max_ts(spark, sf_dir))
 
 
 def timeout_session_stream(spark: SparkSession, chunks: str) -> DataFrame:
@@ -1719,17 +1505,7 @@ def stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     data = os.path.join(root, "data")
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(data)
-
-    _await(
-        matched.writeStream.foreachBatch(append)
-        .option("checkpointLocation", os.path.join(root, "ck"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    _drain(matched, root, lambda b, _: b.write.mode("append").parquet(data), "update")
     sink = spark.read.parquet(data)
     return (
         sink.groupBy("user_id")
@@ -1759,64 +1535,42 @@ def stream_complete_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     one output mode the gate surface had not pinned (append: every
     windowed gate; update-style: the foreachBatch CDC merges). A
     running per-type leaderboard re-emits the FULL aggregate each
-    micro-batch into a memory sink; after the availableNow run the
-    final emission must equal the batch aggregation of all events —
-    the complete-mode contract (state holds every group; no watermark
-    required; emitted rows are replaced, not appended).
+    micro-batch, overwriting a parquet snapshot through foreachBatch;
+    after the availableNow run the final emission must equal the batch
+    aggregation of all events — the complete-mode contract (state
+    holds every group; no watermark required; emitted rows are
+    replaced, not appended).
 
-    Restart safety: the memory sink is per-process transient, so the
-    final table snapshots to parquet next to the checkpoint; a
-    re-invocation in the same process reads the snapshot instead of
-    no-op-restarting into an EMPTY memory table (availableNow on a
-    finished checkpoint admits zero files, and complete mode would
-    then re-emit nothing).
+    Restart safety: checkpoint and snapshot are built in one temp dir
+    that `ensure_fixture` renames into place only after the run, and a
+    re-invocation in the same process reads the published snapshot
+    instead of no-op-restarting on a finished checkpoint (availableNow
+    admits zero files there, and complete mode would then re-emit
+    nothing). A crashed attempt's temp dir — checkpoint included — is
+    deleted by the retry's rebuild, so the retry replays from scratch.
 
     Scale: complete mode keeps O(groups) state (5 event types) and
     re-emits it per batch — the right tool ONLY for bounded-key
     aggregations; unbounded keys belong to append/update modes (the
     docstring is the contract a user needs at 100 TB).
     """
-    import uuid as _uuid
+    out = _root(sf_dir, "complete")
 
-    root = _root(sf_dir, "complete")
-    out = os.path.join(root, "out")
-    if not os.path.isdir(out):
-        chunks = _shared_chunks(sf_dir)
+    def build(tmp: str) -> None:
         agg = (
-            _stream(spark, chunks)
+            _stream(spark, _shared_chunks(sf_dir))
             .groupBy("event_type")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                csum("value").alias("sum_value"),
-            )
+            .agg(F.count(F.lit(1)).alias("n"), csum("value").alias("sum_value"))
         )
-        # fresh checkpoint + query name + tmp snapshot path PER ATTEMPT:
-        # a crash between the run and the rename must not leave a
-        # same-process retry no-op-restarting on the old checkpoint
-        # (complete mode would then re-emit nothing and snapshot an
-        # EMPTY table), and a leftover tmp dir from the crashed attempt
-        # must not wedge the retry's write.parquet (r11 ADVICE)
-        attempt = _uuid.uuid4().hex
-        name = f"complete_leaderboard_{attempt}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(root, f"ck-{attempt}"))
-            .trigger(availableNow=True)
-            .start()
+        # every batch re-emits the full table: the last overwrite is final
+        data = os.path.join(tmp, "data")
+        _drain(
+            agg, tmp, lambda b, _: b.write.mode("overwrite").parquet(data), "complete"
         )
-        _await(q)
-        tmp = out + f".tmp-{attempt}"
-        spark.table(name).write.parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not os.path.isdir(out):  # lost a publish race: out won
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    ensure_fixture(out, build)
     return (
-        spark.read.parquet(out)
+        spark.read.parquet(os.path.join(out, "data"))
         .select("event_type", "n", "sum_value")
         .orderBy(F.desc("n"), F.asc("event_type"))
     )
@@ -1845,6 +1599,13 @@ def stream_update_mode_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     state (each day's LAST emission) must equal the batch aggregation
     — the update-mode contract (re-emission replaces, never appends).
 
+    Checkpoint, emissions and final-state snapshot are built in one temp
+    dir published by `ensure_fixture`: a crashed attempt's emissions
+    are deleted with its temp dir by the retry's rebuild, never appended
+    to by the retry's full replay (duplicate (day, bid) rows would
+    inflate n_emitted past the cap below, and the max-bid final pick
+    would read across attempts whose bids each restart at 0).
+
     Hard-check at build: update mode must actually be SELECTIVE — the
     chunk fixture is time-ordered, so each micro-batch touches only
     the day(s) at the replay front, and total emitted rows must stay
@@ -1858,31 +1619,16 @@ def stream_update_mode_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     state is broad but churn is narrow (exactly the running-rollup
     shape at 100 TB; a downstream upsert sink consumes the deltas).
     """
-    import uuid as _uuid
-
     from pyspark.sql import Window as W
 
-    root = _root(sf_dir, "update_mode")
-    out = os.path.join(root, "out")
-    if not os.path.isdir(out):
-        chunks = _shared_chunks(sf_dir)
-        # checkpoint, emissions dir AND tmp snapshot are all scoped to
-        # this attempt (r11 ADVICE, matching the complete-mode fix): a
-        # crashed attempt's leftover emission rows would otherwise be
-        # appended to by the retry's full replay — duplicate (day,bid)
-        # rows inflating n_emitted past the selectivity cap, and the
-        # max-bid final-state pick silently reading across attempts
-        # whose bids each restart at 0 — and a stale out.tmp would
-        # wedge every retry's write.parquet
-        attempt = _uuid.uuid4().hex
-        emissions = os.path.join(root, f"emissions-{attempt}")
+    out = _root(sf_dir, "update_mode")
+
+    def build(tmp: str) -> None:
+        emissions = os.path.join(tmp, "emissions")
         agg = (
-            _stream(spark, chunks)
+            _stream(spark, _shared_chunks(sf_dir))
             .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                csum("value").alias("sum_value"),
-            )
+            .agg(F.count(F.lit(1)).alias("n"), csum("value").alias("sum_value"))
         )
 
         def emit(batch_df, bid: int) -> None:
@@ -1892,16 +1638,7 @@ def stream_update_mode_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .parquet(emissions)
             )
 
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(emit)
-            .option(
-                "checkpointLocation", os.path.join(root, f"ck-{attempt}")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
+        _drain(agg, tmp, emit, "update")
         em = spark.read.parquet(emissions)
         n_emitted = em.count()
         n_days = em.select("day").distinct().count()
@@ -1915,20 +1652,15 @@ def stream_update_mode_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "unchanged groups (complete-mode volume)"
             )
         w = W.partitionBy("day").orderBy(F.desc("bid"))
-        final = (
+        (
             em.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("day", "n", "sum_value")
+            .write.parquet(os.path.join(tmp, "data"))
         )
-        tmp = out + f".tmp-{attempt}"
-        final.write.parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            if not os.path.isdir(out):
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(out).orderBy("day")
+
+    ensure_fixture(out, build)
+    return spark.read.parquet(os.path.join(out, "data")).orderBy("day")
 
 
 _UPDATE_MODE_SQL = """
@@ -1993,7 +1725,7 @@ def stream_scd2_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (ev["ts"] < dim["vto"]),
         "left",
     ).select("user_id", "value", F.col("priority"))
-    data = _run_to_parquet(enriched, root)
+    data = _drain(enriched, root)
     return (
         spark.read.parquet(data)
         .groupBy(F.coalesce("priority", F.lit("none")).alias("priority"))
@@ -2093,13 +1825,7 @@ def stream_merge_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, table, winners, "user_id", txn_id=f"b-{batch_id}"
         )
 
-    _await(
-        _stream(spark, chunks)
-        .writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", os.path.join(root, "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    _drain(_stream(spark, chunks), root, upsert)
     versions = _manifests(table)
     man = _load_manifest(table, versions[-1])
     txn = dict(man["txn"])

@@ -13,6 +13,10 @@ PartitionFilters.
 
 from __future__ import annotations
 
+import os
+import shutil
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
@@ -40,6 +44,67 @@ def read_events_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+#: A swapped-out directory waits under this prefix between the two
+#: renames of a swap. The leading dot hides it (and the staging dir)
+#: from Spark's file listing and partition discovery, so a crash can
+#: never surface either as data or as a bogus partition value.
+_DISPLACED = ".swap_old__"
+
+
+def displaced(name: str) -> str:
+    """The hidden name directory `name` waits under mid-swap."""
+    return _DISPLACED + name
+
+
+def heal_and_swap(target: str, build: Callable[[str], None]) -> None:
+    """The one crash-healing directory swap: heal `target`, let
+    ``build(staging)`` write the replacement dirs into a hidden staging
+    dir inside it, then swap each visible staged dir into place.
+
+    Heal: a displaced dir whose visible twin is missing is the residue
+    of a crash between the two renames below — its data is intact, so
+    it is renamed back; one whose twin exists is the residue of a crash
+    after the swap, and is deleted. `build` runs after the heal, so it
+    reads the healed target. Swap, per staged dir: rename the current
+    dir to its displaced name, rename the staged dir into place, delete
+    the displaced one. Untouched dirs never move.
+
+    Crash-safety is rename-granular, not transactional: a crash between
+    the two renames leaves that one dir absent from listings until the
+    next call heals it, and even crash-free a concurrent reader can
+    list `target` mid-swap and miss the dir for one scan. Renames are
+    local-filesystem renames (this repo's local warehouse substitute);
+    on HDFS the same protocol runs on FileSystem.rename, and on object
+    stores the swap belongs to a table format's commit."""
+    if os.path.isdir(target):
+        for entry in os.listdir(target):
+            if entry.startswith(_DISPLACED):
+                hidden = os.path.join(target, entry)
+                visible = os.path.join(target, entry[len(_DISPLACED) :])
+                if os.path.isdir(visible):
+                    shutil.rmtree(hidden)
+                else:
+                    os.rename(hidden, visible)
+    staging = os.path.join(target, ".stage")
+    if os.path.isdir(staging):
+        shutil.rmtree(staging)
+    build(staging)
+    if not os.path.isdir(staging):
+        return
+    for entry in os.listdir(staging):
+        src = os.path.join(staging, entry)
+        if entry.startswith(("_", ".")) or not os.path.isdir(src):
+            continue  # _SUCCESS and other Spark bookkeeping
+        dst = os.path.join(target, entry)
+        old = os.path.join(target, displaced(entry))
+        if os.path.isdir(dst):
+            os.rename(dst, old)
+        os.rename(src, dst)
+        if os.path.isdir(old):
+            shutil.rmtree(old)
+    shutil.rmtree(staging)
+
+
 def compact_partitions(
     spark: SparkSession,
     path: str,
@@ -54,74 +119,22 @@ def compact_partitions(
 
     Shape: ONE shuffle keyed on the partition column (repartition by
     `partition_col` co-locates each partition's rows onto one task, so
-    each rewritten partition emits ceil(rows/target) files) into a
-    STAGING directory — Spark rightly refuses to overwrite a path it
-    is simultaneously reading — then a per-partition directory swap:
-    readers of untouched partitions are unaffected, and the displaced
-    original is first renamed to a DOT-PREFIXED name (hidden paths are
-    skipped by Spark's file listing and partition discovery), so no
-    crash point can leave a bogus `…__old` partition value visible to
-    readers. Crash-safety is rename-granular, not transactional: a
-    crash between the two renames leaves that one partition absent
-    from listings until the hidden `.compact_old__key=value` dir is
-    restored — automatically, by the next compaction run's self-heal
-    below (its data is intact throughout) — and even crash-free a
-    concurrent reader can list the path during the swap and miss the
-    partition for one scan. The swap uses local-filesystem rename,
-    matching this
-    repo's local warehouse substitute (BigQuerySink's parquet
-    fallback); on HDFS the same protocol runs on FileSystem.rename,
-    and on object stores compaction belongs to a table format's commit
-    (Iceberg/Delta rewrite actions).
+    each rewritten partition emits ceil(rows/target) files) into the
+    staging dir of :func:`heal_and_swap` — Spark rightly refuses to
+    overwrite a path it is simultaneously reading — then its
+    per-partition swap: readers of untouched partitions are unaffected,
+    and a crashed run's hidden displaced partition is restored by the
+    next run's heal before the rewrite reads the layout, so it is never
+    dropped from the rewrite."""
 
-    The crash window SELF-HEALS on the next compaction (same protocol
-    as the streaming CDC merges): any hidden `.compact_old__X` whose
-    visible partition `X` is missing is restored before the rewrite,
-    so a crashed run's partition reappears in listings without manual
-    intervention.
-    """
-    import os
-    import shutil
+    def rewrite(staging: str) -> None:
+        (
+            spark.read.parquet(path)
+            .repartition(F.col(partition_col))
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", target_records_per_file)
+            .partitionBy(partition_col)
+            .parquet(staging)
+        )
 
-    # Heal a prior run's between-renames crash before reading: the
-    # displaced partition's data is intact under the hidden name, and
-    # compacting without it would silently drop it from the rewrite.
-    if os.path.isdir(path):
-        for entry in os.listdir(path):
-            if entry.startswith(".compact_old__"):
-                visible = os.path.join(path, entry[len(".compact_old__") :])
-                hidden = os.path.join(path, entry)
-                if not os.path.isdir(visible):
-                    os.rename(hidden, visible)
-                else:
-                    shutil.rmtree(hidden)
-
-    staging = path.rstrip("/") + "__compact_tmp"
-    if os.path.isdir(staging):
-        shutil.rmtree(staging)
-    (
-        spark.read.parquet(path)
-        .repartition(F.col(partition_col))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", target_records_per_file)
-        .partitionBy(partition_col)
-        .parquet(staging)
-    )
-    for entry in os.listdir(staging):
-        if not entry.startswith(f"{partition_col}="):
-            continue  # _SUCCESS and friends
-        src = os.path.join(staging, entry)
-        dst = os.path.join(path, entry)
-        # Dot-prefix hides the displaced dir from Spark's file listing,
-        # so a crash between the two renames can never surface it as a
-        # bogus partition value (ADVICE r5: `…__old` inside `path` was
-        # read as a partition, flipping event_date inference to string).
-        old = os.path.join(path, f".compact_old__{entry}")
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        if os.path.isdir(dst):
-            os.rename(dst, old)
-        os.rename(src, dst)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-    shutil.rmtree(staging)
+    heal_and_swap(path, rewrite)

@@ -14,7 +14,7 @@ Reference behavior being re-expressed (cited for parity):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from etl_gcp_function_tmabrasil_spark.catalog import FILE_EVENTS_WIRE_SCHEMA
 
@@ -54,24 +54,27 @@ def parse_cloud_events_json(spark: SparkSession, df: DataFrame, payload_col: str
     return normalized_events(parsed)
 
 
-def accept_filter(df: DataFrame) -> DataFrame:
-    """Accepted events (``main.py:12`` negated): null-safe conjunctive
-    path predicate, fully pushable when name is a physical column."""
-    return df.filter(
+def _accepted() -> Column:
+    """The accept predicate: a null-safe conjunctive path predicate,
+    fully pushable when name is a physical column. Never NULL (a NULL
+    name fails `isNotNull`, which makes the conjunction false), so its
+    negation is exactly the reject side."""
+    return (
         F.col("name").isNotNull()
         & F.col("name").endswith(ACCEPT_SUFFIX)
         & F.col("name").startswith(ACCEPT_PREFIX)
     )
 
 
+def accept_filter(df: DataFrame) -> DataFrame:
+    """Accepted events (``main.py:12`` negated)."""
+    return df.filter(_accepted())
+
+
 def reject_filter(df: DataFrame) -> DataFrame:
     """Rejected events (the ``main.py:13-14`` branch) — the dead-letter
     side; kept as a DataFrame so it can be routed to a rejected sink."""
-    return df.filter(
-        F.col("name").isNull()
-        | ~F.col("name").endswith(ACCEPT_SUFFIX)
-        | ~F.col("name").startswith(ACCEPT_PREFIX)
-    )
+    return df.filter(~_accepted())
 
 
 def with_log_line(df: DataFrame) -> DataFrame:

@@ -169,11 +169,7 @@ def _probe_event_keys(spark, sink, table: str, ev_df: DataFrame) -> set:
         return _keys()
     except Exception as exc:
         if isinstance(exc, AnalysisException):
-            cond = (
-                exc.getCondition()
-                if hasattr(exc, "getCondition")
-                else getattr(exc, "getErrorClass", lambda: None)()
-            ) or ""
+            cond = exc.getCondition() or ""
             if any(c in cond for c in _MISSING_TABLE_CONDITIONS):
                 return set()
         probe = getattr(sink, "exists", None)

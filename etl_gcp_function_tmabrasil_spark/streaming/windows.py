@@ -4,8 +4,11 @@ dedup, and arbitrary-stateful operators via applyInPandasWithState and
 the Spark 4 transformWithStateInPandas StatefulProcessor API.
 
 Every transform takes a (streaming or batch) DataFrame with the
-EVENTS_SCHEMA shape — the same expressions work in both modes, which is
-how the batch twins in queries/events_json.py stay oracle-checkable.
+EVENTS_SCHEMA shape and works in both modes. The streaming gates in
+queries/streaming_gate.py and the batch twins in queries/events_json.py
+call the window aggregates defined here, and the redelivery gate calls
+the dedup; on a batch frame the analyzer drops `withWatermark`, so a
+batch twin's plan is the plain windowed aggregate.
 """
 
 from __future__ import annotations
@@ -14,10 +17,36 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
+
+
+def _window_agg(
+    events: DataFrame, watermark: str, w: Column, key: str, names: tuple
+) -> DataFrame:
+    """The windowed aggregate every window type shares: event count and
+    the exact cents sum (csum, so the cross-micro-batch accumulation is
+    order-exact; valid for values with at most 2 decimals, as every
+    events.value is) per (window, key), with the window's start and
+    end."""
+    # imported here: the queries package imports this module at init
+    from etl_gcp_function_tmabrasil_spark.queries._util import csum
+
+    start, end, n = names
+    return (
+        events.withWatermark("ts", watermark)
+        .groupBy(w.alias("w"), key)
+        .agg(F.count(F.lit(1)).alias(n), csum("value").alias("sum_value"))
+        .select(
+            F.col("w.start").alias(start),
+            F.col("w.end").alias(end),
+            key,
+            n,
+            "sum_value",
+        )
+    )
 
 
 def tumbling_counts(
@@ -27,17 +56,12 @@ def tumbling_counts(
     windows older than max(ts) - watermark are finalized and emitted
     (append mode) and their state dropped — the knob that keeps state
     bounded on an unbounded stream."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+    return _window_agg(
+        events,
+        watermark,
+        F.window("ts", window),
+        "event_type",
+        ("window_start", "window_end", "n"),
     )
 
 
@@ -49,28 +73,27 @@ def sliding_counts(
 ) -> DataFrame:
     """Sliding windows: each event lands in window/slide overlapping
     windows; same watermark-bounded state story as tumbling."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
+    return _window_agg(
+        events,
+        watermark,
+        F.window("ts", window, slide),
+        "event_type",
+        ("window_start", "window_end", "n"),
     )
 
 
 def session_counts(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "30 minutes"
+    events: DataFrame, gap: str | Column = "30 minutes", watermark: str = "30 minutes"
 ) -> DataFrame:
-    """Per-user session windows (dynamic length, gap-based close)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("sum_value"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
+    """Per-user session windows (dynamic length, gap-based close). A
+    Column `gap` is evaluated per event: each event keeps its session
+    open for its own gap, and the session ends at the latest ts + gap."""
+    return _window_agg(
+        events,
+        watermark,
+        F.session_window("ts", gap),
+        "user_id",
+        ("session_start", "session_end", "n_events"),
     )
 
 

@@ -67,7 +67,11 @@ def test_compaction_reduces_files_and_preserves_values(spark, sf_dir, tmp_path):
     assert after_files < before_files, (before_files, after_files)
     ndates = len(glob.glob(os.path.join(path, "event_date=*")))
     assert after_files == ndates, "expected exactly one file per partition"
-    assert not glob.glob(path + "__compact_tmp"), "staging dir left behind"
+    hidden = [
+        e for e in os.listdir(path)
+        if e.startswith(".") and os.path.isdir(os.path.join(path, e))
+    ]
+    assert not hidden, f"staging or displaced dir left behind: {hidden}"
     after = sorted(map(tuple, read_events_partitioned(spark, path).collect()))
     assert after == before, "compaction changed values"
 
@@ -83,6 +87,8 @@ def test_compaction_crash_residue_is_invisible_to_readers(spark, sf_dir, tmp_pat
     import os
     import shutil
 
+    from etl_gcp_function_tmabrasil_spark.sinks.partitioned import displaced
+
     path = str(tmp_path / "events_part")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -95,7 +101,7 @@ def test_compaction_crash_residue_is_invisible_to_readers(spark, sf_dir, tmp_pat
     victim = parts[0]
     victim_date = victim.split("=", 1)[1]
     # simulate the crash point: old renamed aside, new not yet in place
-    hidden = os.path.join(path, f".compact_old__{victim}")
+    hidden = os.path.join(path, displaced(victim))
     os.rename(os.path.join(path, victim), hidden)
 
     back = read_events_partitioned(spark, path)
@@ -120,13 +126,14 @@ def test_compaction_crash_residue_is_invisible_to_readers(spark, sf_dir, tmp_pat
 
 def test_compaction_self_heals_crash_residue(spark, sf_dir, tmp_path):
     """r7: the next compact_partitions run must RESTORE a crashed
-    predecessor's hidden `.compact_old__` partition (same self-heal
-    protocol as the streaming CDC merges) — recovery is no longer
-    manual, and the healed partition's rows survive the rewrite."""
+    predecessor's hidden displaced partition (the heal_and_swap step the
+    streaming CDC merges share) — recovery is no longer manual, and the
+    healed partition's rows survive the rewrite."""
     import os
 
     from etl_gcp_function_tmabrasil_spark.sinks.partitioned import (
         compact_partitions,
+        displaced,
     )
 
     path = str(tmp_path / "events_part")
@@ -139,14 +146,13 @@ def test_compaction_self_heals_crash_residue(spark, sf_dir, tmp_path):
     victim = parts[0]
     victim_date = victim.split("=", 1)[1]
     # simulate the crash point: old renamed aside, new not yet in place
-    os.rename(
-        os.path.join(path, victim), os.path.join(path, f".compact_old__{victim}")
-    )
+    os.rename(os.path.join(path, victim), os.path.join(path, displaced(victim)))
     compact_partitions(spark, path)
     back = spark.read.parquet(path)
     assert back.count() == total, "healed partition's rows were lost"
     dates = {str(r[0]) for r in back.select("event_date").distinct().collect()}
     assert victim_date in dates
     assert not any(
-        e.startswith(".compact_old__") for e in os.listdir(path)
+        e.startswith(".") and os.path.isdir(os.path.join(path, e))
+        for e in os.listdir(path)
     ), "hidden residue left behind after a successful compaction"

@@ -463,9 +463,9 @@ def test_session_window_exact_gap_merges(spark):
 
 def test_cdc_merge_self_heals_crash_window(spark, tmp_path):
     """The CDC merge's directory swap is rename-granular: a crash
-    between rename(dim→.dim_old) and rename(tmp→dim) leaves the
-    dimension absent with its history stranded in .dim_old (advice
-    r6). The next merge must restore .dim_old before merging —
+    between rename(dim→displaced) and rename(staged→dim) leaves the
+    dimension absent with its history stranded in the hidden displaced
+    dir (advice r6). The next merge must restore it before merging —
     otherwise the replayed batch rebuilds the dim from itself alone
     and the accumulated history is silently lost."""
     import datetime as dt
@@ -474,6 +474,7 @@ def test_cdc_merge_self_heals_crash_window(spark, tmp_path):
     from etl_gcp_function_tmabrasil_spark.queries.streaming_gate import (
         _cdc_merge_batch,
     )
+    from etl_gcp_function_tmabrasil_spark.sinks.partitioned import displaced
 
     root = str(tmp_path)
     schema = "user_id int, ts timestamp, event_id long, event_type string"
@@ -484,19 +485,19 @@ def test_cdc_merge_self_heals_crash_window(spark, tmp_path):
     batch2 = spark.createDataFrame(
         [(2, t + dt.timedelta(hours=1), 12, "c")], schema
     )
-    _cdc_merge_batch(batch1, 0, root)
+    _cdc_merge_batch(batch1, root)
     # Simulate the crash window: dim was hidden-renamed, the new
     # generation never landed.
-    os.rename(os.path.join(root, "dim"), os.path.join(root, ".dim_old"))
+    os.rename(os.path.join(root, "dim"), os.path.join(root, displaced("dim")))
     assert not os.path.isdir(os.path.join(root, "dim"))
-    _cdc_merge_batch(batch2, 1, root)
+    _cdc_merge_batch(batch2, root)
     rows = {
         r["user_id"]: (r["event_id"], r["event_type"])
         for r in spark.read.parquet(os.path.join(root, "dim")).collect()
     }
-    # user 1 survives only if the self-heal restored .dim_old
+    # user 1 survives only if the self-heal restored the displaced dim
     assert rows == {1: (10, "a"), 2: (12, "c")}, rows
-    assert not os.path.isdir(os.path.join(root, ".dim_old"))
+    assert not os.path.isdir(os.path.join(root, displaced("dim")))
 
 
 def test_partitioned_cdc_merge_touches_only_batch_partitions(spark, tmp_path):
@@ -519,7 +520,7 @@ def test_partitioned_cdc_merge_touches_only_batch_partitions(spark, tmp_path):
     batch1 = spark.createDataFrame(
         [(u, t, 100 + u, "a") for u in range(8)], schema
     )
-    _cdc_merge_batch_partitioned(batch1, 0, root)
+    _cdc_merge_batch_partitioned(batch1, root)
     parts = sorted(e for e in os.listdir(dim) if e.startswith("part="))
     assert parts == [f"part={i}" for i in range(8)], parts
 
@@ -536,7 +537,7 @@ def test_partitioned_cdc_merge_touches_only_batch_partitions(spark, tmp_path):
     batch2 = spark.createDataFrame(
         [(3, t + dt.timedelta(hours=1), 200, "b")], schema
     )
-    _cdc_merge_batch_partitioned(batch2, 1, root)
+    _cdc_merge_batch_partitioned(batch2, root)
     after = {p: files_of(p) for p in parts}
     assert after["part=3"] != before["part=3"]
     for p in parts:
@@ -554,7 +555,7 @@ def test_partitioned_cdc_merge_touches_only_batch_partitions(spark, tmp_path):
 def test_partitioned_cdc_merge_self_heals_and_replays_idempotently(
     spark, tmp_path
 ):
-    """Per-partition crash window: a hidden .cdc_old__part=K with the
+    """Per-partition crash window: a hidden displaced part=K with the
     visible partition missing must be restored before merging, and
     re-merging the SAME batch (foreachBatch at-least-once replay)
     leaves the dimension unchanged."""
@@ -564,29 +565,28 @@ def test_partitioned_cdc_merge_self_heals_and_replays_idempotently(
     from etl_gcp_function_tmabrasil_spark.queries.streaming_gate import (
         _cdc_merge_batch_partitioned,
     )
+    from etl_gcp_function_tmabrasil_spark.sinks.partitioned import displaced
 
     root = str(tmp_path)
     dim = os.path.join(root, "dim")
     schema = "user_id int, ts timestamp, event_id long, event_type string"
     t = dt.datetime(2024, 1, 1, 12, 0, 0)
     batch1 = spark.createDataFrame([(1, t, 10, "a"), (9, t, 11, "b")], schema)
-    _cdc_merge_batch_partitioned(batch1, 0, root)  # users 1,9 → part=1
+    _cdc_merge_batch_partitioned(batch1, root)  # users 1,9 → part=1
     # Simulate the crash between the two renames
-    os.rename(
-        os.path.join(dim, "part=1"), os.path.join(dim, ".cdc_old__part=1")
-    )
+    os.rename(os.path.join(dim, "part=1"), os.path.join(dim, displaced("part=1")))
     batch2 = spark.createDataFrame(
         [(9, t + dt.timedelta(hours=1), 12, "c")], schema
     )
-    _cdc_merge_batch_partitioned(batch2, 1, root)
+    _cdc_merge_batch_partitioned(batch2, root)
     rows = {
         r["user_id"]: (r["event_id"], r["event_type"])
         for r in spark.read.parquet(dim).collect()
     }
     assert rows == {1: (10, "a"), 9: (12, "c")}, rows
-    assert not os.path.isdir(os.path.join(dim, ".cdc_old__part=1"))
+    assert not os.path.isdir(os.path.join(dim, displaced("part=1")))
     # replay batch2 verbatim — idempotent
-    _cdc_merge_batch_partitioned(batch2, 1, root)
+    _cdc_merge_batch_partitioned(batch2, root)
     rows2 = {
         r["user_id"]: (r["event_id"], r["event_type"])
         for r in spark.read.parquet(dim).collect()
@@ -634,9 +634,9 @@ def test_partitioned_and_full_cdc_merges_agree(spark, tmp_path):
     part_root = os.path.join(str(tmp_path), "part")
     os.makedirs(full_root)
     os.makedirs(part_root)
-    for i, b in enumerate(batches):
-        _cdc_merge_batch(b, i, full_root)
-        _cdc_merge_batch_partitioned(b, i, part_root)
+    for b in batches:
+        _cdc_merge_batch(b, full_root)
+        _cdc_merge_batch_partitioned(b, part_root)
 
     def snap(root):
         return sorted(
@@ -1183,19 +1183,20 @@ def test_stream_pattern_match_state_survives_restarts(spark, tmp_path):
 def test_complete_leaderboard_crash_before_publish_retries_clean(
     spark, tmp_path, monkeypatch
 ):
-    """r11 ADVICE: a crash between the complete-mode snapshot's
-    write.parquet and the publish rename used to leave a fixed out.tmp
-    that wedged every retry. The tmp path is now per-attempt: the
-    crashed attempt's leftovers are inert and the retry publishes the
-    correct leaderboard."""
+    """r11 ADVICE: a crash between the complete-mode run and the
+    publish rename must not wedge or poison the retry. Checkpoint and
+    snapshot are built in one temp dir: nothing is published by the
+    crashed attempt, the retry's rebuild deletes its residue and
+    publishes the correct leaderboard."""
     from etl_gcp_function_tmabrasil_spark.queries import streaming_gate as sg
 
     monkeypatch.setattr(sg, "_ROOT", str(tmp_path))
+    out = sg._root(SF_SMOKE, "complete")
 
     real_rename = os.rename
 
     def crash_rename(src, dst):
-        if "/out.tmp-" in src.replace(os.sep, "/"):
+        if dst == out:
             raise KeyboardInterrupt  # simulated hard kill pre-publish
         return real_rename(src, dst)
 
@@ -1204,10 +1205,7 @@ def test_complete_leaderboard_crash_before_publish_retries_clean(
         sg.stream_complete_leaderboard(spark, SF_SMOKE)
     monkeypatch.setattr(sg.os, "rename", real_rename)
 
-    root = sg._root(SF_SMOKE, "complete")
-    assert not os.path.isdir(os.path.join(root, "out"))
-    leftovers = [f for f in os.listdir(root) if f.startswith("out.tmp-")]
-    assert leftovers  # the crashed attempt's tmp survives ...
+    assert not os.path.isdir(out)  # nothing published
     got = {
         r["event_type"]: (r["n"], round(r["sum_value"], 4))
         for r in sg.stream_complete_leaderboard(spark, SF_SMOKE).collect()
@@ -1224,37 +1222,36 @@ def test_complete_leaderboard_crash_before_publish_retries_clean(
         )
         .collect()
     }
-    assert got == want  # ... but the retry's result is exact
+    assert got == want  # the retry's result is exact
+    parent = os.path.dirname(out)
+    assert not [f for f in os.listdir(parent) if ".tmp" in f]  # no temp dir remains
 
 
 def test_update_mode_crash_retry_does_not_double_count(
     spark, tmp_path, monkeypatch
 ):
-    """r11 ADVICE: the update-mode gate's emissions dir is now scoped
-    per attempt like its checkpoint — a crashed attempt's emission rows
-    must not be appended to by the retry's full replay (duplicate
-    (day,bid) rows inflated n_emitted past the selectivity cap, and the
-    max-bid final pick read across attempts)."""
-    from pyspark.sql import Window as W
-
+    """r11 ADVICE: a crashed attempt's emission rows must not be
+    appended to by the retry's full replay (duplicate (day,bid) rows
+    inflated n_emitted past the selectivity cap, and the max-bid final
+    pick read across attempts). Checkpoint and emissions live in the
+    build dir, which the retry's rebuild deletes."""
     from etl_gcp_function_tmabrasil_spark.queries import streaming_gate as sg
 
     monkeypatch.setattr(sg, "_ROOT", str(tmp_path))
 
-    real_await = sg._await
+    real_drain = sg._drain
 
-    def crash_await(q, timeout=300):
-        real_await(q, timeout)  # the stream RAN: emissions are on disk
+    def crash_drain(*args, **kwargs):
+        real_drain(*args, **kwargs)  # the stream RAN: emissions are on disk
         raise KeyboardInterrupt  # then the driver dies pre-publish
 
-    monkeypatch.setattr(sg, "_await", crash_await)
+    monkeypatch.setattr(sg, "_drain", crash_drain)
     with pytest.raises(KeyboardInterrupt):
         sg.stream_update_mode_emissions(spark, SF_SMOKE)
-    monkeypatch.setattr(sg, "_await", real_await)
+    monkeypatch.setattr(sg, "_drain", real_drain)
 
-    root = sg._root(SF_SMOKE, "update_mode")
-    crashed = [f for f in os.listdir(root) if f.startswith("emissions-")]
-    assert len(crashed) == 1  # the crashed attempt's emissions survive
+    out = sg._root(SF_SMOKE, "update_mode")
+    assert not os.path.isdir(out)  # nothing published
 
     got = {
         r["day"]: (r["n"], round(r["sum_value"], 4))
@@ -1273,10 +1270,40 @@ def test_update_mode_crash_retry_does_not_double_count(
         .collect()
     }
     assert got == want  # exact counts — nothing doubled by the replay
-    # and the retry used its OWN emissions dir, not the crashed one
-    assert (
-        len([f for f in os.listdir(root) if f.startswith("emissions-")]) == 2
-    )
+    parent = os.path.dirname(out)
+    assert not [f for f in os.listdir(parent) if ".tmp" in f]  # no temp dir remains
+
+
+def test_drain_timeout_stops_query(spark, tmp_path, event_chunks_dir):
+    """A drain that outlives its timeout must stop its query and raise
+    TimeoutError — never return while the query keeps committing."""
+    from etl_gcp_function_tmabrasil_spark.queries import streaming_gate as sg
+
+    before = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError):
+        sg._drain(_events_stream(spark, event_chunks_dir), str(tmp_path), timeout=0.001)
+    assert {q.id for q in spark.streams.active} == before
+
+
+def test_gate_streams_trigger_only_in_drain():
+    """`_drain` is the one place a gate stream is started: no other code
+    in the gate module calls `.trigger(`, so every gate shares its
+    checkpoint layout and its stop-and-raise timeout."""
+    import ast
+    import inspect
+
+    from etl_gcp_function_tmabrasil_spark.queries import streaming_gate as sg
+
+    callers = set()
+    for top in ast.parse(inspect.getsource(sg)).body:
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "trigger"
+            ):
+                callers.add(getattr(top, "name", "<module>"))
+    assert callers == {"_drain"}
 
 
 def test_missing_table_probe_logs_no_stack_trace(spark, tmp_path):
