@@ -26,6 +26,11 @@ Cross-engine determinism rules (SURVEY.md §7.3 "oracle parity details"):
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import Column, functions as F
 
 from etl_gcp_function_tmabrasil_spark.catalog import load_table  # noqa: F401  (re-export)
@@ -114,19 +119,51 @@ SQL_DAY = "strftime({col}, '%Y-%m-%d')"
 SQL_SECOND = "strftime({col}, '%Y-%m-%d %H:%M:%S')"
 
 
+#: ``(pid, path)`` of this process's gate fixture root, made by the
+#: first :func:`fixture_dir` call; the only per-process root.
+_FIXTURE_ROOT: tuple[int, str] | None = None
+
+
+def fixture_dir(sf_dir: str, name: str) -> str:
+    """``<root>/<sf_name>/<name>``: where a gate query keeps the fixture,
+    sink and checkpoint data it owns for the scale factor `sf_dir`.
+
+    ``<root>`` is a fresh temp dir made once per process, because
+    a fixed shared path let (a) a concurrent driver-verify and pytest
+    run rewrite each other's workbooks mid-read (truncated zip →
+    BadZipFile), (b) stale files from older revisions pass a glob and
+    inflate a read-back, and (c) another user's ownership of the fixed
+    dir break makedirs. Within the process every call returns the same
+    path, so a repeat invocation reuses its fixtures and resumes its
+    checkpoints. An atexit handler deletes the root when the process
+    that made it exits; a forked child inherits the slot but never
+    deletes its parent's root."""
+    global _FIXTURE_ROOT
+    if _FIXTURE_ROOT is None:
+        _FIXTURE_ROOT = (os.getpid(), tempfile.mkdtemp(prefix="spark_graft_"))
+        atexit.register(_remove_fixture_root)
+    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    return os.path.join(_FIXTURE_ROOT[1], sf_name, name)
+
+
+def _remove_fixture_root() -> None:
+    """atexit handler of :func:`fixture_dir`: delete the root, errors
+    ignored, only in the process that made it."""
+    if _FIXTURE_ROOT is not None and _FIXTURE_ROOT[0] == os.getpid():
+        shutil.rmtree(_FIXTURE_ROOT[1], ignore_errors=True)
+
+
 def ensure_fixture(root: str, build) -> None:
     """Build a multi-step per-process fixture ATOMICALLY: ``build(tmp)``
     populates a temp sibling dir which is then os.rename'd into place,
     so the ``isdir`` regeneration guard can only ever observe a
     COMPLETE fixture. A guard satisfied by the first of several writes
     would let a crash mid-build leave a partial fixture that every
-    later invocation in the process silently reuses (ADVICE r5). Shared
-    by the sources/sinks gate fixtures, the dead-letter ETL bucket, and
-    the streaming gates' chunk fixtures and result snapshots — one
-    protocol, not hand-rolled copies."""
-    import os
-    import shutil
-
+    later invocation in the process silently reuses (ADVICE r5). Every
+    gate fixture dir comes from :func:`fixture_dir` and publishes
+    through here: the sources/sinks gate fixtures, the dead-letter ETL
+    bucket, and the streaming gates' chunk fixtures and result
+    snapshots — one protocol, not hand-rolled copies."""
     if os.path.isdir(root):
         return
     tmp = root + ".tmp"

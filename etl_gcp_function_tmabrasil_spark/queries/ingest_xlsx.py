@@ -23,12 +23,11 @@ over the parse tasks; workbook bytes never leave the task that reads them.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_gcp_function_tmabrasil_spark.catalog import load_table
-from etl_gcp_function_tmabrasil_spark.queries._util import ensure_fixture
+from etl_gcp_function_tmabrasil_spark.queries._util import ensure_fixture, fixture_dir
 from etl_gcp_function_tmabrasil_spark.sources.xlsx import read_xlsx, write_minimal_xlsx
 
 _COLS = ["event_id", "user_id", "event_type", "value"]
@@ -37,27 +36,9 @@ _N_ROWS = 100
 _N_FILES = 2
 
 
-def _landing_dir(sf_dir: str) -> str:
-    # Per-PROCESS unique root: a fixed shared /tmp path let (a) a
-    # concurrent driver-verify and pytest run rewrite each other's
-    # workbooks mid-read (truncated zip → BadZipFile), (b) stale
-    # *.xlsx from older revisions pass the glob and inflate the union,
-    # and (c) another user's ownership of the fixed dir break makedirs.
-    # One mkdtemp per process keeps repeat invocations in-process
-    # idempotent (same dir, same filenames, whole-file rewrites).
-    global _LANDING_ROOT
-    if _LANDING_ROOT is None:
-        _LANDING_ROOT = tempfile.mkdtemp(prefix="spark_graft_xlsx_landing_")
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return os.path.join(_LANDING_ROOT, sf_name, "minha-pasta")
-
-
-_LANDING_ROOT: str | None = None
-
-
 def xlsx_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events slice → XLSX workbooks → distributed read-back, typed."""
-    landing = _landing_dir(sf_dir)
+    landing = fixture_dir(sf_dir, "minha-pasta")
     os.makedirs(landing, exist_ok=True)
     # pre-clean any *.xlsx already in the dir (e.g. after lowering
     # _N_FILES) so the glob reads exactly this run's workbooks
@@ -99,7 +80,6 @@ _DL_OK_ROWS = 20
 #: 20-row good ~2.1 KB) and the 300-row big workbook (~7.4 KB) — only
 #: big.xlsx dead-letters as oversize; the asserts below pin all three.
 _DL_MAX_BYTES = 4096
-_ETL_ROOT: str | None = None
 
 
 def etl_xlsx_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,11 +111,7 @@ def etl_xlsx_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_xlsx_etl_pipeline,
     )
 
-    global _ETL_ROOT
-    if _ETL_ROOT is None:
-        _ETL_ROOT = tempfile.mkdtemp(prefix="spark_graft_etl_dl_")
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    root = os.path.join(_ETL_ROOT, sf_name)
+    root = fixture_dir(sf_dir, "etl_deadletter")
     bucket = os.path.join(root, "bucket", "minha-pasta")
     landing = os.path.join(root, "landing")
     table = "analytics.deadletter_gate"
@@ -199,8 +175,10 @@ def etl_xlsx_deadletter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # half-written ledger — fail loudly instead, and remove the
         # warehouse + checkpoint so a later invocation in this process
         # replays from scratch rather than resuming a failed run's
-        # state as if it had completed (the cloudevent-stream gate's
-        # ADVICE r6 hazard, same shape).
+        # state as if it had completed. The gate streams resume a
+        # stopped checkpoint instead (`streaming_gate._drain`), but no
+        # test yet proves this pipeline's ledger + sink replay is
+        # exactly-once after a partial commit.
         import shutil
 
         try:

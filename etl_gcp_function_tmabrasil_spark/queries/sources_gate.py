@@ -24,24 +24,25 @@ through the oracle gate, the same pattern as
 - `sink_incremental_rollup`: materialized mergeable partials + delta
   merge vs a from-scratch rollup oracle.
 
-Fixtures are per-process (mkdtemp), built atomically via
-`_util.ensure_fixture`, and each query guards on a directory it
-EXCLUSIVELY owns — a shared guard made fixture existence depend on
-invocation order (caught round 6). The small fabrications are fixture
-plumbing; the operators under test are the engine's distributed
-readers/writers themselves.
+Each query builds its fixtures atomically via `_util.ensure_fixture`
+in a directory it EXCLUSIVELY owns — a shared guard made fixture
+existence depend on invocation order (caught round 6). That directory
+is `_util.fixture_dir(sf_dir, name)`, under the one per-process root
+that is deleted when the process exits. The small fabrications are
+fixture plumbing; the operators under test are the engine's
+distributed readers/writers themselves.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from etl_gcp_function_tmabrasil_spark.catalog import load_table
 from etl_gcp_function_tmabrasil_spark.queries._util import (
     ensure_fixture as _ensure_fixture,
+    fixture_dir,
 )
 
 _SCHEMA = T.StructType(
@@ -57,28 +58,17 @@ _COLS = [f.name for f in _SCHEMA.fields]
 _TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 _MAX_ID = 200
 
-_ROOT: str | None = None
-
-
-def _gate_root() -> str:
-    global _ROOT
-    if _ROOT is None:
-        _ROOT = tempfile.mkdtemp(prefix="spark_graft_scan_gate_")
-    return _ROOT
-
-
 
 def scan_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events slice → engine CSV + JSON writers → schema-declared
     read-back, union tagged by format."""
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     # own fixture dir, NOT the shared per-sf root: the sibling gate
     # queries (partitioned/compaction/evolution) also create dirs under
     # root, so guarding on root made this fixture's existence depend on
     # invocation ORDER — whichever query ran first satisfied the guard
     # and the CSV/JSON dirs were never written (caught by
     # scripts/bench_gate_sf01.py running the sinks first).
-    fixture = os.path.join(_gate_root(), sf_name, "events_csvjson")
+    fixture = fixture_dir(sf_dir, "events_csvjson")
     csv_dir = os.path.join(fixture, "events_csv")
     json_dir = os.path.join(fixture, "events_json")
 
@@ -144,8 +134,7 @@ def scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-of-truth slice is exactly the roundtrip claim). Scale notes
     as scan_csv_json_roundtrip: per-stripe parallel scan, predicate
     pushdown and column pruning work as with parquet."""
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "events_orc")
+    fixture = fixture_dir(sf_dir, "events_orc")
 
     def _build(tmp: str) -> None:
         (
@@ -192,8 +181,7 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_events_partitioned,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(_gate_root(), sf_name, "events_partitioned")
+    path = fixture_dir(sf_dir, "events_partitioned")
     _ensure_fixture(
         path,
         lambda tmp: write_events_partitioned(
@@ -253,15 +241,15 @@ def scan_cloudevent_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's semantics dictate. Closed-form VALUES oracle."""
     from etl_gcp_function_tmabrasil_spark.sources import cloudevent_source
 
-    feed = os.path.join(_gate_root(), "cloudevents", "feed.jsonl")
-    if not os.path.isfile(feed):
-        os.makedirs(os.path.dirname(feed), exist_ok=True)
-        # single-file fixture: write-to-tmp + rename keeps the isfile
-        # guard from ever seeing a half-written feed
-        tmp = feed + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
+    fixture = fixture_dir(sf_dir, "cloudevents")
+    feed = os.path.join(fixture, "feed.jsonl")
+
+    def _build(tmp: str) -> None:
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "feed.jsonl"), "w", encoding="utf-8") as fh:
             fh.write("\n".join(_CE_LINES) + "\n")
-        os.rename(tmp, feed)
+
+    _ensure_fixture(fixture, _build)
     cloudevent_source.register(spark)
     return (
         spark.read.format("cloudevent_jsonl")
@@ -302,10 +290,11 @@ def stream_cloudevent_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse semantics, and the repeat invocation resumes the checkpoint
     with zero new files — restart yields the identical sink
     (exactly-once), not doubled rows."""
+    # imported at call time so a patched `streaming_gate._drain` applies
+    from etl_gcp_function_tmabrasil_spark.queries.streaming_gate import _drain
     from etl_gcp_function_tmabrasil_spark.sources import cloudevent_source
 
-    root = os.path.join(_gate_root(), "cloudevents_stream")
-    feed = os.path.join(root, "feed")
+    root = fixture_dir(sf_dir, "cloudevents_stream")
 
     def _build(tmp: str) -> None:
         fd = os.path.join(tmp, "feed")
@@ -319,36 +308,11 @@ def stream_cloudevent_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ensure_fixture(root, _build)
     cloudevent_source.register(spark)
-    sink = os.path.join(root, "sink")
-    q = (
-        spark.readStream.format("cloudevent_jsonl")
-        .load(feed)
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", os.path.join(root, "ck"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    stream = spark.readStream.format("cloudevent_jsonl").load(
+        os.path.join(root, "feed")
     )
-    if not q.awaitTermination(300):
-        # The sink/checkpoint pair lives inside the ensure_fixture-
-        # guarded root so a SUCCESSFUL run's restart resumes it (the
-        # exactly-once semantics the docstring promises). A timed-out
-        # run must not leave that pair behind: a live checkpoint plus a
-        # half-written sink would make every later invocation in this
-        # process look like a completed run — the partial-fixture
-        # hazard ensure_fixture exists to prevent (ADVICE r6). Delete
-        # both so the next invocation replays from scratch.
-        import shutil
-
-        try:
-            q.stop()
-        finally:
-            shutil.rmtree(sink, ignore_errors=True)
-            shutil.rmtree(os.path.join(root, "ck"), ignore_errors=True)
-        raise TimeoutError("cloudevent stream did not drain in 300s")
     return (
-        spark.read.parquet(sink)
+        spark.read.parquet(_drain(stream, root))
         .select(
             "bucket",
             "name",
@@ -375,8 +339,7 @@ def sink_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_events_partitioned,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = os.path.join(_gate_root(), sf_name, "events_compacted")
+    path = fixture_dir(sf_dir, "events_compacted")
 
     def _build(tmp: str) -> None:
         (
@@ -427,8 +390,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle every long-lived ingest hits (new fields added upstream;
     historical files never rewritten); the footer-merge must widen the
     schema without touching values."""
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    root = os.path.join(_gate_root(), sf_name, "events_evolution")
+    root = fixture_dir(sf_dir, "events_evolution")
 
     def _build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
@@ -475,8 +437,8 @@ def sink_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Table names are per-process (pid suffix): the session warehouse dir
     is a fixed /tmp path shared with any concurrent pytest process, and
-    two writers overwriting one table mid-read is the same hazard the
-    XLSX landing fixture documents. The DATA lives under the
+    two writers overwriting one table mid-read is the same hazard
+    `_util.fixture_dir` documents. The DATA lives under the
     per-process gate root (external-path tables), not the shared
     warehouse — pid-suffixed managed tables would leak two full table
     copies into the fixed dir per process forever (code-review r6)."""
@@ -489,7 +451,7 @@ def sink_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     li_t = f"gate_li_bucketed_{sf_tag}_{os.getpid()}"
     ord_t = f"gate_ord_bucketed_{sf_tag}_{os.getpid()}"
-    data_root = os.path.join(_gate_root(), sf_tag, "bucketed")
+    data_root = fixture_dir(sf_dir, "bucketed")
     if not spark.catalog.tableExists(li_t):
         write_bucketed(
             load_table(spark, sf_dir, "lineitem").select(
@@ -558,8 +520,7 @@ def sink_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the SAME group key (one bounded shuffle)."""
     from etl_gcp_function_tmabrasil_spark.queries._util import dsum
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    base_path = os.path.join(_gate_root(), sf_name, "rollup_base")
+    base_path = fixture_dir(sf_dir, "rollup_base")
     ev = load_table(spark, sf_dir, "events")
     max_id = ev.agg(F.max("event_id")).collect()[0][0] or 0
     split_id = int(max_id * _INCR_SPLIT_FRAC)
@@ -634,8 +595,7 @@ def scan_binaryfile_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     are driver-side plumbing over a bounded slice; the operator under
     test is the engine's distributed binary reader.
     """
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "binfiles")
+    fixture = fixture_dir(sf_dir, "binfiles")
 
     def _build(tmp: str) -> None:
         os.makedirs(tmp, exist_ok=True)
@@ -735,8 +695,7 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     discontinuity) — the operator's contract is only "key =
     deterministic interleave of bounded buckets".
     """
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "zorder")
+    fixture = fixture_dir(sf_dir, "zorder")
 
     def _build(tmp: str) -> None:
         ev = (
@@ -825,8 +784,7 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_events_partitioned,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "events_dpp")
+    fixture = fixture_dir(sf_dir, "events_dpp")
     _ensure_fixture(
         fixture,
         lambda tmp: write_events_partitioned(
@@ -875,8 +833,7 @@ def scan_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     split per file like the JSON source; XML is the interchange edge,
     not a columnar analytics format — no pushdown, read it once and
     land parquet."""
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "events_xml")
+    fixture = fixture_dir(sf_dir, "events_xml")
 
     def _build(tmp: str) -> None:
         (
@@ -932,8 +889,7 @@ def sink_cloudevent_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     RFC 3339 render/parse."""
     from etl_gcp_function_tmabrasil_spark.sources import cloudevent_source
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "cloudevent_sink")
+    fixture = fixture_dir(sf_dir, "cloudevent_sink")
 
     def _build(tmp: str) -> None:
         out = os.path.join(tmp, "out")
@@ -1038,8 +994,7 @@ def join_runtime_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (false positives pass the filter and die in the join; false
     negatives cannot exist by the bloom contract).
     """
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "bloom_join")
+    fixture = fixture_dir(sf_dir, "bloom_join")
 
     def _build(tmp: str) -> None:
         saved = {k: spark.conf.get(k) for k in _BLOOM_CONFS}
@@ -1113,8 +1068,7 @@ def sink_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_table")
+    fixture = fixture_dir(sf_dir, "snapshot_table")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -1195,8 +1149,7 @@ def sink_snapshot_empty_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_empty")
+    fixture = fixture_dir(sf_dir, "snapshot_empty")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -1308,8 +1261,7 @@ def sink_snapshot_stats_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_files,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_stats")
+    fixture = fixture_dir(sf_dir, "snapshot_stats")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -1432,8 +1384,7 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans finalize at runtime; a pre-execution check can't see the
     split). The oracle recomputes the rollup from the raw tables; hash
     equality proves the split dropped and duplicated no rows."""
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "skew_join")
+    fixture = fixture_dir(sf_dir, "skew_join")
 
     def _build(tmp: str) -> None:
         saved = {k: spark.conf.get(k) for k in _SKEW_CONFS}
@@ -1507,8 +1458,7 @@ def scan_json_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch adds one cached pass, and the valid projection prunes the
     corrupt column immediately.
     """
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "events_json_corrupt")
+    fixture = fixture_dir(sf_dir, "events_json_corrupt")
     data_dir = os.path.join(fixture, "data")
 
     def _build(tmp: str) -> None:
@@ -1604,8 +1554,7 @@ def sink_snapshot_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_diff_table")
+    fixture = fixture_dir(sf_dir, "snapshot_diff_table")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -1681,8 +1630,7 @@ def sink_snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_merge_table")
+    fixture = fixture_dir(sf_dir, "snapshot_merge_table")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -1753,8 +1701,7 @@ def sink_snapshot_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_snapshots,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_vacuum_table")
+    fixture = fixture_dir(sf_dir, "snapshot_vacuum_table")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -1848,8 +1795,7 @@ def sink_snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_snapshots,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_restore_table")
+    fixture = fixture_dir(sf_dir, "snapshot_restore_table")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -1935,8 +1881,7 @@ def sink_snapshot_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_snapshots,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_compact_table")
+    fixture = fixture_dir(sf_dir, "snapshot_compact_table")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -2022,8 +1967,7 @@ def sink_snapshot_point_skipping(
         snapshot_files,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_points")
+    fixture = fixture_dir(sf_dir, "snapshot_points")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -2119,8 +2063,7 @@ def sink_snapshot_time_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
         resolve_version_at,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_as_of")
+    fixture = fixture_dir(sf_dir, "snapshot_as_of")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -2194,8 +2137,7 @@ def sink_snapshot_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_schema_merge")
+    fixture = fixture_dir(sf_dir, "snapshot_schema_merge")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -2300,8 +2242,7 @@ def sink_snapshot_ndv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_ndv,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_ndv")
+    fixture = fixture_dir(sf_dir, "snapshot_ndv")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -2408,8 +2349,7 @@ def sink_snapshot_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_delete")
+    fixture = fixture_dir(sf_dir, "snapshot_delete")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -2508,8 +2448,7 @@ def sink_snapshot_replace_where(
         replace_where,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_replace")
+    fixture = fixture_dir(sf_dir, "snapshot_replace")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -2609,8 +2548,7 @@ def plan_exchange_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from etl_gcp_function_tmabrasil_spark.queries._util import csum
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "exchange_reuse")
+    fixture = fixture_dir(sf_dir, "exchange_reuse")
 
     def _build(tmp: str) -> None:
         li = load_table(spark, sf_dir, "lineitem")
@@ -2691,8 +2629,7 @@ def sink_snapshot_zorder_optimize(
         snapshot_files,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_zorder")
+    fixture = fixture_dir(sf_dir, "snapshot_zorder")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "table")
@@ -2786,8 +2723,7 @@ def sink_incremental_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "ivm_join")
+    fixture = fixture_dir(sf_dir, "ivm_join")
 
     def _build(tmp: str) -> None:
         table = os.path.join(tmp, "view")
@@ -2886,8 +2822,7 @@ def sink_snapshot_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         vacuum_snapshots,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_clone_table")
+    fixture = fixture_dir(sf_dir, "snapshot_clone_table")
 
     def _build(tmp: str) -> None:
         src = os.path.join(tmp, "src")
@@ -3055,8 +2990,7 @@ def sink_snapshot_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         _manifests,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_wap_table")
+    fixture = fixture_dir(sf_dir, "snapshot_wap_table")
 
     def _audit(df: DataFrame) -> bool:
         bad = df.filter(F.col("event_type").isNull()).limit(1).count()
@@ -3171,8 +3105,7 @@ def sink_snapshot_fsck(spark: SparkSession, sf_dir: str) -> DataFrame:
         fsck_snapshot,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_fsck_table")
+    fixture = fixture_dir(sf_dir, "snapshot_fsck_table")
 
     def _build(tmp: str) -> None:
         import glob as _glob
@@ -3301,8 +3234,7 @@ def sink_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "snapshot_merge_cow_table")
+    fixture = fixture_dir(sf_dir, "snapshot_merge_cow_table")
 
     def _build(tmp: str) -> None:
         from etl_gcp_function_tmabrasil_spark.sinks.snapshot import (
@@ -3389,7 +3321,7 @@ def sink_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SNAPSHOT_MERGE_SQL = """
+_SNAPSHOT_MERGE_COW_SQL = """
 WITH merged AS (
   SELECT event_type,
     CASE WHEN event_id % 12 = 1 THEN value + 100.0 ELSE value END AS value
@@ -3401,7 +3333,7 @@ FROM merged GROUP BY event_type ORDER BY event_type
 """
 
 QUERIES["sink_snapshot_merge"] = sink_snapshot_merge
-ORACLE["sink_snapshot_merge"] = _SNAPSHOT_MERGE_SQL
+ORACLE["sink_snapshot_merge"] = _SNAPSHOT_MERGE_COW_SQL
 
 
 def sink_snapshot_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3443,10 +3375,7 @@ def sink_snapshot_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
         set_constraints,
     )
 
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(
-        _gate_root(), sf_name, "snapshot_constraints_table"
-    )
+    fixture = fixture_dir(sf_dir, "snapshot_constraints_table")
 
     def _build(tmp: str) -> None:
         from etl_gcp_function_tmabrasil_spark.sinks.snapshot import (

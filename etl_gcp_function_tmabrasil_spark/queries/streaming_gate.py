@@ -39,13 +39,17 @@ the same plan shape at any corpus size.
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from etl_gcp_function_tmabrasil_spark.catalog import EVENTS_SCHEMA, load_table
-from etl_gcp_function_tmabrasil_spark.queries._util import csum, ensure_fixture, second
+from etl_gcp_function_tmabrasil_spark.queries._util import (
+    csum,
+    ensure_fixture,
+    fixture_dir,
+    second,
+)
 from etl_gcp_function_tmabrasil_spark.sinks.partitioned import heal_and_swap
 from etl_gcp_function_tmabrasil_spark.streaming.windows import (
     click_purchase_attribution,
@@ -56,16 +60,7 @@ from etl_gcp_function_tmabrasil_spark.streaming.windows import (
     tumbling_counts,
 )
 
-_ROOT: str | None = None
 _N_CHUNKS = 3
-
-
-def _root(sf_dir: str, name: str) -> str:
-    global _ROOT
-    if _ROOT is None:
-        _ROOT = tempfile.mkdtemp(prefix="spark_graft_stream_gate_")
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    return os.path.join(_ROOT, sf_name, name)
 
 
 def _write_chunks(sf_dir: str, out: str, copies: int, hold_back=None) -> None:
@@ -111,7 +106,7 @@ def _shared_chunks(sf_dir: str) -> str:
     """One per-sf chunk fixture shared by every copies=1 gate query
     (the checkpoint/sink stay per-query) — five identical pyarrow
     fixture builds saved per process."""
-    out = _root(sf_dir, "chunks1")
+    out = fixture_dir(sf_dir, "chunks1")
     ensure_fixture(out, lambda tmp: _write_chunks(sf_dir, tmp, copies=1))
     return out
 
@@ -162,7 +157,7 @@ def _sentinel_chunks(sf_dir: str) -> str:
                 os.path.join(tmp, f"chunk_zz_sentinel{i}.parquet"),
             )
 
-    out = _root(sf_dir, "chunks_sentinel")
+    out = fixture_dir(sf_dir, "chunks_sentinel")
     ensure_fixture(out, build)
     return out
 
@@ -263,7 +258,7 @@ def stream_tumbling_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the real streaming runtime; its csum keeps the cross-batch
     accumulation exact. Emitted = finalized: windows with end <= max(ts)."""
     data = run_tumbling_stream(
-        spark, _shared_chunks(sf_dir), _root(sf_dir, "tumbling")
+        spark, _shared_chunks(sf_dir), fixture_dir(sf_dir, "tumbling")
     )
     return _finalized_windows(spark, data, _max_ts(spark, sf_dir))
 
@@ -287,7 +282,7 @@ def stream_dedup_redelivery(spark: SparkSession, sf_dir: str) -> DataFrame:
     table's span) keeps all dedup state live, so each event passes
     exactly once and the sink rollup equals the batch rollup of
     `events`."""
-    root = _root(sf_dir, "dedup")
+    root = fixture_dir(sf_dir, "dedup")
     chunks = os.path.join(root, "chunks")
     ensure_fixture(chunks, lambda tmp: _write_chunks(sf_dir, tmp, copies=2))
     data = _drain(stateful_dedup(_stream(spark, chunks), "90 days"), root)
@@ -338,7 +333,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the base table."""
     import pandas as pd
 
-    root = _root(sf_dir, "late_drop")
+    root = fixture_dir(sf_dir, "late_drop")
     chunks = os.path.join(root, "chunks")
     ensure_fixture(
         chunks,
@@ -391,7 +386,7 @@ def stream_session_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     end (= last event + gap) <= max(ts) at the 0-second watermark."""
     events = _stream(spark, _shared_chunks(sf_dir))
     agg = session_counts(events, "30 minutes", "0 seconds")
-    data = _drain(agg, _root(sf_dir, "session"))
+    data = _drain(agg, fixture_dir(sf_dir, "session"))
     cols = ("user_id", "session_start", "n_events", "sum_value")
     return _finalized(spark, data, _max_ts(spark, sf_dir), "session_end", *cols)
 
@@ -464,7 +459,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     events = _stream(spark, _shared_chunks(sf_dir))
     agg = session_counts(events, gap, "0 seconds")
-    data = _drain(agg, _root(sf_dir, "session_dynamic"))
+    data = _drain(agg, fixture_dir(sf_dir, "session_dynamic"))
     cols = ("user_id", "session_start", "session_end", "n_events", "sum_value")
     return _finalized(spark, data, _max_ts(spark, sf_dir), "session_end", *cols)
 
@@ -521,7 +516,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the runtime: with the backlog replayed in time order, state expiry
     never drops an eligible click before its purchase arrives, so the
     emitted inner join equals the batch interval join exactly."""
-    root = _root(sf_dir, "interval_join")
+    root = fixture_dir(sf_dir, "interval_join")
     chunks = _shared_chunks(sf_dir)
     s = _stream(spark, chunks)
     joined = click_purchase_attribution(
@@ -588,7 +583,7 @@ def stream_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output schema is null-free for the dtype-sensitive hash
     compare — the join_full_outer convention.
     """
-    root = _root(sf_dir, "interval_join_outer")
+    root = fixture_dir(sf_dir, "interval_join_outer")
     chunks = _sentinel_chunks(sf_dir)
     s = _stream(spark, chunks)
     joined = click_purchase_attribution(
@@ -629,7 +624,7 @@ def stream_interval_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     failure mode — one row per matching click instead of one per
     purchase) breaks the row-count compare immediately.
     """
-    root = _root(sf_dir, "interval_join_semi")
+    root = fixture_dir(sf_dir, "interval_join_semi")
     chunks = _shared_chunks(sf_dir)
     s = _stream(spark, chunks)
     joined = click_purchase_attribution(
@@ -672,7 +667,7 @@ def stream_chained_window_distinct(spark: SparkSession, sf_dir: str) -> DataFram
     one shuffle service pass and one checkpoint, and state stays
     bounded by (days in watermark) × users, not the event stream.
     """
-    root = _root(sf_dir, "chained_window_distinct")
+    root = fixture_dir(sf_dir, "chained_window_distinct")
     chunks = _shared_chunks(sf_dir)
     per_user = (
         _stream(spark, chunks)
@@ -735,7 +730,7 @@ def stream_interval_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinels (-1 / 'none' / -1.0) for the dtype-sensitive hash
     compare — the join_full_outer convention.
     """
-    root = _root(sf_dir, "interval_join_full")
+    root = fixture_dir(sf_dir, "interval_join_full")
     chunks = _sentinel_chunks(sf_dir)
     s = _stream(spark, chunks)
     joined = click_purchase_attribution(
@@ -844,7 +839,7 @@ def stream_running_totals_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    root = _root(sf_dir, "running_state")
+    root = fixture_dir(sf_dir, "running_state")
     chunks = _shared_chunks(sf_dir)
     out_schema = T.StructType(
         [
@@ -915,7 +910,7 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side; unknown users pass through with null enrichment (the
     reference's null-tolerant R2 semantics). The sink rollup must equal
     the batch left join of `events` against `customer`."""
-    root = _root(sf_dir, "enrich")
+    root = fixture_dir(sf_dir, "enrich")
     chunks = _shared_chunks(sf_dir)
     customer = load_table(spark, sf_dir, "customer")
     enriched = enrich_stream_with_customer(
@@ -955,7 +950,7 @@ def stream_sliding_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     across micro-batch boundaries."""
     events = _stream(spark, _shared_chunks(sf_dir))
     agg = sliding_counts(events, "6 hours", "3 hours", "0 seconds")
-    data = _drain(agg, _root(sf_dir, "sliding"))
+    data = _drain(agg, fixture_dir(sf_dir, "sliding"))
     return _finalized_windows(spark, data, _max_ts(spark, sf_dir))
 
 
@@ -1014,7 +1009,7 @@ def _cdc_merge_batch(batch_df: DataFrame, root: str) -> None:
 def _cdc_gate(spark: SparkSession, sf_dir: str, name: str, merge_batch) -> DataFrame:
     """Drain the chunk stream through `merge_batch` into ``<root>/dim``
     and present the final dimension (shared by both CDC gates)."""
-    root = _root(sf_dir, name)
+    root = fixture_dir(sf_dir, name)
     _drain(
         _stream(spark, _shared_chunks(sf_dir)),
         root,
@@ -1166,7 +1161,7 @@ def stream_snapshot_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    root = _root(sf_dir, "snapshot_stream")
+    root = fixture_dir(sf_dir, "snapshot_stream")
     chunks = _shared_chunks(sf_dir)
     table = os.path.join(root, "table")
 
@@ -1286,7 +1281,7 @@ def stream_state_timeout_sessions(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: state is one fixed-width open session per user; rows
     stream through user_id-partitioned state tasks once.
     """
-    root = _root(sf_dir, "state_timeout_sessions")
+    root = fixture_dir(sf_dir, "state_timeout_sessions")
     chunks = _shared_chunks(sf_dir)
     sessions = timeout_session_stream(spark, chunks)
     data = _drain(sessions, root)
@@ -1465,7 +1460,7 @@ def stream_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         SEQ_PATTERN,
     )
 
-    root = _root(sf_dir, "pattern_state")
+    root = fixture_dir(sf_dir, "pattern_state")
     chunks = _shared_chunks(sf_dir)
     out_schema = T.StructType(
         [
@@ -1554,7 +1549,7 @@ def stream_complete_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations; unbounded keys belong to append/update modes (the
     docstring is the contract a user needs at 100 TB).
     """
-    out = _root(sf_dir, "complete")
+    out = fixture_dir(sf_dir, "complete")
 
     def build(tmp: str) -> None:
         agg = (
@@ -1621,7 +1616,7 @@ def stream_update_mode_emissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    out = _root(sf_dir, "update_mode")
+    out = fixture_dir(sf_dir, "update_mode")
 
     def build(tmp: str) -> None:
         emissions = os.path.join(tmp, "emissions")
@@ -1702,7 +1697,7 @@ def stream_scd2_asof_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     only filters within a user's version chain — never a range join
     across users; the dimension build is one shuffle by customer.
     """
-    root = _root(sf_dir, "scd2_asof")
+    root = fixture_dir(sf_dir, "scd2_asof")
     chunks = _shared_chunks(sf_dir)
     from pyspark.sql import Window as W
 
@@ -1790,7 +1785,7 @@ def stream_merge_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_snapshot,
     )
 
-    root = _root(sf_dir, "merge_upsert_stream")
+    root = fixture_dir(sf_dir, "merge_upsert_stream")
     chunks = _shared_chunks(sf_dir)
     table = os.path.join(root, "table")
     cols = ["user_id", "event_id", "ts", "event_type", "value"]

@@ -9,14 +9,15 @@ def test_corrupt_json_gate_counts_and_routes(spark):
     from pyspark.sql import functions as F, types as T
 
     from etl_gcp_function_tmabrasil_spark.queries import sources_gate as sg
+    from etl_gcp_function_tmabrasil_spark.queries._util import fixture_dir
+    from tests.conftest import SF_SMOKE
 
-    df = sg.scan_json_corrupt_records(spark, "/root/testdata/sf0.001")
+    df = sg.scan_json_corrupt_records(spark, SF_SMOKE)
     rows = df.collect()
     assert len(rows) > 0
     assert all(r.event_id < sg._MAX_ID for r in rows)
     # corrupt lines recoverable raw
-    sf_name = "sf0.001"
-    data_dir = os.path.join(sg._gate_root(), sf_name, "events_json_corrupt", "data")
+    data_dir = os.path.join(fixture_dir(SF_SMOKE, "events_json_corrupt"), "data")
     schema = T.StructType(
         list(sg._SCHEMA.fields) + [T.StructField("_corrupt_record", T.StringType())]
     )

@@ -148,15 +148,14 @@ def test_binaryfile_glob_excludes_decoy(spark, sf_dir):
     md5)."""
     import os
 
+    from etl_gcp_function_tmabrasil_spark.queries._util import fixture_dir
     from etl_gcp_function_tmabrasil_spark.queries.sources_gate import (
-        _gate_root,
         scan_binaryfile_source,
     )
 
     rows = scan_binaryfile_source(spark, sf_dir).collect()
     assert all(r.doc_id is not None for r in rows)
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fixture = os.path.join(_gate_root(), sf_name, "binfiles")
+    fixture = fixture_dir(sf_dir, "binfiles")
     listed = sorted(os.listdir(fixture))
     assert "README.txt" in listed, "decoy missing — the pin is vacuous"
     assert len(rows) == len(listed) - 1

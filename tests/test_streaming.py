@@ -658,15 +658,15 @@ def test_partitioned_cdc_merge_gate_reinvocation_is_exactly_once(spark):
     docstring promises)."""
     import os
 
+    from etl_gcp_function_tmabrasil_spark.queries._util import fixture_dir
     from etl_gcp_function_tmabrasil_spark.queries.streaming_gate import (
-        _root,
         stream_cdc_merge_partitioned,
     )
 
     sf = SF_SMOKE
     first = [tuple(r) for r in stream_cdc_merge_partitioned(spark, sf).collect()]
     assert first, "gate query returned an empty dimension"
-    dim = os.path.join(_root(sf, "cdc_merge_partitioned"), "dim")
+    dim = os.path.join(fixture_dir(sf, "cdc_merge_partitioned"), "dim")
 
     def snap():
         out = {}
@@ -692,15 +692,15 @@ def test_cdc_merge_gate_reinvocation_is_exactly_once(spark):
     byte-identical and return the same rows."""
     import os
 
+    from etl_gcp_function_tmabrasil_spark.queries._util import fixture_dir
     from etl_gcp_function_tmabrasil_spark.queries.streaming_gate import (
-        _root,
         stream_cdc_merge,
     )
 
     sf = SF_SMOKE
     first = [tuple(r) for r in stream_cdc_merge(spark, sf).collect()]
     assert first
-    dim = os.path.join(_root(sf, "cdc_merge"), "dim")
+    dim = os.path.join(fixture_dir(sf, "cdc_merge"), "dim")
 
     def snap():
         return {
@@ -1188,10 +1188,11 @@ def test_complete_leaderboard_crash_before_publish_retries_clean(
     snapshot are built in one temp dir: nothing is published by the
     crashed attempt, the retry's rebuild deletes its residue and
     publishes the correct leaderboard."""
+    from etl_gcp_function_tmabrasil_spark.queries import _util
     from etl_gcp_function_tmabrasil_spark.queries import streaming_gate as sg
 
-    monkeypatch.setattr(sg, "_ROOT", str(tmp_path))
-    out = sg._root(SF_SMOKE, "complete")
+    monkeypatch.setattr(_util, "_FIXTURE_ROOT", (os.getpid(), str(tmp_path)))
+    out = _util.fixture_dir(SF_SMOKE, "complete")
 
     real_rename = os.rename
 
@@ -1235,9 +1236,10 @@ def test_update_mode_crash_retry_does_not_double_count(
     inflated n_emitted past the selectivity cap, and the max-bid final
     pick read across attempts). Checkpoint and emissions live in the
     build dir, which the retry's rebuild deletes."""
+    from etl_gcp_function_tmabrasil_spark.queries import _util
     from etl_gcp_function_tmabrasil_spark.queries import streaming_gate as sg
 
-    monkeypatch.setattr(sg, "_ROOT", str(tmp_path))
+    monkeypatch.setattr(_util, "_FIXTURE_ROOT", (os.getpid(), str(tmp_path)))
 
     real_drain = sg._drain
 
@@ -1250,7 +1252,7 @@ def test_update_mode_crash_retry_does_not_double_count(
         sg.stream_update_mode_emissions(spark, SF_SMOKE)
     monkeypatch.setattr(sg, "_drain", real_drain)
 
-    out = sg._root(SF_SMOKE, "update_mode")
+    out = _util.fixture_dir(SF_SMOKE, "update_mode")
     assert not os.path.isdir(out)  # nothing published
 
     got = {
@@ -1285,25 +1287,64 @@ def test_drain_timeout_stops_query(spark, tmp_path, event_chunks_dir):
     assert {q.id for q in spark.streams.active} == before
 
 
+def test_cloudevent_stream_resumes_after_drain_timeout(
+    spark, tmp_path, monkeypatch
+):
+    """stream_cloudevent_source drains through the shared `_drain`, so a
+    timed-out run leaves its checkpoint in place. The next call resumes
+    it, and the file sink's `_spark_metadata` log hides any uncommitted
+    file: the result is exactly the seven closed-form rows, none
+    doubled."""
+    from collections import Counter
+
+    import duckdb
+
+    from etl_gcp_function_tmabrasil_spark.queries import (
+        _util,
+        sources_gate,
+        streaming_gate as sg,
+    )
+
+    monkeypatch.setattr(_util, "_FIXTURE_ROOT", (os.getpid(), str(tmp_path)))
+    real_drain = sg._drain
+    monkeypatch.setattr(
+        sg, "_drain", lambda df, root, **kw: real_drain(df, root, timeout=0.001)
+    )
+    with pytest.raises(TimeoutError):
+        sources_gate.stream_cloudevent_source(spark, SF_SMOKE)
+    monkeypatch.setattr(sg, "_drain", real_drain)
+
+    rows = sources_gate.stream_cloudevent_source(spark, SF_SMOKE).collect()
+    got = Counter(tuple(r) for r in rows)
+    want = Counter(
+        duckdb.connect().execute(sources_gate._CLOUDEVENT_SQL).fetchall()
+    )
+    assert sum(want.values()) == 7
+    assert got == want
+
+
 def test_gate_streams_trigger_only_in_drain():
-    """`_drain` is the one place a gate stream is started: no other code
-    in the gate module calls `.trigger(`, so every gate shares its
-    checkpoint layout and its stop-and-raise timeout."""
+    """`streaming_gate._drain` is the one place a gate stream is
+    started: no other code in the gate modules calls `.trigger(`, so
+    every gate shares its checkpoint layout and its stop-and-raise
+    timeout."""
     import ast
     import inspect
 
-    from etl_gcp_function_tmabrasil_spark.queries import streaming_gate as sg
+    from etl_gcp_function_tmabrasil_spark.queries import sources_gate, streaming_gate
 
     callers = set()
-    for top in ast.parse(inspect.getsource(sg)).body:
-        for node in ast.walk(top):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "trigger"
-            ):
-                callers.add(getattr(top, "name", "<module>"))
-    assert callers == {"_drain"}
+    for mod in (streaming_gate, sources_gate):
+        for top in ast.parse(inspect.getsource(mod)).body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "trigger"
+                ):
+                    where = getattr(top, "name", "<module>")
+                    callers.add((mod.__name__.rsplit(".", 1)[-1], where))
+    assert callers == {("streaming_gate", "_drain")}
 
 
 def test_missing_table_probe_logs_no_stack_trace(spark, tmp_path):

@@ -21,9 +21,9 @@ import os
 
 from pyspark.sql import functions as F
 
+from etl_gcp_function_tmabrasil_spark.queries._util import fixture_dir
 from etl_gcp_function_tmabrasil_spark.queries.sources_gate import (
     _Z_FILES,
-    _gate_root,
     sink_zorder_layout,
 )
 
@@ -53,8 +53,7 @@ def _touched(spark, path: str, lo: int, hi: int) -> tuple[int, int]:
 
 def test_zorder_files_skip_on_the_second_dimension(spark, sf_dir):
     sink_zorder_layout(spark, sf_dir).collect()  # ensure fixture
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    root = os.path.join(_gate_root(), sf_name, "zorder")
+    root = fixture_dir(sf_dir, "zorder")
     lo, hi = _window(spark, os.path.join(root, "zorder"))
 
     z_touched, z_files = _touched(spark, os.path.join(root, "zorder"), lo, hi)
@@ -73,8 +72,7 @@ def test_zorder_predicate_results_are_unchanged(spark, sf_dir):
     """Skipping must be a layout property, not a semantic one: the
     filtered row set over the z layout equals the baseline's."""
     sink_zorder_layout(spark, sf_dir).collect()
-    sf_name = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    root = os.path.join(_gate_root(), sf_name, "zorder")
+    root = fixture_dir(sf_dir, "zorder")
     lo, hi = _window(spark, os.path.join(root, "zorder"))
     pred = (F.col("xb") >= lo) & (F.col("xb") <= hi)
     z = {
