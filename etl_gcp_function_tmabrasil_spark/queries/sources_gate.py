@@ -2259,7 +2259,6 @@ def sink_snapshot_ndv_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             base.filter(F.col("event_id") % 3 == 1).repartition(4),
             table,
             mode="append",
-            ndv_cols=["user_id"],
         )
         rows = []
         for v, pred in ((1, F.col("event_id") % 3 == 0),
@@ -2375,7 +2374,6 @@ def sink_snapshot_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             table,
             cond,
             prune={"o_orderkey": (lo, hi)},
-            stats_cols=["o_orderkey"],
         )
         m1, m2 = _load_manifest(table, 1), _load_manifest(table, 2)
         untouched = set(m1["files"]) & set(m2["files"])
@@ -2651,9 +2649,7 @@ def sink_snapshot_zorder_optimize(
                 "time-sorted base layout should defeat xb pruning "
                 f"(kept {len(kept_before)} of {len(base_files)})"
             )
-        v2 = optimize_layout(
-            spark, table, _Z_EXPR, 8, stats_cols=["xb"]
-        )
+        v2 = optimize_layout(spark, table, _Z_EXPR, 8)
         kept_after = snapshot_files(table, v2, prune={"xb": band})
         if not kept_after or len(kept_after) >= len(base_files):
             raise RuntimeError(

@@ -58,6 +58,7 @@ from etl_gcp_function_tmabrasil_spark.streaming.windows import (
     sliding_counts,
     stateful_dedup,
     tumbling_counts,
+    user_running_totals,
 )
 
 _N_CHUNKS = 3
@@ -826,69 +827,22 @@ ORDER BY user_id, purchase_id, click_id
 
 def stream_running_totals_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary per-key state (applyInPandasWithState) through the
-    runtime: a per-user running (count, cents) that survives across
-    micro-batches, emitted in update mode per batch via foreachBatch.
-    The accumulator holds integer CENTS (the engine's csum discipline in
-    state form), so the cross-batch float accumulation is order-exact.
-    The final emission per user — the row with the largest n_events,
-    strictly increasing whenever the user appears in a batch — must
-    equal the batch rollup of `events`."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    runtime: `streaming/windows.user_running_totals`, a per-user running
+    (count, sum) held as exact integer cents across micro-batches,
+    emitted in update mode per batch via foreachBatch. The final
+    emission per user — the row with the largest n_events, strictly
+    increasing whenever the user appears in a batch — must equal the
+    batch rollup of `events`."""
     root = fixture_dir(sf_dir, "running_state")
-    chunks = _shared_chunks(sf_dir)
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_cents", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [T.StructField("n", T.LongType()), T.StructField("cents", T.LongType())]
-    )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, cents = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            # per-ROW cents rounding before the sum: value doubles are
-            # within 1e-9 of exact cents (csum precondition), far from
-            # any rounding midpoint, so numpy rint == Spark HALF_UP
-            # here and the long sum is exact
-            cents += int((pdf["value"] * 100).round().astype("int64").sum())
-        state.update((n, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_cents": [cents]}
-        )
-
-    totals = (
-        _stream(spark, chunks)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
+    totals = user_running_totals(_stream(spark, _shared_chunks(sf_dir)))
     data = os.path.join(root, "data")
     _drain(totals, root, lambda b, _: b.write.mode("append").parquet(data), "update")
-    sink = spark.read.parquet(data)
     return (
-        sink.groupBy("user_id")
+        spark.read.parquet(data)
+        .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
-            (
-                F.max_by("total_cents", "n_events") / F.lit(100.0)
-            ).alias("total_value"),
+            F.max_by("total_value", "n_events").alias("total_value"),
         )
         .orderBy("user_id")
     )

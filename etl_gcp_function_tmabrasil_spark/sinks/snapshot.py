@@ -38,8 +38,15 @@ same metadata/data split). Readers hand Spark the explicit file list,
 so planning never lists the directory — and snapshot reads stay
 parallel scans of the named parquet files with full pushdown.
 
-File skipping: a commit can record per-file MIN/MAX column stats in
-the manifest (``stats_cols=...``), and ``read_snapshot(...,
+File skipping: the table's skipping LAYOUT is table state, recorded
+once in the manifest's ``layout`` key by ``commit_snapshot``
+(``stats_cols`` for per-file MIN/MAX, ``point_cols``/``bloom_bits``
+for a value dictionary plus bloom filter, ``ndv_cols`` for KMV
+sketches) and inherited by every later manifest — Delta's
+``delta.dataSkippingNumIndexedCols`` table property, not a per-write
+option. Every verb that lands files (append, overwrite, delete,
+replace, merge, optimize) records that metadata for them, so a verb
+can never silently land unskippable files. ``read_snapshot(...,
 prune={col: (lo, hi)})`` then hands Spark only the files whose range
 intersects — Iceberg/Delta data skipping from the same manifest
 metadata. The stats pass is one bounded aggregation over the freshly
@@ -47,8 +54,8 @@ written files (one output row per file — metadata-sized), and pruning
 is a driver-side interval test over the manifest, never a data scan.
 Stats-based pruning is a FILE filter, not a row filter: callers still
 apply the actual predicate (a kept file may hold rows outside the
-range); files without stats for a pruned column are conservatively
-kept.
+range); files without stats for a pruned column (committed before the
+layout named it) are conservatively kept.
 
 Concurrency, stated honestly: version numbering is
 last-manifest-plus-one, which serializes SINGLE-writer pipelines (the
@@ -329,10 +336,17 @@ def _publish_manifest(tmp: str, dst: str) -> None:
 _DICT_MAX = 32
 #: default per-file per-column bloom width in bits (stored as hex).
 #: Two salted CRC-32 hashes give a ~(fill)^2 false-keep rate. Size it
-#: to the data: writers pass ``bloom_bits ~ 8 x per-file NDV`` (the
-#: Parquet bloom-page sizing rule) — the width is recorded in the
-#: manifest per column, so readers always use the writer's width.
+#: to the data: a table's layout sets ``bloom_bits ~ 8 x per-file NDV``
+#: (the Parquet bloom-page sizing rule) — the width is recorded in the
+#: manifest per file and column, so readers always use the writer's.
 _BLOOM_BITS = 1024
+
+#: the layout keys of ``commit_snapshot`` that name columns
+_LAYOUT_COLS = ("stats_cols", "point_cols", "ndv_cols")
+
+#: a merge broadcasts its source key set up to this many keys; above
+#: it the planner shuffles both sides
+_BROADCAST_KEYS_MAX = 1_000_000
 
 #: per-file K-minimum-values NDV sketch size (manifest "ndv" key):
 #: merging the per-file k-min sets of a PARTITION of the data yields
@@ -374,32 +388,30 @@ def _bloom_positions(rendered: str, bits: int) -> tuple[int, int]:
 
 
 def _collect_file_stats(
-    spark: SparkSession,
-    staging: str,
-    rel_dir: str,
-    stats_cols: list[str],
-    point_cols: list[str] | None = None,
-    bloom_bits: int = _BLOOM_BITS,
-    ndv_cols: list[str] | None = None,
+    spark: SparkSession, staging: str, files: list[str], layout: dict
 ) -> tuple[
     dict[str, dict[str, list]],
     dict[str, dict[str, dict]],
     dict[str, dict[str, list]],
 ]:
-    """Per-file MIN/MAX for ``stats_cols`` — plus, for ``point_cols``,
-    a bounded exact value dictionary and a ``bloom_bits``-wide bloom
-    filter (width recorded in the manifest per column, so readers use
-    the writer's sizing; size ~8 x per-file NDV like Parquet's bloom
-    pages) — over the freshly written staging files: ONE aggregation
-    job, one
-    output row per file (metadata-sized — the same scan Iceberg's
-    writers fold into the commit; Delta's dataSkippingNumIndexedCols /
-    Parquet's dictionary+bloom pages are the equivalents). Keys are
-    table-root-relative paths. Returns ``(stats, skipping)``."""
+    """The per-file metadata of the table's ``layout`` (see
+    ``commit_snapshot``): MIN/MAX for ``stats_cols``; for
+    ``point_cols`` a bounded exact value dictionary and a
+    ``bloom_bits``-wide bloom filter (width recorded per file and
+    column, so readers use the writer's sizing); for ``ndv_cols`` a
+    K-min sketch — over the freshly written staging files: ONE
+    aggregation job, one output row per file (metadata-sized — the same
+    scan Iceberg's writers fold into the commit; Delta's
+    dataSkippingNumIndexedCols / Parquet's dictionary+bloom pages are
+    the equivalents). ``files`` are the staged files' table-root-
+    relative paths, the keys of the returned ``(stats, skipping,
+    ndv)``; each gets entries, an empty one too."""
     from pyspark.sql import functions as F
 
-    point_cols = list(point_cols or [])
-    ndv_cols = list(ndv_cols or [])
+    stats_cols, point_cols, ndv_cols = (
+        list(layout.get(k, [])) for k in _LAYOUT_COLS
+    )
+    bloom_bits = layout.get("bloom_bits", _BLOOM_BITS)
     back = spark.read.parquet(staging)
     for c in set(point_cols) | set(ndv_cols):
         t = back.schema[c].dataType.simpleString()
@@ -465,21 +477,25 @@ def _collect_file_stats(
         .agg(*aggs)
         .collect()
     )
+    by_name = {os.path.basename(r["_file"]): r.asDict() for r in rows}
     stats: dict[str, dict[str, list]] = {}
     skipping: dict[str, dict[str, dict]] = {}
     ndv: dict[str, dict[str, list]] = {}
-    for r in rows:
-        rel = os.path.join(rel_dir, os.path.basename(r["_file"]))
+    for rel in files:
+        # an EMPTY part file has no grouped row: its entries (no stats,
+        # an empty dictionary and sketch) drop it from point lookups
+        # and add nothing to the NDV estimate
+        r = by_name.get(os.path.basename(rel), {})
         stats[rel] = {
-            c: [_json_stat(r[f"min_{c}"]), _json_stat(r[f"max_{c}"])]
+            c: [_json_stat(r.get(f"min_{c}")), _json_stat(r.get(f"max_{c}"))]
             for c in stats_cols
         }
         if point_cols:
             entry: dict[str, dict] = {}
             for c in point_cols:
-                dv = r[f"dv_{c}"]
+                dv = r.get(f"dv_{c}") or []
                 bitmap = 0
-                for b in set(r[f"b1_{c}"]) | set(r[f"b2_{c}"]):
+                for b in {*r.get(f"b1_{c}", []), *r.get(f"b2_{c}", [])}:
                     bitmap |= 1 << b
                 entry[c] = {
                     "dict": sorted(dv) if len(dv) <= _DICT_MAX else None,
@@ -488,7 +504,7 @@ def _collect_file_stats(
                 }
             skipping[rel] = entry
         if ndv_cols:
-            ndv[rel] = {c: list(r[f"ndv_{c}"]) for c in ndv_cols}
+            ndv[rel] = {c: list(r.get(f"ndv_{c}", [])) for c in ndv_cols}
     return stats, skipping, ndv
 
 
@@ -536,20 +552,17 @@ def _land(
     df: DataFrame,
     table_dir: str,
     prefix: str,
-    base: dict | None,
-    stats_cols: list[str] | None,
-    point_cols: list[str] | None,
-    bloom_bits: int,
-    ndv_cols: list[str] | None,
+    base: dict,
     integrity: bool = False,
 ) -> dict:
     """The one staging protocol of every verb that writes data: write
     ``df`` under ``data/<prefix>-<uuid>``, list its part files, and
     collect their per-file metadata — stats/skipping/NDV for the
-    requested columns, plus integrity whenever ``integrity`` is set or
-    ``base`` (the manifest the commit builds on) is tracked. Returns
-    the landed files in the per-file shape ``_write_manifest`` takes;
-    nothing is visible until it publishes a manifest naming them."""
+    ``layout`` of ``base`` (the manifest the commit builds on), plus
+    integrity whenever ``integrity`` is set or ``base`` is tracked.
+    Returns the landed files in the per-file shape ``_write_manifest``
+    takes; nothing is visible until it publishes a manifest naming
+    them."""
     rel_dir = os.path.join("data", f"{prefix}-{uuid.uuid4().hex}")
     staging = os.path.join(table_dir, rel_dir)
     df.write.parquet(staging)
@@ -560,15 +573,14 @@ def _land(
             if f.endswith(".parquet") and not f.startswith((".", "_"))
         )
     }
-    if landed["files"] and (stats_cols or point_cols or ndv_cols):
+    layout = base.get("layout", {})
+    if landed["files"] and any(layout.get(k) for k in _LAYOUT_COLS):
         landed["stats"], landed["skipping"], landed["ndv"] = (
             _collect_file_stats(
-                df.sparkSession, staging, rel_dir,
-                list(stats_cols or []), list(point_cols or []),
-                bloom_bits, list(ndv_cols or []),
+                df.sparkSession, staging, landed["files"], layout
             )
         )
-    if integrity or "integrity" in (base or {}):
+    if integrity or "integrity" in base:
         landed["integrity"] = (
             _collect_integrity(df.sparkSession, staging, table_dir)
             if landed["files"]
@@ -584,7 +596,7 @@ def commit_snapshot(
     stats_cols: list[str] | None = None,
     txn_id: str | int | None = None,
     point_cols: list[str] | None = None,
-    bloom_bits: int = _BLOOM_BITS,
+    bloom_bits: int | None = None,
     commit_ts: float | None = None,
     merge_schema: bool = False,
     ndv_cols: list[str] | None = None,
@@ -600,13 +612,23 @@ def commit_snapshot(
     written, so a rejected commit leaves nothing behind. An empty
     ``df`` commits fine: the manifest records the schema, so the
     version reads back as an empty typed DataFrame.
-    ``stats_cols`` records per-file MIN/MAX for those columns in the
-    manifest, enabling ``read_snapshot(..., prune=...)`` file
-    skipping. ``point_cols`` additionally records a bounded per-file
-    value DICTIONARY and a bloom filter for those columns, enabling
-    ``points={col: value}`` equality skipping where MIN/MAX cannot
-    prune (high-cardinality keys interleaved across files — the
+
+    ``stats_cols``, ``point_cols``, ``bloom_bits`` and ``ndv_cols``
+    set the table's skipping LAYOUT — the only verb that takes them.
+    Each one given replaces that entry of the manifest's ``layout``
+    (an explicit ``[]`` clears a column list); entries not given are
+    inherited, and every later manifest inherits the whole layout, so
+    every verb that lands files records the same metadata for them.
+    ``stats_cols`` records per-file MIN/MAX, enabling
+    ``read_snapshot(..., prune=...)`` file skipping. ``point_cols``
+    records a bounded per-file value DICTIONARY and a
+    ``bloom_bits``-wide bloom filter (default ``_BLOOM_BITS``),
+    enabling ``points={col: value}`` equality skipping where MIN/MAX
+    cannot prune (high-cardinality keys interleaved across files — the
     Parquet dictionary/bloom-page capability lifted to the manifest).
+    ``ndv_cols`` records per-file KMV sketches for ``snapshot_ndv``.
+    Files committed before a column joined the layout keep no entry
+    for it.
 
     ``commit_ts`` (epoch seconds; defaults to the wall clock) is
     recorded in the manifest and drives timestamp time travel —
@@ -654,18 +676,28 @@ def commit_snapshot(
                 "mode='overwrite' to change the table's schema, or "
                 "merge_schema=True to ADD nullable columns"
             )
-    df, quar_df, quality = _enforce_constraints(
-        df, (prev or {}).get("constraints")
-    )
-    landed = _land(
-        df, table_dir, "commit", prev,
-        stats_cols, point_cols, bloom_bits, ndv_cols, integrity,
-    )
+    base = prev or {"files": []}
+    layout = dict(base.get("layout", {}))
+    for k, v in (("stats_cols", stats_cols), ("point_cols", point_cols),
+                 ("bloom_bits", bloom_bits), ("ndv_cols", ndv_cols)):
+        if v is not None:
+            layout[k] = v
+    cols = {c for k in _LAYOUT_COLS for c in layout.get(k, [])}
+    missing = cols - set(schema.fieldNames())
+    if missing:
+        raise ValueError(
+            f"layout columns {sorted(missing)} are not in the schema "
+            f"{schema.simpleString()} — pass the layout arguments that "
+            "name them (an explicit [] clears a list)"
+        )
+    base = {**base, "layout": layout}
+    df, quar_df, quality = _enforce_constraints(df, base.get("constraints"))
+    landed = _land(df, table_dir, "commit", base, integrity)
     if quar_df is not None:
         _land_quarantine(quar_df, table_dir)
     return _write_manifest(
-        table_dir, prev, [landed],
-        drop=set(prev["files"]) if prev and mode == "overwrite" else (),
+        table_dir, base, [landed],
+        drop=set(base["files"]) if mode == "overwrite" else (),
         txn_id=txn_id, commit_ts=commit_ts,
         schema=schema.json(), quality=quality,
     )
@@ -920,10 +952,13 @@ def _write_manifest(
       through ``rekey`` where its path changes, and a dropped file's
       entries go with it. A table stays integrity-tracked once any of
       its parts is;
-    - table-level state (schema, constraints, txn map) comes from
-      ``base`` unless the verb changing it passes it in ``table``
-      (``set_constraints`` passes the new set; an explicit ``{}``
-      clears it). ``txn_id`` records this version in the txn map.
+    - table-level state (schema, constraints, skipping layout, txn
+      map) comes from ``base`` unless the verb changing it passes it
+      in ``table`` (``set_constraints`` passes the new set; an
+      explicit ``{}`` clears it). ``commit_snapshot`` changes the
+      layout in the ``base`` it hands over, since ``_land`` reads the
+      layout from there too. ``txn_id`` records this version in the
+      txn map.
 
     Per-commit keys (``quality``: this commit's per-constraint
     violation counts; ``cloned_from``/``restored_from`` provenance)
@@ -944,7 +979,8 @@ def _write_manifest(
     payload["txn"] = dict(table.pop("txn", base.get("txn", {})))
     if txn_id is not None:
         payload["txn"][str(txn_id)] = version
-    table.setdefault("constraints", base.get("constraints"))
+    for k in ("constraints", "layout"):
+        table.setdefault(k, base.get(k))
     payload.update({k: v for k, v in table.items() if v})
     payload["commit_ts"] = time.time() if commit_ts is None else commit_ts
     tmp = os.path.join(table_dir, f".manifest_v{version}.json.tmp")
@@ -1146,10 +1182,6 @@ def _rewrite_where(
     condition: str,
     prune: dict | None,
     points: dict | None,
-    stats_cols: list[str] | None,
-    point_cols: list[str] | None,
-    bloom_bits: int,
-    ndv_cols: list[str] | None,
     verify_prune: bool = False,
 ) -> tuple[set[str], list[dict], dict]:
     """Shared copy-on-write core of DELETE WHERE / REPLACE WHERE:
@@ -1217,12 +1249,7 @@ def _rewrite_where(
             # DELETE does not remove NULL-predicate rows
             .filter(f"NOT coalesce(({condition}), false)")
         )
-        landed.append(
-            _land(
-                survivors, table_dir, "rewrite", prev,
-                stats_cols, point_cols, bloom_bits, ndv_cols,
-            )
-        )
+        landed.append(_land(survivors, table_dir, "rewrite", prev))
     counts = {
         "files_rewritten": len(touched),
         "files_kept": sum(f not in touched for f in prev["files"]),
@@ -1238,10 +1265,6 @@ def delete_where(
     condition: str,
     prune: dict | None = None,
     points: dict | None = None,
-    stats_cols: list[str] | None = None,
-    point_cols: list[str] | None = None,
-    bloom_bits: int = _BLOOM_BITS,
-    ndv_cols: list[str] | None = None,
     commit_ts: float | None = None,
     txn_id: str | int | None = None,
     verify_prune: bool = False,
@@ -1264,13 +1287,13 @@ def delete_where(
     ``verify_prune=True`` scans the pruned-out files for any match and
     raises instead of committing an incomplete rewrite (it costs one
     extra filtered scan of the pruned files — cheap insurance for a
-    hand-written bound). ``stats_cols``/``point_cols``/``ndv_cols``
-    re-record metadata for the rewritten files.
-    Old versions remain readable (time travel shows pre-delete data
-    until VACUUM). Returns ``{"version", "files_rewritten",
-    "files_kept", "files_pruned", "rows_deleted"}``; a no-match delete
-    still commits a (metadata-only) version, keeping ``txn_id``
-    idempotency uniform."""
+    hand-written bound). The rewritten files get the per-file
+    metadata of the table's skipping layout. Old versions remain
+    readable (time travel shows pre-delete data until VACUUM).
+    Returns ``{"version", "files_rewritten", "files_kept",
+    "files_pruned", "rows_deleted"}``; a no-match delete still commits
+    a (metadata-only) version, keeping ``txn_id`` idempotency
+    uniform."""
     prev = _head(table_dir, required=True)
     done = _applied(prev, txn_id)
     if done is not None:
@@ -1283,7 +1306,6 @@ def delete_where(
         }
     touched, landed, counts = _rewrite_where(
         spark, table_dir, prev, condition, prune, points,
-        stats_cols, point_cols, bloom_bits, ndv_cols,
         verify_prune=verify_prune,
     )
     version = _write_manifest(
@@ -1300,10 +1322,6 @@ def replace_where(
     condition: str,
     prune: dict | None = None,
     points: dict | None = None,
-    stats_cols: list[str] | None = None,
-    point_cols: list[str] | None = None,
-    bloom_bits: int = _BLOOM_BITS,
-    ndv_cols: list[str] | None = None,
     commit_ts: float | None = None,
     txn_id: str | int | None = None,
     validate: bool = True,
@@ -1351,13 +1369,9 @@ def replace_where(
     df, quar_df, quality = _enforce_constraints(df, prev.get("constraints"))
     touched, landed, counts = _rewrite_where(
         spark, table_dir, prev, condition, prune, points,
-        stats_cols, point_cols, bloom_bits, ndv_cols,
         verify_prune=verify_prune,
     )
-    inserted = _land(
-        df, table_dir, "commit", prev,
-        stats_cols, point_cols, bloom_bits, ndv_cols,
-    )
+    inserted = _land(df, table_dir, "commit", prev)
     if quar_df is not None:
         _land_quarantine(quar_df, table_dir)
     version = _write_manifest(
@@ -1499,11 +1513,13 @@ def snapshot_ndv(
     (K-1)*H/h_(K) estimator (exact when fewer than K distinct hashes
     exist). Relative std error ~1/sqrt(K) = 8.8% at K=128 — the
     NDV input a cost-based planner or monitoring job wants per
-    version without replaying history. Raises KeyError when any of
-    the version's files lacks the column's sketch — on a table whose
-    EARLY commits predate ``ndv_cols`` those files are carried
-    forward on every append, so mixed history is permanent, not
-    transient (r10 ADVICE). For such tables pass
+    version without replaying history. The sketches exist for the
+    columns of the table's layout (``commit_snapshot(...,
+    ndv_cols=...)``), which every later verb inherits. Raises KeyError
+    when any of the version's files lacks the column's sketch — on a
+    table whose EARLY commits predate the column joining the layout,
+    those files are carried forward on every append, so mixed history
+    is permanent, not transient (r10 ADVICE). For such tables pass
     ``allow_partial=True``: the estimate then covers only the
     sketched files and the return value becomes a ``(estimate,
     coverage)`` tuple, coverage = sketched-file fraction, so the
@@ -1533,8 +1549,8 @@ def snapshot_ndv(
                 continue
             raise KeyError(
                 f"column {col!r} has no NDV sketch for file {rel!r} in "
-                f"snapshot v{v} of {table_dir} — commit with "
-                f"ndv_cols=[{col!r}] from the table's FIRST commit, or "
+                f"snapshot v{v} of {table_dir} — the table's layout did "
+                "not list it in ndv_cols when that file was committed; "
                 "pass allow_partial=True for a coverage-flagged "
                 "estimate over the sketched files"
             )
@@ -1544,7 +1560,8 @@ def snapshot_ndv(
     if allow_partial and sketched == 0 and n_files > 0:
         raise KeyError(
             f"column {col!r} has no NDV sketch in ANY file of snapshot "
-            f"v{v} of {table_dir} — commit with ndv_cols=[{col!r}]"
+            f"v{v} of {table_dir} — add it to the table's layout with "
+            f"commit_snapshot(..., ndv_cols=[{col!r}])"
         )
     sketch = sorted(merged)[:_NDV_SKETCH_K]
     if len(sketch) < _NDV_SKETCH_K:
@@ -1605,10 +1622,6 @@ def optimize_layout(
     table_dir: str,
     order_expr: str,
     n_files: int,
-    stats_cols: list[str] | None = None,
-    point_cols: list[str] | None = None,
-    bloom_bits: int = _BLOOM_BITS,
-    ndv_cols: list[str] | None = None,
     commit_ts: float | None = None,
 ) -> int:
     """OPTIMIZE ... ZORDER-style layout rewrite: republish the newest
@@ -1616,10 +1629,11 @@ def optimize_layout(
     expression over the table's columns — a Morton/Hilbert curve key,
     a sort column, a bucketing hash) as a NEW version: rows are
     range-partitioned on the expression into ``n_files`` files and
-    sorted by it within each file, so the freshly recorded per-file
-    stats (``stats_cols``) turn into tight, disjoint-ish intervals
-    the reader's pruning can use — Delta's OPTIMIZE ZORDER / Iceberg's
-    rewrite_data_files(sort_order), expressed through the manifest.
+    sorted by it within each file, so the per-file stats the table's
+    layout records for the new files turn into tight, disjoint-ish
+    intervals the reader's pruning can use — Delta's OPTIMIZE ZORDER /
+    Iceberg's rewrite_data_files(sort_order), expressed through the
+    manifest.
 
     Content is untouched (same rows, new layout); old versions stay
     readable until VACUUM, exactly like the r9 compaction verb. On an
@@ -1636,14 +1650,7 @@ def optimize_layout(
         .drop("__cluster")
     )
     return commit_snapshot(
-        clustered,
-        table_dir,
-        mode="overwrite",
-        stats_cols=stats_cols,
-        point_cols=point_cols,
-        bloom_bits=bloom_bits,
-        ndv_cols=ndv_cols,
-        commit_ts=commit_ts,
+        clustered, table_dir, mode="overwrite", commit_ts=commit_ts
     )
 
 
@@ -1669,9 +1676,9 @@ def clone_snapshot(
     relpaths; they stay valid as long as source and clone move
     together (Delta stores absolute URIs for the same reason shallow
     clones there break if the source moves). The clone inherits the
-    source version's schema and CHECK constraints, and its per-file
-    stats/skipping/NDV/integrity entries re-keyed to the clone's paths,
-    so pruning, constraint enforcement and fsck coverage hold on the
+    source version's schema, CHECK constraints and skipping layout,
+    and its per-file stats/skipping/NDV/integrity entries re-keyed to
+    the clone's paths, so pruning, constraint enforcement and fsck coverage hold on the
     clone immediately; its txn map starts empty. ``vacuum_snapshots`` never deletes files
     OUTSIDE the table root, so vacuuming a clone cannot reach through
     a ``..`` reference and destroy source data (the documented Delta
@@ -1730,8 +1737,9 @@ def promote_staged(
     staged version re-keyed, so pruning works on the promoted rows
     immediately and files a tracked staging table recorded stay
     fsck-``ok`` (files it never tracked stay existence-only). The
-    target keeps its own schema, constraints, txn map and integrity
-    entries; constraints are NOT re-checked against the staged rows
+    target keeps its own schema, constraints, skipping layout, txn map
+    and integrity entries (a new target takes the staged schema and
+    layout); constraints are NOT re-checked against the staged rows
     (the audit is the staging read's job). Schema must match the
     target's current schema exactly (append contract). ``txn_id`` gives the
     promote the same idempotent-replay semantics as
@@ -1800,6 +1808,7 @@ def promote_staged(
         table_dir, prev, [_part(staged, staged["files"], remap)],
         txn_id=txn_id, commit_ts=commit_ts,
         schema=(prev or staged)["schema"],
+        layout=(prev or staged).get("layout"),
     )
     return {
         "version": version,
@@ -1814,10 +1823,6 @@ def merge_snapshot(
     key: str | list[str],
     commit_ts: float | None = None,
     txn_id: str | int | None = None,
-    stats_cols: list[str] | None = None,
-    point_cols: list[str] | None = None,
-    bloom_bits: int = _BLOOM_BITS,
-    ndv_cols: list[str] | None = None,
 ) -> dict:
     """Keyed MERGE INTO as ONE copy-on-write snapshot commit — the
     Delta ``MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN UPDATE
@@ -1892,7 +1897,8 @@ def merge_snapshot(
     src_keys = source.select(*keys).distinct()
     # broadcast the key set while it plausibly fits an executor; above
     # that, let the planner shuffle both sides
-    bkeys = F.broadcast(src_keys) if n_keys <= 1_000_000 else src_keys
+    small = n_keys <= _BROADCAST_KEYS_MAX
+    bkeys = F.broadcast(src_keys) if small else src_keys
     files = prev["files"]
     abs_paths = [os.path.join(table_dir, f) for f in files]
     target = spark.read.schema(schema).parquet(*abs_paths)
@@ -1927,11 +1933,7 @@ def merge_snapshot(
         match_counts = hit_rows.groupBy(*keys).agg(
             F.count(F.lit(1)).alias("_match_n")
         )
-        bmc = (
-            F.broadcast(match_counts)
-            if n_keys <= 1_000_000
-            else match_counts
-        )
+        bmc = F.broadcast(match_counts) if small else match_counts
         frames.append(
             source.join(bmc, keys, "left")
             .withColumn(
@@ -1944,13 +1946,7 @@ def merge_snapshot(
         )
     else:
         frames.append(source)
-    landed = [
-        _land(
-            d, table_dir, "commit", prev,
-            stats_cols, point_cols, bloom_bits, ndv_cols,
-        )
-        for d in frames
-    ]
+    landed = [_land(d, table_dir, "commit", prev) for d in frames]
     if quar_df is not None:
         _land_quarantine(quar_df, table_dir)
     version = _write_manifest(
@@ -2031,13 +2027,14 @@ def restore_snapshot(
     them). Returns the new version number.
 
     The restored manifest carries the restored version's schema, CHECK
-    constraints and per-file stats/skipping/NDV/integrity entries
-    verbatim — the table's invariants and fsck coverage come back with
-    its content — and the NEWEST manifest's txn map (idempotence keys
-    accumulate monotonically; a restore must not resurrect retired
-    batch ids as 'unseen'). Same exclusive-create publish as
-    commit_snapshot — a concurrent-writer race raises rather than
-    silently dropping a commit.
+    constraints, skipping layout and per-file
+    stats/skipping/NDV/integrity entries verbatim — the table's
+    invariants and fsck coverage come back with its content — and the
+    NEWEST manifest's txn map (idempotence keys accumulate
+    monotonically; a restore must not resurrect retired batch ids as
+    'unseen'). Same exclusive-create publish as commit_snapshot — a
+    concurrent-writer race raises rather than silently dropping a
+    commit.
     """
     versions = _manifests(table_dir)
     if not versions:

@@ -1,14 +1,14 @@
 """Streaming semantics over the `events` stream (SURVEY.md §2.2
 "Streaming"): watermarks, tumbling/sliding/session windows, stateful
-dedup, and arbitrary-stateful operators via applyInPandasWithState and
-the Spark 4 transformWithStateInPandas StatefulProcessor API.
+dedup, and arbitrary-stateful operators via applyInPandasWithState.
 
 Every transform takes a (streaming or batch) DataFrame with the
 EVENTS_SCHEMA shape and works in both modes. The streaming gates in
 queries/streaming_gate.py and the batch twins in queries/events_json.py
-call the window aggregates defined here, and the redelivery gate calls
-the dedup; on a batch frame the analyzer drops `withWatermark`, so a
-batch twin's plan is the plain windowed aggregate.
+call the window aggregates defined here, the redelivery gate calls
+the dedup, and the running-totals gate calls `user_running_totals`; on
+a batch frame the analyzer drops `withWatermark`, so a batch twin's
+plan is the plain windowed aggregate.
 """
 
 from __future__ import annotations
@@ -18,7 +18,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
@@ -115,10 +114,7 @@ _RUNNING_SCHEMA = T.StructType(
     ]
 )
 _STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ]
+    [T.StructField("n", T.LongType()), T.StructField("cents", T.LongType())]
 )
 
 
@@ -126,18 +122,25 @@ def user_running_totals(events: DataFrame) -> DataFrame:
     """Arbitrary stateful aggregation via applyInPandasWithState: a
     per-user running (count, sum) that survives across micro-batches —
     the custom-stateful-operator escape hatch for semantics the built-in
-    windows can't express."""
+    windows can't express. The state holds integer CENTS (the engine's
+    csum discipline in state form: valid for values with at most 2
+    decimals), so the cross-batch accumulation is order-exact;
+    ``total_value`` is the cents over 100, rounded once."""
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        n, total = state.get if state.exists else (0, 0.0)
+        n, cents = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
+            # per-ROW cents rounding before the sum: value doubles are
+            # within 1e-9 of exact cents (csum precondition), far from
+            # any rounding midpoint, so numpy rint == Spark HALF_UP
+            # here and the long sum is exact
+            cents += int((pdf["value"] * 100).round().astype("int64").sum())
+        state.update((n, cents))
         yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
+            {"user_id": [key[0]], "n_events": [n], "total_value": [cents / 100]}
         )
 
     return events.groupBy("user_id").applyInPandasWithState(
@@ -146,53 +149,6 @@ def user_running_totals(events: DataFrame) -> DataFrame:
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-class _RunningTotalsProcessor(StatefulProcessor):
-    """Per-user running (count, sum) as a Spark 4 StatefulProcessor.
-
-    Same semantics as :func:`user_running_totals`, expressed on the
-    transformWithStateInPandas API — typed ValueState in the state store
-    (RocksDB provider required), optional per-key TTL instead of the
-    GroupStateTimeout enum, and multiple named state variables per key
-    if the operator grows. This is the forward-looking arbitrary-state
-    surface; the applyInPandasWithState twin above stays as the
-    widely-deployed fallback.
-    """
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("running", _STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        n, total = self._state.get() if self._state.exists() else (0, 0.0)
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def user_running_totals_tws(events: DataFrame) -> DataFrame:
-    """user_running_totals on the transformWithStateInPandas API.
-
-    Caller must enable the RocksDB state store provider (the only
-    provider that supports transformWithState):
-    ``spark.sql.streaming.stateStore.providerClass =
-    org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``.
-    """
-    return events.groupBy("user_id").transformWithStateInPandas(
-        _RunningTotalsProcessor(),
-        outputStructType=_RUNNING_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -396,7 +396,7 @@ def test_optimize_layout_reclusters_without_changing_content(spark, tmp_path):
     df = spark.range(400).selectExpr("id", "id % 16 AS k")
     commit_snapshot(df.repartitionByRange(4, "id"), table, stats_cols=["k"])
     assert len(snapshot_files(table, prune={"k": (3, 4)})) == 4
-    v2 = optimize_layout(spark, table, "k", 4, stats_cols=["k"])
+    v2 = optimize_layout(spark, table, "k", 4)
     kept = snapshot_files(table, v2, prune={"k": (3, 4)})
     assert 0 < len(kept) < 4
     ids_before = sorted(r.id for r in read_snapshot(spark, table, 1).collect())

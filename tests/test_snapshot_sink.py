@@ -289,6 +289,150 @@ def test_manifests_publish_only_through_write_manifest():
     assert callers == {w: {"_write_manifest"} for w in writers}
 
 
+def test_layout_is_set_only_by_commit_snapshot():
+    """The skipping layout is table state: `commit_snapshot` is the one
+    function with a layout parameter, and `_land` the one caller of
+    `_collect_file_stats` (it reads the layout from the manifest it
+    builds on), so no verb can land files under a layout of its own."""
+    import ast
+    import inspect
+
+    from etl_gcp_function_tmabrasil_spark.sinks import snapshot as snap
+
+    layout = {"stats_cols", "point_cols", "bloom_bits", "ndv_cols"}
+    takers, collectors = set(), set()
+    for top in ast.parse(inspect.getsource(snap)).body:
+        for node in ast.walk(top):
+            if isinstance(node, (ast.FunctionDef, ast.Lambda)):
+                a = node.args
+                params = a.posonlyargs + a.args + a.kwonlyargs
+                if layout & {p.arg for p in params}:
+                    takers.add(getattr(node, "name", "<lambda>"))
+            elif (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func) == "_collect_file_stats"
+            ):
+                collectors.add(getattr(top, "name", "<module>"))
+    assert takers == {"commit_snapshot"}
+    assert collectors == {"_land"}
+
+
+def test_layout_survives_every_verb(spark, tmp_path):
+    """A table committed once with stats, points and NDV on `id` keeps
+    that layout through every verb called WITHOUT layout arguments:
+    after each one, range and point pruning keep exactly the files a
+    fresh commit of the same files would keep (min/max overlap; every
+    file holds at most _DICT_MAX ids, so the point dictionary is
+    exact), and the NDV estimate is the exact distinct count (< K).
+    Metadata-only verbs (restore, clone, promote) are followed by an
+    append, whose new file must get the inherited layout too."""
+    import pyarrow.parquet as pq
+
+    from etl_gcp_function_tmabrasil_spark.sinks.snapshot import (
+        clone_snapshot,
+        delete_where,
+        merge_snapshot,
+        optimize_layout,
+        promote_staged,
+        replace_where,
+        restore_snapshot,
+        snapshot_files,
+        snapshot_ndv,
+    )
+
+    def check(table, step):
+        held = {
+            f: pq.read_table(f, columns=["id"]).column("id").to_pylist()
+            for f in snapshot_files(table)
+        }
+        for lo, hi in ((0, 10), (50, 60), (100, 130), (500, 600)):
+            want = [
+                f for f, ids in held.items()
+                if not ids or (min(ids) <= hi and max(ids) >= lo)
+            ]
+            got = snapshot_files(table, prune={"id": (lo, hi)})
+            assert sorted(got) == sorted(want), (step, lo, hi)
+        for v in (3, 55, 105, 404):
+            want = [f for f, ids in held.items() if v in ids]
+            got = snapshot_files(table, points={"id": v})
+            assert sorted(got) == sorted(want), (step, v)
+        exact = len({i for ids in held.values() for i in ids})
+        assert snapshot_ndv(table, "id") == exact, step
+
+    def append(table, lo):
+        commit_snapshot(spark.range(lo, lo + 5).coalesce(1), table, "append")
+
+    t, clone, stage, fresh = (
+        str(tmp_path / n) for n in ("t", "clone", "stage", "fresh")
+    )
+    layout = dict(stats_cols=["id"], point_cols=["id"], ndv_cols=["id"])
+    commit_snapshot(spark.range(100).repartitionByRange(4, "id"), t, **layout)
+    commit_snapshot(spark.range(400, 410).coalesce(1), stage, **layout)
+    check(t, "commit")
+    steps = [
+        ("append", lambda: append(t, 100)),
+        # Spark writes one EMPTY part file for a frame with no rows
+        ("append of no rows", lambda: commit_snapshot(
+            spark.range(0), t, "append"
+        )),
+        ("delete", lambda: delete_where(spark, t, "id = 55")),
+        ("replace", lambda: replace_where(
+            spark, spark.range(10, 13).coalesce(1), t, "id >= 10 AND id < 15"
+        )),
+        ("merge", lambda: merge_snapshot(
+            spark, t, spark.range(3, 4).union(spark.range(200, 201)), "id"
+        )),
+        ("optimize", lambda: optimize_layout(spark, t, "id", 6)),
+        ("restore", lambda: restore_snapshot(t, 4)),
+        ("append after restore", lambda: append(t, 120)),
+        ("promote", lambda: promote_staged(stage, t)),
+        ("append after promote", lambda: append(t, 140)),
+    ]
+    for step, verb in steps:
+        verb()
+        check(t, step)
+    clone_snapshot(t, clone)
+    check(clone, "clone")
+    append(clone, 160)
+    check(clone, "append after clone")
+    promote_staged(stage, fresh)
+    append(fresh, 180)
+    check(fresh, "append after promote into a new table")
+
+
+def test_layout_changes_only_where_commit_snapshot_says(spark, tmp_path):
+    """A layout argument replaces its own entry and leaves the others
+    inherited; an explicit [] clears a column list; a layout column
+    the new schema lacks is rejected before any file is written."""
+    from etl_gcp_function_tmabrasil_spark.sinks.snapshot import (
+        _load_manifest,
+        snapshot_ndv,
+    )
+
+    table = str(tmp_path / "t")
+    commit_snapshot(
+        spark.range(10).coalesce(1), table,
+        point_cols=["id"], bloom_bits=2048, ndv_cols=["id"],
+    )
+    commit_snapshot(
+        spark.range(10, 20).coalesce(1), table, mode="append", ndv_cols=[]
+    )
+    m = _load_manifest(table, 2)
+    assert m["layout"] == {"point_cols": ["id"], "bloom_bits": 2048,
+                           "ndv_cols": []}
+    assert [e["id"]["bits"] for e in m["skipping"].values()] == [2048, 2048]
+    assert len(m["ndv"]) == 1  # only the first file carries a sketch
+    with pytest.raises(KeyError, match="layout did not list it"):
+        snapshot_ndv(table, "id")
+    data = os.listdir(os.path.join(table, "data"))
+    renamed = spark.range(5).selectExpr("id AS k")
+    with pytest.raises(ValueError, match="layout columns"):
+        commit_snapshot(renamed, table, mode="overwrite")
+    assert os.listdir(os.path.join(table, "data")) == data
+    commit_snapshot(renamed, table, mode="overwrite", point_cols=["k"])
+    assert _load_manifest(table, 3)["layout"]["point_cols"] == ["k"]
+
+
 def test_point_skipping_dict_path_exact(spark, tmp_path):
     """Dictionary path (per-file distinct count fits _DICT_MAX): a
     point lookup keeps EXACTLY the files that contain the value —
@@ -381,10 +525,7 @@ def test_point_skipping_append_carries_metadata(spark, tmp_path):
 
     table = str(tmp_path / "t")
     commit_snapshot(spark.range(10).coalesce(1), table, point_cols=["id"])
-    commit_snapshot(
-        spark.range(100, 110).coalesce(1), table,
-        mode="append", point_cols=["id"],
-    )
+    commit_snapshot(spark.range(100, 110).coalesce(1), table, mode="append")
     # v2 has two files; a point lookup prunes to the right one
     assert len(snapshot_files(table, 2)) == 2
     assert len(snapshot_files(table, 2, points={"id": 3})) == 1
@@ -773,7 +914,6 @@ def test_ndv_sketch_merge_is_lossless_and_tracks_lifecycle(spark, tmp_path):
         spark.range(25, 80).selectExpr("id", "id % 7 AS g").repartition(3),
         table,
         mode="append",
-        ndv_cols=["id", "g"],
     )
     assert snapshot_ndv(table, "id") == 80  # overlap dedupes via hashes
     assert snapshot_ndv(table, "id", version=1) == 50  # time travel
@@ -807,7 +947,6 @@ def test_delete_where_copy_on_write(spark, tmp_path):
         table,
         "id >= 25 AND id < 50 AND g IS NOT NULL",
         prune={"id": (25, 49)},
-        stats_cols=["id"],
     )
     # ids 30, 40 have NULL g -> predicate NULL -> kept per SQL DELETE
     assert res["rows_deleted"] == 25 - 2

@@ -24,7 +24,6 @@ from etl_gcp_function_tmabrasil_spark.streaming.windows import (
     stateful_dedup,
     tumbling_counts,
     user_running_totals,
-    user_running_totals_tws,
 )
 from tests.conftest import SF_SMOKE
 
@@ -138,52 +137,6 @@ def test_user_running_totals_state(spark, event_chunks_dir):
             """SELECT user_id, n_events, total_value FROM (
                  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
                  FROM running_out) WHERE rn = 1"""
-        ).collect()
-    }
-    batch = {
-        r.user_id: (r.n, r.s)
-        for r in spark.read.parquet(event_chunks_dir)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert final.keys() == batch.keys()
-    for u in batch:
-        assert final[u][0] == batch[u][0], u
-        assert abs(final[u][1] - batch[u][1]) < 1e-6, u
-
-
-def test_user_running_totals_transform_with_state(spark, event_chunks_dir):
-    """The Spark 4 StatefulProcessor twin must reach the same final
-    per-user state as applyInPandasWithState and as batch truth.
-    transformWithState requires the RocksDB state store provider — set
-    it for this query only, restoring the default after.
-
-    The TWS state-server protocol is protobuf-based; skip where
-    google.protobuf is unavailable (this container ships no protobuf and
-    installs are disallowed — the operator still plans, only execution
-    needs the wire protocol)."""
-    pytest.importorskip("google.protobuf")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = user_running_totals_tws(_events_stream(spark, event_chunks_dir))
-        _run_to_memory(stream, "running_tws_out", "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    final = {
-        r.user_id: (r.n_events, r.total_value)
-        for r in spark.sql(
-            """SELECT user_id, n_events, total_value FROM (
-                 SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-                 FROM running_tws_out) WHERE rn = 1"""
         ).collect()
     }
     batch = {
