@@ -2965,9 +2965,11 @@ def sink_snapshot_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the main table structurally untouched.
 
     Hard-checked at fixture build: (a) a BAD batch (planted NULL
-    event_type rows) fails the audit and the main table's version
-    list, manifest bytes, and row count are bit-unchanged after the
-    rejection; (b) the GOOD batch passes, promote bumps main by ONE
+    event_id rows — a value no input row holds, so a NULL
+    ``event_type`` in the input, which the oracle groups like any
+    other type, never fails the good batch) fails the audit and the
+    main table's version list, manifest bytes, and row count are
+    bit-unchanged after the rejection; (b) the GOOD batch passes, promote bumps main by ONE
     version whose read equals slice₀ ∪ slice₁, with ZERO new files in
     main's own data/ (metadata-only publish); (c) re-promoting the
     same txn_id is an idempotent no-op (same version returned, no new
@@ -2989,7 +2991,7 @@ def sink_snapshot_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture = fixture_dir(sf_dir, "snapshot_wap_table")
 
     def _audit(df: DataFrame) -> bool:
-        bad = df.filter(F.col("event_type").isNull()).limit(1).count()
+        bad = df.filter(F.col("event_id").isNull()).limit(1).count()
         return bad == 0 and df.limit(1).count() > 0
 
     def _build(tmp: str) -> None:
@@ -3002,11 +3004,11 @@ def sink_snapshot_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         n0 = read_snapshot(spark, main).count()
         files0 = sorted(os.listdir(os.path.join(main, "data")))
 
-        # round 1: BAD batch — planted NULL event_type rows
+        # round 1: BAD batch — planted NULL event_id rows
         bad_batch = ev.filter(F.col("event_id") % 3 == 2).withColumn(
-            "event_type",
+            "event_id",
             F.when(F.col("event_id") % 5 == 0, F.lit(None)).otherwise(
-                F.col("event_type")
+                F.col("event_id")
             ),
         )
         stage_bad = os.path.join(tmp, "stage_bad")

@@ -18,9 +18,9 @@ Model:
   last-rename-wins);
 - the manifest stores the snapshot's SCHEMA (Spark StructType JSON),
   so every committed version stays readable — including an EMPTY
-  snapshot (overwrite 'logical truncate', or a first commit whose
-  write produced zero data files), which reads back as an empty,
-  correctly-typed DataFrame — and append-time schema drift is
+  snapshot (overwrite 'logical truncate', or a first commit of no
+  rows: a 0-row part file is never landed), which reads back as an
+  empty, correctly-typed DataFrame — and append-time schema drift is
   detected explicitly (raise) rather than delegated silently to
   parquet's merge behavior. Iceberg/Delta version the schema in
   metadata for exactly these reasons;
@@ -67,6 +67,7 @@ full multi-writer coordination still belongs to a catalog service.
 
 from __future__ import annotations
 
+import contextlib
 import ctypes
 import errno
 import json
@@ -109,15 +110,40 @@ def _load_manifest(table_dir: str, version: int) -> dict:
         return json.load(fh)
 
 
-def _head(table_dir: str, required: bool = False) -> dict | None:
-    """The newest manifest, or None for a table with no commit yet
-    (FileNotFoundError instead when ``required``)."""
+def _resolve(
+    table_dir: str, version: int | None = None, as_of: float | None = None
+) -> dict:
+    """The one version resolver: the manifest of ``version``, of the
+    newest version whose recorded ``commit_ts`` is <= ``as_of`` (epoch
+    seconds; versions committed before the field existed count as
+    -inf, always eligible), or of the newest version. Raises
+    FileNotFoundError when the table has no commit or has no such
+    version, and ValueError when both ``version`` and ``as_of`` are
+    given. Every reader and verb resolves through here."""
+    if version is not None and as_of is not None:
+        raise ValueError("pass either version or as_of, not both")
     versions = _manifests(table_dir)
-    if versions:
-        return _load_manifest(table_dir, versions[-1])
-    if required:
+    if not versions:
         raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    return None
+    if as_of is not None:
+        for v in reversed(versions):
+            man = _load_manifest(table_dir, v)
+            if man.get("commit_ts", float("-inf")) <= as_of:
+                return man
+        raise FileNotFoundError(
+            f"no snapshot at {table_dir} committed at or before {as_of}"
+        )
+    v = versions[-1] if version is None else version
+    if v not in versions:
+        raise FileNotFoundError(
+            f"snapshot v{v} does not exist at {table_dir} (have {versions})"
+        )
+    return _load_manifest(table_dir, v)
+
+
+def _head(table_dir: str) -> dict | None:
+    """The newest manifest, or None for a table with no commit yet."""
+    return _resolve(table_dir) if _manifests(table_dir) else None
 
 
 def _applied(head: dict | None, txn_id: str | int | None) -> int | None:
@@ -405,7 +431,7 @@ def _collect_file_stats(
     dataSkippingNumIndexedCols / Parquet's dictionary+bloom pages are
     the equivalents). ``files`` are the staged files' table-root-
     relative paths, the keys of the returned ``(stats, skipping,
-    ndv)``; each gets entries, an empty one too."""
+    ndv)``."""
     from pyspark.sql import functions as F
 
     stats_cols, point_cols, ndv_cols = (
@@ -482,20 +508,17 @@ def _collect_file_stats(
     skipping: dict[str, dict[str, dict]] = {}
     ndv: dict[str, dict[str, list]] = {}
     for rel in files:
-        # an EMPTY part file has no grouped row: its entries (no stats,
-        # an empty dictionary and sketch) drop it from point lookups
-        # and add nothing to the NDV estimate
-        r = by_name.get(os.path.basename(rel), {})
+        r = by_name[os.path.basename(rel)]
         stats[rel] = {
-            c: [_json_stat(r.get(f"min_{c}")), _json_stat(r.get(f"max_{c}"))]
+            c: [_json_stat(r[f"min_{c}"]), _json_stat(r[f"max_{c}"])]
             for c in stats_cols
         }
         if point_cols:
             entry: dict[str, dict] = {}
             for c in point_cols:
-                dv = r.get(f"dv_{c}") or []
+                dv = r[f"dv_{c}"]
                 bitmap = 0
-                for b in {*r.get(f"b1_{c}", []), *r.get(f"b2_{c}", [])}:
+                for b in {*r[f"b1_{c}"], *r[f"b2_{c}"]}:
                     bitmap |= 1 << b
                 entry[c] = {
                     "dict": sorted(dv) if len(dv) <= _DICT_MAX else None,
@@ -504,7 +527,7 @@ def _collect_file_stats(
                 }
             skipping[rel] = entry
         if ndv_cols:
-            ndv[rel] = {c: list(r.get(f"ndv_{c}", [])) for c in ndv_cols}
+            ndv[rel] = {c: list(r[f"ndv_{c}"]) for c in ndv_cols}
     return stats, skipping, ndv
 
 
@@ -559,33 +582,53 @@ def _land(
     ``df`` under ``data/<prefix>-<uuid>``, list its part files, and
     collect their per-file metadata — stats/skipping/NDV for the
     ``layout`` of ``base`` (the manifest the commit builds on), plus
-    integrity whenever ``integrity`` is set or ``base`` is tracked.
-    Returns the landed files in the per-file shape ``_write_manifest``
-    takes; nothing is visible until it publishes a manifest naming
-    them."""
+    integrity (``_file_digests`` under ``base``'s declared schema)
+    whenever ``integrity`` is set or ``base`` is tracked.
+
+    A part file with no rows (Spark writes one for a frame with no
+    rows, and can write one beside non-empty files) is unlinked before
+    any metadata pass — its row count comes from the Parquet footer,
+    read on the driver, no Spark job — so no manifest ever names one
+    and none is left behind; a ``df`` with no rows lands no file at
+    all (the manifest's schema keeps the version readable). Returns
+    the landed files in the per-file shape ``_write_manifest`` takes;
+    nothing is visible until it publishes a manifest naming them."""
+    import pyarrow.parquet as pq
+
     rel_dir = os.path.join("data", f"{prefix}-{uuid.uuid4().hex}")
     staging = os.path.join(table_dir, rel_dir)
     df.write.parquet(staging)
-    landed: dict = {
-        "files": sorted(
-            os.path.join(rel_dir, f)
-            for f in os.listdir(staging)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    }
+    parts = sorted(
+        f for f in os.listdir(staging)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    full = [
+        f for f in parts
+        if pq.read_metadata(os.path.join(staging, f)).num_rows
+    ]
+    if not full:
+        shutil.rmtree(staging)
+    else:
+        for f in set(parts) - set(full):
+            for name in (f, f".{f}.crc"):  # the file and its checksum
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(os.path.join(staging, name))
+    landed: dict = {"files": [os.path.join(rel_dir, f) for f in full]}
+    spark = df.sparkSession
     layout = base.get("layout", {})
-    if landed["files"] and any(layout.get(k) for k in _LAYOUT_COLS):
+    if full and any(layout.get(k) for k in _LAYOUT_COLS):
         landed["stats"], landed["skipping"], landed["ndv"] = (
-            _collect_file_stats(
-                df.sparkSession, staging, landed["files"], layout
-            )
+            _collect_file_stats(spark, staging, landed["files"], layout)
         )
     if integrity or "integrity" in base:
-        landed["integrity"] = (
-            _collect_integrity(df.sparkSession, staging, table_dir)
-            if landed["files"]
-            else {}
+        schema = StructType.fromJson(json.loads(base["schema"]))
+        paths = [os.path.join(table_dir, f) for f in landed["files"]]
+        digests = (
+            _file_digests(spark, schema, paths, table_dir) if full else {}
         )
+        landed["integrity"] = {
+            rel: {"rows": n, "xxh": xxh} for rel, (n, xxh) in digests.items()
+        }
     return landed
 
 
@@ -610,8 +653,9 @@ def commit_snapshot(
     the schema. The schema check (``merge_schema`` resolution
     included) and the table's CHECK constraints run before any file is
     written, so a rejected commit leaves nothing behind. An empty
-    ``df`` commits fine: the manifest records the schema, so the
-    version reads back as an empty typed DataFrame.
+    ``df`` commits fine and lands no file (no manifest names a 0-row
+    file): the manifest records the schema, so the version reads back
+    as an empty typed DataFrame.
 
     ``stats_cols``, ``point_cols``, ``bloom_bits`` and ``ndv_cols``
     set the table's skipping LAYOUT — the only verb that takes them.
@@ -640,10 +684,11 @@ def commit_snapshot(
     ``integrity=True`` starts integrity TRACKING: per fresh file, the
     manifest records its exact row count and an ORDER-INDEPENDENT
     content hash (the decimal sum of per-row ``xxhash64`` over every
-    declared column — the same row-hash-rollup machinery as
-    ``table_diff_checksum``), computed in one distributed pass over the
-    staging read. ``fsck_snapshot`` later re-derives both and proves
-    each still-referenced file is bit-equivalent to what the commit
+    declared column, in declared order — the same row-hash-rollup
+    machinery as ``table_diff_checksum``), computed by
+    ``_file_digests`` in one distributed pass over the staged files.
+    ``fsck_snapshot`` later re-derives both and proves each
+    still-referenced file is bit-equivalent to what the commit
     recorded. Once a table is tracked (its manifest carries an
     ``integrity`` map), every verb that lands files records fresh
     entries for them whether or not it is passed the flag, and every
@@ -690,7 +735,7 @@ def commit_snapshot(
             f"{schema.simpleString()} — pass the layout arguments that "
             "name them (an explicit [] clears a list)"
         )
-    base = {**base, "layout": layout}
+    base = {**base, "layout": layout, "schema": schema.json()}
     df, quar_df, quality = _enforce_constraints(df, base.get("constraints"))
     landed = _land(df, table_dir, "commit", base, integrity)
     if quar_df is not None:
@@ -698,50 +743,40 @@ def commit_snapshot(
     return _write_manifest(
         table_dir, base, [landed],
         drop=set(base["files"]) if mode == "overwrite" else (),
-        txn_id=txn_id, commit_ts=commit_ts,
-        schema=schema.json(), quality=quality,
+        txn_id=txn_id, commit_ts=commit_ts, quality=quality,
     )
 
 
-def _collect_integrity(
-    spark: SparkSession, staging: str, table_dir: str
-) -> dict[str, dict]:
-    """Per-file ``{"rows": n, "xxh": decimal-string}`` over freshly
-    written staging files — ONE distributed aggregation, one output row
-    per file. The hash is the DECIMAL(38,0) sum of per-row ``xxhash64``
-    over every column in schema order: order-independent (a sum), so a
-    re-read under any partitioning reproduces it, and exact (decimal,
-    never a lossy double fold). Keys are table-root-relative paths."""
+def _file_digests(
+    spark: SparkSession, schema: StructType, paths: list[str], table_dir: str
+) -> dict[str, tuple[int, str]]:
+    """Per-file ``(rows, xxh)`` of the parquet files ``paths``, keyed
+    by table-root-relative path — the one integrity digest: commits
+    record it (``_land``) and ``fsck_snapshot`` re-derives it. ONE
+    distributed aggregation, one output row per file. The files are
+    read under the table's DECLARED ``schema``, and the hash is the
+    DECIMAL(38,0) sum of per-row ``xxhash64`` over the declared columns
+    in declared order: independent of the column order the writing
+    frame had (a ``merge_schema`` append may carry the same columns in
+    another order), order-independent across rows (a sum, so a re-read
+    under any partitioning reproduces it), and exact (decimal, never a
+    lossy double fold). A file with no rows yields no entry."""
     from pyspark.sql import functions as F
 
-    back = spark.read.parquet(staging)
-    cols = [f.name for f in back.schema.fields]
     rows = (
-        back.groupBy(F.input_file_name().alias("f"))
+        spark.read.schema(schema).parquet(*paths)
+        .groupBy(F.input_file_name().alias("f"))
         .agg(
             F.count(F.lit(1)).alias("rows"),
-            F.coalesce(
-                F.sum(F.xxhash64(*cols).cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("xxh"),
+            F.sum(F.xxhash64(*schema.fieldNames()).cast("decimal(38,0)"))
+            .alias("xxh"),
         )
         .collect()
     )
-    out = {
-        _rel_of_input_file(r["f"], table_dir): {
-            "rows": int(r["rows"]),
-            "xxh": str(r["xxh"]),
-        }
+    return {
+        _rel_of_input_file(r["f"], table_dir): (int(r["rows"]), str(r["xxh"]))
         for r in rows
     }
-    # an EMPTY part file contributes no grouped row — record it
-    # explicitly (rows=0, hash 0) so fsck keeps full coverage
-    rel_dir = os.path.relpath(staging, table_dir)
-    for f in os.listdir(staging):
-        if f.endswith(".parquet") and not f.startswith((".", "_")):
-            rel = os.path.join(rel_dir, f)
-            out.setdefault(rel, {"rows": 0, "xxh": "0"})
-    return out
 
 
 def fsck_snapshot(
@@ -779,14 +814,10 @@ def fsck_snapshot(
     ``{"file", "status", "rows_recorded", "rows_actual", "hash_ok"}``,
     sorted by (status, file) for determinism.
     """
-    from pyspark.sql import functions as F
-
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
+    _resolve(table_dir)  # a table with no commit raises
     referenced: dict[str, dict | None] = {}
     schema_of: dict[str, str] = {}
-    for v in versions:
+    for v in _manifests(table_dir):
         man = _load_manifest(table_dir, v)
         integ = man.get("integrity", {})
         for rel in man["files"]:
@@ -823,31 +854,13 @@ def fsck_snapshot(
             )
         else:
             by_schema.setdefault(schema_of[rel], []).append(rel)
-    def _scan(schema: StructType, paths: list[str]) -> dict[str, tuple]:
-        cols = [f.name for f in schema.fields]
-        back = spark.read.schema(schema).parquet(*paths)
-        return {
-            _rel_of_input_file(r["f"], table_dir): (
-                int(r["rows"]),
-                str(r["xxh"]),
-            )
-            for r in back.groupBy(F.input_file_name().alias("f"))
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(
-                    F.sum(F.xxhash64(*cols).cast("decimal(38,0)")),
-                    F.lit(0).cast("decimal(38,0)"),
-                ).alias("xxh"),
-            )
-            .collect()
-        }
-
     for schema_json, rels in by_schema.items():
         schema = StructType.fromJson(json.loads(schema_json))
         actual: dict[str, tuple[int, str] | None] = {}
         try:
-            actual = _scan(
-                schema, [os.path.join(table_dir, r) for r in rels]
+            actual = _file_digests(
+                spark, schema, [os.path.join(table_dir, r) for r in rels],
+                table_dir,
             )
         except Exception:
             # ONE unreadable file aborts the whole batch scan (Hadoop
@@ -858,8 +871,12 @@ def fsck_snapshot(
         for rel in rels:
             if rel not in actual:
                 try:
-                    got = _scan(schema, [os.path.join(table_dir, rel)])
-                    # an EMPTY file yields no group row at all
+                    got = _file_digests(
+                        spark, schema, [os.path.join(table_dir, rel)],
+                        table_dir,
+                    )
+                    # a recorded file that now reads EMPTY yields no
+                    # row: it reports corrupt against its recorded count
                     actual[rel] = got.get(rel, (0, "0"))
                 except Exception:
                     actual[rel] = None  # genuinely unreadable
@@ -956,9 +973,9 @@ def _write_manifest(
       map) comes from ``base`` unless the verb changing it passes it
       in ``table`` (``set_constraints`` passes the new set; an
       explicit ``{}`` clears it). ``commit_snapshot`` changes the
-      layout in the ``base`` it hands over, since ``_land`` reads the
-      layout from there too. ``txn_id`` records this version in the
-      txn map.
+      layout and schema in the ``base`` it hands over, since ``_land``
+      reads both from there too. ``txn_id`` records this version in
+      the txn map.
 
     Per-commit keys (``quality``: this commit's per-constraint
     violation counts; ``cloned_from``/``restored_from`` provenance)
@@ -1121,7 +1138,7 @@ def set_constraints(
     (Delta's behavior) scans the current snapshot once and refuses to
     add a ``fail`` constraint the existing data already violates.
     Returns the new version."""
-    prev = _head(table_dir, required=True)
+    prev = _resolve(table_dir)
     norm: dict[str, dict] = {}
     for name, c in constraints.items():
         if isinstance(c, str):
@@ -1154,7 +1171,7 @@ def drop_constraint(
     """Remove a declared CHECK constraint (``ALTER TABLE DROP
     CONSTRAINT``) as a metadata-only version. Raises ``KeyError`` if
     the name is not declared."""
-    prev = _head(table_dir, required=True)
+    prev = _resolve(table_dir)
     current = dict(prev.get("constraints", {}))
     if name not in current:
         raise KeyError(f"constraint {name!r} is not declared")
@@ -1294,7 +1311,7 @@ def delete_where(
     "files_pruned", "rows_deleted"}``; a no-match delete still commits
     a (metadata-only) version, keeping ``txn_id`` idempotency
     uniform."""
-    prev = _head(table_dir, required=True)
+    prev = _resolve(table_dir)
     done = _applied(prev, txn_id)
     if done is not None:
         return {
@@ -1339,7 +1356,7 @@ def replace_where(
     predicate and constraint checks all run before any file is
     written, so a rejected backfill leaves nothing behind. Readers see
     the table before the swap or after it, never between."""
-    prev = _head(table_dir, required=True)
+    prev = _resolve(table_dir)
     done = _applied(prev, txn_id)
     if done is not None:
         return {
@@ -1394,20 +1411,7 @@ def resolve_version_at(table_dir: str, as_of: float) -> int:
     FileNotFoundError when every version is newer than ``as_of``.
 
     Driver-side manifest reads only — O(versions), no data touched."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    eligible = [
-        v
-        for v in versions
-        if _load_manifest(table_dir, v).get("commit_ts", float("-inf"))
-        <= as_of
-    ]
-    if not eligible:
-        raise FileNotFoundError(
-            f"no snapshot at {table_dir} committed at or before {as_of}"
-        )
-    return max(eligible)
+    return _resolve(table_dir, as_of=as_of)["version"]
 
 
 def snapshot_files(
@@ -1431,15 +1435,7 @@ def snapshot_files(
     ``datetime.date``/``datetime`` objects OR their ISO strings; a
     bound that still doesn't compare against the stored stat type
     raises a ValueError instead of an opaque TypeError."""
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"snapshot v{v} does not exist at {table_dir} (have {versions})"
-        )
-    manifest = _load_manifest(table_dir, v)
+    manifest = _resolve(table_dir, version)
     stats = manifest.get("stats", {})
     skipping = manifest.get("skipping", {})
     norm_prune = {
@@ -1526,19 +1522,8 @@ def snapshot_ndv(
     caller sees exactly how partial the number is instead of a
     KeyError or a silently-low estimate. Still raises when NO file
     carries the sketch."""
-    if as_of is not None:
-        if version is not None:
-            raise ValueError("pass either version or as_of, not both")
-        version = resolve_version_at(table_dir, as_of)
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"snapshot v{v} does not exist at {table_dir} (have {versions})"
-        )
-    manifest = _load_manifest(table_dir, v)
+    manifest = _resolve(table_dir, version, as_of)
+    v = manifest["version"]
     ndv = manifest.get("ndv", {})
     merged: set[int] = set()
     sketched = 0
@@ -1593,21 +1578,9 @@ def read_snapshot(
     files by manifest MIN/MAX stats and ``points`` by manifest
     dictionary/bloom metadata (see ``snapshot_files``); both are FILE
     filters — apply the actual row predicate on the result."""
-    if as_of is not None:
-        if version is not None:
-            raise ValueError("pass either version or as_of, not both")
-        version = resolve_version_at(table_dir, as_of)
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(
-            f"snapshot v{v} does not exist at {table_dir} (have {versions})"
-        )
-    manifest = _load_manifest(table_dir, v)
+    manifest = _resolve(table_dir, version, as_of)
     schema = StructType.fromJson(json.loads(manifest["schema"]))
-    files = snapshot_files(table_dir, v, prune, points)
+    files = snapshot_files(table_dir, manifest["version"], prune, points)
     if not files:
         return spark.createDataFrame([], schema)
     # read under the manifest's DECLARED schema: files written before a
@@ -1685,17 +1658,14 @@ def clone_snapshot(
     shallow-clone vacuum hazard, guarded here structurally).
 
     Returns ``{"version": 1, "files_referenced", "cloned_from"}``.
-    Raises FileExistsError if ``dst_dir`` already has a manifest.
+    Raises FileNotFoundError if ``src_dir`` has no commit or no
+    ``version``, and FileExistsError if ``dst_dir`` already has a
+    manifest.
     """
-    versions = _manifests(src_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {src_dir}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions} at {src_dir}")
+    src = _resolve(src_dir, version)
+    v = src["version"]
     if _manifests(dst_dir):
         raise FileExistsError(f"{dst_dir} already holds a snapshot table")
-    src = _load_manifest(src_dir, v)
     os.makedirs(os.path.join(dst_dir, "data"), exist_ok=True)
     src_abs = os.path.abspath(src_dir)
     dst_abs = os.path.abspath(dst_dir)
@@ -1744,7 +1714,9 @@ def promote_staged(
     target's current schema exactly (append contract). ``txn_id`` gives the
     promote the same idempotent-replay semantics as
     :func:`commit_snapshot`. Returns ``{"version",
-    "files_referenced"}``.
+    "files_referenced"}``. Raises FileNotFoundError if ``staging_dir``
+    has no commit or no ``version`` (the staged version, default its
+    newest).
 
     LIFETIME COUPLING (default ``link_files=False``): the promoted
     manifest references the staging files BY PATH (``../stage/...``),
@@ -1759,13 +1731,7 @@ def promote_staged(
     — still O(metadata) on a hard-link filesystem, and the staging
     table can then be dropped freely (r13 ADVICE).
     """
-    svs = _manifests(staging_dir)
-    if not svs:
-        raise FileNotFoundError(f"no snapshot committed at {staging_dir}")
-    sv = svs[-1] if version is None else version
-    if sv not in svs:
-        raise ValueError(f"version {sv} not in {svs} at {staging_dir}")
-    staged = _load_manifest(staging_dir, sv)
+    staged = _resolve(staging_dir, version)
     prev = _head(table_dir)
     done = _applied(prev, txn_id)
     if done is not None:
@@ -1863,7 +1829,7 @@ def merge_snapshot(
     "files_inserted", "rows_updated", "rows_inserted"}``.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    prev = _head(table_dir, required=True)
+    prev = _resolve(table_dir)
     done = _applied(prev, txn_id)
     if done is not None:
         return {
@@ -1982,9 +1948,8 @@ def vacuum_snapshots(table_dir: str, retain_last: int = 1) -> dict:
     Driver-side file metadata ops only — nothing is scanned. Returns
     ``{expired_versions, retained_versions, deleted_files}``.
     """
+    _resolve(table_dir)  # a table with no commit raises
     versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
     retain_last = max(1, retain_last)
     keep = versions[-retain_last:]
     drop = [v for v in versions if v not in keep]
@@ -2036,17 +2001,9 @@ def restore_snapshot(
     concurrent-writer race raises rather than silently dropping a
     commit.
     """
-    versions = _manifests(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot committed at {table_dir}")
-    if to_version not in versions:
-        raise FileNotFoundError(
-            f"snapshot v{to_version} does not exist at {table_dir}"
-            f" (have {versions})"
-        )
-    newest = _load_manifest(table_dir, versions[-1])
+    newest = _resolve(table_dir)
     return _write_manifest(
-        table_dir, _load_manifest(table_dir, to_version),
-        version=versions[-1] + 1, commit_ts=commit_ts,
+        table_dir, _resolve(table_dir, to_version),
+        version=newest["version"] + 1, commit_ts=commit_ts,
         txn=newest.get("txn", {}), restored_from=to_version,
     )

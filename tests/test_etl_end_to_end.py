@@ -434,3 +434,79 @@ def test_xlsx_etl_two_events_for_one_object_in_one_batch(spark, tmp_path):
         ("minha-pasta/gone.xlsx", ts0, "missing"),
         ("minha-pasta/gone.xlsx", ts1, "missing"),
     ]
+
+
+class _DeadLetterWriteCrashesOnce(BigQuerySink):
+    """A sink whose first ``<table>_rejected`` write raises: a crash
+    after the data write of the same micro-batch, before its commit."""
+
+    crashed = False
+
+    def write(self, df, table, mode="append", partition_by=None):
+        if table.endswith("_rejected") and not self.crashed:
+            self.crashed = True
+            raise RuntimeError("crash before the dead-letter write")
+        return super().write(df, table, mode, partition_by)
+
+
+def test_xlsx_etl_crash_mid_batch_replays_exactly_once(spark, tmp_path):
+    """The micro-batch crashes after its data write and before its
+    dead-letter write; the run on the same checkpoint replays it. The
+    ledger probe skips the events already in the data table, so every
+    event lands exactly once, in exactly one of the data and
+    ``_rejected`` tables."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    bucket = tmp_path / "bucket"
+    (bucket / "minha-pasta").mkdir(parents=True)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    write_minimal_xlsx(
+        str(bucket / "minha-pasta" / "a.xlsx"),
+        COLS,
+        [[1, 10, "click", 1.5], [2, 20, "view", 2.5]],
+    )
+    write_minimal_xlsx(
+        str(bucket / "minha-pasta" / "b.xlsx"), COLS, [[3, 30, "buy", 3.5]]
+    )
+    (bucket / "minha-pasta" / "corrupt.xlsx").write_bytes(b"not a zip")
+    names = ["a.xlsx", "b.xlsx", "corrupt.xlsx", "gone.xlsx"]
+    evs = [
+        {"bucket": "b", "name": f"minha-pasta/{n}", "size": 1,
+         "ts": f"2024-01-01T00:0{i}:00Z"}
+        for i, n in enumerate(names)
+    ]
+    _land_events(landing, "ev.json", evs + evs[:1])  # a redelivery too
+
+    sink = _DeadLetterWriteCrashesOnce(warehouse_dir=str(tmp_path / "warehouse"))
+    table = "analytics.crashed"
+
+    def run():
+        return run_xlsx_etl_pipeline(
+            spark, str(landing), str(bucket), sink, table, COLS, DDL
+        )
+
+    with pytest.raises(StreamingQueryException, match="dead-letter write"):
+        run().awaitTermination(120)
+    assert sink.crashed
+    assert sink.read(spark, table).count() == 3  # landed before the crash
+    assert not sink.exists(spark, f"{table}_rejected")
+
+    assert run().awaitTermination(120)
+    data = [
+        (r._event_name, r.event_id) for r in sink.read(spark, table).collect()
+    ]
+    assert sorted(data) == [
+        ("minha-pasta/a.xlsx", 1), ("minha-pasta/a.xlsx", 2),
+        ("minha-pasta/b.xlsx", 3),
+    ]
+    dead = [
+        (r._event_name, r._status)
+        for r in sink.read(spark, f"{table}_rejected").collect()
+    ]
+    assert sorted(dead) == [
+        ("minha-pasta/corrupt.xlsx", "error"),
+        ("minha-pasta/gone.xlsx", "missing"),
+    ]
+    assert not {n for n, _ in data} & {n for n, _ in dead}

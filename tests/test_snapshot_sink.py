@@ -60,6 +60,115 @@ def test_version_resolution_errors(spark, tmp_path):
         commit_snapshot(spark.range(0, 1), str(table), mode="merge")
 
 
+def _verb(name):
+    """``(spark, table, other_dir) -> None`` calling snapshot verb
+    ``name`` on ``table`` at version 9 where the verb takes a version."""
+    from etl_gcp_function_tmabrasil_spark.sinks import snapshot as snap
+
+    return {
+        "read_snapshot": lambda s, t, o: snap.read_snapshot(s, t, 9),
+        "read_snapshot as_of": lambda s, t, o: snap.read_snapshot(
+            s, t, as_of=0.5
+        ),
+        "snapshot_files": lambda s, t, o: snap.snapshot_files(t, 9),
+        "snapshot_ndv": lambda s, t, o: snap.snapshot_ndv(t, "id", 9),
+        "snapshot_ndv as_of": lambda s, t, o: snap.snapshot_ndv(
+            t, "id", as_of=0.5
+        ),
+        "resolve_version_at": lambda s, t, o: snap.resolve_version_at(t, 0.5),
+        "clone_snapshot": lambda s, t, o: snap.clone_snapshot(t, o, 9),
+        "promote_staged": lambda s, t, o: snap.promote_staged(t, o, 9),
+        "restore_snapshot": lambda s, t, o: snap.restore_snapshot(t, 9),
+        "fsck_snapshot": lambda s, t, o: snap.fsck_snapshot(s, t),
+        "vacuum_snapshots": lambda s, t, o: snap.vacuum_snapshots(t),
+        "delete_where": lambda s, t, o: snap.delete_where(s, t, "id = 1"),
+        "replace_where": lambda s, t, o: snap.replace_where(
+            s, s.range(1), t, "id = 0"
+        ),
+        "merge_snapshot": lambda s, t, o: snap.merge_snapshot(
+            s, t, s.range(1), "id"
+        ),
+        "optimize_layout": lambda s, t, o: snap.optimize_layout(
+            s, t, "id", 1
+        ),
+        "set_constraints": lambda s, t, o: snap.set_constraints(
+            s, t, {"c": "id >= 0"}
+        ),
+        "drop_constraint": lambda s, t, o: snap.drop_constraint(t, "c"),
+    }[name]
+
+
+#: verbs that resolve a caller-given version or instant — at version 9
+#: (or before the first commit) of a committed table they must raise too
+_VERSIONED = (
+    "read_snapshot", "read_snapshot as_of", "snapshot_files",
+    "snapshot_ndv", "snapshot_ndv as_of", "resolve_version_at",
+    "clone_snapshot", "promote_staged", "restore_snapshot",
+)
+
+
+@pytest.mark.parametrize(
+    "name",
+    _VERSIONED + (
+        "fsck_snapshot", "vacuum_snapshots", "delete_where",
+        "replace_where", "merge_snapshot", "optimize_layout",
+        "set_constraints", "drop_constraint",
+    ),
+)
+def test_every_verb_raises_file_not_found_for_a_missing_version(
+    spark, tmp_path, name
+):
+    """Every reader and verb resolves versions through the one
+    resolver, so a never-committed directory and a version the table
+    does not hold (9 of a 2-version table; an instant before its first
+    commit) raise the same FileNotFoundError, and the failed call
+    writes nothing."""
+    verb = _verb(name)
+    table, other = str(tmp_path / "t"), str(tmp_path / "other")
+    with pytest.raises(FileNotFoundError, match="no snapshot committed"):
+        verb(spark, table, other)
+    if name not in _VERSIONED:
+        return
+    commit_snapshot(spark.range(3), table, commit_ts=1.0, ndv_cols=["id"])
+    commit_snapshot(spark.range(3, 5), table, commit_ts=2.0)
+    with pytest.raises(FileNotFoundError):
+        verb(spark, table, other)
+    assert sorted(os.listdir(table)) == [
+        "data", "manifest_v1.json", "manifest_v2.json"
+    ]
+    assert not os.path.exists(other)
+
+
+def test_version_resolution_lives_in_one_resolver():
+    """`_resolve` is the only code in the sink that raises the
+    no-commit or missing-version error (the quarantine reader raises
+    its own), and `xxhash64` — the integrity digest — appears once,
+    in `_file_digests`, which both the commit and fsck call."""
+    import ast
+    import inspect
+
+    from etl_gcp_function_tmabrasil_spark.sinks import snapshot as snap
+
+    raisers, hashers, digesters = set(), [], set()
+    for top in ast.parse(inspect.getsource(snap)).body:
+        name = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if isinstance(node, ast.Raise) and "FileNotFoundError" in (
+                ast.unparse(node.exc or ast.Constant(None))
+            ):
+                raisers.add(name)
+            elif isinstance(node, ast.Attribute) and node.attr == "xxhash64":
+                hashers.append(name)
+            elif (
+                isinstance(node, ast.Call)
+                and ast.unparse(node.func) == "_file_digests"
+            ):
+                digesters.add(name)
+    assert raisers == {"_resolve", "read_quarantine"}
+    assert hashers == ["_file_digests"]
+    assert digesters == {"_land", "fsck_snapshot"}
+
+
 def test_manifest_lists_files_not_directories(spark, tmp_path):
     """The reader must hand Spark an explicit FILE list (never list
     the data dir), stored RELATIVE to the table root so the table is
@@ -325,7 +434,10 @@ def test_layout_survives_every_verb(spark, tmp_path):
     file holds at most _DICT_MAX ids, so the point dictionary is
     exact), and the NDV estimate is the exact distinct count (< K).
     Metadata-only verbs (restore, clone, promote) are followed by an
-    append, whose new file must get the inherited layout too."""
+    append, whose new file must get the inherited layout too. No
+    manifest ever names a file without rows: an append of no rows adds
+    no file, and a commit of no rows to a new table lands none and
+    reads back as an empty frame with the table's schema."""
     import pyarrow.parquet as pq
 
     from etl_gcp_function_tmabrasil_spark.sinks.snapshot import (
@@ -345,10 +457,11 @@ def test_layout_survives_every_verb(spark, tmp_path):
             f: pq.read_table(f, columns=["id"]).column("id").to_pylist()
             for f in snapshot_files(table)
         }
+        assert all(pq.read_metadata(f).num_rows for f in held), step
         for lo, hi in ((0, 10), (50, 60), (100, 130), (500, 600)):
             want = [
                 f for f, ids in held.items()
-                if not ids or (min(ids) <= hi and max(ids) >= lo)
+                if min(ids) <= hi and max(ids) >= lo
             ]
             got = snapshot_files(table, prune={"id": (lo, hi)})
             assert sorted(got) == sorted(want), (step, lo, hi)
@@ -362,6 +475,11 @@ def test_layout_survives_every_verb(spark, tmp_path):
     def append(table, lo):
         commit_snapshot(spark.range(lo, lo + 5).coalesce(1), table, "append")
 
+    def append_nothing():
+        before = snapshot_files(t)
+        commit_snapshot(spark.range(0), t, "append")
+        assert snapshot_files(t) == before, "an append of no rows added a file"
+
     t, clone, stage, fresh = (
         str(tmp_path / n) for n in ("t", "clone", "stage", "fresh")
     )
@@ -372,9 +490,7 @@ def test_layout_survives_every_verb(spark, tmp_path):
     steps = [
         ("append", lambda: append(t, 100)),
         # Spark writes one EMPTY part file for a frame with no rows
-        ("append of no rows", lambda: commit_snapshot(
-            spark.range(0), t, "append"
-        )),
+        ("append of no rows", append_nothing),
         ("delete", lambda: delete_where(spark, t, "id = 55")),
         ("replace", lambda: replace_where(
             spark, spark.range(10, 13).coalesce(1), t, "id >= 10 AND id < 15"
@@ -398,6 +514,12 @@ def test_layout_survives_every_verb(spark, tmp_path):
     promote_staged(stage, fresh)
     append(fresh, 180)
     check(fresh, "append after promote into a new table")
+    empty = str(tmp_path / "empty")
+    commit_snapshot(spark.range(0), empty, **layout)
+    assert snapshot_files(empty) == []
+    assert os.listdir(os.path.join(empty, "data")) == []
+    got = read_snapshot(spark, empty)
+    assert got.count() == 0 and got.schema == spark.range(0).schema
 
 
 def test_layout_changes_only_where_commit_snapshot_says(spark, tmp_path):
@@ -892,6 +1014,41 @@ def test_merge_schema_evolution_protocol(spark, tmp_path):
         )
 
 
+def test_fsck_ok_after_merge_schema_appends_in_another_column_order(
+    spark, tmp_path
+):
+    """A merge_schema append may carry the table's columns in another
+    order (or with a new column first). The commit digests each file
+    under the declared schema, the same way fsck re-derives it, so
+    every file of the tracked table stays `ok` — xxhash64 depends on
+    column order, and a digest of the frame's order reads `corrupt`."""
+    from etl_gcp_function_tmabrasil_spark.sinks.snapshot import (
+        fsck_snapshot,
+        snapshot_files,
+    )
+
+    table = str(tmp_path / "t")
+    commit_snapshot(
+        spark.createDataFrame([(1, "x"), (2, "y")], "a long, b string"),
+        table, integrity=True,
+    )
+    commit_snapshot(
+        spark.createDataFrame([("z", 3)], "b string, a long"),
+        table, merge_schema=True,
+    )
+    commit_snapshot(
+        spark.createDataFrame([(9.5, 4, "w")], "c double, a long, b string"),
+        table, merge_schema=True,
+    )
+    got = sorted(tuple(r) for r in read_snapshot(spark, table).collect())
+    assert got == [
+        (1, "x", None), (2, "y", None), (3, "z", None), (4, "w", 9.5)
+    ]
+    report = fsck_snapshot(spark, table)
+    assert {r["status"] for r in report} == {"ok"}, report
+    assert len(report) == len(snapshot_files(table))
+
+
 def test_ndv_sketch_merge_is_lossless_and_tracks_lifecycle(spark, tmp_path):
     """Per-file k-min union must equal the global sketch (exact counts
     below K), survive appends/vacuum/restore, and raise loudly for
@@ -1085,3 +1242,39 @@ def test_ndv_mixed_history_partial_estimate(spark, tmp_path):
     # zero sketched files still raises even in partial mode
     with pytest.raises(KeyError, match="ANY file"):
         snapshot_ndv(table, "id", version=1, allow_partial=True)
+
+
+def test_wap_gate_publishes_a_good_batch_holding_null_event_types(
+    spark, tmp_path
+):
+    """The write-audit-publish gate plants its bad rows on a value the
+    input cannot hold (a NULL event_id) and audits that value, so an
+    input whose event_type has NULL cells still promotes its good
+    batch, and the gate matches its oracle, which groups the NULL type
+    like any other."""
+    import duckdb
+
+    from etl_gcp_function_tmabrasil_spark.queries.sources_gate import (
+        ORACLE,
+        sink_snapshot_wap,
+    )
+    from tests.conftest import SF_SMOKE
+    from tests.oracle_check import compare
+
+    sf = tmp_path / "sf_null_event_type"
+    sf.mkdir()
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT * REPLACE (CASE WHEN event_id % 7 = 0 THEN NULL "
+        f"ELSE event_type END AS event_type) FROM '{SF_SMOKE}/events.parquet')"
+        f" TO '{sf}/events.parquet' (FORMAT parquet)"
+    )
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
+    nulls = con.execute(
+        "SELECT count(*) FROM events WHERE event_type IS NULL "
+        "AND event_id % 3 = 1"
+    ).fetchone()[0]
+    assert nulls > 0  # the good batch holds NULL event types
+    oracle = con.execute(ORACLE["sink_snapshot_wap"]).fetchdf()
+    got = sink_snapshot_wap(spark, str(sf))
+    assert compare(got, oracle, "sink_snapshot_wap") == []
