@@ -191,8 +191,8 @@ class ConstructionGuardTripped(RuntimeError):
     """Eager-construction guard exhausted its strikes for one query.
 
     Raised (and caught PER QUERY in main) so a single guard trip can
-    never nullify the whole artifact: BENCH_r12.json came back
-    ``parsed: null`` because one false-positive trip on a stalling
+    never nullify the whole artifact: the r12 driver artifact came
+    back ``parsed: null`` because one false-positive trip on a stalling
     driver host crashed the run at query 50/54 and lost every number.
     """
 
@@ -272,7 +272,7 @@ def _time_query_isolated(
     ``errors``, and benching CONTINUES — the stdout contract line is
     always emitted with every other query's real number. One flaky
     query must never again cost the round its entire perf artifact
-    (BENCH_r12.json, rc=1/parsed:null)."""
+    (the r12 driver artifact, rc=1/parsed:null)."""
     try:
         return _time_query(spark, fn, name, sf_dir)
     except Exception as exc:  # noqa: BLE001 — isolation is the point
@@ -444,9 +444,9 @@ def main() -> None:
     # round-over-round total comparisons must check `errors` is empty.
     total = round(sum(v for v in timings.values() if v is not None), 3)
     # The driver captures only a ~2 KB TAIL of stdout and parses the
-    # JSON line out of it (BENCH_r06.json came back parsed:null when
-    # the line — 34 min + 34 median entries — outgrew the window and
-    # lost its head). So stdout gets exactly ONE compact line, totals
+    # JSON line out of it (the r06 driver artifact came back parsed:null
+    # when the line — 34 min + 34 median entries — outgrew the window
+    # and lost its head). So stdout gets exactly ONE compact line, totals
     # first, min map only; the full record including medians goes to a
     # repo-side file. tests/test_bench_contract.py pins the stdout
     # line's worst-case size under the driver's capture window.

@@ -15,17 +15,20 @@ assigns each vector to a 12-bit bucket row-locally and joins within
 buckets, cutting candidate pairs by ~2^12 — that is the 100 TB shape
 (plus IVF/cell-probe variants on the same skeleton).
 
-CHOOSING A PATH — measured recall@5 at sf1 on this corpus
-(`scripts/ann_recall_probe.py`, ANN_RECALL_SF1.json; full analysis in
-SCALING.md "ANN recall"): IVF cell-probe 1.00, PQ-ADC + exact re-rank
-0.275, PQ-ADC alone 0.10, IVF-PQ 0.00, sign-LSH 0.00. Random vectors
+CHOOSING A PATH — recall@5 against the exact answer on sf0.1's 2,000
+iid vectors, as measured by
+`tests/test_ann_recall.py::test_ann_recall_against_exact_answer` (which
+pins each path's floor on a planted-cluster corpus and holds every iid
+figure at or below it; full analysis in SCALING.md "ANN recall"): IVF
+cell-probe 1.0, PQ-ADC + exact re-rank 0.6, PQ-ADC alone 0.275,
+multiband LSH 0.1, IVF-PQ 0.1, sign-LSH 0.0. Random vectors
 are PQ's worst case (no subspace structure to quantize), so on
 unstructured embeddings prefer `ann_ivf_cosine`; reach for PQ when
 memory must stay at code-width per vector AND the embedding space has
 learnable structure — and then ALWAYS with the re-rank stage. IVF-PQ
 (`ann_ivfpq`) is the production-scale shape (cells cut candidates,
 residual codes cut bytes) but COMPOUNDS both approximations — on this
-unstructured corpus its recall collapses to zero, the honest floor of
+unstructured corpus its recall collapses to 0.1, the honest floor of
 deploying IVFADC without structured embeddings or a re-rank. Sign-LSH
 is a near-dup candidate GENERATOR (high-cosine pairs collide), not a
 kNN answerer — use it for dedup blocking, never top-k retrieval.
@@ -142,12 +145,13 @@ def ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     .. warning:: SINGLE-TABLE PEDAGOGICAL BASELINE — not the
        production configuration. One 12-bit table means a true
-       neighbor must agree on ALL 12 sign bits to be found; measured
-       recall@5 is **0.0 on the sf1 random (iid) corpus**
-       (ANN_RECALL_SF1.json) and 0.925 on the planted-cluster corpus
-       (ANN_RECALL_CLUSTERED.json). For real retrieval use
-       ``ann_lsh_multiband`` (4 OR'd 8-bit tables — recall@5 1.0 on
-       the clustered corpus) or ``ann_ivfpq_rerank``; see
+       neighbor must agree on ALL 12 sign bits to be found; recall@5
+       is **0.0 on sf0.1's iid corpus** and 0.775 on the
+       planted-cluster corpus
+       (``tests/test_ann_recall.py::test_ann_recall_against_exact_answer``).
+       For real retrieval use ``ann_lsh_multiband`` (4 OR'd 8-bit
+       tables — recall@5 1.0 on the planted corpus) or
+       ``ann_ivfpq_rerank``; see
        SCALING.md's ANN recall section. This query stays registered
        as the single-table reference point the multiband variant is
        measured against.
@@ -821,10 +825,11 @@ def pq_topk(
     ``rerank_pool``: when set, the ADC ranking keeps that many
     candidates per query and the final top-PQ_TOPK is re-ranked by
     EXACT distance over just the pool — the standard two-stage
-    retrieve-then-rerank fix for PQ's quantization error (the sf1
-    recall probe measured ADC-only recall@5 at 0.10 on random
-    vectors; the exact re-rank touches only pool-size raw vectors
-    per query, preserving the codes-not-vectors scan economics)."""
+    retrieve-then-rerank fix for PQ's quantization error (ADC-only
+    recall@5 is 0.275 on sf0.1's iid vectors and 0.6 with the re-rank,
+    tests/test_ann_recall.py; the exact re-rank touches only pool-size
+    raw vectors per query, preserving the codes-not-vectors scan
+    economics)."""
     from functools import reduce
 
     from etl_gcp_function_tmabrasil_spark.operators.kmeans import (
@@ -1009,9 +1014,10 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ's quantization error (Jégou et al. §V: "re-ranking with source
     coding"): the scan stays on codes, raw vectors are read for only
     pool-size rows per query, and the emitted top-k is ordered by TRUE
-    distance. The sf1 probe measured ADC-only recall@5 at 0.10 on
-    random vectors; the re-rank recovers every true neighbor the pool
-    catches.
+    distance. On sf0.1's iid vectors ADC-only recall@5 is 0.275 and the
+    re-rank lifts it to 0.6, and it never loses recall to the ADC-only
+    ranking (tests/test_ann_recall.py); the re-rank recovers every true
+    neighbor the pool catches.
 
     Exactness/oracle: same unrolled-Lloyd CTE prefix as `ann_pq_adc`;
     the pool rank breaks ties on (adc_dist, vec_id), the final rank on
@@ -1347,10 +1353,10 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ADC distance, then an EXACT re-rank of just those candidates
     orders the emitted top-PQ_TOPK by true squared L2. This is the
     production configuration: ADC-only ordering cannot separate
-    near-ties (on the planted-duplicate recall corpus all cluster
-    mates share codes — ADC-only measured 0.625 recall@5, re-rank
-    recovers it; ANN_RECALL_CLUSTERED.json), while the re-rank touches
-    raw vectors for only pool-size rows per query.
+    near-ties (all cluster mates of a planted-duplicate corpus share
+    codes; tests/test_r12_operators.py pins re-rank recall@5 at or
+    above the ADC-only ranking's and at least 0.8), while the re-rank
+    touches raw vectors for only pool-size rows per query.
 
     Scale: identical to ann_ivfpq (cells cut candidates, codes cut
     bytes) plus one bounded pool x raw-vector join per query — the
@@ -1801,8 +1807,8 @@ def ann_lsh_multiband(spark: SparkSession, sf_dir: str) -> DataFrame:
     gives per-band collision p^8 >> p^12, OR'd over 4 tables → at the
     ~60° angles of this corpus's nearest neighbors ~12x the
     single-table candidate recall, and near-certain collision in the
-    near-duplicate regime (measured on the planted-cluster corpus:
-    recall@5 in ANN_RECALL_CLUSTERED.json).
+    near-duplicate regime (recall@5 1.0 on the planted-cluster corpus,
+    ``tests/test_ann_recall.py::test_ann_recall_against_exact_answer``).
 
     Scale: bucketing is 32 row-local dot products; each band's
     self-join is an equi-join on (band, bkt) whose bucket sizes shrink
@@ -1954,10 +1960,10 @@ _RADIUS_COS_ROUND = 0.5e-4  #: the reported cosine is ROUND(·, 4), so the
 
 
 def _radius_parts(spark: SparkSession, sf_dir: str) -> dict:
-    """Shared builder for the radius search and its prune probe:
-    returns {assigned, radii, probes, result_frames...} so
-    scripts/radius_prune_probe.py can measure the surviving
-    (query, cell) fraction with the EXACT plan the operator runs.
+    """Shared builder for the radius search: returns {assigned, radii,
+    probes}, so a test can count the surviving (query, cell) pairs of
+    the EXACT plan the operator runs
+    (``tests/test_r13_operators.py::test_radius_search_equals_bruteforce``).
 
     Construction width note (r14): every vector expression here is ONE
     ``selectExpr``/``F.expr`` SQL string, never a PySpark Column lambda
@@ -2075,13 +2081,13 @@ def knn_radius_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (row-local argmax + one grouped MAX); the query×cell prune
     is queries × N_CELLS row-local math; only SURVIVING (query, cell)
     pairs join cell members — on clustered corpora the scan fraction
-    is the ball-overlap fraction (measured on a cells≈clusters
-    fixture: 92.2% of query-cells pruned, 7.8% of the corpus scanned,
-    result exactly equal to brute force — RADIUS_PRUNE_CLUSTERED.json
-    via scripts/radius_prune_probe.py), and on hostile iid corpora it
-    degrades to a full scan while staying exact (0% pruned, exact —
-    RADIUS_PRUNE_SF1.json; same honest-floor contract as the ANN
-    recall docs).
+    is the ball-overlap fraction (on 16 tight clusters of 125, where
+    cells are clusters, at least 90% of query-cells are pruned —
+    measured 119 of 128 — and the result equals brute force), and on
+    hostile iid corpora it degrades to a full scan while staying exact
+    (sf0.1: no query-cell pruned; same honest-floor contract as the
+    ANN recall docs). Both are
+    ``tests/test_r13_operators.py::test_radius_search_equals_bruteforce``.
     """
     parts = _radius_parts(spark, sf_dir)
     assigned, probes = parts["assigned"], parts["probes"]
@@ -2136,8 +2142,10 @@ def ann_silhouette_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = (b − a) / max(a, b) ∈ [−1, 1]. Per-cell mean s quantifies how
     cleanly that cell separates — the number that explains the
     measured prune/recall contrast between clustered and iid corpora
-    (RADIUS_PRUNE_CLUSTERED.json's 92.2% prune vs the sf1 iid floor's
-    0%: near-zero silhouette IS the iid floor).
+    (corpus mean 0.997 on the 16-cluster corpus the radius prune cuts
+    by 93%, 0.077 on sf0.1's iid vectors where it prunes nothing:
+    near-zero silhouette IS the iid floor; pinned in
+    tests/test_r13_operators.py::test_radius_search_equals_bruteforce).
 
     Distances are cosine distances d = 1 − round(cos, 6) against the
     same deterministic centroid set as the IVF/radius family

@@ -696,9 +696,10 @@ def text_unicode_nfc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     another; un-normalized, their digests differ and every dedup
     operator silently misses the pair). Normalization itself is a
     vectorized pandas UDF over `unicodedata.normalize('NFC', ...)`
-    (row-local, scan-speed, zero shuffles); the profile is one
-    grouped agg counting docs CHANGED by NFC and the code-point
-    shrinkage per source.
+    (row-local, scan-speed, zero shuffles; a NULL text stays NULL,
+    as in DuckDB's ``nfc_normalize``); the profile is one grouped agg
+    counting docs CHANGED by NFC and the code-point shrinkage per
+    source.
 
     The synthetic corpus is pure ASCII (NFC would be a no-op and the
     gate would assert nothing), so the fixture derives accent-bearing
@@ -712,7 +713,9 @@ def text_unicode_nfc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     def nfc(s: pd.Series) -> pd.Series:
         import unicodedata
 
-        return s.map(lambda x: unicodedata.normalize("NFC", x))
+        return s.map(
+            lambda x: x if x is None else unicodedata.normalize("NFC", x)
+        )
 
     docs = load_table(spark, sf_dir, "documents")
     variant = (

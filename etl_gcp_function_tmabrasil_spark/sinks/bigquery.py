@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import DataFrame
 
+from etl_gcp_function_tmabrasil_spark.sinks.parts import drop_empty_parts, part_files
+
 _LOG = logging.getLogger(__name__)
 
 
@@ -111,7 +113,9 @@ class BigQuerySink:
         method (BigQuery Storage Write API — no GCS staging hop) and let
         `partition_by` map to time-partitioned tables so BigQuery prunes
         on query; the parquet fallback mirrors that with directory
-        partitioning.
+        partitioning, and unlinks the 0-row part files the write added
+        (``parts.drop_empty_parts``): a table keeps a 0-row file only
+        while it holds no other file, as its schema.
         """
         if self._connector_available(df.sparkSession):
             writer = df.write.format("bigquery").mode(mode).option(
@@ -127,7 +131,13 @@ class BigQuerySink:
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(partition_by)
+        before = part_files(path)
         writer.parquet(path)
+        after = part_files(path)
+        old = before & after
+        # a lone old file may be the 0-row schema file of an earlier write
+        lone = sorted(old) if len(old) == 1 else []
+        drop_empty_parts(lone + sorted(after - before), keep_one=len(old) <= 1)
         return path
 
     def exists(self, spark, table: str) -> bool:

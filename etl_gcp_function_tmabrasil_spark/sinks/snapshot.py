@@ -67,7 +67,6 @@ full multi-writer coordination still belongs to a catalog service.
 
 from __future__ import annotations
 
-import contextlib
 import ctypes
 import errno
 import json
@@ -78,6 +77,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from etl_gcp_function_tmabrasil_spark.sinks.parts import drop_empty_parts, part_files
 
 
 def _manifests(table_dir: str) -> list[int]:
@@ -585,35 +586,21 @@ def _land(
     integrity (``_file_digests`` under ``base``'s declared schema)
     whenever ``integrity`` is set or ``base`` is tracked.
 
-    A part file with no rows (Spark writes one for a frame with no
-    rows, and can write one beside non-empty files) is unlinked before
-    any metadata pass — its row count comes from the Parquet footer,
-    read on the driver, no Spark job — so no manifest ever names one
-    and none is left behind; a ``df`` with no rows lands no file at
-    all (the manifest's schema keeps the version readable). Returns
-    the landed files in the per-file shape ``_write_manifest`` takes;
+    A part file with no rows is unlinked before any metadata pass
+    (``parts.drop_empty_parts``), so no manifest ever names one and
+    none is left behind; a ``df`` with no rows lands no file at all
+    (the manifest's schema keeps the version readable). Returns the
+    landed files in the per-file shape ``_write_manifest`` takes;
     nothing is visible until it publishes a manifest naming them."""
-    import pyarrow.parquet as pq
-
     rel_dir = os.path.join("data", f"{prefix}-{uuid.uuid4().hex}")
     staging = os.path.join(table_dir, rel_dir)
     df.write.parquet(staging)
-    parts = sorted(
-        f for f in os.listdir(staging)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    )
-    full = [
-        f for f in parts
-        if pq.read_metadata(os.path.join(staging, f)).num_rows
-    ]
+    full = drop_empty_parts(sorted(part_files(staging)))
     if not full:
         shutil.rmtree(staging)
-    else:
-        for f in set(parts) - set(full):
-            for name in (f, f".{f}.crc"):  # the file and its checksum
-                with contextlib.suppress(FileNotFoundError):
-                    os.unlink(os.path.join(staging, name))
-    landed: dict = {"files": [os.path.join(rel_dir, f) for f in full]}
+    landed: dict = {
+        "files": [os.path.join(rel_dir, os.path.basename(p)) for p in full]
+    }
     spark = df.sparkSession
     layout = base.get("layout", {})
     if full and any(layout.get(k) for k in _LAYOUT_COLS):

@@ -25,3 +25,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_CORRECTNESS
+
+
+@pytest.fixture(scope="session")
+def ann_corpus(tmp_path_factory):
+    """corpus(name) -> the directory of an embeddings corpus: "sf0.001",
+    "iid" (sf0.1), or "planted" / "tight", written once per session."""
+    from tests import ann_corpora as c
+
+    dirs = {"sf0.001": SF_SMOKE, "iid": c.IID}
+    builders = {"planted": c.build_clustered, "tight": c.build_tight}
+
+    def corpus(name: str) -> str:
+        if name not in dirs:
+            dirs[name] = str(tmp_path_factory.mktemp(name))
+            builders[name](dirs[name])
+        return dirs[name]
+
+    return corpus

@@ -6,6 +6,9 @@ BigQuery-shaped sink (parquet fallback locally)."""
 from __future__ import annotations
 
 import json
+from pathlib import Path
+
+import pyarrow.parquet as pq
 
 from etl_gcp_function_tmabrasil_spark.catalog import load_table
 from etl_gcp_function_tmabrasil_spark.sinks.bigquery import BigQuerySink
@@ -15,6 +18,15 @@ from tests.conftest import SF_SMOKE
 
 COLS = ["event_id", "user_id", "event_type", "value"]
 DDL = "event_id long, user_id long, event_type string, value double"
+
+
+def _assert_no_empty_part(sink, *tables):
+    """Every parquet file of each table holds rows, except a lone 0-row
+    file that keeps an otherwise empty table's schema."""
+    for t in tables:
+        parts = Path(sink.warehouse_dir, *t.split(".")).rglob("*.parquet")
+        rows = [pq.read_metadata(f).num_rows for f in parts]
+        assert all(rows) or rows == [0], (t, rows)
 
 
 def test_xlsx_etl_to_sink(spark, tmp_path):
@@ -279,6 +291,7 @@ def test_xlsx_etl_poisoned_object_does_not_wedge_the_stream(spark, tmp_path):
         "dead-lettered events were reprocessed on redelivery"
     )
     assert sink.read(spark, "analytics.poison").count() == 1
+    _assert_no_empty_part(sink, "analytics.poison", "analytics.poison_rejected")
 
 
 def test_structured_bq_error_skips_non_http_wrapper_frames():
@@ -510,3 +523,4 @@ def test_xlsx_etl_crash_mid_batch_replays_exactly_once(spark, tmp_path):
         ("minha-pasta/gone.xlsx", "missing"),
     ]
     assert not {n for n, _ in data} & {n for n, _ in dead}
+    _assert_no_empty_part(sink, table, f"{table}_rejected")

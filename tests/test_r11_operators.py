@@ -274,6 +274,28 @@ def test_nfc_profile_matches_unicodedata(spark):
     assert changed_total > 0  # the fixture actually exercises NFC
 
 
+def test_nfc_profile_keeps_null_documents(spark, tmp_path):
+    """A NULL text stays NULL through the NFC UDF, as through DuckDB's
+    nfc_normalize, so the profile matches its oracle."""
+    import duckdb
+
+    from etl_gcp_function_tmabrasil_spark.queries.text_analysis import (
+        ORACLE,
+        text_unicode_nfc_profile,
+    )
+    from tests.oracle_check import compare
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE documents AS SELECT * REPLACE (CASE WHEN doc_id % 7 = 0"
+        f" THEN NULL ELSE text END AS text) FROM '{SF_SMOKE}/documents.parquet'"
+    )
+    con.execute(f"COPY documents TO '{tmp_path}/documents.parquet' (FORMAT parquet)")
+    oracle = con.execute(ORACLE["text_unicode_nfc_profile"]).fetchdf()
+    got = text_unicode_nfc_profile(spark, str(tmp_path))
+    assert compare(got, oracle, "text_unicode_nfc_profile") == []
+
+
 def test_bfs_matches_queue_reference(spark):
     from etl_gcp_function_tmabrasil_spark.catalog import load_table
     from etl_gcp_function_tmabrasil_spark.queries.relational3 import (

@@ -243,7 +243,7 @@ def test_ivfpq_rerank_dominates_adc_only(spark, tmp_path, monkeypatch):
     import numpy as np
 
     from etl_gcp_function_tmabrasil_spark.queries import similarity as sim
-    from scripts.ann_recall_probe import build_clustered
+    from tests.ann_corpora import build_clustered
 
     d = str(tmp_path / "clustered")
     build_clustered(d, n_clusters=200, per=6)
@@ -290,7 +290,7 @@ def test_multiband_lsh_top1_is_best_bucketmate(spark, tmp_path, monkeypatch):
     import numpy as np
 
     from etl_gcp_function_tmabrasil_spark.queries import similarity as sim
-    from scripts.ann_recall_probe import build_clustered
+    from tests.ann_corpora import build_clustered
 
     d = str(tmp_path / "clustered")
     build_clustered(d, n_clusters=60, per=5)

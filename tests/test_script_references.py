@@ -1,4 +1,4 @@
-"""Every script the code, the tests or the verify skill points a reader at
+"""Every script or root artifact the code, the tests or the verify skill names
 must exist, and no deleted plan dump may be cited: a deletion that leaves
 a stale pointer behind fails here instead of in a reader's shell."""
 
@@ -20,6 +20,9 @@ SCRIPT_REF = re.compile(r"scripts/(\w+\.py)")
 # a repo-root plans/ path; the package's own plans/ module is cited with
 # its package prefix or as a dotted import
 PLANS_REF = re.compile(r"(?<![\w/.])plans/\w")
+# a bare repo-root artifact name such as BENCH_LOCAL.json; a name template
+# (CORRECTNESS_r{N}.json) does not match
+ARTIFACT_REF = re.compile(r"(?<![\w/.])[A-Z][A-Za-z0-9_]+\.json\b")
 
 
 def _scanned() -> list[Path]:
@@ -32,6 +35,17 @@ def test_every_named_script_exists():
         for p in _scanned()
         for name in SCRIPT_REF.findall(p.read_text())
         if not (REPO / "scripts" / name).is_file()
+    )
+    assert not missing, missing
+
+
+def test_every_named_root_artifact_exists():
+    ignored = set((REPO / ".gitignore").read_text().split())
+    missing = sorted(
+        f"{p.relative_to(REPO)}: {name}"
+        for p in _scanned()
+        for name in ARTIFACT_REF.findall(p.read_text())
+        if not (REPO / name).is_file() and name not in ignored
     )
     assert not missing, missing
 
