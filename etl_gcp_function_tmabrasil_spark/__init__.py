@@ -11,8 +11,9 @@ Spark:
 - Structured Streaming file-arrival pipeline mirroring the reference's
   GCS-trigger semantics (``main.py:5,12``).
 - Distributed XLSX ingest (the reference's payload format, ``main.py:12``)
-  via a self-contained stdlib parser in ``mapInPandas`` tasks that open
-  their own objects from a frame of paths (path-driven read).
+  via a self-contained stdlib parser in ``mapInArrow`` tasks that open
+  their own objects from an Arrow-shipped frame of paths (path-driven
+  read).
 - LLM-data-pipeline operators: text analysis, exact/near-duplicate dedup
   (MinHash-LSH, SimHash, n-gram Jaccard), embedding similarity search.
 

@@ -6,8 +6,9 @@ The query fabricates a deterministic 100-row slice of ``events`` as two
 XLSX workbooks under a ``minha-pasta/`` landing prefix (plus a decoy
 ``.csv`` the path glob must ignore, mirroring the reference's filter
 R4), reads them back distributed through the engine's ingest edge
-(``sources/xlsx.py``: driver-side listing → path frame → mapInPandas
-tasks that open and parse each workbook → Catalyst typed casts), and returns the typed rows. The DuckDB oracle reads the
+(``sources/xlsx.py``: driver-side listing → Arrow-shipped path frame
+→ mapInArrow tasks that open and parse each workbook → Catalyst typed
+casts), and returns the typed rows. The DuckDB oracle reads the
 SAME slice straight from parquet — hash equality therefore proves the
 entire write→parse→cast edge is lossless, including float round trips
 (Python repr → string cell → double cast is exact).

@@ -3,19 +3,27 @@
 whose processing body the reference leaves as a placeholder
 (``main.py:17``). Here it is made real and distributed:
 
-    frame of local paths, optionally with each path's file-event key
-    (sliced by path count and defaultParallelism)
-      → mapInPandas: each task stats, opens and parses its own objects
-        (parse_xlsx_bytes), one pandas batch per file or one marker row,
-        every row stamped with its path's event key when one was given
+    frame of local paths, optionally with each path's file-event key,
+    shipped from the driver as Arrow (a LocalTableScan sliced by path
+    count and defaultParallelism)
+      → mapInArrow: each task stats, opens and parses its own objects
+        (parse_rows), each file's data rows or one marker row, every
+        row stamped with its path's event key when one was given, and
+        yields one string RecordBatch per
+        ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows
       → cast to a declared schema (strings at the parse edge, typed
         columns in the engine)
+
+One Python worker per parse task, and it never imports pandas: the
+path frame needs no Python worker of its own, and the parse builds
+Arrow columns from plain lists (pandas is imported only by the
+``parse_xlsx_bytes`` wrapper).
 
 The parser is self-contained stdlib (zipfile + ElementTree): XLSX is a
 zip of XML parts. It covers the common subset — one worksheet, shared
 or inline strings, numeric cells, a header row — and fails loudly
-beyond it. Swap in pandas.read_excel/openpyxl via the same
-``parse_xlsx_bytes`` seam when those libs are available.
+beyond it. Swap in openpyxl via the same ``parse_rows`` seam when
+that lib is available.
 
 Scale notes: parallelism is per-file (matching the reference's
 per-object invocation model, ``main.py:5``); each task holds one
@@ -33,15 +41,27 @@ import io
 import os
 import re
 import stat
+import sys
 import zipfile
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 from xml.etree import ElementTree as ET
 
-import pandas as pd
+import pyarrow as pa
+from pyarrow.lib import StringBuilder
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-_NS = {"m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main"}
+from etl_gcp_function_tmabrasil_spark.sources import rows_frame
+
+if TYPE_CHECKING:
+    import pandas as pd
+
+#: the SpreadsheetML namespace in ElementTree's ``{uri}tag`` form: a
+#: qualified tag without a prefix map takes the C accelerator's direct
+#: child scan in find/findall (a prefix map routes every call through
+#: the pure-Python ElementPath, about half of a workbook's parse time)
+_M = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _CELL_REF = re.compile(r"([A-Z]+)(\d+)")
 
 #: Guard against a single giant workbook monopolizing task memory.
@@ -56,21 +76,23 @@ def _col_index(ref: str) -> int:
     return idx - 1
 
 
-def parse_xlsx_bytes(content: bytes) -> pd.DataFrame:
-    """Parse one workbook's first worksheet into a string-typed pandas
-    DataFrame, first row as header. Raises ValueError on workbooks
+def parse_rows(content: bytes) -> tuple[list[str], list[list[str | None]]]:
+    """Parse one workbook's first worksheet into ``(header, rows)``:
+    the first row's cell texts, then one list of cell texts (None for
+    an absent cell) per data row, each as wide as the header. A sheet
+    with no rows yields ``([], [])``. Raises ValueError on workbooks
     outside the supported subset (no sheet, ragged header)."""
     with zipfile.ZipFile(io.BytesIO(content)) as zf:
         names = set(zf.namelist())
         shared: list[str] = []
         if "xl/sharedStrings.xml" in names:
             root = ET.fromstring(zf.read("xl/sharedStrings.xml"))
-            for si in root.findall("m:si", _NS):
+            for si in root.findall(_M + "si"):
                 # direct <t> plus rich-text runs <r><t> ONLY — si.iter
                 # would also swallow phonetic-run (<rPh><t>) text,
                 # corrupting cells from workbooks with furigana data
-                parts = [t.text or "" for t in si.findall("m:t", _NS)]
-                parts += [t.text or "" for t in si.findall("m:r/m:t", _NS)]
+                parts = [t.text or "" for t in si.findall(_M + "t")]
+                parts += [t.text or "" for t in si.findall(f"{_M}r/{_M}t")]
                 shared.append("".join(parts))
         sheet_name = next(
             (n for n in sorted(names) if n.startswith("xl/worksheets/sheet")), None
@@ -79,28 +101,28 @@ def parse_xlsx_bytes(content: bytes) -> pd.DataFrame:
             raise ValueError("xlsx: no worksheet part found")
         root = ET.fromstring(zf.read(sheet_name))
         rows: list[dict[int, str]] = []
-        for row in root.iter(f"{{{_NS['m']}}}row"):
+        for row in root.iter(_M + "row"):
             cells: dict[int, str] = {}
-            for c in row.findall("m:c", _NS):
+            for c in row.findall(_M + "c"):
                 ref = c.get("r", "")
                 m = _CELL_REF.match(ref)
                 col = _col_index(m.group(1)) if m else len(cells)
                 ctype = c.get("t", "n")
                 if ctype == "inlineStr":
-                    t = c.find("m:is", _NS)
+                    t = c.find(_M + "is")
                     val = "".join(
-                        x.text or "" for x in t.iter(f"{{{_NS['m']}}}t")
+                        x.text or "" for x in t.iter(_M + "t")
                     ) if t is not None else ""
                 elif ctype == "s":
-                    v = c.find("m:v", _NS)
+                    v = c.find(_M + "v")
                     val = shared[int(v.text)] if v is not None and v.text else ""
                 else:
-                    v = c.find("m:v", _NS)
+                    v = c.find(_M + "v")
                     val = v.text if v is not None and v.text is not None else ""
                 cells[col] = val
             rows.append(cells)
     if not rows:
-        return pd.DataFrame()
+        return [], []
     header_cells = rows[0]
     if not header_cells:
         # a styled-but-cellless first <row/>: fail with a diagnosable
@@ -122,8 +144,17 @@ def parse_xlsx_bytes(content: bytes) -> pd.DataFrame:
                 f"xlsx: data cell in row {idx} at column {max(wide) + 1} "
                 f"beyond the {ncols}-column header"
             )
-    data = [[r.get(i) for i in range(ncols)] for r in rows[1:]]
-    return pd.DataFrame(data, columns=header, dtype=object)
+    return header, [[r.get(i) for i in range(ncols)] for r in rows[1:]]
+
+
+def parse_xlsx_bytes(content: bytes) -> pd.DataFrame:
+    """:func:`parse_rows` as a string-typed pandas DataFrame, first row
+    as header. pandas is imported here only, so the parse tasks, which
+    call :func:`parse_rows`, never load it."""
+    import pandas as pd
+
+    header, rows = parse_rows(content)
+    return pd.DataFrame(rows, columns=header, dtype=object)
 
 
 def write_minimal_xlsx(path: str, columns: list[str], rows: list[list]) -> None:
@@ -207,30 +238,49 @@ def _list_xlsx(path: str | list[str], path_glob: str) -> list[str]:
     return sorted({os.path.abspath(f) for f in files if os.path.isfile(f)})
 
 
+def _project(
+    header: list[str], rows: list[list[str | None]], columns: list[str]
+) -> list[list[str | None]]:
+    """`rows` cut to the requested `columns`, in their order; a
+    requested name the header lacks is all-None. A requested name the
+    header carries twice raises ValueError — there is no telling which
+    cell is meant. Duplicates among names not requested are fine."""
+    wanted = set(columns)
+    pos: dict[str, int] = {}
+    for i, name in enumerate(header):
+        if name in wanted:
+            if name in pos:
+                raise ValueError(f"xlsx: duplicate header {name!r}")
+            pos[name] = i
+    idx = [pos.get(c) for c in columns]
+    return [[None if i is None else r[i] for i in idx] for r in rows]
+
+
 def _open_and_parse(
-    path: str, max_file_bytes: int
-) -> tuple[str, str | None, pd.DataFrame | None]:
+    path: str, columns: list[str], max_file_bytes: int
+) -> tuple[str, str | None, list[list[str | None]]]:
     """One object's outcome, decided inside the task: ``(status, error,
-    parsed)``, `parsed` set only for 'ok'. `stat` runs before `open`, so
-    a directory or a FIFO is 'missing' and cannot block the read; at
-    most ``max_file_bytes + 1`` bytes are read, so a file that grew
-    after its stat is still 'oversize' without being loaded."""
+    rows)``, `rows` cut to `columns` and non-empty only for 'ok'. `stat`
+    runs before `open`, so a directory or a FIFO is 'missing' and cannot
+    block the read; at most ``max_file_bytes + 1`` bytes are read, so a
+    file that grew after its stat is still 'oversize' without being
+    loaded."""
     try:
         st = os.stat(path)
         if not stat.S_ISREG(st.st_mode):
-            return "missing", "not a regular file", None
+            return "missing", "not a regular file", []
         if st.st_size > max_file_bytes:
-            return "oversize", f"xlsx too large: {st.st_size} bytes", None
+            return "oversize", f"xlsx too large: {st.st_size} bytes", []
         with open(path, "rb") as fh:
             content = fh.read(max_file_bytes + 1)
         if len(content) > max_file_bytes:
-            return "oversize", f"xlsx too large: over {max_file_bytes} bytes", None
-        parsed = parse_xlsx_bytes(content)
+            return "oversize", f"xlsx too large: over {max_file_bytes} bytes", []
+        rows = _project(*parse_rows(content), columns)
     except (FileNotFoundError, NotADirectoryError):  # absent, or gone since stat
-        return "missing", "no such object", None
+        return "missing", "no such object", []
     except Exception as exc:  # noqa: BLE001 — isolated per file
-        return "error", str(exc)[:500], None
-    return ("ok", None, parsed) if len(parsed) else ("empty", None, None)
+        return "error", str(exc)[:500], []
+    return ("ok" if rows else "empty"), None, rows
 
 
 def _scan_xlsx(
@@ -240,17 +290,16 @@ def _scan_xlsx(
     max_file_bytes: int,
     event_keys: list[tuple[str, str]] | None = None,
 ) -> DataFrame:
-    """The one XLSX read path: a frame of local paths, then
-    `mapInPandas` tasks that open and parse their objects themselves.
-    Every path yields its data rows (`_status` 'ok') or exactly one
-    marker row ('empty' | 'error' | 'oversize' | 'missing') with the
-    data columns NULL — never zero rows, and no object can fail the
-    task. `_source_file` is the object's ``file:`` URI. With
+    """The one XLSX read path: an Arrow-shipped frame of local paths,
+    then `mapInArrow` tasks that open and parse their objects
+    themselves. Every path yields its data rows (`_status` 'ok') or
+    exactly one marker row ('empty' | 'error' | 'oversize' | 'missing')
+    with the data columns NULL — never zero rows, and no object can
+    fail the task. `_source_file` is the object's ``file:`` URI. With
     `event_keys` (one ``(name, ts)`` per path) the path frame carries
     them too and every row of a path ends with its `_event_name` and
     `_event_ts`."""
-    out_fields = ", ".join(f"`{c}` string" for c in columns)
-    out_schema = f"_source_file string, _status string, _error string, {out_fields}"
+    names = ["_source_file", "_status", "_error", *columns]
     rows = [(os.path.abspath(p),) for p in paths]
     path_schema = "path string"
     if event_keys is not None:
@@ -260,35 +309,53 @@ def _scan_xlsx(
             )
         rows = [r + tuple(k) for r, k in zip(rows, event_keys)]
         path_schema += ", _event_name string, _event_ts string"
-        out_schema += ", _event_name string, _event_ts string"
-    sc = spark.sparkContext
-    slices = max(1, min(len(paths), sc.defaultParallelism))
-    path_df = spark.createDataFrame(sc.parallelize(rows, slices), path_schema)
+        names += ["_event_name", "_event_ts"]
+    # read on the driver: the executor side has no session conf to ask
+    limit = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    if limit <= 0:  # Spark's "no limit"
+        limit = sys.maxsize
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path, *key in pdf.itertuples(index=False):
-                status, error, parsed = _open_and_parse(path, max_file_bytes)
-                n = 1 if parsed is None else len(parsed)
-                # explicit per-column Series: a dict of all-scalar Nones
-                # (a marker, or a header sharing no names with
-                # `columns`) would make the DataFrame constructor raise
-                out = pd.DataFrame(
-                    {
-                        c: parsed[c].astype(object)
-                        if parsed is not None and c in parsed
-                        else pd.Series([None] * n, dtype=object)
-                        for c in columns
-                    }
-                )
-                out.insert(0, "_error", error)
-                out.insert(0, "_status", status)
-                out.insert(0, "_source_file", "file:" + path)
-                if key:
-                    out["_event_name"], out["_event_ts"] = key
-                yield out
+    def parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _parse_batches(batches, names, columns, max_file_bytes, limit)
 
-    return path_df.mapInPandas(parse, schema=out_schema)
+    return rows_frame(spark, rows, path_schema).mapInArrow(
+        parse, ", ".join(f"`{n}` string" for n in names)
+    )
+
+
+def _parse_batches(
+    batches: Iterator[pa.RecordBatch],
+    names: list[str],
+    columns: list[str],
+    max_file_bytes: int,
+    limit: int,
+) -> Iterator[pa.RecordBatch]:
+    """One parse task: every path of the incoming path batches becomes
+    its rows (`names` order: source, status, error, `columns`, then the
+    path's event key if it has one), leaving in string RecordBatches of
+    at most `limit` rows. The columns are built with a StringBuilder:
+    ``pa.array`` over a list imports pandas to probe for array-likes."""
+    buf: list[list] = []
+    marker = [None] * len(columns)
+
+    def to_batch(rows: list[list]) -> pa.RecordBatch:
+        arrays = []
+        for values in zip(*rows):
+            builder = StringBuilder()
+            builder.append_values(values)
+            arrays.append(builder.finish())
+        return pa.RecordBatch.from_arrays(arrays, names=names)
+
+    for batch in batches:
+        for path, *key in zip(*(c.to_pylist() for c in batch.columns)):
+            status, error, data = _open_and_parse(path, columns, max_file_bytes)
+            head = ["file:" + path, status, error]
+            buf += [head + r + key for r in data or [marker]]
+            while len(buf) >= limit:
+                yield to_batch(buf[:limit])
+                del buf[:limit]
+    if buf:
+        yield to_batch(buf)
 
 
 def read_xlsx(

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_gcp_function_tmabrasil_spark.catalog import FILE_EVENTS_WIRE_SCHEMA
+from etl_gcp_function_tmabrasil_spark.sources import rows_frame
 from etl_gcp_function_tmabrasil_spark.sources.file_events import (
     accept_filter,
     normalized_events,
@@ -285,9 +286,8 @@ def run_xlsx_etl_pipeline(
             canon = os.path.relpath(p, root)
             ts_s = str(r.ts_us) if r.ts_us is not None else ""
             events[(canon, ts_s)] = p
-        ev_df = spark.createDataFrame(
-            [(n, t) for (n, t) in events],
-            "_event_name string, _event_ts string",
+        ev_df = rows_frame(
+            spark, list(events), "_event_name string, _event_ts string"
         )
         # ledger probe: broadcast-semi-join THIS batch's event keys
         # against the sink AND the dead-letter table (never an isin

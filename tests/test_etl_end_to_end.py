@@ -449,6 +449,79 @@ def test_xlsx_etl_two_events_for_one_object_in_one_batch(spark, tmp_path):
     ]
 
 
+def test_xlsx_etl_duplicate_header_dead_letters_without_wedging(spark, tmp_path):
+    """An object whose header names a requested column twice gets one
+    `_rejected` row ('error') and the healthy object of the same batch
+    lands: the query ends without an exception instead of failing and
+    replaying the batch forever."""
+    bucket = tmp_path / "bucket"
+    (bucket / "minha-pasta").mkdir(parents=True)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    write_minimal_xlsx(
+        str(bucket / "minha-pasta" / "good.xlsx"), COLS, [[1, 10, "click", 1.5]]
+    )
+    write_minimal_xlsx(
+        str(bucket / "minha-pasta" / "dup.xlsx"),
+        COLS + ["event_id"],
+        [[2, 20, "view", 2.5, 3]],
+    )
+    _land_events(landing, "ev.json", [
+        {"bucket": "b", "name": f"minha-pasta/{n}.xlsx", "size": 1,
+         "ts": "2024-01-01T00:00:00Z"}
+        for n in ("good", "dup")
+    ])
+
+    sink = BigQuerySink(warehouse_dir=str(tmp_path / "warehouse"))
+    q = run_xlsx_etl_pipeline(
+        spark, str(landing), str(bucket), sink, "analytics.duphdr", COLS, DDL
+    )
+    assert q.awaitTermination(120)
+    assert q.exception() is None
+    assert [r.event_id for r in sink.read(spark, "analytics.duphdr").collect()] == [1]
+    dead = sink.read(spark, "analytics.duphdr_rejected").collect()
+    assert [(r._event_name, r._status, r._error) for r in dead] == [
+        ("minha-pasta/dup.xlsx", "error", "xlsx: duplicate header 'event_id'")
+    ]
+
+
+def test_xlsx_etl_ledger_key_frame_is_a_local_scan(spark, tmp_path, monkeypatch):
+    """The ledger probes' key frame is shipped as Arrow: its executed
+    plan is a LocalTableScan, which no Python worker evaluates."""
+    from etl_gcp_function_tmabrasil_spark.streaming import pipeline
+
+    frames = []
+    original = pipeline.rows_frame
+
+    def recording(*args, **kwargs):
+        frames.append(original(*args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(pipeline, "rows_frame", recording)
+    bucket = tmp_path / "bucket"
+    (bucket / "minha-pasta").mkdir(parents=True)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    write_minimal_xlsx(
+        str(bucket / "minha-pasta" / "a.xlsx"), COLS, [[1, 10, "click", 1.5]]
+    )
+    _land_events(landing, "ev.json", [
+        {"bucket": "b", "name": "minha-pasta/a.xlsx", "size": 1,
+         "ts": "2024-01-01T00:00:00Z"}
+    ])
+    sink = BigQuerySink(warehouse_dir=str(tmp_path / "warehouse"))
+    run_xlsx_etl_pipeline(
+        spark, str(landing), str(bucket), sink, "analytics.evkeys", COLS, DDL
+    ).awaitTermination(120)
+
+    assert len(frames) == 1
+    ev_df = frames[0]
+    assert ev_df.columns == ["_event_name", "_event_ts"]
+    assert ev_df.count() == 1
+    plan = ev_df._jdf.queryExecution().executedPlan()
+    assert plan.nodeName() == "LocalTableScan", plan.toString()
+
+
 class _DeadLetterWriteCrashesOnce(BigQuerySink):
     """A sink whose first ``<table>_rejected`` write raises: a crash
     after the data write of the same micro-batch, before its commit."""

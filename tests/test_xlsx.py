@@ -5,6 +5,8 @@ the same slice from parquet."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -14,9 +16,12 @@ from etl_gcp_function_tmabrasil_spark.catalog import load_table
 from etl_gcp_function_tmabrasil_spark.sources.xlsx import (
     parse_xlsx_bytes,
     read_xlsx,
+    read_xlsx_tolerant,
     write_minimal_xlsx,
 )
 from tests.conftest import SF_SMOKE
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 COLS = ["event_id", "user_id", "event_type", "value"]
 
@@ -80,6 +85,38 @@ def test_parse_handles_shared_and_inline_strings():
         assert pdf.iloc[1]["a"] is None
 
 
+def test_parse_reads_shared_strings_and_rich_text_runs():
+    """Shared-string cells join a string's direct and rich-run texts but
+    skip its phonetic runs (<rPh>); inline rich text joins its runs; a
+    value-less styled cell is an absent cell."""
+    import io
+    import zipfile
+
+    from etl_gcp_function_tmabrasil_spark.sources.xlsx import parse_rows
+
+    ns = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+    sst = (
+        f'<sst xmlns="{ns}"><si><t>hdr</t></si>'
+        "<si><r><t>ri</t></r><r><t>ch</t></r><rPh><t>PH</t></rPh></si>"
+        "<si><t>x</t><rPh><t>no</t></rPh></si></sst>"
+    )
+    sheet = (
+        f'<worksheet xmlns="{ns}"><sheetData>'
+        '<row r="1"><c r="A1" t="s"><v>0</v></c>'
+        '<c r="B1" t="inlineStr"><is><r><t>in</t></r><r><t>l</t></r></is></c></row>'
+        '<row r="2"><c r="A2" t="s"><v>1</v></c><c r="B2"><v>3.5</v></c></row>'
+        '<row r="3"><c r="B3" t="s"><v>2</v></c><c r="C3" s="1"/></row>'
+        "</sheetData></worksheet>"
+    )
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        zf.writestr("xl/sharedStrings.xml", sst)
+        zf.writestr("xl/worksheets/sheet1.xml", sheet)
+    assert parse_rows(buf.getvalue()) == (
+        ["hdr", "inl"], [["rich", "3.5"], [None, "x"]]
+    )
+
+
 def test_corrupt_workbook_fails_loudly(spark, tmp_path):
     bad = tmp_path / "bad.xlsx"
     bad.write_bytes(b"this is not a zip")
@@ -90,7 +127,7 @@ def test_corrupt_workbook_fails_loudly(spark, tmp_path):
 def test_empty_and_header_mismatch_yield_null_columns(spark, tmp_path):
     # header-only workbook -> zero rows; workbook whose header shares no
     # names with the requested columns -> n rows of NULLs (neither may
-    # crash the mapInPandas task)
+    # crash the parse task)
     from etl_gcp_function_tmabrasil_spark.sources.xlsx import (
         read_xlsx,
         write_minimal_xlsx,
@@ -278,3 +315,116 @@ def test_tolerant_read_stamps_event_keys_on_every_row(spark, tmp_path):
     assert plain.columns == ["_source_file", "_status", "_error", *COLS]
     with pytest.raises(ValueError, match="3 event keys for 4 paths"):
         read_xlsx_tolerant(spark, paths, COLS, event_keys=keys[:3])
+
+
+def test_duplicate_requested_header_is_an_error_marker(spark, tmp_path):
+    """A header that names a requested column twice dead-letters its
+    object as 'error' (no telling which cell is meant) instead of
+    failing the task, and fails the batch read like any other error
+    marker. A duplicate among names not requested stays readable."""
+    good = tmp_path / "good.xlsx"
+    write_minimal_xlsx(str(good), ["a", "b"], [[1, "x"]])
+    dup = tmp_path / "dup.xlsx"
+    write_minimal_xlsx(str(dup), ["a", "a", "b"], [[1, 2, "y"]])
+    other = tmp_path / "other.xlsx"
+    write_minimal_xlsx(str(other), ["z", "z", "b"], [[1, 2, "z"]])
+
+    rows = read_xlsx_tolerant(
+        spark, [str(good), str(dup), str(other)], ["a", "b"]
+    ).collect()
+    got = sorted(
+        (r._source_file.rsplit("/", 1)[-1], r._status, r._error, r.a, r.b)
+        for r in rows
+    )
+    assert got == [
+        ("dup.xlsx", "error", "xlsx: duplicate header 'a'", None, None),
+        ("good.xlsx", "ok", None, "1", "x"),
+        ("other.xlsx", "ok", None, None, "z"),
+    ]
+    with pytest.raises(Exception, match="duplicate header 'a'"):
+        read_xlsx(spark, str(tmp_path), ["a", "b"]).collect()
+
+
+def _plan_nodes(node) -> list[str]:
+    """Node names of an executed plan, pre-order."""
+    kids = node.children()
+    return [node.nodeName()] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+def test_tolerant_read_runs_one_python_node_over_a_local_scan(spark, tmp_path):
+    """The parse is the read's only Python-evaluated step: one
+    MapInArrow over the driver's path frame, shipped as a
+    LocalTableScan. A path frame from a Python RDD (Scan ExistingRDD)
+    would start a second Python worker in every parse task."""
+    good = tmp_path / "good.xlsx"
+    _plant("ok", good)
+    df = read_xlsx_tolerant(
+        spark, [str(good)], COLS, schema_ddl="event_id long",
+        event_keys=[("good", "1")],
+    )
+    assert len(df.collect()) == 2
+    nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+    python = [n for n in nodes if "Python" in n or "MapIn" in n]
+    assert python == ["MapInArrow"], nodes
+    assert nodes[-1] == "LocalTableScan", nodes
+    assert not any("ExistingRDD" in n for n in nodes), nodes
+
+
+_PARSE_TASK_CHILD = """
+import sys, tempfile
+from pyarrow.lib import StringBuilder
+import pyarrow as pa
+from etl_gcp_function_tmabrasil_spark.sources import xlsx
+print("pandas" in sys.modules)
+path = tempfile.mkdtemp() + "/t.xlsx"
+xlsx.write_minimal_xlsx(path, ["a"], [["x"], ["y"]])
+b = StringBuilder()
+b.append_values([path])
+batch = pa.RecordBatch.from_arrays([b.finish()], names=["path"])
+out = list(xlsx._parse_batches(iter([batch]), ["_source_file", "_status", "_error", "a"], ["a"], 1 << 20, 1))
+print([r["a"] for o in out for r in o.to_pylist()], "pandas" in sys.modules)
+"""
+
+
+def test_xlsx_parse_task_leaves_pandas_unloaded():
+    """Parse tasks import this module and build Arrow batches; pandas
+    costs each new worker about 0.3 s, so only the `parse_xlsx_bytes`
+    wrapper may import it."""
+    out = subprocess.run(
+        [sys.executable, "-c", _PARSE_TASK_CHILD],
+        cwd=REPO,
+        env={**os.environ, "PYTHONPATH": REPO},
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.split("\n")[:2] == ["False", "['x', 'y'] False"]
+
+
+def test_tolerant_read_splits_rows_into_arrow_batches(spark, tmp_path):
+    """A task's rows leave in RecordBatches of at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows; a batch
+    boundary inside a file or next to a marker loses and repeats no
+    row."""
+    paths = []
+    for i, n in enumerate([5, 0, 3]):
+        p = tmp_path / f"f{i}.xlsx"
+        write_minimal_xlsx(str(p), ["a"], [[f"{i}-{j}"] for j in range(n)])
+        paths.append(str(p))
+    paths.append(str(tmp_path / "absent.xlsx"))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        df = read_xlsx_tolerant(spark, paths, ["a"])
+    finally:
+        spark.conf.set(key, old)
+    got = sorted((r._source_file.rsplit("/", 1)[-1], r._status, r.a) for r in df.collect())
+    assert got == sorted(
+        [("f0.xlsx", "ok", f"0-{j}") for j in range(5)]
+        + [("f1.xlsx", "empty", None), ("absent.xlsx", "missing", None)]
+        + [("f2.xlsx", "ok", f"2-{j}") for j in range(3)]
+    )
