@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import logging
 import os
+import weakref
 
 from pyspark.sql import DataFrame
 
@@ -24,6 +25,23 @@ _LOG = logging.getLogger(__name__)
 #: Reasons the exists() probe acts on — the only structured strings
 #: worth stopping the cause-chain walk for.
 _BQ_KNOWN_REASONS = frozenset({"accessdenied", "forbidden", "notfound"})
+
+#: SparkContext -> whether its JVM loads the connector: the route every
+#: sink call takes, asked once per context (an entry goes with its
+#: context, so a session built after ``stop()`` asks again)
+_ROUTES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _load_connector(spark) -> bool:
+    """Whether the session's JVM can load the BigQuery connector class:
+    one py4j ``Class.forName`` round trip (14 ms when it fails)."""
+    try:
+        spark._jvm.Class.forName(
+            "com.google.cloud.spark.bigquery.BigQueryRelationProvider"
+        )
+        return True
+    except Exception:
+        return False
 
 
 def _structured_bq_error(exc: Exception) -> tuple[int | None, str | None]:
@@ -91,14 +109,15 @@ class BigQuerySink:
         )
 
     def _connector_available(self, spark) -> bool:
-        try:
-            jvm = spark._jvm
-            jvm.Class.forName(
-                "com.google.cloud.spark.bigquery.BigQueryRelationProvider"
-            )
-            return True
-        except Exception:
-            return False
+        """The route of `read`, `write` and `exists`: the connector when
+        its class loads in this SparkContext's JVM, else the parquet
+        warehouse. Looked up once per SparkContext and shared by every
+        sink; a new context (stop, then build again) looks again."""
+        sc = spark.sparkContext
+        found = _ROUTES.get(sc)
+        if found is None:
+            found = _ROUTES[sc] = _load_connector(spark)
+        return found
 
     def write(
         self,
@@ -143,12 +162,14 @@ class BigQuerySink:
     def exists(self, spark, table: str) -> bool:
         """Whether `table` exists via the active route.
 
-        The ETL idempotency probe (`streaming/pipeline.py`) recognizes
-        only filesystem/parquet AnalysisException conditions as "table
-        not created yet"; the BigQuery connector raises its own
-        not-found error type, which would otherwise fail the stream's
-        first production run. Probing existence explicitly per route
-        keeps the probe connector-agnostic. Only a *positively
+        The ETL idempotency probe (`streaming/pipeline.py`) asks this
+        before its first read of a table, so a table not created yet
+        costs no failed read (on the parquet route this is an
+        ``os.path.exists``), and again after a read fails: it
+        recognizes only filesystem/parquet AnalysisException conditions
+        as "table not created yet", while the BigQuery connector raises
+        its own not-found error type. Probing existence explicitly per
+        route keeps the probe connector-agnostic. Only a *positively
         identified* not-found maps to False — permission or transport
         failures propagate, since treating them as an empty ledger
         would silently disable dedup.

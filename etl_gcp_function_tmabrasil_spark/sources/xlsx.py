@@ -17,7 +17,9 @@ whose processing body the reference leaves as a placeholder
 One Python worker per parse task, and it never imports pandas: the
 path frame needs no Python worker of its own, and the parse builds
 Arrow columns from plain lists (pandas is imported only by the
-``parse_xlsx_bytes`` wrapper).
+``parse_xlsx_bytes`` wrapper). A parse task also stops its worker
+process from re-reading the directories of unchanged zip archives at
+the start of every later task (``sources.reload_zips_only_when_changed``).
 
 The parser is self-contained stdlib (zipfile + ElementTree): XLSX is a
 zip of XML parts. It covers the common subset — one worksheet, shared
@@ -52,7 +54,10 @@ from pyarrow.lib import StringBuilder
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from etl_gcp_function_tmabrasil_spark.sources import rows_frame
+from etl_gcp_function_tmabrasil_spark.sources import (
+    reload_zips_only_when_changed,
+    rows_frame,
+)
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -334,7 +339,11 @@ def _parse_batches(
     its rows (`names` order: source, status, error, `columns`, then the
     path's event key if it has one), leaving in string RecordBatches of
     at most `limit` rows. The columns are built with a StringBuilder:
-    ``pa.array`` over a list imports pandas to probe for array-likes."""
+    ``pa.array`` over a list imports pandas to probe for array-likes.
+    The task first makes its worker process skip the zip directory
+    re-reads of unchanged archives at every later task's start
+    (:func:`~etl_gcp_function_tmabrasil_spark.sources.reload_zips_only_when_changed`)."""
+    reload_zips_only_when_changed()
     buf: list[list] = []
     marker = [None] * len(columns)
 

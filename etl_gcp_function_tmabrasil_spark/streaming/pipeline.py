@@ -20,6 +20,7 @@ engine applies; exactly-once lands via idempotent overwrite-by-batch-id.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.errors import AnalysisException
@@ -144,39 +145,69 @@ _MISSING_TABLE_CONDITIONS = (
 )
 
 
-def _probe_event_keys(spark, sink, table: str, ev_df: DataFrame) -> set:
-    """Event keys from `table` that match this batch's keys (broadcast
-    semi-join; collect bounded by the batch's event count).
+def _absent(spark, sink, table: str, exc: Exception) -> bool:
+    """Whether the failure `exc` of reading `table` means the table
+    does not exist (yet): a missing-table AnalysisException condition,
+    or, for any other failure, a sink exposing `exists()` (e.g.
+    BigQuerySink, whose connector raises its own not-found type)
+    confirming the table is absent."""
+    if isinstance(exc, AnalysisException):
+        cond = exc.getCondition() or ""
+        if any(c in cond for c in _MISSING_TABLE_CONDITIONS):
+            return True
+    probe = getattr(sink, "exists", None)
+    return probe is not None and not probe(spark, table)
 
-    Connector-route missing-table failures are connector-specific and
-    would not match _MISSING_TABLE_CONDITIONS, so on ANY read failure
-    a sink exposing `exists()` (e.g. BigQuerySink) is consulted: a
-    confirmed-absent table means an empty ledger; everything else
-    propagates. The probe runs only on the exception path — the
-    steady-state batch (table exists, read succeeds) pays zero extra
-    metadata round-trips."""
 
-    def _keys() -> set:
-        return {
-            (r._event_name, r._event_ts)
-            for r in sink.read(spark, table)
-            .join(F.broadcast(ev_df), ["_event_name", "_event_ts"], "left_semi")
-            .select("_event_name", "_event_ts")
-            .distinct()
-            .collect()
-        }
+def _probe_event_keys(
+    spark, sink, tables: list[str], ev_df: DataFrame, seen: set[str]
+) -> set:
+    """Event keys from `tables` that match this batch's keys: the
+    tables' key columns unioned, then one broadcast semi-join and one
+    collect (bounded by the batch's event count), so the data and
+    dead-letter tables share one probe query.
 
+    `seen` holds the tables this query has already read. A table not
+    in it is first checked with the sink's `exists()` (an
+    ``os.path.exists`` on the parquet route), so a table that does not
+    exist yet costs no read and no exception; once read, it is in
+    `seen` and read directly, so a steady-state batch makes no extra
+    metadata call. A sink without `exists()` is read directly. A read
+    that fails on a table that vanished after the check (or on a sink
+    without `exists()`) skips the table when :func:`_absent` says it is
+    missing; a collect that fails is retried without the tables
+    `exists()` now reports absent. Everything else propagates."""
+    exists = getattr(sink, "exists", None)
+    frames = []
+    for t in tables:
+        if t not in seen and exists is not None and not exists(spark, t):
+            continue
+        try:
+            frames.append(sink.read(spark, t).select("_event_name", "_event_ts"))
+        except Exception as exc:
+            if not _absent(spark, sink, t, exc):
+                raise
+            seen.discard(t)
+            continue
+        seen.add(t)
+    if not frames:
+        return set()
+    keys = (
+        functools.reduce(DataFrame.union, frames)
+        .join(F.broadcast(ev_df), ["_event_name", "_event_ts"], "left_semi")
+        .distinct()
+    )
     try:
-        return _keys()
-    except Exception as exc:
-        if isinstance(exc, AnalysisException):
-            cond = exc.getCondition() or ""
-            if any(c in cond for c in _MISSING_TABLE_CONDITIONS):
-                return set()
-        probe = getattr(sink, "exists", None)
-        if probe is not None and not probe(spark, table):
-            return set()
-        raise
+        return {(r._event_name, r._event_ts) for r in keys.collect()}
+    except Exception:
+        # which table failed is unknown here: only `exists()` can tell
+        gone = [t for t in tables if t in seen and exists and not exists(spark, t)]
+        if not gone:
+            raise
+        seen.difference_update(gone)
+        return _probe_event_keys(
+            spark, sink, [t for t in tables if t not in gone], ev_df, seen
+        )
 
 
 def run_xlsx_etl_pipeline(
@@ -226,14 +257,19 @@ def run_xlsx_etl_pipeline(
     blast radius the reference gets for free from one-event-per-call.
     The idempotency probe covers BOTH tables, so a dead-lettered event
     is not re-processed on redelivery. Probe cost note: the probe
-    column-prunes to the two event-key columns and semi-joins this
-    batch's keys; at very large ingest history, bound it further by
-    partitioning the sink on an event-key bucket or keeping a compact
-    ledger table.
+    column-prunes both tables to the two event-key columns, unions them
+    and semi-joins this batch's keys in one query. A table the
+    query has not read yet is first checked with the sink's `exists()`
+    (microseconds on the parquet route), so the first batch on fresh
+    tables runs no probe job and raises no exception; later batches
+    read the tables directly. At very large ingest history, bound the
+    probe further by partitioning the sink on an event-key bucket or
+    keeping a compact ledger table.
     """
     from etl_gcp_function_tmabrasil_spark.sources.xlsx import read_xlsx_tolerant
 
     stream = file_event_stream(spark, landing_dir, max_files_per_trigger)
+    seen: set[str] = set()  # ledger tables this query has read
 
     def etl(batch_df: DataFrame, batch_id: int) -> None:
         accepted = (
@@ -295,8 +331,8 @@ def run_xlsx_etl_pipeline(
         # batch's event count, not ingest history) — a dead-lettered
         # event is as processed as an ingested one.
         already = _probe_event_keys(
-            spark, sink, table, ev_df
-        ) | _probe_event_keys(spark, sink, f"{table}_rejected", ev_df)
+            spark, sink, [table, f"{table}_rejected"], ev_df, seen
+        )
         todo = {k: p for k, p in events.items() if k not in already}
         if not todo:
             return

@@ -597,3 +597,186 @@ def test_xlsx_etl_crash_mid_batch_replays_exactly_once(spark, tmp_path):
     ]
     assert not {n for n, _ in data} & {n for n, _ in dead}
     _assert_no_empty_part(sink, table, f"{table}_rejected")
+
+
+class _CountingSink(BigQuerySink):
+    """Counts `read` calls and the AnalysisExceptions they raise."""
+
+    def __init__(self, warehouse_dir):
+        super().__init__(warehouse_dir=warehouse_dir)
+        self.reads: list[str] = []
+        self.read_errors: list[Exception] = []
+
+    def read(self, spark, table):
+        from pyspark.errors import AnalysisException
+
+        self.reads.append(table)
+        try:
+            return super().read(spark, table)
+        except AnalysisException as exc:
+            self.read_errors.append(exc)
+            raise
+
+
+def _healthy_and_missing(tmp_path):
+    """(bucket, landing, events): a healthy and a missing object, one
+    event each, so a drain lands rows in the data and dead-letter
+    tables."""
+    bucket = tmp_path / "bucket"
+    (bucket / "minha-pasta").mkdir(parents=True)
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    write_minimal_xlsx(
+        str(bucket / "minha-pasta" / "a.xlsx"), COLS, [[1, 10, "click", 1.5]]
+    )
+    evs = [
+        {"bucket": "b", "name": f"minha-pasta/{n}.xlsx", "size": 1,
+         "ts": "2024-01-01T00:00:00Z"}
+        for n in ("a", "gone")
+    ]
+    return bucket, landing, evs
+
+
+def _drain_jobs(spark, q) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+
+
+def test_xlsx_etl_ledger_probe_reads_only_existing_tables_in_one_job(
+    spark, tmp_path
+):
+    """A drain on fresh tables asks the sink's `exists()` instead of
+    reading: no `read` call, so no missing-table AnalysisException. A
+    redelivery on the existing tables reads both and probes them with
+    one union, one semi-join and one collect: 6 jobs under the query's
+    run id (the accept collect, the two tables' footer reads and the
+    probe's three AQE jobs), where one probe per table took 9."""
+    bucket, landing, evs = _healthy_and_missing(tmp_path)
+    _land_events(landing, "ev.json", evs)
+    sink = _CountingSink(str(tmp_path / "warehouse"))
+    table = "analytics.fresh"
+
+    def drain():
+        q = run_xlsx_etl_pipeline(
+            spark, str(landing), str(bucket), sink, table, COLS, DDL
+        )
+        assert q.awaitTermination(120)
+        return q
+
+    drain()
+    assert sink.reads == [] and sink.read_errors == []
+
+    _land_events(landing, "ev2.json", evs)  # redelivery of both events
+    q = drain()
+    assert sorted(sink.reads) == [table, f"{table}_rejected"]
+    assert sink.read_errors == []
+    assert _drain_jobs(spark, q) <= 6
+    assert [r.event_id for r in sink.read(spark, table).collect()] == [1]
+    assert sink.read(spark, f"{table}_rejected").count() == 1
+
+
+class _NoExistsSink:
+    """A sink with `read` and `write` only: the probe must learn that a
+    table is missing from the read's failure."""
+
+    def __init__(self, warehouse_dir):
+        self._sink = BigQuerySink(warehouse_dir=warehouse_dir)
+
+    def read(self, spark, table):
+        return self._sink.read(spark, table)
+
+    def write(self, df, table, mode="append", partition_by=None):
+        return self._sink.write(df, table, mode, partition_by)
+
+
+class _StaleExistsSink(BigQuerySink):
+    """`exists()` always says yes, as for a table dropped between the
+    check and the read."""
+
+    def exists(self, spark, table):
+        return True
+
+
+class _VanishingSink(BigQuerySink):
+    """The first read of the dead-letter table deletes it right after
+    the read resolved it: the table vanishes before the probe's
+    collect."""
+
+    vanished = False
+
+    def read(self, spark, table):
+        import shutil
+
+        df = super().read(spark, table)
+        if table.endswith("_rejected") and not self.vanished:
+            self.vanished = True
+            shutil.rmtree(Path(self.warehouse_dir, *table.split(".")))
+        return df
+
+
+def test_xlsx_etl_ledger_probe_falls_back_on_a_missing_table_read(
+    spark, tmp_path
+):
+    """Without a trustworthy `exists()`, a missing ledger table is
+    still an empty ledger (the read's PATH_NOT_FOUND), and a later
+    redelivery is still deduplicated. A dead-letter table that vanishes
+    between the read and the collect drops out of the probe: the data
+    table's keys still dedup, and the dead event is processed again."""
+    for make in (_NoExistsSink, _StaleExistsSink, _VanishingSink):
+        root = tmp_path / make.__name__
+        bucket, landing, evs = _healthy_and_missing(root)
+        _land_events(landing, "ev.json", evs)
+        sink = make(str(root / "warehouse"))
+        for name in ("ev2.json", None):
+            assert run_xlsx_etl_pipeline(
+                spark, str(landing), str(bucket), sink, "analytics.fb", COLS, DDL
+            ).awaitTermination(120)
+            if name:
+                _land_events(landing, name, evs)
+        assert [r.event_id for r in sink.read(spark, "analytics.fb").collect()] == [1]
+        assert sink.read(spark, "analytics.fb_rejected").count() == 1
+    assert sink.vanished
+
+
+def test_xlsx_etl_looks_the_sink_route_up_once_per_spark_context(
+    spark, tmp_path, monkeypatch
+):
+    """Two drains through two sink instances ask the JVM for the
+    BigQuery connector class once; another SparkContext asks again."""
+    import weakref
+
+    from etl_gcp_function_tmabrasil_spark.sinks import bigquery
+
+    lookups = []
+    original = bigquery._load_connector
+
+    def counting(session):
+        lookups.append(session)
+        return original(session)
+
+    monkeypatch.setattr(bigquery, "_ROUTES", weakref.WeakKeyDictionary())
+    monkeypatch.setattr(bigquery, "_load_connector", counting)
+    bucket, landing, evs = _healthy_and_missing(tmp_path)
+    _land_events(landing, "ev.json", evs)
+    warehouse = str(tmp_path / "warehouse")
+    for name in ("ev2.json", None):
+        assert run_xlsx_etl_pipeline(
+            spark, str(landing), str(bucket), BigQuerySink(warehouse_dir=warehouse),
+            "analytics.route", COLS, DDL,
+        ).awaitTermination(120)
+        if name:
+            _land_events(landing, name, evs)
+    assert len(lookups) == 1
+
+    class _Context:
+        pass
+
+    class _Session:
+        def __init__(self):
+            self.sparkContext = _Context()
+
+    monkeypatch.setattr(bigquery, "_load_connector", lambda s: lookups.append(s) or False)
+    other = _Session()
+    sink = BigQuerySink(warehouse_dir=warehouse)
+    assert not sink._connector_available(other)
+    assert not sink._connector_available(other)
+    assert lookups[1:] == [other]

@@ -428,3 +428,61 @@ def test_tolerant_read_splits_rows_into_arrow_batches(spark, tmp_path):
         + [("f1.xlsx", "empty", None), ("absent.xlsx", "missing", None)]
         + [("f2.xlsx", "ok", f"2-{j}") for j in range(3)]
     )
+
+
+_ZIP_CACHE_CHILD = """
+import importlib, os, sys, tempfile, zipfile, zipimport
+
+def write(path, mods):
+    with zipfile.ZipFile(path, "w") as zf:
+        for m in mods:
+            zf.writestr(m + ".py", "NAME = %r\\n" % m)
+
+archive = os.path.join(tempfile.mkdtemp(), "mods.zip")
+write(archive, ["m1"])
+sys.path.insert(0, archive)
+import m1
+original = zipimport.zipimporter.invalidate_caches
+reads = []
+read_directory = zipimport._read_directory
+
+def counting(path):
+    reads.append(path)
+    return read_directory(path)
+
+zipimport._read_directory = counting
+from etl_gcp_function_tmabrasil_spark.sources import xlsx
+list(xlsx._parse_batches(iter([]), ["_source_file", "_status", "_error"], [], 1, 1))
+print(zipimport.zipimporter.invalidate_caches is original)
+del reads[:]
+importlib.invalidate_caches()
+importlib.invalidate_caches()
+print(reads.count(archive))
+write(archive, ["m1", "m2"])
+importlib.invalidate_caches()
+import m2
+print(m2.NAME)
+"""
+
+
+def test_parse_task_keeps_unchanged_zip_directories():
+    """After a parse task, ``importlib.invalidate_caches()`` re-reads
+    no directory of an unchanged zip archive on ``sys.path``, and still
+    re-reads a rewritten one, whose new module then imports. Python
+    3.13+ keeps its own invalidation. Run in a child process, so the
+    pytest process keeps the stock zipimporter."""
+    out = subprocess.run(
+        [sys.executable, "-c", _ZIP_CACHE_CHILD],
+        cwd=REPO,
+        env={**os.environ, "PYTHONPATH": REPO},
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    stock, unchanged_reads, m2 = out.stdout.split("\n")[:3]
+    assert m2 == "m2"
+    if sys.version_info >= (3, 13):
+        assert stock == "True"
+    else:
+        assert (stock, unchanged_reads) == ("False", "0")
