@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import logging
 import os
+import shutil
 import weakref
 
 from pyspark.sql import DataFrame
@@ -134,7 +135,8 @@ class BigQuerySink:
         on query; the parquet fallback mirrors that with directory
         partitioning, and unlinks the 0-row part files the write added
         (``parts.drop_empty_parts``): a table keeps a 0-row file only
-        while it holds no other file, as its schema.
+        while it holds no other file, as its schema. It first removes
+        the ``_temporary`` tree an aborted write left behind.
         """
         if self._connector_available(df.sparkSession):
             writer = df.write.format("bigquery").mode(mode).option(
@@ -147,6 +149,12 @@ class BigQuerySink:
             writer.save(table)
             return f"bigquery://{self.project or 'default'}/{table}"
         path = os.path.join(self.warehouse_dir, *table.split("."))
+        # A driver killed mid-write leaves its committed task files in
+        # _temporary, and the next job commit would merge them into the
+        # table beside the replayed batch's own rows, as duplicates.
+        # Each table has one writer (the pipeline's serial
+        # micro-batches), so a _temporary seen here is such a leftover.
+        shutil.rmtree(os.path.join(path, "_temporary"), ignore_errors=True)
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(partition_by)
@@ -160,19 +168,24 @@ class BigQuerySink:
         return path
 
     def exists(self, spark, table: str) -> bool:
-        """Whether `table` exists via the active route.
+        """Whether `table` exists via the active route: the one rule
+        the ETL idempotency probe (`streaming/pipeline.py`) has for a
+        missing ledger table. The probe asks it about each table before
+        every read, and reads only the tables it reports.
 
-        The ETL idempotency probe (`streaming/pipeline.py`) asks this
-        before its first read of a table, so a table not created yet
-        costs no failed read (on the parquet route this is an
-        ``os.path.exists``), and again after a read fails: it
-        recognizes only filesystem/parquet AnalysisException conditions
-        as "table not created yet", while the BigQuery connector raises
-        its own not-found error type. Probing existence explicitly per
-        route keeps the probe connector-agnostic. Only a *positively
-        identified* not-found maps to False — permission or transport
-        failures propagate, since treating them as an empty ledger
-        would silently disable dedup.
+        On the parquet route a table exists when it holds a part file
+        Spark's reader would list (``parts.part_files``, one ``os.walk``
+        of the table dir): an empty dir, or one holding only the
+        ``_temporary`` tree of an aborted first write, is absent, as
+        reading it would fail with ``UNABLE_TO_INFER_SCHEMA``. A lone
+        0-row schema file counts as a table.
+
+        On the connector route it resolves the table's schema: one
+        metadata lookup per table per batch, a cost no test or workload
+        measures (unverified). Only a *positively identified* not-found
+        maps to False — permission or transport failures propagate,
+        since treating them as an empty ledger would silently disable
+        dedup.
         """
         if self._connector_available(spark):
             reader = spark.read.format("bigquery")
@@ -204,7 +217,7 @@ class BigQuerySink:
                     _warn_absent(table, exc)
                     return False
                 raise
-        return os.path.exists(os.path.join(self.warehouse_dir, *table.split(".")))
+        return bool(part_files(os.path.join(self.warehouse_dir, *table.split("."))))
 
     def read(self, spark, table: str) -> DataFrame:
         """Read back `table` through the SAME route write() used: the

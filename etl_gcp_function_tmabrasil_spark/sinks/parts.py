@@ -17,15 +17,27 @@ import os
 import pyarrow.parquet as pq
 
 
+def _listed(name: str) -> bool:
+    """Whether Spark's file index lists a file or directory so named:
+    it hides names starting with ``.``, and with ``_`` unless they hold
+    ``=`` (a partition directory such as ``_day=1``)."""
+    return not name.startswith(".") and ("=" in name or not name.startswith("_"))
+
+
 def part_files(dirp: str) -> set[str]:
-    """Every parquet part file under ``dirp``, partition directories
-    included; none when ``dirp`` does not exist."""
-    return {
-        os.path.join(root, f)
-        for root, _, files in os.walk(dirp)
-        for f in files
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    }
+    """Every parquet part file under ``dirp`` that Spark's reader would
+    list, partition directories included; none when ``dirp`` does not
+    exist. Hidden directories are not entered, so the ``_temporary``
+    tree of an aborted write contributes no file."""
+    found = set()
+    for root, dirs, files in os.walk(dirp):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        found.update(
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and _listed(f)
+        )
+    return found
 
 
 def drop_empty_parts(paths: list[str], keep_one: bool = False) -> list[str]:

@@ -23,12 +23,11 @@ from __future__ import annotations
 import functools
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_gcp_function_tmabrasil_spark.catalog import FILE_EVENTS_WIRE_SCHEMA
-from etl_gcp_function_tmabrasil_spark.sources import rows_frame
+from etl_gcp_function_tmabrasil_spark.sources import rows_frame, xlsx
 from etl_gcp_function_tmabrasil_spark.sources.file_events import (
     accept_filter,
     normalized_events,
@@ -132,64 +131,23 @@ def run_console_logger(
 #: collect() OOMing the driver.
 MAX_BATCH_FILES = 100_000
 
-#: AnalysisException conditions that mean "the ledger table simply does
-#: not exist yet" — the ONLY failures the idempotency probe may treat
-#: as an empty ledger. Anything else (e.g. UNRESOLVED_COLUMN from a
-#: pre-existing table without event-key columns, permission errors)
-#: must propagate: swallowing it would silently disable dedup and
-#: double-ingest on every redelivery forever.
-_MISSING_TABLE_CONDITIONS = (
-    "PATH_NOT_FOUND",
-    "TABLE_OR_VIEW_NOT_FOUND",
-    "UNABLE_TO_INFER_SCHEMA",  # empty/partial parquet dir, same meaning
-)
+def _probe_event_keys(spark, sink, tables: list[str], ev_df: DataFrame) -> set:
+    """Event keys from `tables` that match this batch's keys: the key
+    columns of every table the sink's `exists()` reports, unioned, then
+    one broadcast semi-join and one collect (bounded by the batch's
+    event count), so the data and dead-letter tables share one probe
+    query.
 
-
-def _absent(spark, sink, table: str, exc: Exception) -> bool:
-    """Whether the failure `exc` of reading `table` means the table
-    does not exist (yet): a missing-table AnalysisException condition,
-    or, for any other failure, a sink exposing `exists()` (e.g.
-    BigQuerySink, whose connector raises its own not-found type)
-    confirming the table is absent."""
-    if isinstance(exc, AnalysisException):
-        cond = exc.getCondition() or ""
-        if any(c in cond for c in _MISSING_TABLE_CONDITIONS):
-            return True
-    probe = getattr(sink, "exists", None)
-    return probe is not None and not probe(spark, table)
-
-
-def _probe_event_keys(
-    spark, sink, tables: list[str], ev_df: DataFrame, seen: set[str]
-) -> set:
-    """Event keys from `tables` that match this batch's keys: the
-    tables' key columns unioned, then one broadcast semi-join and one
-    collect (bounded by the batch's event count), so the data and
-    dead-letter tables share one probe query.
-
-    `seen` holds the tables this query has already read. A table not
-    in it is first checked with the sink's `exists()` (an
-    ``os.path.exists`` on the parquet route), so a table that does not
-    exist yet costs no read and no exception; once read, it is in
-    `seen` and read directly, so a steady-state batch makes no extra
-    metadata call. A sink without `exists()` is read directly. A read
-    that fails on a table that vanished after the check (or on a sink
-    without `exists()`) skips the table when :func:`_absent` says it is
-    missing; a collect that fails is retried without the tables
-    `exists()` now reports absent. Everything else propagates."""
-    exists = getattr(sink, "exists", None)
-    frames = []
-    for t in tables:
-        if t not in seen and exists is not None and not exists(spark, t):
-            continue
-        try:
-            frames.append(sink.read(spark, t).select("_event_name", "_event_ts"))
-        except Exception as exc:
-            if not _absent(spark, sink, t, exc):
-                raise
-            seen.discard(t)
-            continue
-        seen.add(t)
+    `exists()` is the only missing-table rule: a table it reports
+    absent is an empty ledger and costs no read. A read or collect that
+    fails propagates. The probe runs before the batch writes anything,
+    so the failed batch lands nothing and the restart on the same
+    checkpoint replays it."""
+    frames = [
+        sink.read(spark, t).select("_event_name", "_event_ts")
+        for t in tables
+        if sink.exists(spark, t)
+    ]
     if not frames:
         return set()
     keys = (
@@ -197,17 +155,7 @@ def _probe_event_keys(
         .join(F.broadcast(ev_df), ["_event_name", "_event_ts"], "left_semi")
         .distinct()
     )
-    try:
-        return {(r._event_name, r._event_ts) for r in keys.collect()}
-    except Exception:
-        # which table failed is unknown here: only `exists()` can tell
-        gone = [t for t in tables if t in seen and exists and not exists(spark, t)]
-        if not gone:
-            raise
-        seen.difference_update(gone)
-        return _probe_event_keys(
-            spark, sink, [t for t in tables if t not in gone], ev_df, seen
-        )
+    return {(r._event_name, r._event_ts) for r in keys.collect()}
 
 
 def run_xlsx_etl_pipeline(
@@ -219,7 +167,7 @@ def run_xlsx_etl_pipeline(
     columns: list[str],
     schema_ddl: str,
     max_files_per_trigger: int = 1024,
-    max_file_bytes: int | None = None,
+    max_file_bytes: int = xlsx.DEFAULT_MAX_FILE_BYTES,
 ) -> StreamingQuery:
     """The reference's complete intended lifecycle, end-to-end
     (``main.py:5-17`` with the placeholder body filled in):
@@ -243,8 +191,8 @@ def run_xlsx_etl_pipeline(
     CloudEvent in the reference's shape, but nothing stops a producer
     from batching events per file, so the row bound is enforced, not
     assumed). `max_file_bytes` caps per-workbook size in the tolerant
-    read (None = the source default); oversized objects dead-letter
-    with status 'oversize' instead of being materialized.
+    read; oversized objects dead-letter with status 'oversize' instead
+    of being materialized.
 
     Fault isolation: one poisoned object must never wedge the
     checkpointed stream (a failed batch replays with the identical
@@ -256,20 +204,18 @@ def run_xlsx_etl_pipeline(
     objects in the same batch ingest normally — the per-invocation
     blast radius the reference gets for free from one-event-per-call.
     The idempotency probe covers BOTH tables, so a dead-lettered event
-    is not re-processed on redelivery. Probe cost note: the probe
-    column-prunes both tables to the two event-key columns, unions them
-    and semi-joins this batch's keys in one query. A table the
-    query has not read yet is first checked with the sink's `exists()`
-    (microseconds on the parquet route), so the first batch on fresh
-    tables runs no probe job and raises no exception; later batches
-    read the tables directly. At very large ingest history, bound the
-    probe further by partitioning the sink on an event-key bucket or
-    keeping a compact ledger table.
+    is not re-processed on redelivery. Probe cost note: every batch asks
+    the sink's `exists()` about both tables (an ``os.walk`` of the
+    table dir on the parquet route), so the first batch on fresh tables
+    runs no probe job and raises no exception. The probe then
+    column-prunes the existing tables to the two event-key columns,
+    unions them and semi-joins this batch's keys in one query. The
+    sink must provide `exists()`, and its answer is the only
+    missing-table rule. At very large ingest history, bound the probe
+    further by partitioning the sink on an event-key bucket or keeping
+    a compact ledger table.
     """
-    from etl_gcp_function_tmabrasil_spark.sources.xlsx import read_xlsx_tolerant
-
     stream = file_event_stream(spark, landing_dir, max_files_per_trigger)
-    seen: set[str] = set()  # ledger tables this query has read
 
     def etl(batch_df: DataFrame, batch_id: int) -> None:
         accepted = (
@@ -330,31 +276,29 @@ def run_xlsx_etl_pipeline(
         # over up to 100k literals; the collect is bounded by the
         # batch's event count, not ingest history) — a dead-lettered
         # event is as processed as an ingested one.
-        already = _probe_event_keys(
-            spark, sink, [table, f"{table}_rejected"], ev_df, seen
-        )
+        already = _probe_event_keys(spark, sink, [table, f"{table}_rejected"], ev_df)
         todo = {k: p for k, p in events.items() if k not in already}
         if not todo:
             return
         # ONE path-driven read with one path-frame row per event: the
         # parse task stamps every row it yields, marker rows included,
-        # with that event's key (_event_name, _event_ts). An object re-uploaded under two event times in one batch is
-        # read once per event and lands once per event — each finalize
-        # event is processed exactly once, like the reference.
+        # with that event's key (_event_name, _event_ts). An object
+        # re-uploaded under two event times in one batch is read once
+        # per event and lands once per event — each finalize event is
+        # processed exactly once, like the reference.
         # read_xlsx_tolerant yields >= 1 row per requested path (data
         # rows or one marker, 'missing' included), so every event lands
         # in the sink or the dead-letter table.
         keys = sorted(todo)
-        xlsx_kwargs = (
-            {} if max_file_bytes is None else {"max_file_bytes": max_file_bytes}
-        )
-        tagged = read_xlsx_tolerant(
+        # looked up on its module per batch, so a wrapper installed
+        # there (a tracing timer) sees the call
+        tagged = xlsx.read_xlsx_tolerant(
             spark,
             [todo[k] for k in keys],
             columns,
             schema_ddl=schema_ddl,
+            max_file_bytes=max_file_bytes,
             event_keys=keys,
-            **xlsx_kwargs,
         )
         tagged.persist()
         try:

@@ -674,32 +674,90 @@ def test_xlsx_etl_ledger_probe_reads_only_existing_tables_in_one_job(
     assert sink.read(spark, f"{table}_rejected").count() == 1
 
 
-class _NoExistsSink:
-    """A sink with `read` and `write` only: the probe must learn that a
-    table is missing from the read's failure."""
+def _plant_part(dirp: Path, **cols) -> None:
+    """Write a real 1-row parquet part file under `dirp`."""
+    import pyarrow as pa
 
-    def __init__(self, warehouse_dir):
-        self._sink = BigQuerySink(warehouse_dir=warehouse_dir)
-
-    def read(self, spark, table):
-        return self._sink.read(spark, table)
-
-    def write(self, df, table, mode="append", partition_by=None):
-        return self._sink.write(df, table, mode, partition_by)
+    dirp.mkdir(parents=True, exist_ok=True)
+    pq.write_table(
+        pa.table({k: [v] for k, v in cols.items()}), dirp / "part-00000.parquet"
+    )
 
 
-class _StaleExistsSink(BigQuerySink):
-    """`exists()` always says yes, as for a table dropped between the
-    check and the read."""
+def test_parquet_sink_table_exists_only_with_a_part_file_spark_lists(
+    spark, tmp_path
+):
+    """An empty table dir, and one whose only part file sits in the
+    `_temporary` tree of an aborted write, are absent: `part_files`
+    lists nothing and Spark's reader finds no file to infer a schema
+    from. A lone 0-row schema file is a table, and a `_`-prefixed
+    partition directory is listed, as by Spark's file index."""
+    import pytest
+    from pyspark.errors import AnalysisException
 
-    def exists(self, spark, table):
-        return True
+    from etl_gcp_function_tmabrasil_spark.sinks.parts import part_files
+
+    wh = tmp_path / "warehouse"
+    sink = BigQuerySink(warehouse_dir=str(wh))
+    (wh / "analytics" / "empty").mkdir(parents=True)
+    _plant_part(
+        wh / "analytics" / "aborted" / "_temporary" / "0" / "task_x",
+        _event_name="a", _event_ts="1",
+    )
+    for t in ("analytics.empty", "analytics.aborted"):
+        assert part_files(str(wh / Path(*t.split(".")))) == set()
+        assert not sink.exists(spark, t)
+        with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+            sink.read(spark, t)
+
+    sink.write(spark.createDataFrame([], "a long"), "analytics.schema_only")
+    parts = part_files(str(wh / "analytics" / "schema_only"))
+    assert [pq.read_metadata(f).num_rows for f in parts] == [0]
+    assert sink.exists(spark, "analytics.schema_only")
+    assert sink.read(spark, "analytics.schema_only").count() == 0
+
+    _plant_part(wh / "analytics" / "by_day" / "_day=1", a=1)
+    assert sink.exists(spark, "analytics.by_day")
+
+
+def test_xlsx_etl_ledger_probe_treats_an_aborted_first_write_as_absent(
+    spark, tmp_path
+):
+    """The data table planted as an empty dir and the dead-letter table
+    as a `_temporary`-only tree, as aborted first writes leave them:
+    the probe reads neither, every event lands once, and a later
+    redelivery is deduplicated. The committed task file in the
+    `_temporary` tree is discarded, not merged into the table by the
+    next write's job commit."""
+    bucket, landing, evs = _healthy_and_missing(tmp_path)
+    _land_events(landing, "ev.json", evs)
+    wh = tmp_path / "warehouse"
+    (wh / "analytics" / "aborted").mkdir(parents=True)
+    _plant_part(
+        wh / "analytics" / "aborted_rejected" / "_temporary" / "0" / "task_x",
+        _event_name="minha-pasta/planted.xlsx", _event_ts="1",
+    )
+    sink = _CountingSink(str(wh))
+    table = "analytics.aborted"
+    for name in ("ev2.json", None):
+        assert run_xlsx_etl_pipeline(
+            spark, str(landing), str(bucket), sink, table, COLS, DDL
+        ).awaitTermination(120)
+        if name:
+            assert sink.reads == []
+            _land_events(landing, name, evs)  # redelivery of both events
+    assert sorted(sink.reads) == [table, f"{table}_rejected"]
+    assert sink.read_errors == []
+    data = sink.read(spark, table).collect()
+    assert [(r._event_name, r.event_id) for r in data] == [("minha-pasta/a.xlsx", 1)]
+    dead = sink.read(spark, f"{table}_rejected").collect()
+    assert [r._event_name for r in dead] == ["minha-pasta/gone.xlsx"]
 
 
 class _VanishingSink(BigQuerySink):
     """The first read of the dead-letter table deletes it right after
-    the read resolved it: the table vanishes before the probe's
-    collect."""
+    the read resolved it: the table vanishes between `exists()` and the
+    probe's collect."""
 
     vanished = False
 
@@ -713,28 +771,71 @@ class _VanishingSink(BigQuerySink):
         return df
 
 
-def test_xlsx_etl_ledger_probe_falls_back_on_a_missing_table_read(
+def test_xlsx_etl_ledger_table_vanishing_mid_probe_fails_the_batch_unwritten(
     spark, tmp_path
 ):
-    """Without a trustworthy `exists()`, a missing ledger table is
-    still an empty ledger (the read's PATH_NOT_FOUND), and a later
-    redelivery is still deduplicated. A dead-letter table that vanishes
-    between the read and the collect drops out of the probe: the data
-    table's keys still dedup, and the dead event is processed again."""
-    for make in (_NoExistsSink, _StaleExistsSink, _VanishingSink):
-        root = tmp_path / make.__name__
-        bucket, landing, evs = _healthy_and_missing(root)
-        _land_events(landing, "ev.json", evs)
-        sink = make(str(root / "warehouse"))
-        for name in ("ev2.json", None):
-            assert run_xlsx_etl_pipeline(
-                spark, str(landing), str(bucket), sink, "analytics.fb", COLS, DDL
-            ).awaitTermination(120)
-            if name:
-                _land_events(landing, name, evs)
-        assert [r.event_id for r in sink.read(spark, "analytics.fb").collect()] == [1]
-        assert sink.read(spark, "analytics.fb_rejected").count() == 1
-    assert sink.vanished
+    """A dead-letter table deleted from outside between `exists()` and
+    the probe's collect fails the micro-batch before it writes
+    anything. The restart on the same checkpoint replays the batch: the
+    data table's keys still dedup, the deleted table's event lands
+    again, and every event lands exactly once, in exactly one table."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    bucket, landing, evs = _healthy_and_missing(tmp_path)
+    write_minimal_xlsx(
+        str(bucket / "minha-pasta" / "b.xlsx"), COLS, [[2, 20, "view", 2.5]]
+    )
+    _land_events(landing, "ev.json", evs)
+    table = "analytics.vanish"
+    warehouse = str(tmp_path / "warehouse")
+
+    def drain(sink):
+        return run_xlsx_etl_pipeline(
+            spark, str(landing), str(bucket), sink, table, COLS, DDL
+        ).awaitTermination(120)
+
+    sink = BigQuerySink(warehouse_dir=warehouse)
+    assert drain(sink)
+    new = {"bucket": "b", "name": "minha-pasta/b.xlsx", "size": 1,
+           "ts": "2024-01-01T00:01:00Z"}
+    _land_events(landing, "ev2.json", evs + [new])  # redelivery + a new event
+
+    vanishing = _VanishingSink(warehouse_dir=warehouse)
+    with pytest.raises(StreamingQueryException):
+        drain(vanishing)
+    assert vanishing.vanished
+    assert [r.event_id for r in sink.read(spark, table).collect()] == [1]
+    assert not sink.exists(spark, f"{table}_rejected")
+
+    assert drain(sink)
+    data = [(r._event_name, r.event_id) for r in sink.read(spark, table).collect()]
+    assert sorted(data) == [("minha-pasta/a.xlsx", 1), ("minha-pasta/b.xlsx", 2)]
+    dead = [r._event_name for r in sink.read(spark, f"{table}_rejected").collect()]
+    assert dead == ["minha-pasta/gone.xlsx"]
+    _assert_no_empty_part(sink, table, f"{table}_rejected")
+
+
+def test_ledger_probe_has_one_missing_table_rule():
+    """The sink's `exists()` is the probe's only missing-table rule:
+    `_probe_event_keys` catches nothing, and the pipeline never reads
+    an exception's condition to decide a table is absent."""
+    import ast
+    import inspect
+
+    from etl_gcp_function_tmabrasil_spark.streaming import pipeline
+
+    tree = ast.parse(inspect.getsource(pipeline))
+    probe = next(
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef) and n.name == "_probe_event_keys"
+    )
+    assert not [n for n in ast.walk(probe) if isinstance(n, (ast.Try, ast.TryStar))]
+    calls = [
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "getCondition"
+    ]
+    assert calls == []
 
 
 def test_xlsx_etl_looks_the_sink_route_up_once_per_spark_context(
