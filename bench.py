@@ -315,7 +315,7 @@ def _bench_streaming(spark, sf_dir: str) -> tuple[float, float]:
 #: block measured every sf0.1 headline ratio ≈ 1 for exactly that
 #: overhead reason.
 SCALE_PROBE = [
-    "simjoin_prefix_jaccard",       # md5/shingle explode + candidate join
+    "simjoin_prefix_jaccard",       # shingle explode, id window, id join + verify
     "text_langid_hashed_ngram",     # per-char md5 gram hashing
     "dedup_winnowing_containment",  # per-position md5 fingerprinting
     "agg_spearman_corr",            # 3 amplified lineitem passes

@@ -988,7 +988,7 @@ def simjoin_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     and prunes by necessary conditions instead).
 
     The prefix principle: order every shingle by a GLOBAL total order
-    (rarest-first — document frequency ASC, shingle ASC); if
+    (rarest-first — document frequency ASC, then shingle id ASC); if
     J(a, b) >= t, then the first |d| - ceil(t*|d|) + 1 shingles of
     each set (under that order) must intersect. Candidates therefore
     come from a prefix-token equi-join (selective, because prefixes
@@ -1000,8 +1000,6 @@ def simjoin_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     J >= t. Exactness is preserved — for any true pair, its FIRST
     common shingle lies inside both prefixes and passes the
     positional test (pinned by the all-pairs brute-force test).
-    Survivors get a row-local exact set intersection over the two
-    shingle arrays (verify touches only candidate pairs).
 
     Shingle width matters for the filter's power: prefixes prune by
     RARITY, so shingles must be discriminative. Bigrams over this
@@ -1011,159 +1009,157 @@ def simjoin_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     17.4M candidates, 57 s). Trigrams yield a 27k-value vocabulary
     (max df 25) that restores the intended selectivity.
 
-    Scale: shingling and prefix extraction are row-local; document
-    frequency is a word-count-shaped agg; the candidate join is keyed
-    on rare shingles (bounded fan-out by construction); the verify
-    stage joins candidate PAIRS back to the per-doc shingle arrays on
-    doc_id — a plain equi-join Catalyst broadcasts at small scale
-    (AQE) and shuffles at large, never a corpus-sized broadcast by
-    construction. No stage is quadratic in the corpus.
+    Dictionary ids, and why they are exact. Every distinct shingle
+    gets one long id, ``bucket * 2^32 + dense_rank(shingle)`` inside
+    its bucket ``pmod(xxhash64(shingle), 2^31)``: two shingles in
+    different buckets differ in the high bits, two in the same bucket
+    differ in their rank, so the map is injective — a dictionary
+    entry, not a hash, and no collision can merge two shingles (the
+    reason the r16 xxhash64-as-token attempt was off the table for
+    the verify). The id is a function of the shingle set alone (the
+    window is partitioned by bucket and ordered by the unique
+    shingle), so every consumer of the per-doc frame — and any
+    recomputation of it — sees the same ids without a persist or a
+    checkpoint. The same window pass yields the document frequency,
+    and ``(df, id)`` is a total order shared by every doc, which is
+    all the prefix principle needs; the result set is therefore the
+    one the string order gave. Candidate join and verify then run on
+    8-byte ids instead of ~20-char strings.
 
-    r16 examined-and-REJECTED (measured): carrying token identity as
-    xxhash64 int64 through the candidate front (explode/df/join/fold/
-    self-join on 8-byte keys instead of ~20-char strings; exact — a
-    collision can only widen the candidate set). Interleaved
-    same-session A/B at sf0.1 (min/med of 5): strings 3.72/3.78 s vs
-    hashed 3.93/4.04 s — the extra per-token xxhash64 transform costs
-    more than the narrower keys save at this vocabulary (27k values,
-    short shingle strings). Sub-plan profile for the next attempt:
-    candidate front ≈ 1.2 s, string-exact verify of ~204k candidate
-    pairs ≈ 2.3 s (array_intersect over the full token arrays);
-    hashing the VERIFY arrays is off the table — the oracle
-    intersects true strings, so a verify-side collision would be a
-    parity break, unlike the candidate side where collisions only add
-    pairs that verification removes.
+    Suffix-only verify, and why it is exact. Both arrays of a
+    candidate pair are sorted in the same global order, so their
+    common shingles appear in the same relative order in both; the
+    match row with the smallest a-rank also has the smallest b-rank,
+    and ``(ra, rb) = (min(a.rk), min(b.rk))`` over the surviving
+    match rows is ONE common shingle x. The overlap is then counted
+    as ``1 + |a[ra+1:] ∩ b[rb+1:]|``: x plus the common shingles
+    after it, never more than the true overlap. For a true pair, x
+    is its first common shingle (that one passes the prefix and
+    positional filters, as above), no common shingle precedes it,
+    and the count is exact. For any other pair the count can only
+    undercount, Jaccard is increasing in the overlap, so the pair
+    still fails the threshold. The verify intersects only the two
+    suffixes.
+
+    Spread over the cores. At this scale every shuffle of the query
+    is sub-MB, and AQE coalesces each to one partition, which ran the
+    id window and the CPU-heavy verify on one core each. Two exchanges
+    therefore fix their width at ``defaultParallelism`` inside the
+    query (not a session conf: a session-wide minimum partition size
+    moved the other queries by -5% to +7%): the window's hash exchange
+    on the bucket, and a range exchange of the candidate pairs on
+    (doc_a, doc_b) just before they join back to the id arrays. The
+    range exchange also hands the final ORDER BY sorted ranges, so
+    while the verify joins broadcast, no second range exchange re-runs
+    the verify to sample its bounds. The per-doc gather keeps AQE's
+    width: pinning it drops the map-side partial collect_list, so each
+    of the exchange's three readers redoes the whole gather (measured:
+    more executor CPU for no wall-clock gain). At cluster scale these
+    exchanges are wide anyway (many MB, nothing to coalesce),
+    defaultParallelism is then the cluster's core count — the order of
+    the shuffle width such a cluster is configured with — and both
+    keys are hash- or range-balanced by construction, so pinning the
+    width gives up no skew handling.
+
+    Scale: shingling and prefix extraction are row-local; the id and
+    document frequency come from one window pass partitioned by
+    bucket (a word-count-shaped shuffle); the candidate join is keyed
+    on rare shingle ids (bounded fan-out by construction); the verify
+    joins candidate PAIRS back to the per-doc id arrays on doc_id — a
+    plain equi-join Catalyst broadcasts at small scale (AQE) and
+    shuffles at large, never a corpus-sized broadcast by
+    construction. No stage is quadratic in the corpus.
     """
     # compute spread (r15): the shingling pass below is per-word work
     # over every document — never serialize it behind a one-row-group
     # scan task (no-op on healthy layouts)
     docs = load_table(spark, sf_dir, "documents", rebalance="compute")
-    # distinct w-shingles per doc, as a row-local array (defensive
-    # size guard: a doc shorter than W has no shingles and can never
-    # reach the threshold — dropping it is result-equivalent and
-    # keeps sequence() from generating a descending range).
-    # `ws` is hoisted to a named column: HOF lambda bodies get no
-    # common-subexpression elimination, so the previous inline form
-    # re-split the WHOLE text once per shingle position — an O(len²)
-    # tokenizer (measured at sf0.1: 6.3 s → 2.6 s for the query).
-    toks = managed_persist(
-        docs.select("doc_id", F.split("text", " ").alias("ws"))
-        .filter(F.size("ws") >= F.lit(SSJOIN_W))
-        .select(
+    cores = spark.sparkContext.defaultParallelism
+    # distinct w-shingles per doc (defensive size guard: a doc shorter
+    # than W has no shingles and can never reach the threshold —
+    # dropping it is result-equivalent and keeps sequence() from
+    # generating a descending range). `ws` is hoisted to a named
+    # column: HOF lambda bodies get no common-subexpression
+    # elimination, so an inline split re-split the WHOLE text once per
+    # shingle position — an O(len²) tokenizer.
+    sh = (
+        docs.selectExpr("doc_id", "split(text, ' ') AS ws")
+        .filter(f"size(ws) >= {SSJOIN_W}")
+        .selectExpr(
             "doc_id",
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, size(ws) - {SSJOIN_W - 1}),"
-                    f" i -> concat_ws(' ', slice(ws, i, {SSJOIN_W})))"
-                )
-            ).alias("toks"),
-        ),
-        "simjoin_prefix_jaccard.toks",
+            f"explode(array_distinct(transform(sequence(1, size(ws) - {SSJOIN_W - 1}),"
+            f" i -> concat_ws(' ', slice(ws, i, {SSJOIN_W}))))) AS sh",
+        )
+        .selectExpr("doc_id", "sh", "pmod(xxhash64(sh), 2147483648) AS bucket")
+        .repartition(cores, "bucket")
     )
-    sh = toks.select(
-        "doc_id",
-        F.size("toks").alias("sz"),
-        F.explode("toks").alias("sh"),
-    )
-    freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-    with_df = sh.join(freq, "sh")
     # The rarest-first rank is per-DOC state bounded by document size,
-    # so it folds row-locally: gather each doc's (df, sh) list, sort,
-    # and emit only the prefix positions — replacing the r14
-    # row_number window (a full partition sort over every shingle
-    # occurrence) with one groupBy whose partial aggregation already
-    # collapses doc-contiguous rows map-side, and producing prefix
-    # rows directly instead of ranking everything and filtering after
-    # (r15, guide §2.3; measured sf0.1 interleaved min-of-4 on the
-    # full query: 4.17 s -> 3.88 s, results byte-identical). The
-    # sort key (df, sh) is
-    # duplicate-free per doc (shingles are array_distinct'd), so the
-    # order — and therefore rk — is deterministic and identical to
-    # the window's. df stays attached via the equi-join: vocabulary
-    # document frequency is corpus-sized at scale, so no per-shingle
-    # collect/broadcast is ever built.
-    prefix = managed_persist(
-        with_df.groupBy("doc_id")
+    # so it folds row-locally: gather each doc's (df, tid) list and
+    # sort it. (df, tid) is duplicate-free per doc (shingles are
+    # array_distinct'd), so the order — and therefore rk — is
+    # deterministic. One frame feeds both the prefix rows and the
+    # verify arrays, and AQE reuses its exchange for all three reads.
+    per_doc = (
+        sh.selectExpr(
+            "doc_id",
+            "count(1) OVER (PARTITION BY bucket, sh) AS df",
+            "bucket * 4294967296"
+            " + dense_rank() OVER (PARTITION BY bucket ORDER BY sh) AS tid",
+        )
+        .groupBy("doc_id")
         .agg(
-            F.first("sz").alias("sz"),
-            F.array_sort(F.collect_list(F.struct("df", "sh"))).alias("fs"),
+            F.expr("transform(array_sort(collect_list(struct(df, tid))), e -> e.tid)")
+            .alias("ids")
         )
-        .select(
-            "doc_id",
-            "sz",
-            F.posexplode(
-                F.expr(
-                    f"slice(fs, 1, cast(sz - ceil({SSJOIN_TAU} * sz) + 1"
-                    " as int))"
-                )
-            ).alias("pos", "e"),
-        )
-        .select(
-            "doc_id",
-            F.col("e.sh").alias("sh"),
-            "sz",
-            (F.col("pos") + 1).alias("rk"),
-        ),
-        "simjoin_prefix_jaccard.prefix",
     )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    # overlap bound alpha implied by J >= t on sets of these sizes
-    alpha = F.ceil(
-        F.lit(SSJOIN_TAU / (1.0 + SSJOIN_TAU))
-        * (F.col("a.sz") + F.col("b.sz"))
-    )
+    prefix = per_doc.selectExpr(
+        "doc_id",
+        "size(ids) AS sz",
+        f"posexplode(slice(ids, 1, cast(size(ids) - ceil({SSJOIN_TAU} * size(ids))"
+        " + 1 as int))) AS (pos, tid)",
+    ).selectExpr("doc_id", "sz", "tid", "pos + 1 AS rk")
+    # Length and positional filters in exact DECIMAL arithmetic (a
+    # fractional SQL literal is a decimal): overlap bound >= alpha =
+    # ceil(t/(1+t) * (|a|+|b|)) is, for an integer bound, the same as
+    # bound * (1+t) >= t * (|a|+|b|). A double t/(1+t) made alpha one
+    # too high whenever |a|+|b| is a multiple of 7 and dropped pairs at
+    # exactly J = t.
     cand = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                F.lit(SSJOIN_TAU)
-                * F.greatest(F.col("a.sz"), F.col("b.sz"))
-                <= F.least(F.col("a.sz"), F.col("b.sz"))
-            )
-            & (
-                F.least(
-                    F.col("a.sz") - F.col("a.rk"),
-                    F.col("b.sz") - F.col("b.rk"),
-                )
-                + 1
-                >= alpha
+        prefix.alias("a")
+        .join(
+            prefix.alias("b"),
+            F.expr(
+                "a.tid = b.tid AND a.doc_id < b.doc_id"
+                f" AND {SSJOIN_TAU} * greatest(a.sz, b.sz) <= least(a.sz, b.sz)"
+                f" AND (least(a.sz - a.rk, b.sz - b.rk) + 1) * (1 + {SSJOIN_TAU})"
+                f" >= {SSJOIN_TAU} * (a.sz + b.sz)"
             ),
         )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .agg(F.lit(1).alias("_one"))
-        .drop("_one")
+        .selectExpr("a.doc_id AS doc_a", "b.doc_id AS doc_b", "a.rk", "b.rk AS rk_b")
+        .groupBy("doc_a", "doc_b")
+        .agg(F.expr("min(rk) AS ra"), F.expr("min(rk_b) AS rb"))
+        .repartitionByRange(cores, "doc_a", "doc_b")
     )
-    ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a"))
-    tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b"))
+    ia = per_doc.selectExpr("doc_id AS doc_a", "ids AS ids_a")
+    ib = per_doc.selectExpr("doc_id AS doc_b", "ids AS ids_b")
     verified = (
-        cand.join(ta, "doc_a")
-        .join(tb, "doc_b")
-        .select(
+        cand.join(ia, "doc_a")
+        .join(ib, "doc_b")
+        .selectExpr(
             "doc_a",
             "doc_b",
-            F.size(F.array_intersect("toks_a", "toks_b"))
-            .cast("long")
-            .alias("inter"),
-            F.size("toks_a").alias("sza"),
-            F.size("toks_b").alias("szb"),
+            "CAST(1 + size(array_intersect(slice(ids_a, ra + 1, size(ids_a) - ra),"
+            " slice(ids_b, rb + 1, size(ids_b) - rb))) AS BIGINT) AS inter",
+            "size(ids_a) AS sza",
+            "size(ids_b) AS szb",
         )
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("sza") + F.col("szb") - F.col("inter")
+        .selectExpr(
+            "doc_a", "doc_b", "inter", "CAST(inter AS DOUBLE) / (sza + szb - inter) AS jac"
+        )
     )
     return (
-        verified.filter(jac >= SSJOIN_TAU)
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter",
-            F.round(jac, 6).alias("jaccard"),
-        )
+        verified.filter(F.col("jac") >= SSJOIN_TAU)
+        .selectExpr("doc_a", "doc_b", "inter", "round(jac, 6) AS jaccard")
         .orderBy("doc_a", "doc_b")
     )
 

@@ -72,6 +72,14 @@ def get_spark(
         # query text plans as a shuffled join on the same code path.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        # Generated-code cache: the default 100 classes are fewer than
+        # one pass over a handful of queries needs (counted on 4 cores:
+        # q5 25-28 compiles per run, the simjoin 34-43), so a session
+        # cycling through queries recompiled every query's code on
+        # every run. With room for 1,000 classes, each of perfbench
+        # `queries_sf01`'s 11 queries had a lower median over 10
+        # alternating pairs on 4 cores. Static conf — set at build time.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # local[N] is a single JVM: driver heap == the whole engine's
         # heap. 8g on a 32-core/128 GiB box left ~250 MB/task and, in
         # 90-query bench sessions, drove ~10 s full-GC pauses that the

@@ -12,6 +12,7 @@ formulation both engines share.
 from __future__ import annotations
 
 import math
+import os
 from collections import defaultdict
 
 from tests.conftest import SF_SMOKE
@@ -156,43 +157,171 @@ def test_cusum_matches_sequential_fold(spark):
         assert got[uid][2] == (m > 3.0 * sd), uid
 
 
-def test_simjoin_equals_all_pairs_bruteforce(spark):
-    """Prefix filtering is a candidate PRUNE, never an answer change:
-    the join must return exactly the all-pairs Jaccard >= tau set."""
-    from etl_gcp_function_tmabrasil_spark.catalog import load_table
+def _simjoin_bruteforce(docs):
+    """All-pairs (doc_a, doc_b, inter, jaccard) rows with Jaccard >= tau
+    over the word-shingle sets of `docs` [(doc_id, text)], from the
+    definition (Python's split(" ") matches Spark's and DuckDB's)."""
     from etl_gcp_function_tmabrasil_spark.queries.dedup_approx import (
         SSJOIN_TAU,
         SSJOIN_W,
-        simjoin_prefix_jaccard,
     )
 
-    docs = [
-        (r.doc_id, r.text.split(" "))
-        for r in load_table(spark, SF_SMOKE, "documents")
-        .select("doc_id", "text")
-        .collect()
-    ]
-    sets = {
-        d: {
-            " ".join(t[i : i + SSJOIN_W])
-            for i in range(len(t) - SSJOIN_W + 1)
-        }
-        for d, t in docs
-        if len(t) >= SSJOIN_W
-    }
-    want = set()
+    sets = {}
+    for d, text in docs:
+        t = text.split(" ") if text is not None else []
+        if len(t) >= SSJOIN_W:
+            sets[d] = {
+                " ".join(t[i : i + SSJOIN_W])
+                for i in range(len(t) - SSJOIN_W + 1)
+            }
+    want = {}
     ids = sorted(sets)
     for i, a in enumerate(ids):
         for b in ids[i + 1 :]:
             inter = len(sets[a] & sets[b])
-            if inter and inter / (len(sets[a]) + len(sets[b]) - inter) >= SSJOIN_TAU:
-                want.add((a, b))
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in simjoin_prefix_jaccard(spark, SF_SMOKE).collect()
-    }
-    assert got == want
+            jac = inter / (len(sets[a]) + len(sets[b]) - inter)
+            if inter and jac >= SSJOIN_TAU:
+                want[(a, b)] = (inter, jac)
+    return want
+
+
+def _assert_simjoin_rows(got_rows, want):
+    """Every returned row is a brute-force pair with its exact overlap
+    and its Jaccard to the 6 decimals the query rounds to."""
+    got = {(r.doc_a, r.doc_b): (r.inter, r.jaccard) for r in got_rows}
+    assert len(got) == len(got_rows), "duplicate pairs"
+    assert set(got) == set(want)
+    for pair, (inter, jac) in want.items():
+        assert got[pair][0] == inter, pair
+        assert abs(got[pair][1] - jac) < 1e-6, pair
+
+
+def test_simjoin_equals_all_pairs_bruteforce(spark):
+    """Prefix filtering is a candidate PRUNE, and the suffix-only verify
+    is exact on every true pair: the join must return exactly the
+    all-pairs Jaccard >= tau rows, overlap and Jaccard included."""
+    from etl_gcp_function_tmabrasil_spark.catalog import load_table
+    from etl_gcp_function_tmabrasil_spark.queries.dedup_approx import (
+        simjoin_prefix_jaccard,
+    )
+
+    docs = [
+        (r.doc_id, r.text)
+        for r in load_table(spark, SF_SMOKE, "documents")
+        .select("doc_id", "text")
+        .collect()
+    ]
+    want = _simjoin_bruteforce(docs)
     assert want, "no similar pairs at sf0.001 — threshold miscalibrated"
+    _assert_simjoin_rows(simjoin_prefix_jaccard(spark, SF_SMOKE).collect(), want)
+
+
+def _simjoin_edge_docs():
+    """A seeded `documents` corpus of the simjoin's edge classes: NULL,
+    empty, whitespace-only and vertical-tab texts; docs of exactly
+    SSJOIN_W words and of fewer; identical texts (Jaccard 1.0);
+    shingles repeated inside one doc; one shingle in ~30% of the docs;
+    a pair at exactly J = tau; and near-duplicate families around the
+    threshold."""
+    import random
+
+    from etl_gcp_function_tmabrasil_spark.queries.dedup_approx import SSJOIN_W
+
+    rng = random.Random(19)
+    vocab = [f"w{i}" for i in range(40)]
+    texts = [
+        None,
+        "",
+        "   ",
+        "   ",  # whitespace twin: one shingle of empty words, Jaccard 1.0
+        "\x0b",
+        "a\x0bb c d e",
+        " ".join(vocab[:SSJOIN_W]),  # exactly W words, twice
+        " ".join(vocab[:SSJOIN_W]),
+        " ".join(vocab[: SSJOIN_W - 1]),  # fewer than W
+        "x y z x y z x y z",  # repeated shingles
+        "x y z x y z",
+        # exactly J = tau: 7 shingles each, the 4 shared ones (df 2) rank
+        # last, so the positional bound equals alpha = ceil(2/7 * 14) = 4
+        "ta1 ta2 ta3 tc1 tc2 tc3 tc4 tc5 tc6",
+        "tc1 tc2 tc3 tc4 tc5 tc6 tb1 tb2 tb3",
+    ]
+    fixed = len(texts)
+    for _ in range(6):  # near-duplicate families around tau
+        base = [rng.choice(vocab) for _ in range(12)]
+        for k in range(5):
+            t = list(base)
+            for _ in range(k):
+                t[rng.randrange(len(t))] = rng.choice(vocab)
+            texts.append(" ".join(t))
+    texts.append(texts[-1])  # identical pair inside a family
+    for _ in range(15):
+        texts.append(" ".join(rng.choice(vocab) for _ in range(rng.randint(3, 9))))
+    for i in range(fixed, len(texts)):  # one shingle in ~30% of the docs
+        if i % 5 in (0, 2):
+            texts[i] += " hot shingle here"
+    return list(enumerate(texts, start=1))
+
+
+def test_simjoin_edge_corpus_matches_oracle_and_bruteforce(spark):
+    """The edge classes agree across Spark, the DuckDB oracle and the
+    brute force, rows and values."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_gcp_function_tmabrasil_spark.queries._util import fixture_dir
+    from etl_gcp_function_tmabrasil_spark.queries.dedup_approx import (
+        ORACLE,
+        SSJOIN_TAU,
+        simjoin_prefix_jaccard,
+    )
+    from tests.oracle_check import compare
+
+    docs = _simjoin_edge_docs()
+    sf_dir = fixture_dir(SF_SMOKE, "simjoin_edge")
+    os.makedirs(sf_dir, exist_ok=True)
+    path = os.path.join(sf_dir, "documents.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([d for d, _ in docs], pa.int64()),
+                "text": pa.array([t for _, t in docs], pa.string()),
+            }
+        ),
+        path,
+    )
+    want = _simjoin_bruteforce(docs)
+    assert any(j == 1.0 for _, j in want.values()), "no identical pair"
+    assert any(j < 1.0 for _, j in want.values()), "no partial pair"
+    assert any(j == SSJOIN_TAU for _, j in want.values()), "no pair at tau"
+    got = simjoin_prefix_jaccard(spark, sf_dir)
+    _assert_simjoin_rows(got.collect(), want)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
+    oracle = con.execute(ORACLE["simjoin_prefix_jaccard"]).fetchdf()
+    assert compare(got, oracle, "simjoin_prefix_jaccard") == []
+
+
+def test_simjoin_ids_need_no_cache(spark):
+    """The shingle ids are a function of the data, not of one
+    materialization: a frame built before clearCache() executes to the
+    same rows, and repeated invocations leave no persisted or
+    checkpointed RDD behind."""
+    from etl_gcp_function_tmabrasil_spark.queries.dedup_approx import (
+        simjoin_prefix_jaccard,
+    )
+
+    want = simjoin_prefix_jaccard(spark, SF_SMOKE).collect()
+    q = simjoin_prefix_jaccard(spark, SF_SMOKE)
+    spark.catalog.clearCache()
+    assert q.collect() == want
+    held = spark.sparkContext._jsc.getPersistentRDDs
+    counts = []
+    for _ in range(3):
+        assert simjoin_prefix_jaccard(spark, SF_SMOKE).collect() == want
+        counts.append(held().size())
+    assert counts[-1] <= counts[0], counts
 
 
 def test_triangle_count_matches_direct_enumeration(spark):
